@@ -616,7 +616,8 @@ object StreamBench {
     val src = MemoryStream[(String, Double)]
     val scores = src.toDF().toDF("source", "score")
     val store = tmpDir("driftsrc"); val cp = ckpt("driftsrc")
-    val q = StreamingDrift.driftSinkBy(scores, store, "source", "score")
+    val q = StreamingDrift.driftSink(scores, store, "score",
+      groupCols = Seq("source"))
       .option("checkpointLocation", cp).start()
     try drive(q, b => {
       src.addData((0 until rows).map(r =>

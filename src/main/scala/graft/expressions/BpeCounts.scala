@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * chain in [[graft.operators.Corpus.bpeEncode]], which re-scanned and
   * re-allocated the whole unit-separator-wrapped document string once
   * per merge (plus a per-character regexp to build the wrapped string
-  * in the first place). Semantics are replicated exactly:
+  * in the first place). Semantics are replicated exactly, with one
+  * KNOWN DIVERGENCE (below):
   *
   *  - a word's symbols start as its CODE POINTS (the
   *    `regexp_replace(.., "(\\S)", US + "$1" + US)` convention, U+001F
@@ -28,6 +29,14 @@ import org.apache.spark.sql.types._
   *    inter-word space breaks the US-US adjacency);
   *  - null/empty tokens contribute no symbols (`array_join` skips
   *    nulls; an empty token wraps to nothing).
+  *
+  * KNOWN DIVERGENCE on a literal U+001F in the text: it is the chain's
+  * own unit separator, yet it matched `\S` and was wrapped like any
+  * character, so its separators ran into its neighbours' and the
+  * chain's symbol counts came out wrong (the token "a␟␟b" counted 5
+  * symbols). The kernel treats U+001F as one ordinary code-point
+  * symbol (4 for that token), which merges may name like any other.
+  * BpeCountsSpec pins the kernel's behaviour.
   *
   * Output `struct<n_sym bigint, n_bpe bigint>` — the symbol count
   * before and after the merges, which is everything every consumer of

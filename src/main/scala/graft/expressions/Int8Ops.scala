@@ -19,10 +19,10 @@ import org.apache.spark.sql.types._
   *
   * Semantics are BIT-IDENTICAL to the declarative form (and the DuckDB
   * oracle): scale = 127/max|x| (1.0 when max is 0), q_i =
-  * floor(x_i·scale + 0.5) — fixed-direction half-up, see
-  * Quantize.halfUp — with each float widened to double before the
-  * multiply. Emits a struct so the derived statistics ride the same
-  * loop:
+  * floor(x_i·scale + 0.5) — fixed-direction half-up, whose semantics
+  * are identical in every engine (`round()`'s tie rule is not) — with
+  * each float widened to double before the multiply. Emits a struct
+  * so the derived statistics ride the same loop:
   *
   *   struct(qvec: array<tinyint>, scale: double,
   *          q_norm2: bigint, q_sum: bigint)

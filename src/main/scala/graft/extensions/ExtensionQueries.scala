@@ -2273,8 +2273,7 @@ object ExtensionQueries {
         .select(col("source"), score.as("__s0"))
         .select(col("source"),
           (expr("__s0 * 6 div 10") + 35).as("score_fx"))
-      graft.operators.Stats.ksTestByGroup(ref, cur, "source",
-          "score_fx")
+      graft.operators.Stats.ksTest(ref, cur, "score_fx", Seq("source"))
         .orderBy(col("source"))
     },
 
@@ -2369,8 +2368,8 @@ object ExtensionQueries {
         .select(col("source"), score.as("__s0"))
         .select(col("source"),
           (expr("__s0 * 6 div 10") + 35).as("score_fx"))
-      graft.operators.Stats.wasserstein1ByGroup(ref, cur, "source",
-          "score_fx")
+      graft.operators.Stats.wasserstein1(ref, cur, "score_fx",
+          Seq("source"))
         .orderBy(col("source"))
     },
 
@@ -2467,8 +2466,8 @@ object ExtensionQueries {
       val cur = docs.filter(pmod(id, lit(2)) === 1)
         .select(col("source"), when(pmod(id, lit(9)) === 0, lit("xx"))
           .otherwise(col("lang")).as("cat"))
-      graft.operators.Stats.chiSquaredDriftByGroup(ref, cur, "source",
-          "cat")
+      graft.operators.Stats.chiSquaredDrift(ref, cur, "cat",
+          Seq("source"))
         .orderBy(col("source"))
     },
 
@@ -2795,7 +2794,7 @@ object ExtensionQueries {
         .orderBy(col("bin"))
     },
 
-    // Per-SOURCE drift scorecard — psiByGroup computes every source's
+    // Per-SOURCE drift scorecard — the grouped psi computes every source's
     // reference-vs-current PSI bin table in one pass (20 sources ×
     // 10 bins); per-source scalar = sum(term_fx)/1e9 per source. Same
     // smoothing/quantization as ext_psi, keyed by source.
@@ -2846,8 +2845,8 @@ object ExtensionQueries {
         .select(col("source"), score.as("score"))
       val cur = docs.filter(pmod(id, lit(2)) === 1)
         .select(col("source"), (score * 0.6 + 0.35).as("score"))
-      graft.operators.Stats.psiByGroup(ref, cur, "source", "score",
-          bins = 10)
+      graft.operators.Stats.psi(ref, cur, "score", bins = 10,
+          groupCols = Seq("source"))
         .orderBy(col("source"), col("bin"))
     },
 
@@ -3003,8 +3002,8 @@ object ExtensionQueries {
       val preds = documents(s, d).select(col("source"),
         pmod(id * 13, lit(100)).as("score_fx"),
         (pmod(id * 7, lit(11)) < 5).as("label"))
-      graft.operators.Stats.aucByGroup(preds, "source", "score_fx",
-          "label")
+      graft.operators.Stats.auc(preds, "score_fx", "label",
+          Seq("source"))
         .orderBy(col("source"))
     },
 
@@ -3280,7 +3279,7 @@ object ExtensionQueries {
     // Pairwise win-rate matrix with CIs — the head-to-head eval
     // report over a comparison log: 4 models, every comparison keyed
     // by its unordered pair, win rate of the smaller-named model per
-    // pair with a within-pair bootstrap interval (bootstrapCiByGroup
+    // pair with a within-pair bootstrap interval (bootstrapCi keyed
     // on the pair key — non-overlap with 0.5 is the readable
     // "actually better head-to-head" signal BT's global strengths
     // summarize away). The oracle replays the pair key, the win
@@ -3327,8 +3326,8 @@ object ExtensionQueries {
         concat(least(col("w"), col("l")).cast("string"), lit("|"),
           greatest(col("w"), col("l")).cast("string")).as("pair"),
         when(col("w") < col("l"), 1.0).otherwise(0.0).as("win_lo"))
-      graft.operators.Stats.bootstrapCiByGroup(u, "pair", "doc_id",
-          "win_lo", b = 32)
+      graft.operators.Stats.bootstrapCi(u, "doc_id", "win_lo", b = 32,
+          groupCols = Seq("pair"))
         .orderBy(col("pair"))
     },
 
@@ -3373,8 +3372,8 @@ object ExtensionQueries {
       val preds = documents(s, d).select(pmod(id, lit(8)).as("model"), id,
         when(pmod(id * 7, lit(100)) < lit(40) + pmod(id, lit(8)) * 5,
           1.0).otherwise(0.0).as("win"))
-      graft.operators.Stats.bootstrapCiByGroup(preds, "model",
-          "doc_id", "win", b = 32)
+      graft.operators.Stats.bootstrapCi(preds, "doc_id", "win", b = 32,
+          groupCols = Seq("model"))
         .orderBy(col("model"))
     },
 
@@ -3677,8 +3676,8 @@ object ExtensionQueries {
          | END AS gini
          |FROM cum GROUP BY 1 ORDER BY source""".stripMargin) {
       (s, d) =>
-        graft.operators.Stats.giniByGroup(documents(s, d), "source",
-            "n_chars")
+        graft.operators.Stats.gini(documents(s, d), "n_chars",
+            Seq("source"))
           .orderBy(col("source"))
     },
 

@@ -221,10 +221,13 @@ object Graph {
     // kept the full logical lineage — Catalyst re-planned a tree that
     // doubled per half-step (the 4335-Exchange printed plan of
     // ext_hits) even though runtime read every subtree from cache.
-    // The checkpoint truncates the plan to a LogicalRDD at the same
-    // ≤ |nodes| rows the persist already materialized eagerly (the
-    // totRow head paces each half-step), so no new job and no new
-    // memory class is introduced.
+    // The checkpoint truncates the plan to a LogicalRDD of ≤ |nodes|
+    // rows. It is eager: each half-step pays ONE extra job to
+    // materialize the normalized join (the totRow head only
+    // materializes the pre-join `raw`). Its blocks live in executor
+    // storage with no lineage to recompute from, so losing an
+    // executor mid-run fails the job, where the persist it replaced
+    // would have recomputed the lost partitions.
     def normalize(raw0: DataFrame, keyCol: String, out: String) = {
       val raw = raw0.persist(MEMORY_AND_DISK)
       val totRow = raw.agg(sum(col("__raw"))).head

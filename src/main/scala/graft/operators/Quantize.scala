@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DoubleType, LongType}
 
 /** Symmetric per-vector int8 quantization for embedding columns — the
   * standard memory/IO lever for vector search at corpus scale: a
@@ -21,22 +20,10 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, LongType}
   */
 object Quantize {
 
-  /** Rounding used on both the Spark and oracle sides: floor(x + 0.5)
-    * — fixed-direction half-up, chosen over `round()` because its
-    * semantics are identical in every engine (banker's vs half-away
-    * rounding of `round` differs across engines/versions).
-    */
-  private def halfUp(x: Column): Column = floor(x + 0.5d)
-
-  /** Per-vector max |component| in double (0.0 for an all-zero or
-    * empty vector).
-    */
-  private def maxAbs(v: Column): Column =
-    coalesce(array_max(transform(v, x => abs(x.cast(DoubleType)))), lit(0d))
-
   /** Quantize `vecCol` (array<float>) to
-    * (`qvec` array<tinyint>, `scale` double): q_i = halfUp(x_i·scale)
-    * with scale = 127/max|x| — each component lands in [−127, 127].
+    * (`qvec` array<tinyint>, `scale` double): q_i =
+    * floor(x_i·scale + 0.5) (half-up, the same in every engine) with
+    * scale = 127/max|x| — each component lands in [−127, 127].
     * All-zero vectors take scale 1 and quantize to zeros (cosine with
     * them is null in the float path and 0/0 → null here too).
     */
@@ -59,19 +46,6 @@ object Quantize {
         col("__q.q_sum").as("q_sum"))
   }
 
-  /** The declarative mirror of [[int8]] — kept as the parity witness
-    * the codegen expression is spec-checked against (QuantizeSpec).
-    */
-  private[graft] def int8Declarative(embs: DataFrame, idCol: String,
-                                     vecCol: String): DataFrame = {
-    val m = maxAbs(col(vecCol))
-    val scale = when(m > 0d, lit(127d) / m).otherwise(lit(1d))
-    embs.select(col(idCol),
-      transform(col(vecCol),
-        x => halfUp(x.cast(DoubleType) * scale).cast(ByteType)).as("qvec"),
-      scale.as("scale"))
-  }
-
   /** Integer cosine between two int8 vectors: exact int64 dot and
     * norms (64 dims × 127² ≪ 2⁶³ — no overflow, no float-order
     * nondeterminism), one double division at the end. Null when either
@@ -84,16 +58,6 @@ object Quantize {
       graft.expressions.Int8Cosine(
         org.apache.spark.sql.graftbridge.Bridge.expression(qa),
         org.apache.spark.sql.graftbridge.Bridge.expression(qb)))
-
-  /** Declarative mirror of [[intCosine]] (parity witness). */
-  private[graft] def intCosineDeclarative(qa: Column, qb: Column): Column = {
-    def dot(x: Column, y: Column) =
-      aggregate(zip_with(x, y, (a, b) => a.cast(LongType) * b.cast(LongType)),
-        lit(0L), (acc, p) => acc + p)
-    dot(qa, qb).cast(DoubleType) /
-      (sqrt(dot(qa, qa).cast(DoubleType)) *
-        sqrt(dot(qb, qb).cast(DoubleType)))
-  }
 
   /** Exact top-k under the QUANTIZED metric (the compressed-corpus
     * analogue of [[Similarity.bruteKnn]]): corpus and queries are

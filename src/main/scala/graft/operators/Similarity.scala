@@ -275,7 +275,7 @@ object Similarity {
 
   /** Per-group EMBEDDING drift between a reference and a current
     * snapshot — the semantic companion of the score-PSI monitor
-    * ([[Stats.psiByGroup]]): a source whose scalar quality scores
+    * ([[Stats.psi]] grouped): a source whose scalar quality scores
     * look stable can still drift in CONTENT (topic shift, language
     * mix, spam injection), and the cheapest tell is its centroid
     * moving. Per group: both sample counts and the cosine between

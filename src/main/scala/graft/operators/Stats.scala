@@ -298,8 +298,7 @@ object Stats {
     */
   def cohenKappaPairs(ratings: DataFrame, itemCol: String,
                       raterCol: String, labelCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
+    import org.apache.spark.sql.types.DoubleType
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val r = ratings
       .filter(col(itemCol).isNotNull && col(raterCol).isNotNull &&
@@ -477,6 +476,38 @@ object Stats {
     }.drop("__bkt")
   }
 
+  /** Exclusive per-value prefix sums for the kernels below: the
+    * packer-shaped [[cumBelowByValue]] when there are no group keys,
+    * [[cumBelowByValueGrouped]] otherwise — picked from the key count
+    * alone, so a kernel's ungrouped plan is the one it always had.
+    */
+  private def cumBelow(grouped: DataFrame, groupCols: Seq[String],
+                       valCol: String, sumCols: Seq[String]): DataFrame =
+    if (groupCols.isEmpty) cumBelowByValue(grouped, valCol, sumCols)
+    else cumBelowByValueGrouped(grouped, groupCols, valCol, sumCols)
+
+  /** `l` joined to `r` on `keys` — a cross join when there are none
+    * (an ungrouped kernel's one-row totals frame).
+    */
+  private def joinOn(l: DataFrame, r: DataFrame, keys: Seq[String],
+                     how: String = "inner"): DataFrame =
+    if (keys.isEmpty) l.crossJoin(r) else l.join(r, keys, how)
+
+  private def d19(c: org.apache.spark.sql.Column) =
+    c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
+
+  private def requireIntegral(df: DataFrame, c: String,
+                              who: String): Unit =
+    df.schema(c).dataType match {
+      case org.apache.spark.sql.types.ByteType |
+           org.apache.spark.sql.types.ShortType |
+           org.apache.spark.sql.types.IntegerType |
+           org.apache.spark.sql.types.LongType => ()
+      case other => throw new IllegalArgumentException(
+        s"$who needs an integral (fixed-point) column; '$c' is " +
+          other.simpleString)
+    }
+
   /** Exact Gini coefficient of a NON-NEGATIVE integral column — the
     * corpus-concentration alarm ("is the mix dominated by a few
     * domains/sources", applied to per-domain doc counts, per-source
@@ -491,30 +522,27 @@ object Stats {
     * [[cumBelowByValue]] pass with two sum columns, no pair join, no
     * global window, no sort. All products in DECIMAL with 19-digit
     * factors (HUGEINT oracle mirror); the one division closes. One
-    * row: (n, total, gini) — gini null when n = 0 or Σx = 0 (an
-    * all-zero population has no concentration to measure). Nulls and
-    * negatives drop (a negative "count" is an upstream bug).
+    * row per `groupCols` key (with none, a single row, even on empty
+    * input): (groupCols…, n, total, gini) — gini null when n = 0 or
+    * Σx = 0 (an all-zero population has no concentration to
+    * measure). Nulls and negatives drop (a negative "count" is an
+    * upstream bug).
     *
     * Scale shape: one value-keyed map-side hash agg, the bucketed
     * two-level prefix sum, one closing agg.
     */
-  def gini(df: DataFrame, valCol: String): DataFrame = {
+  def gini(df: DataFrame, valCol: String,
+           groupCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-    df.schema(valCol).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"gini needs an integral column; '$valCol' is " +
-          other.simpleString)
-    }
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
+    requireIntegral(df, valCol, "gini")
+    val keys = groupCols.map(col)
     val g = df
       .filter(col(valCol).isNotNull && col(valCol) >= 0)
-      .groupBy(col(valCol).cast(LongType).as("__v"))
+      .groupBy(keys :+ col(valCol).cast(LongType).as("__v"): _*)
       .agg(count(lit(1)).as("__c"),
         sum(col(valCol).cast(LongType)).as("__s"))
-    cumBelowByValue(g, "__v", Seq("__c", "__s"))
+    cumBelow(g, groupCols, "__v", Seq("__c", "__s"))
+      .groupBy(keys: _*)
       .agg(
         coalesce(sum(col("__c")), lit(0L)).as("n"),
         coalesce(sum(col("__s")), lit(0L)).as("total"),
@@ -522,45 +550,11 @@ object Stats {
             (d19(col("__v")) * d19(col("cum___c")) -
               d19(col("cum___s")))),
           lit(0L).cast(DecimalType(38, 0))).as("__half"))
-      .select(col("n"), col("total"),
+      .select(keys ++ Seq(col("n"), col("total"),
         when(col("n") > 0 && col("total") > 0,
           lit(2.0) * col("__half").cast(DoubleType) /
             (lit(2.0) * col("n").cast(DoubleType) *
-              col("total").cast(DoubleType))).as("gini"))
-  }
-
-  /** Per-GROUP [[gini]] — each source's internal concentration in
-    * one pass (one row per group: (group, n, total, gini)), via
-    * [[cumBelowByValueGrouped]]; same exactness and null semantics.
-    */
-  def giniByGroup(df: DataFrame, groupCol: String,
-                  valCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-    df.schema(valCol).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"giniByGroup needs an integral column; '$valCol' is " +
-          other.simpleString)
-    }
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    val g = df
-      .filter(col(valCol).isNotNull && col(valCol) >= 0)
-      .groupBy(col(groupCol), col(valCol).cast(LongType).as("__v"))
-      .agg(count(lit(1)).as("__c"),
-        sum(col(valCol).cast(LongType)).as("__s"))
-    cumBelowByValueGrouped(g, Seq(groupCol), "__v", Seq("__c", "__s"))
-      .groupBy(col(groupCol))
-      .agg(sum(col("__c")).as("n"), sum(col("__s")).as("total"),
-        sum(d19(col("__c")) *
-          (d19(col("__v")) * d19(col("cum___c")) -
-            d19(col("cum___s")))).as("__half"))
-      .select(col(groupCol), col("n"), col("total"),
-        when(col("n") > 0 && col("total") > 0,
-          lit(2.0) * col("__half").cast(DoubleType) /
-            (lit(2.0) * col("n").cast(DoubleType) *
-              col("total").cast(DoubleType))).as("gini"))
+              col("total").cast(DoubleType))).as("gini")): _*)
   }
 
   /** Effective sample size of an importance-weighted sample (Kish
@@ -618,109 +612,67 @@ object Stats {
     * np·(2·cnn + nn) silently wraps past 2^63 on billion-row
     * heavy-tie inputs) and sum in DECIMAL(38,0) — exact count
     * arithmetic at any realistic corpus size — and
-    * the one division is the only double op. One row: (n_pos, n_neg,
-    * auc); null AUC when either class is empty. Nulls in score or
-    * label drop.
+    * the one division is the only double op. One row per `groupCols`
+    * key (a single row when there are none): (groupCols…, n_pos,
+    * n_neg, auc); null AUC when either class is empty. Nulls in score or label
+    * drop. Grouped, it is the scorer-validation scorecard ("does the
+    * classifier still separate keepers from rejects on EVERY
+    * source"), its ranks-below from [[cumBelowByValueGrouped]] so no
+    * partition is ever one group's entire distinct-score set.
     */
-  def auc(df: DataFrame, scoreFxCol: String, labelCol: String)
-      : DataFrame =
-    aucFromCounts(labeledScoreCounts(df, scoreFxCol, labelCol))
+  def auc(df: DataFrame, scoreFxCol: String, labelCol: String,
+          groupCols: Seq[String] = Nil): DataFrame =
+    aucFromCounts(labeledScoreCounts(df, scoreFxCol, labelCol, groupCols),
+      groupCols)
 
-  /** Per-distinct-score LABELED count table `(s, np, nn)` —
-    * [[scoreCounts]] with the class split: the partial a streamed
-    * scorer-quality store sums ([[graft.streaming.StreamingScorer]])
-    * and the per-side input of [[aucFromCounts]] /
-    * [[rankSumTestFromCounts]]. Null score or label drops.
+  /** Per-(groupCols…, distinct score) LABELED count table
+    * `(groupCols…, s, np, nn)` — [[scoreCounts]] with the class
+    * split: the partial a streamed scorer-quality store sums
+    * ([[graft.streaming.StreamingScorer]]) and the per-side input of
+    * [[aucFromCounts]] / [[rankSumTestFromCounts]]. Null score or
+    * label drops.
     */
   def labeledScoreCounts(df: DataFrame, scoreFxCol: String,
-                         labelCol: String): DataFrame = {
+                         labelCol: String,
+                         groupCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    df.schema(scoreFxCol).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"labeledScoreCounts needs an integral (fixed-point) score " +
-          s"column; '$scoreFxCol' is ${other.simpleString}")
-    }
+    requireIntegral(df, scoreFxCol, "labeledScoreCounts")
     df.filter(col(scoreFxCol).isNotNull && col(labelCol).isNotNull)
-      .groupBy(col(scoreFxCol).cast(LongType).as("s"))
+      .groupBy(groupCols.map(col) :+
+        col(scoreFxCol).cast(LongType).as("s"): _*)
       .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("np"),
         sum(when(col(labelCol), 0L).otherwise(1L)).as("nn"))
   }
 
-  /** [[auc]] over a PRE-AGGREGATED `(s, np, nn)` table from
-    * [[labeledScoreCounts]] (re-aggregated, so sum-merged store
+  /** [[auc]] over a PRE-AGGREGATED `(groupCols…, s, np, nn)` table
+    * from [[labeledScoreCounts]] (re-aggregated, so sum-merged store
     * partials feed in directly) — the streamed scorer monitor's read
     * path. Same arithmetic, exactness and output.
     */
-  def aucFromCounts(counts: DataFrame): DataFrame = {
+  def aucFromCounts(counts: DataFrame,
+                    groupCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val g = counts.groupBy(col("s").cast("long").as("__s"))
+    val keys = groupCols.map(col)
+    val g = counts.groupBy(keys :+ col("s").cast("long").as("__s"): _*)
       .agg(sum(col("np")).as("np"), sum(col("nn")).as("nn"))
     // factors cast to DECIMAL(19,0) BEFORE multiplying — a long
     // product np·(2·cnn + nn) would silently wrap past 2^63 on
     // billion-row heavy-tie inputs; 19-digit factors keep the decimal
     // product exact (and DuckDB's BIGINT→HUGEINT sum mirrors it)
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    cumBelowByValue(g, "__s", Seq("nn"))
+    cumBelow(g, groupCols, "__s", Seq("nn"))
+      .groupBy(keys: _*)
       .agg(
         coalesce(sum(col("np")), lit(0L)).as("n_pos"),
         coalesce(sum(col("nn")), lit(0L)).as("n_neg"),
         coalesce(sum(d19(col("np")) *
             (d19(col("cum_nn")) * 2 + d19(col("nn")))),
           lit(0L).cast(DecimalType(38, 0))).as("__num2"))
-      .select(col("n_pos"), col("n_neg"),
+      .select(keys ++ Seq(col("n_pos"), col("n_neg"),
         when(col("n_pos") > 0 && col("n_neg") > 0,
           col("__num2").cast(DoubleType) /
             (lit(2.0) * col("n_pos").cast(DoubleType) *
               col("n_neg").cast(DoubleType)))
-          .as("auc"))
-  }
-
-  /** Per-GROUP [[auc]] — the scorer-validation scorecard ("does the
-    * quality classifier still separate keepers from rejects on EVERY
-    * source, or only on the ones it was tuned on"). The ranks-below
-    * come from [[cumBelowByValueGrouped]] over the per-(group,
-    * distinct-score) count table — the same bucketed two-level prefix
-    * sum as the ungrouped [[auc]], so no partition is ever one
-    * group's ENTIRE distinct-score set (a 1e9-quantized continuous
-    * score could make that ~corpus-sized and its window a one-task
-    * sort — the r13 scale watch); no global window, no pair join.
-    * Same tie handling, exactness and output semantics as [[auc]];
-    * one row per group: (group, n_pos, n_neg, auc).
-    */
-  def aucByGroup(df: DataFrame, groupCol: String, scoreFxCol: String,
-                 labelCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-    df.schema(scoreFxCol).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"aucByGroup needs an integral (fixed-point) score column; " +
-          s"'$scoreFxCol' is ${other.simpleString}")
-    }
-    val g = df
-      .filter(col(scoreFxCol).isNotNull && col(labelCol).isNotNull)
-      .groupBy(col(groupCol), col(scoreFxCol).cast(LongType).as("__s"))
-      .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("np"),
-        sum(when(col(labelCol), 0L).otherwise(1L)).as("nn"))
-    // 19-digit decimal factors: see auc — long products wrap silently
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    cumBelowByValueGrouped(g, Seq(groupCol), "__s", Seq("nn"))
-      .withColumn("cnn", col("cum_nn"))
-      .groupBy(col(groupCol))
-      .agg(
-        sum(col("np")).as("n_pos"), sum(col("nn")).as("n_neg"),
-        sum(d19(col("np")) * (d19(col("cnn")) * 2 + d19(col("nn"))))
-          .as("__num2"))
-      .select(col(groupCol), col("n_pos"), col("n_neg"),
-        when(col("n_pos") > 0 && col("n_neg") > 0,
-          col("__num2").cast(DoubleType) /
-            (lit(2.0) * col("n_pos").cast(DoubleType) *
-              col("n_neg").cast(DoubleType)))
-          .as("auc"))
+          .as("auc")): _*)
   }
 
   /** McNemar's test over paired boolean outcomes — the significance
@@ -770,71 +722,86 @@ object Stats {
     * statistic is bit-identical cross-engine; the one division
     * closes. `ks_at` is the SMALLEST score achieving the max (a
     * deterministic "where does the distribution break" pointer). One
-    * row: (n_ref, n_cur, d, ks_at); d/ks_at null when either side is
-    * empty. Nulls drop.
+    * row per `groupCols` key present on EITHER side (a single row
+    * when there are none): (groupCols…, n_ref, n_cur, d, ks_at);
+    * d/ks_at null when a side is empty — for a group, the
+    * appeared/vanished alarm rides on the zero count. Nulls drop.
+    * Grouped, it is the drift SCORECARD ([[psi]]'s exact companion):
+    * every source's KS in one pass, with no partition ever one
+    * group's entire distinct-score set ([[cumBelowByValueGrouped]]).
     *
     * Scale shape: one count agg per side, a value-keyed full join,
     * [[cumBelowByValue]] (two sum columns share the one pass), a
-    * 1-row broadcast totals cross join, one max agg. No global
-    * window, no pair work.
+    * broadcast totals join (1 row, or one per group), one max agg. No
+    * global window, no pair work.
     */
-  def ksTest(ref: DataFrame, cur: DataFrame,
-             scoreFxCol: String): DataFrame =
-    ksTestFromCounts(scoreCounts(ref, scoreFxCol),
-      scoreCounts(cur, scoreFxCol))
+  def ksTest(ref: DataFrame, cur: DataFrame, scoreFxCol: String,
+             groupCols: Seq[String] = Nil): DataFrame =
+    ksTestFromCounts(scoreCounts(ref, scoreFxCol, groupCols),
+      scoreCounts(cur, scoreFxCol, groupCols), groupCols)
 
-  /** Per-distinct-score counts `(s, n)` — [[ksTest]]'s mergeable
-    * state and the per-micro-batch partial of the STREAMED monitor
-    * ([[graft.streaming.StreamingDrift]]'s KS store): counts SUM
-    * across batches, so the merged store reproduces the replayed
-    * log's table exactly. Nulls drop; score must be integral.
+  /** Per-(groupCols…, distinct score) counts `(groupCols…, s, n)` —
+    * [[ksTest]]'s mergeable state and the per-micro-batch partial of
+    * the STREAMED monitor ([[graft.streaming.StreamingDrift]]'s KS
+    * store): counts SUM across batches, so the merged store
+    * reproduces the replayed log's table exactly. Nulls drop; score
+    * must be integral.
     */
-  def scoreCounts(df: DataFrame, scoreFxCol: String): DataFrame = {
+  def scoreCounts(df: DataFrame, scoreFxCol: String,
+                  groupCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    df.schema(scoreFxCol).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"ksTest needs an integral (fixed-point) score column; " +
-          s"'$scoreFxCol' is ${other.simpleString}")
-    }
+    requireIntegral(df, scoreFxCol, "ksTest")
     df.filter(col(scoreFxCol).isNotNull)
-      .groupBy(col(scoreFxCol).cast(LongType).as("s"))
+      .groupBy(groupCols.map(col) :+
+        col(scoreFxCol).cast(LongType).as("s"): _*)
       .agg(count(lit(1)).as("n"))
   }
 
-  /** [[ksTest]] over PRE-AGGREGATED `(s, n)` count tables from
-    * [[scoreCounts]] (re-aggregated here, so sum-merged store
-    * partials feed in directly) — the streamed drift monitor's read
-    * path. Same output and exact-integer arithmetic.
+  /** [[ksTestFromCounts]]' and [[wasserstein1FromCounts]]' shared
+    * first half: both sides' [[scoreCounts]] tables re-aggregated (so
+    * sum-merged store partials feed in directly) and full-joined per
+    * (key, score) into `(groupCols…, __s, c1, c2)`, a missing side
+    * zero; then both sides' exclusive cums (`cum_c1`, `cum_c2`)
+    * joined to their per-key totals (`__n1`, `__n2`).
     */
-  def ksTestFromCounts(refCounts: DataFrame,
-                       curCounts: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    def agg(counts: DataFrame, n: String): DataFrame =
+  private def cumScoreCounts(refCounts: DataFrame, curCounts: DataFrame,
+                             groupCols: Seq[String]): DataFrame = {
+    def side(counts: DataFrame, n: String): DataFrame =
       counts.filter(col("n").isNotNull && col("n") > 0)
-        .groupBy(col("s").as("__s")).agg(sum(col("n")).as(n))
-    val both = agg(refCounts, "c1").join(agg(curCounts, "c2"),
-        Seq("__s"), "full")
+        .groupBy(groupCols.map(col) :+ col("s").as("__s"): _*)
+        .agg(sum(col("n")).as(n))
+    val both = side(refCounts, "c1").join(side(curCounts, "c2"),
+        groupCols :+ "__s", "full")
       .na.fill(0L, Seq("c1", "c2"))
-    val cum = cumBelowByValue(both, "__s", Seq("c1", "c2"))
-    // totals from the RETURNED frame: it sits on cumBelowByValue's
+    val cum = cumBelow(both, groupCols, "__s", Seq("c1", "c2"))
+    // totals from the RETURNED frame: it sits on the prefix sum's
     // localCheckpoint, so the per-side count aggs + full join run
     // once — totals planned off `both` would re-execute the lineage
-    val totals = cum.agg(
+    val totals = cum.groupBy(groupCols.map(col): _*).agg(
       coalesce(sum(col("c1")), lit(0L)).as("__n1"),
       coalesce(sum(col("c2")), lit(0L)).as("__n2"))
+    joinOn(cum, broadcast(totals), groupCols)
+  }
+
+  /** [[ksTest]] over PRE-AGGREGATED `(groupCols…, s, n)` count tables
+    * from [[scoreCounts]] — the streamed drift monitor's read path,
+    * where `curCounts` is a sum-merged store snapshot and `refCounts`
+    * a pinned reference. Same output and exact-integer arithmetic.
+    */
+  def ksTestFromCounts(refCounts: DataFrame, curCounts: DataFrame,
+                       groupCols: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.types.DoubleType
+    val keys = groupCols.map(col)
     val dn = abs(d19(col("cum_c1") + col("c1")) * d19(col("__n2")) -
       d19(col("cum_c2") + col("c2")) * d19(col("__n1")))
-    cum.crossJoin(broadcast(totals))
-      .select(col("__n1"), col("__n2"), dn.as("__dn"),
-        col("__s"))
+    cumScoreCounts(refCounts, curCounts, groupCols)
+      .select(keys ++ Seq(col("__n1"), col("__n2"), dn.as("__dn"),
+        col("__s")): _*)
+      .groupBy(keys: _*)
       .agg(max(col("__n1")).as("n_ref"), max(col("__n2")).as("n_cur"),
         max(struct(col("__dn").as("dn"),
           (lit(-1L) * col("__s")).as("negs"))).as("__t"))
-      .select(
+      .select(keys ++ Seq(
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"),
         when(col("n_ref") > 0 && col("n_cur") > 0,
@@ -842,7 +809,7 @@ object Stats {
             (col("n_ref").cast(DoubleType) *
               col("n_cur").cast(DoubleType))).as("d"),
         when(col("n_ref") > 0 && col("n_cur") > 0,
-          col("__t.negs") * -1L).as("ks_at"))
+          col("__t.negs") * -1L).as("ks_at")): _*)
   }
 
   /** Exact 1-Wasserstein (earth-mover) distance between two
@@ -871,192 +838,45 @@ object Stats {
     * holds for any realistic quantization (1e6 distinct × 1e9 fx-max
     * × 1e9 × 1e9 rows ≈ 1e33; the oracle's HUGEINT matches the
     * headroom and errors rather than wraps, like every sibling).
-    * One row: (n_ref, n_cur, w1) — w1 null when either side is empty.
+    * One row per `groupCols` key present on either side (a single row
+    * when there are none): (groupCols…, n_ref, n_cur, w1) — w1 null
+    * when a side is empty.
     *
     * Scale shape: identical to [[ksTest]] — two map-side hash aggs,
-    * one full join, the bucketed two-level prefix sum, one 1-row
-    * broadcast of totals, one closing agg.
+    * one full join, the bucketed two-level prefix sum, one broadcast
+    * of totals, one closing agg.
     */
-  def wasserstein1(ref: DataFrame, cur: DataFrame,
-                   scoreFxCol: String): DataFrame =
-    wasserstein1FromCounts(scoreCounts(ref, scoreFxCol),
-      scoreCounts(cur, scoreFxCol))
+  def wasserstein1(ref: DataFrame, cur: DataFrame, scoreFxCol: String,
+                   groupCols: Seq[String] = Nil): DataFrame =
+    wasserstein1FromCounts(scoreCounts(ref, scoreFxCol, groupCols),
+      scoreCounts(cur, scoreFxCol, groupCols), groupCols)
 
-  /** [[wasserstein1]] over PRE-AGGREGATED `(s, n)` count tables from
-    * [[scoreCounts]] (re-aggregated, so sum-merged store partials
-    * feed in directly) — the streamed drift monitor's read path: the
-    * SAME per-score count store the exact-KS monitor reads
+  /** [[wasserstein1]] over PRE-AGGREGATED `(groupCols…, s, n)` count
+    * tables from [[scoreCounts]] — the streamed drift monitor's read
+    * path: the SAME per-score count store the exact-KS monitor reads
     * ([[graft.streaming.StreamingDrift]]), one store, two alarms.
     */
-  def wasserstein1FromCounts(refCounts: DataFrame,
-                             curCounts: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    def agg(counts: DataFrame, n: String): DataFrame =
-      counts.filter(col("n").isNotNull && col("n") > 0)
-        .groupBy(col("s").as("__s")).agg(sum(col("n")).as(n))
-    val both = agg(refCounts, "c1").join(agg(curCounts, "c2"),
-        Seq("__s"), "full")
-      .na.fill(0L, Seq("c1", "c2"))
-    val cum = cumBelowByValue(both, "__s", Seq("c1", "c2"))
-    val totals = cum.agg(
-      coalesce(sum(col("c1")), lit(0L)).as("__n1"),
-      coalesce(sum(col("c2")), lit(0L)).as("__n2"))
+  def wasserstein1FromCounts(refCounts: DataFrame, curCounts: DataFrame,
+                             groupCols: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.types.DoubleType
+    val keys = groupCols.map(col)
     val eAbs = abs(d19(col("cum_c1")) * d19(col("__n2")) -
       d19(col("cum_c2")) * d19(col("__n1")))
     val dAbs = abs(d19(col("cum_c1") + col("c1")) * d19(col("__n2")) -
       d19(col("cum_c2") + col("c2")) * d19(col("__n1")))
-    cum.crossJoin(broadcast(totals))
-      .select(col("__n1"), col("__n2"),
-        (d19(col("__s")) * (eAbs - dAbs)).as("__t"))
+    cumScoreCounts(refCounts, curCounts, groupCols)
+      .select(keys ++ Seq(col("__n1"), col("__n2"),
+        (d19(col("__s")) * (eAbs - dAbs)).as("__t")): _*)
+      .groupBy(keys: _*)
       .agg(max(col("__n1")).as("n_ref"), max(col("__n2")).as("n_cur"),
         sum(col("__t")).as("__num"))
-      .select(
+      .select(keys ++ Seq(
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"),
         when(col("n_ref") > 0 && col("n_cur") > 0,
           col("__num").cast(DoubleType) /
             (col("n_ref").cast(DoubleType) *
-              col("n_cur").cast(DoubleType))).as("w1"))
-  }
-
-  /** Per-GROUP [[wasserstein1]] — the mass-moved drift SCORECARD
-    * ([[ksTestByGroup]]'s magnitude companion, same one-pass shape):
-    * within-group exclusive cums from [[cumBelowByValueGrouped]],
-    * groups-sized totals broadcast back, the telescoped row-local
-    * term, one group-keyed agg. One row per group present on either
-    * side: (group, n_ref, n_cur, w1) — w1 null when the group is
-    * missing from one side.
-    */
-  def wasserstein1ByGroup(ref: DataFrame, cur: DataFrame,
-                          groupCol: String,
-                          scoreFxCol: String): DataFrame =
-    wasserstein1ByGroupFromCounts(
-      scoreCountsBy(ref, groupCol, scoreFxCol),
-      scoreCountsBy(cur, groupCol, scoreFxCol), groupCol)
-
-  /** [[wasserstein1ByGroup]] over PRE-AGGREGATED per-(group, score)
-    * count tables from [[scoreCountsBy]] — the per-source streamed
-    * monitor's read path (same stores as the per-source KS).
-    */
-  def wasserstein1ByGroupFromCounts(refCounts: DataFrame,
-                                    curCounts: DataFrame,
-                                    groupCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    def side(df: DataFrame, n: String): DataFrame =
-      df.filter(col("n").isNotNull && col("n") > 0)
-        .groupBy(col(groupCol), col("s").cast("long").as("__s"))
-        .agg(sum(col("n")).as(n))
-    val both = side(refCounts, "c1").join(side(curCounts, "c2"),
-        Seq(groupCol, "__s"), "full")
-      .na.fill(0L, Seq("c1", "c2"))
-    val cum = cumBelowByValueGrouped(both, Seq(groupCol), "__s",
-      Seq("c1", "c2"))
-    val totals = cum.groupBy(col(groupCol))
-      .agg(sum(col("c1")).as("__n1"), sum(col("c2")).as("__n2"))
-    val eAbs = abs(d19(col("cum_c1")) * d19(col("__n2")) -
-      d19(col("cum_c2")) * d19(col("__n1")))
-    val dAbs = abs(d19(col("cum_c1") + col("c1")) * d19(col("__n2")) -
-      d19(col("cum_c2") + col("c2")) * d19(col("__n1")))
-    cum.join(broadcast(totals), Seq(groupCol))
-      .select(col(groupCol), col("__n1"), col("__n2"),
-        (d19(col("__s")) * (eAbs - dAbs)).as("__t"))
-      .groupBy(col(groupCol))
-      .agg(max(col("__n1")).as("n_ref"), max(col("__n2")).as("n_cur"),
-        sum(col("__t")).as("__num"))
-      .select(col(groupCol), col("n_ref"), col("n_cur"),
-        when(col("n_ref") > 0 && col("n_cur") > 0,
-          col("__num").cast(DoubleType) /
-            (col("n_ref").cast(DoubleType) *
-              col("n_cur").cast(DoubleType))).as("w1"))
-  }
-
-  /** Per-GROUP [[ksTest]] — the drift SCORECARD form ([[psiByGroup]]'s
-    * exact companion): every source's reference-vs-current KS in one
-    * pass. The within-group cumulative counts come from
-    * [[cumBelowByValueGrouped]] over the per-(group, score) count
-    * table — the same bucketed two-level prefix sum as the ungrouped
-    * [[ksTest]], so no partition is ever one group's entire
-    * distinct-score set (the r13 scale watch: a 1e9-quantized
-    * continuous score makes that ~corpus-sized); the per-group totals
-    * are a groups-sized hash agg broadcast back. Same exact-integer
-    * max and smallest-breaking-score pointer as [[ksTest]]; one row
-    * per group present on EITHER side: (group, n_ref, n_cur, d,
-    * ks_at) — d null when the group is missing from one side (the
-    * appeared/vanished alarm rides on the zero count).
-    */
-  def ksTestByGroup(ref: DataFrame, cur: DataFrame, groupCol: String,
-                    scoreFxCol: String): DataFrame =
-    ksTestByGroupFromCounts(
-      scoreCountsBy(ref, groupCol, scoreFxCol),
-      scoreCountsBy(cur, groupCol, scoreFxCol), groupCol)
-
-  /** Per-(group, distinct-score) count table — [[scoreCounts]] keyed
-    * by a source column: the partial a per-source streamed KS drift
-    * store sums and the per-side input of
-    * [[ksTestByGroupFromCounts]]. `(groupCol, s, n)`.
-    */
-  def scoreCountsBy(df: DataFrame, groupCol: String,
-                    scoreFxCol: String): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    df.schema(scoreFxCol).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"scoreCountsBy needs an integral (fixed-point) score " +
-          s"column; '$scoreFxCol' is ${other.simpleString}")
-    }
-    df.filter(col(scoreFxCol).isNotNull)
-      .groupBy(col(groupCol), col(scoreFxCol).cast(LongType).as("s"))
-      .agg(count(lit(1)).as("n"))
-  }
-
-  /** [[ksTestByGroup]] over PRE-AGGREGATED per-(group, score) count
-    * tables from [[scoreCountsBy]] (both sides `(groupCol, s, n)`,
-    * re-aggregation-safe: sum-merged store partials feed in
-    * directly) — the read path of the per-source streamed KS drift
-    * monitor, where `curCounts` is a sum-merged store snapshot and
-    * `refCounts` a pinned reference
-    * ([[graft.streaming.StreamingDrift]]).
-    */
-  def ksTestByGroupFromCounts(refCounts: DataFrame,
-                              curCounts: DataFrame,
-                              groupCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    def side(df: DataFrame, n: String): DataFrame =
-      df.filter(col("n").isNotNull && col("n") > 0)
-        .groupBy(col(groupCol), col("s").cast("long").as("__s"))
-        .agg(sum(col("n")).as(n))
-    val both = side(refCounts, "c1").join(side(curCounts, "c2"),
-        Seq(groupCol, "__s"), "full")
-      .na.fill(0L, Seq("c1", "c2"))
-    val cum = cumBelowByValueGrouped(both, Seq(groupCol), "__s",
-      Seq("c1", "c2"))
-    // totals from the cum output, not `both` — cumBelowByValueGrouped
-    // local-checkpoints its input, so this agg reads the materialized
-    // count table instead of re-running the full join
-    val totals = cum.groupBy(col(groupCol))
-      .agg(sum(col("c1")).as("__n1"), sum(col("c2")).as("__n2"))
-    val dn = abs(d19(col("__ic1")) * d19(col("__n2")) -
-      d19(col("__ic2")) * d19(col("__n1")))
-    cum
-      .withColumn("__ic1", col("cum_c1") + col("c1"))
-      .withColumn("__ic2", col("cum_c2") + col("c2"))
-      .join(broadcast(totals), Seq(groupCol))
-      .groupBy(col(groupCol))
-      .agg(max(col("__n1")).as("n_ref"), max(col("__n2")).as("n_cur"),
-        max(struct(dn.as("dn"),
-          (lit(-1L) * col("__s")).as("negs"))).as("__t"))
-      .select(col(groupCol), col("n_ref"), col("n_cur"),
-        when(col("n_ref") > 0 && col("n_cur") > 0,
-          col("__t.dn").cast(DoubleType) /
-            (col("n_ref").cast(DoubleType) *
-              col("n_cur").cast(DoubleType))).as("d"),
-        when(col("n_ref") > 0 && col("n_cur") > 0,
-          col("__t.negs") * -1L).as("ks_at"))
+              col("n_cur").cast(DoubleType))).as("w1")): _*)
   }
 
   /** Tie-corrected Mann-Whitney rank-sum test over the same inputs
@@ -1086,7 +906,6 @@ object Stats {
     */
   def rankSumTestFromCounts(counts: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
     val g = counts.groupBy(col("s").cast("long").as("__s"))
       .agg(sum(col("np")).as("np"), sum(col("nn")).as("nn"))
     val t = col("np") + col("nn")
@@ -1142,8 +961,7 @@ object Stats {
     require(lower >= 0 && upper <= 1 && lower < upper,
       s"need 0 <= lower < upper <= 1, got lower=$lower upper=$upper")
     import graft.functions.TextFns
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
+    import org.apache.spark.sql.types.{DoubleType, LongType}
     // persisted: the bootstrap fan-out and the unweighted point
     // estimate both read this frame (the cb convention)
     val units = df
@@ -1169,7 +987,7 @@ object Stats {
     // sum — a RESAMPLE-partitioned window's group is the whole
     // distinct-score table, which a 1e9-quantized continuous score
     // makes ~corpus-sized (the r13 by-group scale watch, closed here
-    // the same way as aucByGroup/ksTestByGroup)
+    // the same way as the grouped auc/ksTest)
     val perR = cumBelowByValueGrouped(wCounts, Seq("__r"), "__s",
         Seq("nn"))
       .withColumn("cnn", col("cum_nn"))
@@ -1212,17 +1030,8 @@ object Stats {
     */
   def spearman(df: DataFrame, xFxCol: String, yFxCol: String)
       : DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-    Seq(xFxCol, yFxCol).foreach { c =>
-      df.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType | LongType => ()
-        case other => throw new IllegalArgumentException(
-          s"spearman needs integral (fixed-point) score columns; " +
-            s"'$c' is ${other.simpleString}")
-      }
-    }
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    Seq(xFxCol, yFxCol).foreach(requireIntegral(df, _, "spearman"))
     val rows = df
       .filter(col(xFxCol).isNotNull && col(yFxCol).isNotNull)
       .select(col(xFxCol).cast(LongType).as("__x"),
@@ -1239,7 +1048,6 @@ object Stats {
     // factors cast to DECIMAL(19,0) before the product: doubled ranks
     // are ~2n, so a LONG r2x·r2y wraps near n ≈ 1.5e9 rows; 19-digit
     // decimal factors make the (38,0) product exact at any long rank
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
     def dec(c: org.apache.spark.sql.Column) =
       sum(c).cast(DoubleType)
     val s = ranked.agg(
@@ -1406,8 +1214,6 @@ object Stats {
     // past ~3e9 of summed rating mass, and the oracle's HUGEINT would
     // error rather than wrap — the engines must agree loudly or not
     // at all; 19-digit factors keep the Decimal(38,0) product exact
-    def d19(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
     totals.crossJoin(broadcast(dObs))
       .withColumn("__de", lit(2L) *
         (d19(col("n_ratings")) * d19(col("__S2")) -
@@ -1655,33 +1461,42 @@ object Stats {
     * The scalar PSI is `sum(term_fx)/1e9`; the classic reading:
     * < 0.1 stable, 0.1–0.25 moderate shift, > 0.25 investigate.
     *
-    * Scale shape: one bin-keyed map-side-combining hash agg per
-    * side (≤ `bins` output rows each), both joined onto a
-    * `bins`-row spine, one 1-row totals cross join, then a narrow
-    * projection. No window, nothing driver-side; both inputs are
-    * scanned exactly once.
+    * With `groupCols` it is the drift SCORECARD: one pass over each
+    * side computes every source's table — all `bins` rows for every
+    * key present on EITHER side, led by the key columns (a source
+    * that appeared or vanished reports all-zero counts on its missing
+    * side: maximal drift, the right alarm). With none, the table
+    * exists even for two empty inputs.
+    *
+    * Scale shape: one (key, bin)-keyed map-side-combining hash agg
+    * per side (≤ |keys|·`bins` output rows each), both joined onto a
+    * |keys|·`bins`-row spine, one broadcast totals join, then a
+    * narrow projection. No window, nothing driver-side; both inputs
+    * are scanned exactly once.
     */
   def psi(ref: DataFrame, cur: DataFrame, scoreCol: String,
-          bins: Int = 10, lo: Double = 0.0,
-          hi: Double = 1.0): DataFrame =
-    psiFromCounts(binCounts(ref, scoreCol, bins, lo, hi),
-      binCounts(cur, scoreCol, bins, lo, hi), bins)
+          bins: Int = 10, lo: Double = 0.0, hi: Double = 1.0,
+          groupCols: Seq[String] = Nil): DataFrame =
+    psiFromCounts(binCounts(ref, scoreCol, bins, lo, hi, groupCols),
+      binCounts(cur, scoreCol, bins, lo, hi, groupCols), bins, groupCols)
 
   /** Fixed-range bin counts — [[psi]]'s binning step as a standalone
-    * operator: (bin, n) with nulls AND NaNs dropped (see [[psi]]).
-    * This expression IS the binning contract the streamed drift
-    * monitor shares: [[graft.streaming.StreamingDrift]] lands these
-    * counts per micro-batch into a sum-merged store and feeds the
-    * merged counts to [[psiFromCounts]], so streamed PSI provably
-    * equals the batch [[psi]] over the replayed log. One bin-keyed
-    * map-side-combining hash agg, ≤ `bins` output rows.
+    * operator: (groupCols…, bin, n) with nulls AND NaNs dropped (see
+    * [[psi]]). This expression IS the binning contract the streamed
+    * drift monitor shares: [[graft.streaming.StreamingDrift]] lands
+    * these counts per micro-batch into a sum-merged store and feeds
+    * the merged counts to [[psiFromCounts]], so streamed PSI provably
+    * equals the batch [[psi]] over the replayed log. One (key,
+    * bin)-keyed map-side-combining hash agg, ≤ |keys|·`bins` rows.
     */
   def binCounts(df: DataFrame, scoreCol: String, bins: Int,
-                lo: Double, hi: Double): DataFrame = {
+                lo: Double, hi: Double,
+                groupCols: Seq[String] = Nil): DataFrame = {
     require(bins >= 1 && bins <= 10000,
       s"bins must be in [1, 10000], got $bins")
     require(lo < hi, s"need lo < hi, got lo=$lo hi=$hi")
     import org.apache.spark.sql.types.{DoubleType, LongType}
+    val keys = groupCols.map(col)
     val b = least(lit(bins - 1L), greatest(lit(0L),
       floor((col(scoreCol).cast(DoubleType) - lo) / (hi - lo) * bins)
         .cast(LongType)))
@@ -1689,138 +1504,68 @@ object Stats {
     // and would silently land in bin 0 (DuckDB errors instead)
     df.filter(col(scoreCol).isNotNull &&
         !isnan(col(scoreCol).cast(DoubleType)))
-      .select(b.as("bin"))
-      .groupBy(col("bin")).agg(count(lit(1)).as("n"))
+      .select(keys :+ b.as("bin"): _*)
+      .groupBy(keys :+ col("bin"): _*).agg(count(lit(1)).as("n"))
   }
 
-  /** [[psi]] over PRE-BINNED counts — both sides `(bin, n)` frames
-    * from [[binCounts]] (missing bins = zero; extra rows outside
-    * [0, bins) are the caller's bug and simply never join the spine).
-    * Same smoothing, ln term and 1e9 quantization; this is the read
-    * path of the streamed drift monitor, where `curCounts` is a
-    * sum-merged store snapshot and `refCounts` a pinned reference.
+  /** [[psi]] over PRE-BINNED counts — both sides `(groupCols…, bin,
+    * n)` frames from [[binCounts]] (missing bins = zero; extra rows
+    * outside [0, bins) are the caller's bug and simply never join the
+    * spine). Same smoothing, ln term and 1e9 quantization; this is
+    * the read path of the streamed drift monitor, where `curCounts`
+    * is a sum-merged store snapshot and `refCounts` a pinned
+    * reference.
     */
   def psiFromCounts(refCounts: DataFrame, curCounts: DataFrame,
-                    bins: Int): DataFrame = {
+                    bins: Int,
+                    groupCols: Seq[String] = Nil): DataFrame = {
     require(bins >= 1 && bins <= 10000,
       s"bins must be in [1, 10000], got $bins")
     import org.apache.spark.sql.types.{DoubleType, LongType}
-    val spark = refCounts.sparkSession
-    val spine = spark.range(bins).select(col("id").as("bin"))
-    val r = refCounts.select(col("bin"), col("n").as("n_ref"))
-    val c = curCounts.select(col("bin"), col("n").as("n_cur"))
-    val totals = r.agg(coalesce(sum(col("n_ref")), lit(0L)).as("__nr"))
-      .crossJoin(c.agg(coalesce(sum(col("n_cur")), lit(0L)).as("__nc")))
+    val keys = groupCols.map(col)
+    val binIds = refCounts.sparkSession.range(bins)
+      .select(col("id").as("bin"))
+    val r = refCounts.select(keys ++ Seq(col("bin"),
+      col("n").as("n_ref")): _*)
+    val c = curCounts.select(keys ++ Seq(col("bin"),
+      col("n").as("n_cur")): _*)
+    // no keys: the one implicit group always exists, empty or not
+    val spine =
+      if (groupCols.isEmpty) binIds
+      else r.select(keys: _*).union(c.select(keys: _*)).distinct()
+        .crossJoin(broadcast(binIds))
+    val totals = joinOn(
+        r.groupBy(keys: _*)
+          .agg(coalesce(sum(col("n_ref")), lit(0L)).as("__nr")),
+        c.groupBy(keys: _*)
+          .agg(coalesce(sum(col("n_cur")), lit(0L)).as("__nc")),
+        groupCols, "full")
+      .na.fill(0L, Seq("__nr", "__nc")) // a key on one side only
     val p = (col("n_ref") + 1L).cast(DoubleType) /
       (col("__nr") + bins).cast(DoubleType)
     val q = (col("n_cur") + 1L).cast(DoubleType) /
       (col("__nc") + bins).cast(DoubleType)
-    spine.join(r, Seq("bin"), "left").join(c, Seq("bin"), "left")
-      .na.fill(0L, Seq("n_ref", "n_cur"))
-      .crossJoin(broadcast(totals))
-      .select(col("bin"), col("n_ref"), col("n_cur"),
+    joinOn(spine.join(r, groupCols :+ "bin", "left")
+        .join(c, groupCols :+ "bin", "left")
+        .na.fill(0L, Seq("n_ref", "n_cur")),
+      broadcast(totals), groupCols)
+      .select(keys ++ Seq(col("bin"), col("n_ref"), col("n_cur"),
         p.as("p_ref"), q.as("p_cur"),
         floor((p - q) * log(p / q) * 1e9 + 0.5).cast(LongType)
-          .as("term_fx"))
-  }
-
-  /** Per-GROUP population stability index — the drift SCORECARD form
-    * of [[psi]]: one pass over each side computes every source's
-    * reference-vs-current bin table, so a 20-source corpus gets its
-    * per-source drift report without 20 filtered re-scans. Emits one
-    * row per (group, bin) with the same columns and smoothing as
-    * [[psi]]; the per-group scalar is `sum(term_fx)/1e9 GROUP BY
-    * group`. Groups present on only one side still report (their
-    * missing side is all-zero counts — maximal drift, which is the
-    * right alarm for a source that appeared or vanished).
-    *
-    * Scale shape: one (group, bin)-keyed map-side hash agg per side
-    * (≤ |groups|·bins rows each), a |groups|·bins spine from the
-    * distinct-group union crossed with the bin range, two left
-    * joins, one group-keyed totals join. No window, nothing
-    * driver-side.
-    */
-  def psiByGroup(ref: DataFrame, cur: DataFrame, groupCol: String,
-                 scoreCol: String, bins: Int = 10, lo: Double = 0.0,
-                 hi: Double = 1.0): DataFrame =
-    psiByGroupFromCounts(
-      binCountsBy(ref, groupCol, scoreCol, bins, lo, hi),
-      binCountsBy(cur, groupCol, scoreCol, bins, lo, hi),
-      groupCol, bins)
-
-  /** Per-(group, bin) histogram — [[binCounts]] keyed by a source
-    * column: the partial a per-source streamed drift store sums and
-    * the per-side input of [[psiByGroupFromCounts]]. Same binning
-    * expression and NaN/null drop as [[binCounts]], so the grouped
-    * streamed monitor is bit-identical to the batch scorecard. One
-    * (group, bin)-keyed map-side hash agg, ≤ |groups|·bins rows.
-    */
-  def binCountsBy(df: DataFrame, groupCol: String, scoreCol: String,
-                  bins: Int, lo: Double, hi: Double): DataFrame = {
-    require(bins >= 1 && bins <= 10000,
-      s"bins must be in [1, 10000], got $bins")
-    require(lo < hi, s"need lo < hi, got lo=$lo hi=$hi")
-    import org.apache.spark.sql.types.{DoubleType, LongType}
-    val b = least(lit(bins - 1L), greatest(lit(0L),
-      floor((col(scoreCol).cast(DoubleType) - lo) / (hi - lo) * bins)
-        .cast(LongType)))
-    // NaN must drop WITH the nulls — see binCounts
-    df.filter(col(scoreCol).isNotNull &&
-        !isnan(col(scoreCol).cast(DoubleType)))
-      .select(col(groupCol), b.as("bin"))
-      .groupBy(col(groupCol), col("bin"))
-      .agg(count(lit(1)).as("n"))
-  }
-
-  /** [[psiByGroup]] over PRE-BINNED per-(group, bin) count tables
-    * from [[binCountsBy]] (both sides `(groupCol, bin, n)`) — the
-    * read path of the PER-SOURCE streamed drift monitor
-    * ([[graft.streaming.StreamingDrift]]), where `curCounts` is a
-    * sum-merged store snapshot and `refCounts` a pinned reference.
-    * Same smoothing, spine, and 1e9-quantized terms as [[psiByGroup]].
-    */
-  def psiByGroupFromCounts(refCounts: DataFrame, curCounts: DataFrame,
-                           groupCol: String, bins: Int): DataFrame = {
-    require(bins >= 1 && bins <= 10000,
-      s"bins must be in [1, 10000], got $bins")
-    import org.apache.spark.sql.types.{DoubleType, LongType}
-    val spark = refCounts.sparkSession
-    val r = refCounts.select(col(groupCol), col("bin"),
-      col("n").as("n_ref"))
-    val c = curCounts.select(col(groupCol), col("bin"),
-      col("n").as("n_cur"))
-    val groups = r.select(col(groupCol))
-      .union(c.select(col(groupCol))).distinct()
-    val spine = groups.crossJoin(
-      broadcast(spark.range(bins).select(col("id").as("bin"))))
-    val totals = r.groupBy(col(groupCol))
-      .agg(sum(col("n_ref")).as("__nr"))
-      .join(c.groupBy(col(groupCol)).agg(sum(col("n_cur")).as("__nc")),
-        Seq(groupCol), "full")
-      .na.fill(0L, Seq("__nr", "__nc"))
-    val p = (col("n_ref") + 1L).cast(DoubleType) /
-      (col("__nr") + bins).cast(DoubleType)
-    val q = (col("n_cur") + 1L).cast(DoubleType) /
-      (col("__nc") + bins).cast(DoubleType)
-    spine.join(r, Seq(groupCol, "bin"), "left")
-      .join(c, Seq(groupCol, "bin"), "left")
-      .na.fill(0L, Seq("n_ref", "n_cur"))
-      .join(totals, Seq(groupCol))
-      .select(col(groupCol), col("bin"), col("n_ref"), col("n_cur"),
-        p.as("p_ref"), q.as("p_cur"),
-        floor((p - q) * log(p / q) * 1e9 + 0.5).cast(LongType)
-          .as("term_fx"))
+          .as("term_fx")): _*)
   }
 
   /** Per-category count table — the CATEGORICAL side's [[binCounts]]:
-    * `(catCol, n)`, nulls dropped (a null category is an upstream
-    * bug, not a level). The partial a streamed categorical-drift
-    * store sums and the per-side input of
+    * `(groupCols…, catCol, n)`, nulls dropped (a null category is an
+    * upstream bug, not a level). The partial a streamed
+    * categorical-drift store sums and the per-side input of
     * [[chiSquaredDriftFromCounts]].
     */
-  def catCounts(df: DataFrame, catCol: String): DataFrame =
+  def catCounts(df: DataFrame, catCol: String,
+                groupCols: Seq[String] = Nil): DataFrame =
     df.filter(col(catCol).isNotNull)
-      .groupBy(col(catCol)).agg(count(lit(1)).as("n"))
+      .groupBy(groupCols.map(col) :+ col(catCol): _*)
+      .agg(count(lit(1)).as("n"))
 
   /** Two-sample chi-squared homogeneity test over a CATEGORICAL
     * column — the drift alarm for the columns PSI/KS/W1 cannot see
@@ -1838,40 +1583,44 @@ object Stats {
     * bit-identical cross-engine. Cramér's V = √(χ²/N) (for a 2×k
     * table min(r−1, c−1) = 1) rides along as the effect size — χ²
     * itself grows with N, so at corpus scale EVERYTHING is
-    * "significant" and V is the number to alert on. One row:
-    * (n_ref, n_cur, n_cats, df, chi2, cramers_v); chi2 null when
-    * either side is empty, V additionally null when df = 0 (a single
-    * shared category — no table to test).
+    * "significant" and V is the number to alert on. One row per
+    * `groupCols` key present on either side (a single row when there
+    * are none): (groupCols…, n_ref, n_cur, n_cats, df, chi2,
+    * cramers_v);
+    * chi2 null when a side is empty, V additionally null when df = 0
+    * (a single shared category — no table to test). Grouped, it is
+    * the per-source language/format/license mix-shift scorecard.
     *
-    * Scale shape: one (category)-keyed map-side hash agg per side
-    * (≤ |categories| rows), a full join on category, one 1-row
-    * broadcast of totals, one closing agg. Nothing driver-side.
+    * Scale shape: one (key, category)-keyed map-side hash agg per
+    * side, a full join on (key, category), one broadcast of totals,
+    * one closing agg. Nothing driver-side.
     */
-  def chiSquaredDrift(ref: DataFrame, cur: DataFrame,
-                      catCol: String): DataFrame =
-    chiSquaredDriftFromCounts(catCounts(ref, catCol),
-      catCounts(cur, catCol), catCol)
+  def chiSquaredDrift(ref: DataFrame, cur: DataFrame, catCol: String,
+                      groupCols: Seq[String] = Nil): DataFrame =
+    chiSquaredDriftFromCounts(catCounts(ref, catCol, groupCols),
+      catCounts(cur, catCol, groupCols), catCol, groupCols)
 
-  /** [[chiSquaredDrift]] over PRE-AGGREGATED `(catCol, n)` count
-    * tables from [[catCounts]] (re-aggregated, so sum-merged store
-    * partials feed in directly) — the streamed categorical-drift
-    * monitor's read path.
+  /** [[chiSquaredDrift]] over PRE-AGGREGATED `(groupCols…, catCol,
+    * n)` count tables from [[catCounts]] (re-aggregated, so
+    * sum-merged store partials feed in directly) — the streamed
+    * categorical-drift monitor's read path.
     */
   def chiSquaredDriftFromCounts(refCounts: DataFrame,
-                                curCounts: DataFrame,
-                                catCol: String): DataFrame = {
+                                curCounts: DataFrame, catCol: String,
+                                groupCols: Seq[String] = Nil)
+      : DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
+    import org.apache.spark.sql.types.DoubleType
     val sc = 1e9
+    val keys = groupCols.map(col)
     def side(df: DataFrame, n: String): DataFrame =
       df.filter(col("n").isNotNull && col("n") > 0)
-        .groupBy(col(catCol)).agg(sum(col("n")).as(n))
+        .groupBy(keys :+ col(catCol): _*).agg(sum(col("n")).as(n))
     val both = side(refCounts, "__a").join(side(curCounts, "__b"),
-        Seq(catCol), "full")
+        groupCols :+ catCol, "full")
       .na.fill(0L, Seq("__a", "__b"))
       .localCheckpoint()
-    val totals = both.agg(
+    val totals = both.groupBy(keys: _*).agg(
       coalesce(sum(col("__a")), lit(0L)).as("__n1"),
       coalesce(sum(col("__b")), lit(0L)).as("__n2"))
     val num = d19(col("__a")) * d19(col("__n2")) -
@@ -1885,11 +1634,11 @@ object Stats {
           (col("__a") + col("__b")).cast(DoubleType)))
       .otherwise(lit(0.0))
     val chi2 = fxVal(col("__cfx"), sc)
-    both.crossJoin(broadcast(totals))
-      .groupBy()
+    joinOn(both, broadcast(totals), groupCols)
+      .groupBy(keys: _*)
       .agg(max(col("__n1")).as("n_ref"), max(col("__n2")).as("n_cur"),
         count(lit(1)).as("n_cats"), fxSum(term, sc).as("__cfx"))
-      .select(
+      .select(keys ++ Seq(
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"),
         col("n_cats"),
@@ -1898,77 +1647,7 @@ object Stats {
         when(col("n_ref") > 0 && col("n_cur") > 0 &&
             col("n_cats") > 1,
           sqrt(chi2 / (col("n_ref") + col("n_cur"))
-            .cast(DoubleType))).as("cramers_v"))
-  }
-
-  /** Per-(group, category) count table — [[catCounts]] keyed by a
-    * source column: the partial a per-source streamed categorical
-    * store sums and the per-side input of
-    * [[chiSquaredDriftByGroupFromCounts]]. `(groupCol, catCol, n)`.
-    */
-  def catCountsBy(df: DataFrame, groupCol: String,
-                  catCol: String): DataFrame =
-    df.filter(col(catCol).isNotNull)
-      .groupBy(col(groupCol), col(catCol))
-      .agg(count(lit(1)).as("n"))
-
-  /** Per-GROUP [[chiSquaredDrift]] — the categorical drift SCORECARD
-    * (per-source language/format/license mix shift in one pass).
-    * Same exact arithmetic per group; one row per group present on
-    * either side: (group, n_ref, n_cur, n_cats, df, chi2,
-    * cramers_v) — chi2 null when the group is missing from one side.
-    */
-  def chiSquaredDriftByGroup(ref: DataFrame, cur: DataFrame,
-                             groupCol: String,
-                             catCol: String): DataFrame =
-    chiSquaredDriftByGroupFromCounts(
-      catCountsBy(ref, groupCol, catCol),
-      catCountsBy(cur, groupCol, catCol), groupCol, catCol)
-
-  /** [[chiSquaredDriftByGroup]] over PRE-AGGREGATED per-(group,
-    * category) count tables from [[catCountsBy]] (re-aggregated, so
-    * sum-merged store partials feed in directly) — the per-source
-    * streamed categorical monitor's read path.
-    */
-  def chiSquaredDriftByGroupFromCounts(refCounts: DataFrame,
-                                       curCounts: DataFrame,
-                                       groupCol: String,
-                                       catCol: String): DataFrame = {
-    import graft.functions.Cols.{fxSum, fxVal}
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
-    val sc = 1e9
-    def side(df: DataFrame, n: String): DataFrame =
-      df.filter(col("n").isNotNull && col("n") > 0)
-        .groupBy(col(groupCol), col(catCol))
-        .agg(sum(col("n")).as(n))
-    val both = side(refCounts, "__a").join(side(curCounts, "__b"),
-        Seq(groupCol, catCol), "full")
-      .na.fill(0L, Seq("__a", "__b"))
-      .localCheckpoint()
-    val totals = both.groupBy(col(groupCol))
-      .agg(sum(col("__a")).as("__n1"), sum(col("__b")).as("__n2"))
-    val num = d19(col("__a")) * d19(col("__n2")) -
-      d19(col("__b")) * d19(col("__n1"))
-    // ANSI-safe: a one-sided group zeroes the divisor — see
-    // chiSquaredDriftFromCounts
-    val term = when(col("__n1") > 0 && col("__n2") > 0,
-      (num * num).cast(DoubleType) /
-        (col("__n1").cast(DoubleType) * col("__n2").cast(DoubleType) *
-          (col("__a") + col("__b")).cast(DoubleType)))
-      .otherwise(lit(0.0))
-    val chi2 = fxVal(col("__cfx"), sc)
-    both.join(broadcast(totals), Seq(groupCol))
-      .groupBy(col(groupCol))
-      .agg(max(col("__n1")).as("n_ref"), max(col("__n2")).as("n_cur"),
-        count(lit(1)).as("n_cats"), fxSum(term, sc).as("__cfx"))
-      .select(col(groupCol), col("n_ref"), col("n_cur"), col("n_cats"),
-        greatest(col("n_cats") - 1, lit(0L)).as("df"),
-        when(col("n_ref") > 0 && col("n_cur") > 0, chi2).as("chi2"),
-        when(col("n_ref") > 0 && col("n_cur") > 0 &&
-            col("n_cats") > 1,
-          sqrt(chi2 / (col("n_ref") + col("n_cur"))
-            .cast(DoubleType))).as("cramers_v"))
+            .cast(DoubleType))).as("cramers_v")): _*)
   }
 
   /** Per-item vote-distribution report — the annotation DIFFICULTY
@@ -2176,12 +1855,13 @@ object Stats {
     * ([[passAtK]], [[btStrengths]]' win rates, [[majorityVote]]
     * accuracy) lack: a 0.52 win rate over 40 comparisons is noise,
     * and no ship/no-ship comparison should read a point estimate
-    * without its interval. One output row:
-    * (n, b, mean, lo, hi) — `mean` the exact fixed-point mean over
-    * the data, `[lo, hi]` the [`lower`, `upper`] percentile of `b`
-    * bootstrap resample means (the percentile method; for a win-rate
-    * or pass-indicator column this is the binomial CI without a
-    * normality assumption).
+    * without its interval. One output row per `groupCols` key:
+    * (groupCols…, n, b, mean, lo, hi) — `mean` the exact fixed-point
+    * mean over the data, `[lo, hi]` the [`lower`, `upper`] percentile
+    * of `b` bootstrap resample means (the percentile method; for a
+    * win-rate or pass-indicator column this is the binomial CI
+    * without a normality assumption). With no keys the whole input is
+    * one group, and an EMPTY input yields no rows.
     *
     * Resampling is the POISSON bootstrap (the distributed-data
     * standard — Chamandy et al., "Estimating Uncertainty for Massive
@@ -2195,7 +1875,12 @@ object Stats {
     * and oracle-checkable. Null values are excluded up front (they
     * carry no measurement); a resample with total weight 0 yields a
     * null mean and sits out the percentile (never occurs beyond toy
-    * n — P = e^(-n)).
+    * n — P = e^(-n)). Grouped, resampling is WITHIN each group (units
+    * are only exchangeable within it) with the same weights — a
+    * unit's weight in resample r does not depend on its group, so a
+    * single-group input reproduces the ungrouped interval exactly
+    * (spec-pinned). This is the shape an eval REPORT needs: one
+    * interval per problem / model / source.
     *
     * Determinism: the per-resample weighted sums and the global sum
     * run fixed-point ([[graft.functions.Cols.fxSum]], `scale` — terms
@@ -2203,22 +1888,62 @@ object Stats {
     * interpolation (≡ DuckDB `quantile_cont`, parity proven by
     * a8_percentiles/ext_winsorize).
     *
-    * Scale shape: [[bootstrapCiByGroup]] on one constant group — one
-    * narrow `explode(sequence(0, b−1))` fan-out (b× the data, the
-    * [[Corpus.epochShuffle]] shape), one resample-keyed
-    * map-side-combining hash agg (b output rows), one b-row
-    * percentile agg, one 1-row join. No window, no global sort,
-    * nothing driver-side.
+    * Scale shape: one narrow `explode(sequence(0, b−1))` fan-out (b×
+    * the data, the [[Corpus.epochShuffle]] shape), one (key,
+    * resample)-keyed map-side-combining hash agg, one percentile agg
+    * per key, one key-keyed join of two ≤|keys|-row frames. No
+    * window, no global sort, nothing driver-side.
     */
   def bootstrapCi(df: DataFrame, idCol: String, valueCol: String,
                   b: Int, lower: Double = 0.025, upper: Double = 0.975,
-                  scale: Double = 1e9): DataFrame =
-    // exactly the grouped form on one constant group (the weight hash
-    // keys on (resample, id) alone, so the results are bit-identical
-    // — spec-pinned); an EMPTY input therefore yields no rows
-    bootstrapCiByGroup(df.withColumn("__bsg", lit(0)), "__bsg",
-        idCol, valueCol, b, lower, upper, scale)
-      .drop("__bsg")
+                  scale: Double = 1e9,
+                  groupCols: Seq[String] = Nil): DataFrame =
+    if (groupCols.isEmpty)
+      // one constant group: the weight hash keys on (resample, id)
+      // alone, so the draws are the grouped form's
+      bootstrapCi(df.withColumn("__bsg", lit(0)), idCol, valueCol, b,
+          lower, upper, scale, Seq("__bsg"))
+        .drop("__bsg")
+    else {
+      require(b >= 2 && b <= 100000, s"b must be in [2, 100000], got $b")
+      require(lower >= 0 && upper <= 1 && lower < upper,
+        s"need 0 <= lower < upper <= 1, got lower=$lower upper=$upper")
+      import graft.functions.Cols.{fxSum, fxVal}
+      import graft.functions.TextFns
+      import org.apache.spark.sql.types.DoubleType
+      val keys = groupCols.map(col)
+      val units = df.filter(col(valueCol).isNotNull)
+        .select(keys ++ Seq(col(idCol).cast("string").as("__id"),
+          col(valueCol).cast(DoubleType).as("__x")): _*)
+      val pt = units.groupBy(keys: _*)
+        .agg(count(lit(1)).as("n"), fxSum(col("__x"), scale).as("__sfx"))
+      val u = TextFns.hash32(concat(col("__r").cast("string"), lit(":"),
+        col("__id")))
+      val w = PoissonCdf32.zipWithIndex.foldRight(lit(8L)) {
+        case ((t, k), rest) => when(col("__u") < t, lit(k.toLong))
+          .otherwise(rest)
+      }
+      val ci = units
+        .withColumn("__r", explode(sequence(lit(0), lit(b - 1))))
+        .withColumn("__u", u)
+        .withColumn("__w", w)
+        .groupBy(keys :+ col("__r"): _*)
+        .agg(fxSum(col("__w").cast(DoubleType) * col("__x"), scale)
+            .as("__mfx"),
+          sum(col("__w")).as("__wn"))
+        .select(keys :+ when(col("__wn") > 0,
+            fxVal(col("__mfx"), scale) / col("__wn").cast(DoubleType))
+          .as("__m"): _*)
+        .groupBy(keys: _*)
+        .agg(percentile(col("__m"), lit(lower)).as("lo"),
+          percentile(col("__m"), lit(upper)).as("hi"))
+      pt.join(ci, groupCols)
+        .select(keys ++ Seq(col("n"), lit(b).as("b"),
+          when(col("n") > 0,
+            fxVal(col("__sfx"), scale) / col("n").cast(DoubleType))
+            .as("mean"),
+          col("lo"), col("hi")): _*)
+    }
 
   /** Paired-difference bootstrap CI — the A/B model-comparison
     * decision in one row: given PAIRED per-unit scores (two models
@@ -2341,65 +2066,5 @@ object Stats {
         sum(when(col("__agree"), 1L).otherwise(0L)).as("n_agree"))
       .withColumn("agree_rate",
         col("n_agree").cast(DoubleType) / col("n_items").cast(DoubleType))
-  }
-
-  /** [[bootstrapCi]] per group — the shape an eval REPORT needs: one
-    * interval per problem / model / source (a per-model win rate
-    * without its interval invites reading noise as a ranking; with
-    * one, overlapping intervals say "not distinguishable on this
-    * log"). Resampling is WITHIN each group (each group is its own
-    * sample; units are only exchangeable within it), with the same
-    * hash-seeded Poisson weights — a unit's weight in resample r is
-    * identical to the ungrouped operator's, so a single-group input
-    * reproduces [[bootstrapCi]] exactly (spec-pinned). One row per
-    * group: (groupCol, n, b, mean, lo, hi).
-    *
-    * Scale shape: the fan-out and two hash aggs of [[bootstrapCi]]
-    * keyed by (group, resample) then group, plus ONE group-keyed
-    * equi-join of two ≤|groups|-row frames — no window, nothing
-    * driver-side, skew-safe for any group-size distribution.
-    */
-  def bootstrapCiByGroup(df: DataFrame, groupCol: String, idCol: String,
-                         valueCol: String, b: Int,
-                         lower: Double = 0.025, upper: Double = 0.975,
-                         scale: Double = 1e9): DataFrame = {
-    require(b >= 2 && b <= 100000, s"b must be in [2, 100000], got $b")
-    require(lower >= 0 && upper <= 1 && lower < upper,
-      s"need 0 <= lower < upper <= 1, got lower=$lower upper=$upper")
-    import graft.functions.Cols.{fxSum, fxVal}
-    import graft.functions.TextFns
-    import org.apache.spark.sql.types.DoubleType
-    val units = df.filter(col(valueCol).isNotNull)
-      .select(col(groupCol), col(idCol).cast("string").as("__id"),
-        col(valueCol).cast(DoubleType).as("__x"))
-    val pt = units.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n"), fxSum(col("__x"), scale).as("__sfx"))
-    val u = TextFns.hash32(concat(col("__r").cast("string"), lit(":"),
-      col("__id")))
-    val w = PoissonCdf32.zipWithIndex.foldRight(lit(8L)) {
-      case ((t, k), rest) => when(col("__u") < t, lit(k.toLong))
-        .otherwise(rest)
-    }
-    val ci = units
-      .withColumn("__r", explode(sequence(lit(0), lit(b - 1))))
-      .withColumn("__u", u)
-      .withColumn("__w", w)
-      .groupBy(col(groupCol), col("__r"))
-      .agg(fxSum(col("__w").cast(DoubleType) * col("__x"), scale)
-          .as("__mfx"),
-        sum(col("__w")).as("__wn"))
-      .select(col(groupCol),
-        when(col("__wn") > 0,
-          fxVal(col("__mfx"), scale) / col("__wn").cast(DoubleType))
-          .as("__m"))
-      .groupBy(col(groupCol))
-      .agg(percentile(col("__m"), lit(lower)).as("lo"),
-        percentile(col("__m"), lit(upper)).as("hi"))
-    pt.join(ci, Seq(groupCol))
-      .select(col(groupCol), col("n"), lit(b).as("b"),
-        when(col("n") > 0,
-          fxVal(col("__sfx"), scale) / col("n").cast(DoubleType))
-          .as("mean"),
-        col("lo"), col("hi"))
   }
 }

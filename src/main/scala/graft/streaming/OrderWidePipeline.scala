@@ -37,13 +37,6 @@ object OrderWidePipeline {
       "inner")
   }
 
-  /** Batch shadow of [[orderWide]] for oracle testing: same columns,
-    * plain inner join (batch data is complete, no lateness).
-    */
-  def orderWideBatch(info: DataFrame, detail: DataFrame): DataFrame =
-    info.alias("i").join(detail.alias("d"),
-      col("i.id") === col("d.order_id"), "inner")
-
   /** Dim enrichment of the info side BEFORE the stream-stream join
     * (reference DwdOrderApp.scala:112-146: user gender/age + province
     * columns land on the wide row). Broadcast joins against the

@@ -195,24 +195,6 @@ object Sinks {
     else None
   }
 
-  /** Attach the keyed-upsert sink to a streaming DataFrame with a
-    * 5-second trigger (the reference's batch interval) and checkpoint.
-    * The micro-batch id becomes the store's `__seq`, so replayed
-    * batches overwrite themselves in the read view. `tsCol` picks the
-    * deterministic in-batch winner (e.g. the event-time column).
-    */
-  def keyedParquetSink(df: DataFrame, path: String, pk: String,
-                       checkpoint: String,
-                       tsCol: Option[String] = None,
-                       trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, bid: Long) =>
-        upsertBatch(batch, path, pk, "dt", bid, tsCol))
-
   /** Kafka sink (reference K1, MyKafkaUtils.scala:61-114): rows
     * serialized as JSON values; per-record topic routing via an
     * existing `topic` column (the CdcSplit fact branch) or a fixed

@@ -29,6 +29,14 @@ import graft.operators.Stats
   * SAME (bins, lo, hi) and persist it; comparing against a drifting
   * reference would define drift away.
   *
+  * Every sink, read and fold takes `groupCols` (default none): the
+  * keys are prepended to the store's key columns, so one store per
+  * monitor answers "did SOURCE X go bad" — visible per source long
+  * before it moves the pooled distribution (a 5 % source can collapse
+  * entirely inside global noise) — under the same replay/compaction
+  * contract, and the reads are the grouped batch kernels
+  * ([[Stats.psi]] etc. with the same keys).
+  *
   * Scale shape: per batch ONE bin-keyed map-side hash agg over the
   * micro-batch (≤ `bins` rows written); the read is a ≤
   * bins×batches-row store scan folded to `bins` rows plus
@@ -38,43 +46,52 @@ import graft.operators.Stats
   */
 object StreamingDrift {
 
-  /** foreachBatch body: this batch's bin counts, owned-by-path. */
+  /** foreachBatch body: this batch's (groupCols…, bin) counts,
+    * owned-by-path.
+    */
   def writeBatch(batch: DataFrame, storePath: String, scoreCol: String,
-                 bins: Int, lo: Double, hi: Double,
-                 batchId: Long): Unit =
+                 bins: Int, lo: Double, hi: Double, batchId: Long,
+                 groupCols: Seq[String] = Nil): Unit =
     SumStore.writeBatch(
-      Stats.binCounts(batch, scoreCol, bins, lo, hi),
+      Stats.binCounts(batch, scoreCol, bins, lo, hi, groupCols),
       storePath, batchId)
 
   /** Wire a score stream into a binned-count drift store. */
   def driftSink(stream: DataFrame, storePath: String, scoreCol: String,
-                bins: Int = 10, lo: Double = 0.0,
-                hi: Double = 1.0): DataStreamWriter[Row] =
+                bins: Int = 10, lo: Double = 0.0, hi: Double = 1.0,
+                groupCols: Seq[String] = Nil): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, storePath, scoreCol, bins, lo, hi, batchId)
+        writeBatch(batch, storePath, scoreCol, bins, lo, hi, batchId,
+          groupCols)
     }
 
-  /** Current sum-merged (bin, n) counts over everything landed. */
-  def binnedCounts(spark: SparkSession, storePath: String): DataFrame =
-    SumStore.merged(spark, storePath, Seq("bin"), Seq("n"))
+  /** Current sum-merged (groupCols…, bin, n) counts over everything
+    * landed.
+    */
+  def binnedCounts(spark: SparkSession, storePath: String,
+                   groupCols: Seq[String] = Nil): DataFrame =
+    SumStore.merged(spark, storePath, groupCols :+ "bin", Seq("n"))
 
   /** The monitor's read: PSI of the landed distribution against the
     * pinned reference counts (a persisted [[Stats.binCounts]] over the
-    * blessed corpus, same bins/range). Same output schema and
+    * blessed corpus, same bins/range/keys). Same output schema and
     * fixed-point terms as the batch [[Stats.psi]]; the scalar PSI is
-    * `sum(term_fx)/1e9`.
+    * `sum(term_fx)/1e9` (per key when grouped).
     */
   def psiAgainstReference(spark: SparkSession, storePath: String,
-                          refCounts: DataFrame, bins: Int): DataFrame =
-    Stats.psiFromCounts(refCounts, binnedCounts(spark, storePath), bins)
+                          refCounts: DataFrame, bins: Int,
+                          groupCols: Seq[String] = Nil): DataFrame =
+    Stats.psiFromCounts(refCounts,
+      binnedCounts(spark, storePath, groupCols), bins, groupCols)
 
-  /** Fold the store to one summed partition (≤ `bins` rows) — run
-    * from a maintenance window with the stream stopped ([[SumStore]]
-    * contract).
+  /** Fold the store to one summed partition (≤ |keys|·`bins` rows) —
+    * run from a maintenance window with the stream stopped
+    * ([[SumStore]] contract).
     */
-  def compactCounts(spark: SparkSession, storePath: String): Unit =
-    SumStore.compact(spark, storePath, Seq("bin"), Seq("n"))
+  def compactCounts(spark: SparkSession, storePath: String,
+                    groupCols: Seq[String] = Nil): Unit =
+    SumStore.compact(spark, storePath, groupCols :+ "bin", Seq("n"))
 
   // ---- exact (binning-free) KS drift over the same stream ----------
   //
@@ -90,162 +107,55 @@ object StreamingDrift {
     * `scoreFxCol` must be integral ([[Stats.scoreCounts]]).
     */
   def writeScoreCounts(batch: DataFrame, storePath: String,
-                       scoreFxCol: String, batchId: Long): Unit =
-    SumStore.writeBatch(Stats.scoreCounts(batch, scoreFxCol),
+                       scoreFxCol: String, batchId: Long,
+                       groupCols: Seq[String] = Nil): Unit =
+    SumStore.writeBatch(Stats.scoreCounts(batch, scoreFxCol, groupCols),
       storePath, batchId)
 
   /** Wire a fixed-point score stream into a per-score count store. */
-  def ksSink(stream: DataFrame, storePath: String,
-             scoreFxCol: String): DataStreamWriter[Row] =
+  def ksSink(stream: DataFrame, storePath: String, scoreFxCol: String,
+             groupCols: Seq[String] = Nil): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        writeScoreCounts(batch, storePath, scoreFxCol, batchId)
+        writeScoreCounts(batch, storePath, scoreFxCol, batchId,
+          groupCols)
     }
 
-  /** Current sum-merged (s, n) score counts over everything landed. */
-  def scoreCounts(spark: SparkSession, storePath: String): DataFrame =
-    SumStore.merged(spark, storePath, Seq("s"), Seq("n"))
+  /** Current sum-merged (groupCols…, s, n) score counts over
+    * everything landed.
+    */
+  def scoreCounts(spark: SparkSession, storePath: String,
+                  groupCols: Seq[String] = Nil): DataFrame =
+    SumStore.merged(spark, storePath, groupCols :+ "s", Seq("n"))
 
   /** Exact KS of the landed distribution against pinned reference
     * counts (a persisted [[Stats.scoreCounts]]) — output as
-    * [[Stats.ksTest]]: (n_ref, n_cur, d, ks_at).
+    * [[Stats.ksTest]]: (groupCols…, n_ref, n_cur, d, ks_at).
     */
   def ksAgainstReference(spark: SparkSession, storePath: String,
-                         refCounts: DataFrame): DataFrame =
-    Stats.ksTestFromCounts(refCounts, scoreCounts(spark, storePath))
+                         refCounts: DataFrame,
+                         groupCols: Seq[String] = Nil): DataFrame =
+    Stats.ksTestFromCounts(refCounts,
+      scoreCounts(spark, storePath, groupCols), groupCols)
 
-  /** Fold the KS store to one row per distinct score — maintenance
-    * window only ([[SumStore]] contract).
+  /** Fold the KS store to one row per (key, distinct score) —
+    * maintenance window only ([[SumStore]] contract).
     */
-  def compactScoreCounts(spark: SparkSession, storePath: String): Unit =
-    SumStore.compact(spark, storePath, Seq("s"), Seq("n"))
+  def compactScoreCounts(spark: SparkSession, storePath: String,
+                         groupCols: Seq[String] = Nil): Unit =
+    SumStore.compact(spark, storePath, groupCols :+ "s", Seq("n"))
 
   /** Exact 1-Wasserstein distance of the landed distribution against
     * pinned reference counts — a SECOND alarm off the SAME per-score
     * count store [[ksSink]] feeds (no new write path): KS flags the
     * worst local CDF gap, W1 the total mass moved. Output as
-    * [[Stats.wasserstein1]]: (n_ref, n_cur, w1).
+    * [[Stats.wasserstein1]]: (groupCols…, n_ref, n_cur, w1).
     */
   def w1AgainstReference(spark: SparkSession, storePath: String,
-                         refCounts: DataFrame): DataFrame =
+                         refCounts: DataFrame,
+                         groupCols: Seq[String] = Nil): DataFrame =
     Stats.wasserstein1FromCounts(refCounts,
-      scoreCounts(spark, storePath))
-
-  // ---- PER-SOURCE twins ---------------------------------------------
-  //
-  // The global monitors above answer "did the corpus drift"; the
-  // commonest real alarm is "did SOURCE X go bad" — visible per-source
-  // long before it moves the pooled distribution (a 5 % source can
-  // collapse entirely inside global noise). The batch scorecards
-  // ([[Stats.psiByGroup]], [[Stats.ksTestByGroup]]) already exist;
-  // these stores just carry the group key through the same SumStore
-  // partials — the key set gains one column, the replay/compaction
-  // contract and the provable streamed ≡ batch equality (counts
-  // SUM-merge losslessly, shared binning/count expressions, shared
-  // FromCounts readers) are unchanged.
-
-  /** foreachBatch body: this batch's per-(group, bin) counts. */
-  def writeBatchBy(batch: DataFrame, storePath: String,
-                   groupCol: String, scoreCol: String, bins: Int,
-                   lo: Double, hi: Double, batchId: Long): Unit =
-    SumStore.writeBatch(
-      Stats.binCountsBy(batch, groupCol, scoreCol, bins, lo, hi),
-      storePath, batchId)
-
-  /** Wire a (source, score) stream into a per-source binned-count
-    * drift store.
-    */
-  def driftSinkBy(stream: DataFrame, storePath: String,
-                  groupCol: String, scoreCol: String, bins: Int = 10,
-                  lo: Double = 0.0,
-                  hi: Double = 1.0): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        writeBatchBy(batch, storePath, groupCol, scoreCol, bins, lo,
-          hi, batchId)
-    }
-
-  /** Current sum-merged (group, bin, n) counts over everything
-    * landed.
-    */
-  def binnedCountsBy(spark: SparkSession, storePath: String,
-                     groupCol: String): DataFrame =
-    SumStore.merged(spark, storePath, Seq(groupCol, "bin"), Seq("n"))
-
-  /** Per-source PSI scorecard of the landed distributions against
-    * pinned per-source reference counts (a persisted
-    * [[Stats.binCountsBy]] over the blessed corpus, same bins/range).
-    * Output as [[Stats.psiByGroup]]: one row per (group, bin); the
-    * per-group scalar is `sum(term_fx)/1e9 GROUP BY group`.
-    */
-  def psiByGroupAgainstReference(spark: SparkSession, storePath: String,
-                                 refCounts: DataFrame, groupCol: String,
-                                 bins: Int): DataFrame =
-    Stats.psiByGroupFromCounts(refCounts,
-      binnedCountsBy(spark, storePath, groupCol), groupCol, bins)
-
-  /** Fold the per-source PSI store to ≤ |groups|·bins rows —
-    * maintenance window only ([[SumStore]] contract).
-    */
-  def compactCountsBy(spark: SparkSession, storePath: String,
-                      groupCol: String): Unit =
-    SumStore.compact(spark, storePath, Seq(groupCol, "bin"), Seq("n"))
-
-  /** foreachBatch body: this batch's per-(group, score) counts.
-    * `scoreFxCol` must be integral ([[Stats.scoreCountsBy]]).
-    */
-  def writeScoreCountsBy(batch: DataFrame, storePath: String,
-                         groupCol: String, scoreFxCol: String,
-                         batchId: Long): Unit =
-    SumStore.writeBatch(Stats.scoreCountsBy(batch, groupCol, scoreFxCol),
-      storePath, batchId)
-
-  /** Wire a (source, fixed-point score) stream into a per-source
-    * score-count store.
-    */
-  def ksSinkBy(stream: DataFrame, storePath: String, groupCol: String,
-               scoreFxCol: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        writeScoreCountsBy(batch, storePath, groupCol, scoreFxCol,
-          batchId)
-    }
-
-  /** Current sum-merged (group, s, n) score counts over everything
-    * landed.
-    */
-  def scoreCountsBy(spark: SparkSession, storePath: String,
-                    groupCol: String): DataFrame =
-    SumStore.merged(spark, storePath, Seq(groupCol, "s"), Seq("n"))
-
-  /** Per-source exact KS scorecard of the landed distributions
-    * against pinned per-source reference counts (a persisted
-    * [[Stats.scoreCountsBy]]) — output as [[Stats.ksTestByGroup]]:
-    * (group, n_ref, n_cur, d, ks_at), d null when a source is missing
-    * from one side (the appeared/vanished alarm).
-    */
-  def ksByGroupAgainstReference(spark: SparkSession, storePath: String,
-                                refCounts: DataFrame,
-                                groupCol: String): DataFrame =
-    Stats.ksTestByGroupFromCounts(refCounts,
-      scoreCountsBy(spark, storePath, groupCol), groupCol)
-
-  /** Fold the per-source KS store to one row per (group, distinct
-    * score) — maintenance window only ([[SumStore]] contract).
-    */
-  def compactScoreCountsBy(spark: SparkSession, storePath: String,
-                           groupCol: String): Unit =
-    SumStore.compact(spark, storePath, Seq(groupCol, "s"), Seq("n"))
-
-  /** Per-source exact W1 scorecard off the SAME per-(group, score)
-    * store [[ksSinkBy]] feeds — output as
-    * [[Stats.wasserstein1ByGroup]]: (group, n_ref, n_cur, w1).
-    */
-  def w1ByGroupAgainstReference(spark: SparkSession, storePath: String,
-                                refCounts: DataFrame,
-                                groupCol: String): DataFrame =
-    Stats.wasserstein1ByGroupFromCounts(refCounts,
-      scoreCountsBy(spark, storePath, groupCol), groupCol)
+      scoreCounts(spark, storePath, groupCols), groupCols)
 
   // ---- CATEGORICAL drift (chi-squared) ------------------------------
   //
@@ -256,83 +166,44 @@ object StreamingDrift {
 
   /** foreachBatch body: this batch's per-category counts. */
   def writeCatCounts(batch: DataFrame, storePath: String,
-                     catCol: String, batchId: Long): Unit =
-    SumStore.writeBatch(Stats.catCounts(batch, catCol), storePath,
-      batchId)
+                     catCol: String, batchId: Long,
+                     groupCols: Seq[String] = Nil): Unit =
+    SumStore.writeBatch(Stats.catCounts(batch, catCol, groupCols),
+      storePath, batchId)
 
   /** Wire a categorical stream into a per-category count store. */
-  def catSink(stream: DataFrame, storePath: String,
-              catCol: String): DataStreamWriter[Row] =
+  def catSink(stream: DataFrame, storePath: String, catCol: String,
+              groupCols: Seq[String] = Nil): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        writeCatCounts(batch, storePath, catCol, batchId)
+        writeCatCounts(batch, storePath, catCol, batchId, groupCols)
     }
 
-  /** Current sum-merged (cat, n) counts over everything landed. */
+  /** Current sum-merged (groupCols…, cat, n) counts over everything
+    * landed.
+    */
   def catCountsMerged(spark: SparkSession, storePath: String,
-                      catCol: String): DataFrame =
-    SumStore.merged(spark, storePath, Seq(catCol), Seq("n"))
+                      catCol: String,
+                      groupCols: Seq[String] = Nil): DataFrame =
+    SumStore.merged(spark, storePath, groupCols :+ catCol, Seq("n"))
 
   /** Chi-squared homogeneity of the landed categorical mix against
     * pinned reference counts (a persisted [[Stats.catCounts]]) —
-    * output as [[Stats.chiSquaredDrift]]: (n_ref, n_cur, n_cats, df,
-    * chi2, cramers_v).
+    * output as [[Stats.chiSquaredDrift]]: (groupCols…, n_ref, n_cur,
+    * n_cats, df, chi2, cramers_v).
     */
   def chi2AgainstReference(spark: SparkSession, storePath: String,
-                           refCounts: DataFrame,
-                           catCol: String): DataFrame =
+                           refCounts: DataFrame, catCol: String,
+                           groupCols: Seq[String] = Nil): DataFrame =
     Stats.chiSquaredDriftFromCounts(refCounts,
-      catCountsMerged(spark, storePath, catCol), catCol)
+      catCountsMerged(spark, storePath, catCol, groupCols), catCol,
+      groupCols)
 
-  /** Fold the categorical store to ≤ |categories| rows — maintenance
-    * window only ([[SumStore]] contract).
+  /** Fold the categorical store to ≤ |keys|·|categories| rows —
+    * maintenance window only ([[SumStore]] contract).
     */
   def compactCatCounts(spark: SparkSession, storePath: String,
-                       catCol: String): Unit =
-    SumStore.compact(spark, storePath, Seq(catCol), Seq("n"))
-
-  /** foreachBatch body: this batch's per-(group, category) counts. */
-  def writeCatCountsBy(batch: DataFrame, storePath: String,
-                       groupCol: String, catCol: String,
-                       batchId: Long): Unit =
-    SumStore.writeBatch(Stats.catCountsBy(batch, groupCol, catCol),
-      storePath, batchId)
-
-  /** Wire a (source, category) stream into a per-source
-    * category-count store.
-    */
-  def catSinkBy(stream: DataFrame, storePath: String,
-                groupCol: String, catCol: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        writeCatCountsBy(batch, storePath, groupCol, catCol, batchId)
-    }
-
-  /** Current sum-merged (group, cat, n) counts over everything
-    * landed.
-    */
-  def catCountsMergedBy(spark: SparkSession, storePath: String,
-                        groupCol: String, catCol: String): DataFrame =
-    SumStore.merged(spark, storePath, Seq(groupCol, catCol), Seq("n"))
-
-  /** Per-source chi-squared scorecard of the landed categorical
-    * mixes against pinned per-source reference counts (a persisted
-    * [[Stats.catCountsBy]]) — output as
-    * [[Stats.chiSquaredDriftByGroup]].
-    */
-  def chi2ByGroupAgainstReference(spark: SparkSession,
-                                  storePath: String,
-                                  refCounts: DataFrame,
-                                  groupCol: String,
-                                  catCol: String): DataFrame =
-    Stats.chiSquaredDriftByGroupFromCounts(refCounts,
-      catCountsMergedBy(spark, storePath, groupCol, catCol),
-      groupCol, catCol)
-
-  /** Fold the per-source categorical store — maintenance window only
-    * ([[SumStore]] contract).
-    */
-  def compactCatCountsBy(spark: SparkSession, storePath: String,
-                         groupCol: String, catCol: String): Unit =
-    SumStore.compact(spark, storePath, Seq(groupCol, catCol), Seq("n"))
+                       catCol: String,
+                       groupCols: Seq[String] = Nil): Unit =
+    SumStore.compact(spark, storePath, groupCols :+ catCol, Seq("n"))
 }

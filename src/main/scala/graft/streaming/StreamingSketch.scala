@@ -131,14 +131,6 @@ object StreamingSketch {
       .write.mode(SaveMode.Overwrite)
       .parquet(batchDir(storePath, batchId))
 
-  /** Wire a stream into a quantile-bucket store. */
-  def qsketchSink(stream: DataFrame, storePath: String, value: Column,
-                  groupCols: Seq[String]): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        writeQsketchBatch(batch, storePath, value, groupCols, batchId)
-    }
-
   /** Permille quantiles over everything landed so far. */
   def qsketchEstimate(spark: SparkSession, storePath: String,
                       groupCols: Seq[String],

@@ -95,6 +95,26 @@ class BpeCountsSpec extends SparkSpec {
     assert(rows(1).getLong(2) === 1L) // "ok" merges to one symbol
   }
 
+  test("a literal U+001F is one ordinary symbol to the kernel (the " +
+      "known divergence from the chain, whose separator it is)") {
+    val US = "\u001f"
+    val d = Seq((1L, s"a$US${US}b")).toDF("id", "text")
+    def counts(ms: Seq[(String, String)]): (Long, Long) = {
+      val r = d.select(kernelCounts(col("text"), ms).as("k"))
+        .head().getStruct(0)
+      (r.getLong(0), r.getLong(1))
+    }
+    assert(counts(Seq.empty) === ((4L, 4L)))
+    // merges may name it, and it blocks a fuse of its neighbours
+    assert(counts(Seq(US -> US)) === ((4L, 3L)))
+    assert(counts(Seq("a" -> US, s"a$US" -> US)) === ((4L, 2L)))
+    assert(counts(Seq("a" -> "b")) === ((4L, 4L)))
+    // the replaced chain wrapped it like any \S and miscounted
+    val chain = d.select(chainCounts(col("text"), Seq.empty).as("c"))
+      .head().getStruct(0)
+    assert(chain.getLong(0) === 5L)
+  }
+
   test("bpeEncode end-to-end: kernel output matches hand counts and " +
       "keeps the (id, n_sym, n_bpe, ratio_ppm) contract") {
     val d = Seq((1L, "aa bb aa"), (2L, "xyz")).toDF("id", "text")

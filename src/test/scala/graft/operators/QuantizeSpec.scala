@@ -4,6 +4,8 @@ import graft.SparkSpec
 import graft.functions.VectorFns
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DoubleType, LongType}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Quantize.int8/knnInt8: reconstruction error bound, degenerate
   * vectors, and ranking fidelity vs the exact float path on real
@@ -11,6 +13,31 @@ import org.apache.spark.sql.functions._
   */
 class QuantizeSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The declarative mirror of [[Quantize.int8]] — the parity witness
+    * the codegen expression is checked against: scale = 127/max|x|
+    * (1 for an all-zero or empty vector), q = floor(x·scale + 0.5).
+    */
+  private def int8Declarative(embs: DataFrame, idCol: String,
+                              vecCol: String): DataFrame = {
+    val m = coalesce(array_max(transform(col(vecCol),
+      x => abs(x.cast(DoubleType)))), lit(0d))
+    val scale = when(m > 0d, lit(127d) / m).otherwise(lit(1d))
+    embs.select(col(idCol),
+      transform(col(vecCol), x =>
+        floor(x.cast(DoubleType) * scale + 0.5d).cast(ByteType)).as("qvec"),
+      scale.as("scale"))
+  }
+
+  /** Declarative mirror of [[Quantize.intCosine]] (parity witness). */
+  private def intCosineDeclarative(qa: Column, qb: Column): Column = {
+    def dot(x: Column, y: Column) =
+      aggregate(zip_with(x, y, (a, b) => a.cast(LongType) * b.cast(LongType)),
+        lit(0L), (acc, p) => acc + p)
+    dot(qa, qb).cast(DoubleType) /
+      (sqrt(dot(qa, qa).cast(DoubleType)) *
+        sqrt(dot(qb, qb).cast(DoubleType)))
+  }
 
   test("int8 reconstruction error is bounded by 0.5/scale per component") {
     val e = Tables.embeddings(spark, sf0001)
@@ -82,7 +109,7 @@ class QuantizeSpec extends SparkSpec {
         (100003L, Seq(-1.5f)),
         (100004L, Seq(0.1f, -127.3f, 64.2f))).toDF("vec_id", "embedding"))
     val fast = Quantize.int8(e, "vec_id", "embedding")
-    val slow = Quantize.int8Declarative(e, "vec_id", "embedding")
+    val slow = int8Declarative(e, "vec_id", "embedding")
     val diff = fast.as("f").join(slow.as("s"), "vec_id")
       .filter(!(col("f.qvec") === col("s.qvec")) ||
         !(col("f.scale") === col("s.scale")))
@@ -106,7 +133,7 @@ class QuantizeSpec extends SparkSpec {
         col("a.vec_id") < col("b.vec_id"))
       .select(
         Quantize.intCosine(col("a.qvec"), col("b.qvec")).as("fast"),
-        Quantize.intCosineDeclarative(col("a.qvec"), col("b.qvec"))
+        intCosineDeclarative(col("a.qvec"), col("b.qvec"))
           .as("slow"))
     val n = pairs.count()
     assert(n > 0)

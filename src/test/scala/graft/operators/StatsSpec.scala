@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 class StatsSpec extends SparkSpec {
   import spark.implicits._
@@ -171,7 +172,7 @@ class StatsSpec extends SparkSpec {
       Seq.fill(10)(("b", 0.5))).toDF("g", "score")
     val cur = Seq(("a", 0.85), ("a", 0.95), ("c", 0.4))
       .toDF("g", "score")
-    val byG = Stats.psiByGroup(ref, cur, "g", "score", bins = 10)
+    val byG = Stats.psi(ref, cur, "score", bins = 10, groupCols = Seq("g"))
       .as[(String, Long, Long, Long, Double, Double, Long)].collect()
     // group a's rows equal psi() run on a alone
     val aOnly = Stats.psi(ref.filter($"g" === "a"),
@@ -250,7 +251,7 @@ class StatsSpec extends SparkSpec {
       ("g2", 1L, true), ("g2", 9L, false),
       ("g3", 4L, true), ("g3", 5L, true)) // no negatives
       .toDF("g", "s", "y")
-    val got = Stats.aucByGroup(rows, "g", "s", "y")
+    val got = Stats.auc(rows, "s", "y", Seq("g"))
       .as[(String, Long, Long, Option[Double])].collect()
       .map(r => r._1 -> r).toMap
     assert(got("g1")._4 === Some(0.875))
@@ -321,7 +322,7 @@ class StatsSpec extends SparkSpec {
       ("gone", 7L)).toDF("g", "s")
     val cur = Seq(("a", 3L), ("a", 4L), ("a", 5L), ("b", 5L),
       ("new", 9L)).toDF("g", "s")
-    val byG = Stats.ksTestByGroup(ref, cur, "g", "s")
+    val byG = Stats.ksTest(ref, cur, "s", Seq("g"))
       .as[(String, Long, Long, Option[Double], Option[Long])].collect()
       .map(r => r._1 -> r).toMap
     val aOnly = Stats.ksTest(ref.filter($"g" === "a").select($"s"),
@@ -345,9 +346,9 @@ class StatsSpec extends SparkSpec {
     assert(h._1 === 3L && h._2 === 6L)
     assert(math.abs(h._3.get - 2.0 / 9) < 1e-12)
     assert(g(Seq(0L, 0L))._3 === None)
-    val byG = Stats.giniByGroup(
+    val byG = Stats.gini(
         Seq(("a", 1L), ("a", 2L), ("a", 3L), ("b", 5L), ("b", 5L))
-          .toDF("g", "v"), "g", "v")
+          .toDF("g", "v"), "v", Seq("g"))
       .as[(String, Long, Long, Option[Double])]
       .collect().map(r => r._1 -> r).toMap
     assert(math.abs(byG("a")._4.get - 2.0 / 9) < 1e-12)
@@ -452,7 +453,7 @@ class StatsSpec extends SparkSpec {
       ("g2", "A"), ("gone", "A")).toDF("g", "cat")
     val cur = Seq(("g1", "A"), ("g1", "B"), ("g1", "B"), ("g1", "B"),
       ("g2", "A"), ("new", "B")).toDF("g", "cat")
-    val byG = Stats.chiSquaredDriftByGroup(ref, cur, "g", "cat")
+    val byG = Stats.chiSquaredDrift(ref, cur, "cat", Seq("g"))
       .as[(String, Long, Long, Long, Long, Option[Double],
         Option[Double])]
       .collect().map(r => r._1 -> r).toMap
@@ -495,7 +496,7 @@ class StatsSpec extends SparkSpec {
       ("gone", 7L)).toDF("g", "s")
     val cur = Seq(("a", 8L), ("a", 9L), ("a", 12L), ("b", 5L),
       ("new", 9L)).toDF("g", "s")
-    val byG = Stats.wasserstein1ByGroup(ref, cur, "g", "s")
+    val byG = Stats.wasserstein1(ref, cur, "s", Seq("g"))
       .as[(String, Long, Long, Option[Double])].collect()
       .map(r => r._1 -> r).toMap
     val aOnly = Stats.wasserstein1(
@@ -703,7 +704,8 @@ class StatsSpec extends SparkSpec {
     val vals = (0L until 40L).map(i => (i, if (i % 4 == 0) 1.0 else 0.0))
     val one = vals.map { case (i, x) => ("g", i, x) }
       .toDF("grp", "id", "x")
-    val grouped = Stats.bootstrapCiByGroup(one, "grp", "id", "x", b = 32)
+    val grouped = Stats.bootstrapCi(one, "id", "x", b = 32,
+        groupCols = Seq("grp"))
       .select($"n", $"b", $"mean", $"lo", $"hi")
       .as[(Long, Int, Double, Double, Double)].head()
     val flat = Stats.bootstrapCi(vals.toDF("id", "x"), "id", "x", b = 32)
@@ -714,7 +716,8 @@ class StatsSpec extends SparkSpec {
     val two = ((0L until 60L).map(i => ("lo", i, if (i % 10 == 0) 1.0 else 0.0))
       ++ (100L until 160L).map(i => ("hi", i, if (i % 10 != 0) 1.0 else 0.0)))
       .toDF("grp", "id", "x")
-    val byG = Stats.bootstrapCiByGroup(two, "grp", "id", "x", b = 64)
+    val byG = Stats.bootstrapCi(two, "id", "x", b = 64,
+        groupCols = Seq("grp"))
       .select($"grp", $"n", $"mean", $"lo", $"hi")
       .as[(String, Long, Double, Double, Double)].collect()
       .map(r => r._1 -> r).toMap
@@ -871,5 +874,33 @@ class StatsSpec extends SparkSpec {
     assert(allDropped.length === 1)
     assert(allDropped.head.getLong(0) === 0L)
     assert((2 to 4).forall(allDropped.head.isNullAt))
+  }
+
+  test("empty inputs: every grouped/ungrouped statistic pins its " +
+      "fully-empty output, with no keys and with one key") {
+    val sc = Seq.empty[(String, Long, Boolean)].toDF("g", "s", "y")
+    val sd = Seq.empty[(String, Double)].toDF("g", "score")
+    val ct = Seq.empty[(String, String)].toDF("g", "cat")
+    val bx = Seq.empty[(String, Long, Double)].toDF("g", "id", "x")
+    // (statistic, kernel over groupCols, rows with no keys) — the
+    // one-key side of every statistic returns no rows
+    val cases: Seq[(String, Seq[String] => DataFrame, Seq[String])] = Seq(
+      ("ksTest", Stats.ksTest(sc, sc, "s", _), Seq("[0,0,null,null]")),
+      ("wasserstein1", Stats.wasserstein1(sc, sc, "s", _),
+        Seq("[0,0,null]")),
+      ("chiSquaredDrift", Stats.chiSquaredDrift(ct, ct, "cat", _),
+        Seq("[0,0,0,0,null,null]")),
+      ("gini", Stats.gini(sc, "s", _), Seq("[0,0,null]")),
+      ("auc", Stats.auc(sc, "s", "y", _), Seq("[0,0,null]")),
+      ("psi", gs => Stats.psi(sd, sd, "score", bins = 4, groupCols = gs),
+        (0 until 4).map(b => s"[$b,0,0,0.25,0.25,0]")),
+      ("bootstrapCi", gs =>
+        Stats.bootstrapCi(bx, "id", "x", b = 8, groupCols = gs), Nil))
+    for ((name, kernel, noKeys) <- cases) {
+      def rows(gs: Seq[String]) =
+        kernel(gs).collect().map(_.toString).sorted.toSeq
+      assert(rows(Nil) === noKeys, name)
+      assert(rows(Seq("g")) === Nil, name)
+    }
   }
 }

@@ -11,7 +11,7 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
   *    P(s⁺ > s⁻) + ½·P(s⁺ = s⁻) evaluated over every (pos, neg) pair
   *    — the O(n²) form the operator's rank-sum algebra avoids, so a
   *    tie-handling or prefix-sum error cannot reproduce it;
-  *  - [[Stats.aucByGroup]] vs [[Stats.auc]] per group slice;
+  *  - grouped [[Stats.auc]] vs [[Stats.auc]] per group slice;
   *  - [[Stats.spearman]] vs direct Pearson over tie-averaged ranks
   *    computed by in-memory sorting.
   *
@@ -60,7 +60,7 @@ object RankMetricsProps extends Properties("rankMetrics") {
 
   property("aucByGroup equals auc run on each group's slice") =
     Prop.forAll(scoredGen) { rows =>
-      val byG = Stats.aucByGroup(rows.toDF("g", "s", "y"), "g", "s", "y")
+      val byG = Stats.auc(rows.toDF("g", "s", "y"), "s", "y", Seq("g"))
         .as[(String, Long, Long, Option[Double])].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
       val want = rows.groupBy(_._1).map { case (g, rs) =>

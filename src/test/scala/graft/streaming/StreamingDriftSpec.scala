@@ -197,8 +197,8 @@ class StreamingDriftSpec extends SparkSpec {
         (s, c)
       }
     val src = MemoryStream[(String, String)]
-    val q = StreamingDrift.catSinkBy(
-        src.toDF().toDF("source", "cat"), store, "source", "cat")
+    val q = StreamingDrift.catSink(
+        src.toDF().toDF("source", "cat"), store, "cat", Seq("source"))
       .option("checkpointLocation", tmp("catsrc_ckpt"))
       .start()
     try {
@@ -208,16 +208,16 @@ class StreamingDriftSpec extends SparkSpec {
       }
       val ref = (0 until 400).map(i => (s"s${i % 2}", s"lang${i % 3}"))
         .toDF("source", "cat")
-      val refCounts = Stats.catCountsBy(ref, "source", "cat")
-      def snap() = StreamingDrift.chi2ByGroupAgainstReference(spark,
-          store, refCounts, "source", "cat")
+      val refCounts = Stats.catCounts(ref, "cat", Seq("source"))
+      def snap() = StreamingDrift.chi2AgainstReference(spark,
+          store, refCounts, "cat", Seq("source"))
         .orderBy($"source")
         .as[(String, Long, Long, Long, Long, Option[Double],
           Option[Double])].collect()
       val streamed = snap()
-      val batch = Stats.chiSquaredDriftByGroup(ref,
+      val batch = Stats.chiSquaredDrift(ref,
           (0 until 3).flatMap(cats).toDF("source", "cat"),
-          "source", "cat")
+          "cat", Seq("source"))
         .orderBy($"source")
         .as[(String, Long, Long, Long, Long, Option[Double],
           Option[Double])].collect()
@@ -226,10 +226,10 @@ class StreamingDriftSpec extends SparkSpec {
       assert(v("s0") > v("s1"),
         s"novel-category source must out-alarm the stable one: $v")
       // replay: nothing moves
-      StreamingDrift.writeCatCountsBy(
-        cats(1).toDF("source", "cat"), store, "source", "cat", 1L)
+      StreamingDrift.writeCatCounts(
+        cats(1).toDF("source", "cat"), store, "cat", 1L, Seq("source"))
       assert(snap() === streamed)
-      StreamingDrift.compactCatCountsBy(spark, store, "source", "cat")
+      StreamingDrift.compactCatCounts(spark, store, "cat", Seq("source"))
       assert(snap() === streamed)
     } finally q.stop()
   }
@@ -255,9 +255,9 @@ class StreamingDriftSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val store = tmp("driftsrc_store")
     val src = MemoryStream[(String, Double)]
-    val q = StreamingDrift.driftSinkBy(
-        src.toDF().toDF("source", "score"), store, "source", "score",
-        bins = 10, lo = 0.0, hi = 1.0)
+    val q = StreamingDrift.driftSink(
+        src.toDF().toDF("source", "score"), store, "score",
+        bins = 10, lo = 0.0, hi = 1.0, groupCols = Seq("source"))
       .option("checkpointLocation", tmp("driftsrc_ckpt"))
       .start()
     try {
@@ -266,17 +266,17 @@ class StreamingDriftSpec extends SparkSpec {
         q.processAllAvailable()
       }
       val ref = srcRef.toDF("source", "score")
-      val refCounts = Stats.binCountsBy(ref, "source", "score", 10,
-        0.0, 1.0)
-      def snap() = StreamingDrift.psiByGroupAgainstReference(
-          spark, store, refCounts, "source", bins = 10)
+      val refCounts = Stats.binCounts(ref, "score", 10, 0.0, 1.0,
+        Seq("source"))
+      def snap() = StreamingDrift.psiAgainstReference(
+          spark, store, refCounts, bins = 10, groupCols = Seq("source"))
         .orderBy($"source", $"bin")
         .as[(String, Long, Long, Long, Double, Double, Long)].collect()
       val streamed = snap()
       val replayed = (0 until 3).flatMap(srcScores)
         .toDF("source", "score")
-      val batch = Stats.psiByGroup(ref, replayed, "source", "score",
-          bins = 10)
+      val batch = Stats.psi(ref, replayed, "score", bins = 10,
+          groupCols = Seq("source"))
         .orderBy($"source", $"bin")
         .as[(String, Long, Long, Long, Double, Double, Long)].collect()
       assert(streamed === batch)
@@ -288,11 +288,11 @@ class StreamingDriftSpec extends SparkSpec {
       assert(psi("s0") < 0.1 && psi("s1") < 0.1,
         s"stable sources over alarm: $psi")
       // replay: re-land batch 1's partial, nothing moves
-      StreamingDrift.writeBatchBy(srcScores(1).toDF("source", "score"),
-        store, "source", "score", 10, 0.0, 1.0, 1L)
+      StreamingDrift.writeBatch(srcScores(1).toDF("source", "score"),
+        store, "score", 10, 0.0, 1.0, 1L, Seq("source"))
       assert(snap() === streamed)
       // compaction: view-equal, store bounded by |groups|*bins
-      StreamingDrift.compactCountsBy(spark, store, "source")
+      StreamingDrift.compactCounts(spark, store, Seq("source"))
       assert(snap() === streamed)
       assert(spark.read.parquet(store).count() <= 30)
     } finally q.stop()
@@ -306,9 +306,9 @@ class StreamingDriftSpec extends SparkSpec {
     def fx(b: Int): Seq[(String, Long)] =
       srcScores(b).map { case (s, v) => (s, math.round(v * 100)) }
     val src = MemoryStream[(String, Long)]
-    val q = StreamingDrift.ksSinkBy(
-        src.toDF().toDF("source", "score_fx"), store, "source",
-        "score_fx")
+    val q = StreamingDrift.ksSink(
+        src.toDF().toDF("source", "score_fx"), store, "score_fx",
+        Seq("source"))
       .option("checkpointLocation", tmp("kssrc_ckpt"))
       .start()
     try {
@@ -318,16 +318,16 @@ class StreamingDriftSpec extends SparkSpec {
       }
       val ref = srcRef.map { case (s, v) => (s, math.round(v * 100)) }
         .toDF("source", "score_fx")
-      val refCounts = Stats.scoreCountsBy(ref, "source", "score_fx")
-      def snap() = StreamingDrift.ksByGroupAgainstReference(
-          spark, store, refCounts, "source")
+      val refCounts = Stats.scoreCounts(ref, "score_fx", Seq("source"))
+      def snap() = StreamingDrift.ksAgainstReference(
+          spark, store, refCounts, Seq("source"))
         .orderBy($"source")
         .as[(String, Long, Long, Option[Double], Option[Long])]
         .collect()
       val streamed = snap()
-      val batch = Stats.ksTestByGroup(ref,
+      val batch = Stats.ksTest(ref,
           (0 until 3).flatMap(fx).toDF("source", "score_fx"),
-          "source", "score_fx")
+          "score_fx", Seq("source"))
         .orderBy($"source")
         .as[(String, Long, Long, Option[Double], Option[Long])]
         .collect()
@@ -337,21 +337,21 @@ class StreamingDriftSpec extends SparkSpec {
       assert(d("s0") < 0.1 && d("s1") < 0.1,
         s"stable sources over alarm: $d")
       // replay + compaction: nothing moves
-      StreamingDrift.writeScoreCountsBy(
-        fx(1).toDF("source", "score_fx"), store, "source", "score_fx",
-        1L)
+      StreamingDrift.writeScoreCounts(
+        fx(1).toDF("source", "score_fx"), store, "score_fx", 1L,
+        Seq("source"))
       assert(snap() === streamed)
-      StreamingDrift.compactScoreCountsBy(spark, store, "source")
+      StreamingDrift.compactScoreCounts(spark, store, Seq("source"))
       assert(snap() === streamed)
       // the SAME store serves the per-source W1 scorecard, equal to
-      // the batch wasserstein1ByGroup over the replayed log
-      val w1s = StreamingDrift.w1ByGroupAgainstReference(spark, store,
-          refCounts, "source")
+      // the batch grouped wasserstein1 over the replayed log
+      val w1s = StreamingDrift.w1AgainstReference(spark, store,
+          refCounts, Seq("source"))
         .orderBy($"source")
         .as[(String, Long, Long, Option[Double])].collect()
-      val w1b = Stats.wasserstein1ByGroup(ref,
+      val w1b = Stats.wasserstein1(ref,
           (0 until 3).flatMap(fx).toDF("source", "score_fx"),
-          "source", "score_fx")
+          "score_fx", Seq("source"))
         .orderBy($"source")
         .as[(String, Long, Long, Option[Double])].collect()
       assert(w1s === w1b)
