@@ -18,28 +18,22 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingApps {
 
   /** Read the dim store fresh (per batch) — empty frame with the right
-    * schema when the store doesn't exist yet (cold start before the CDC
-    * app's first write), so dependent apps start cleanly and pick up
-    * dims as they appear.
+    * schema when the store doesn't exist yet or is an empty root (cold
+    * start before the CDC app's first write), so dependent apps start
+    * cleanly and pick up dims as they appear.
     */
   private[runner] def dimOrEmpty(spark: SparkSession, storePath: String,
                                  table: String,
                                  fields: Seq[String]): DataFrame =
-    try
-      CdcSplit.latestDims(Sinks.readStore(spark, storePath))
+    Sinks.readStoreIfExists(spark, storePath).map { store =>
+      CdcSplit.latestDims(store)
         .filter(col("table") === table)
         .select(json_tuple(col("data"), fields: _*).as(fields))
-    catch {
-      case e: Exception
-          if e.getMessage != null &&
-            (e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("Path does not exist")) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(fields.map(f =>
-            org.apache.spark.sql.types.StructField(f,
-              org.apache.spark.sql.types.StringType))))
-    }
+    }.getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(fields.map(f =>
+        org.apache.spark.sql.types.StructField(f,
+          org.apache.spark.sql.types.StringType)))))
 
   private def session(name: String): SparkSession = {
     val s = SparkSession.builder()
@@ -121,9 +115,8 @@ object StreamingApps {
               .save()
             // batch id rides along as __seq: same-second CDC updates
             // landing in different batches keep their arrival order
-            CdcSplit.dims(cached, dimTables, bid)
-              .write.mode("append").partitionBy("table")
-              .parquet(s"$out/dim_store")
+            Sinks.appendStore(CdcSplit.dims(cached, dimTables, bid),
+              s"$out/dim_store", "table")
           } finally { cached.unpersist(); () }
         }
         .start()

@@ -63,11 +63,23 @@ object Sinks {
   def upsertBatch(batch: DataFrame, path: String, pk: String,
                   dtCol: String = "dt", batchId: Long = 0L,
                   tsCol: Option[String] = None): Unit =
-    winners(batch, pk, dtCol, tsCol)
-      .withColumn(SeqCol, lit(batchId))
-      .write.mode(SaveMode.Append)
-      .partitionBy(dtCol)
-      .parquet(path)
+    appendStore(winners(batch, pk, dtCol, tsCol)
+      .withColumn(SeqCol, lit(batchId)), path, dtCol)
+
+  /** Append rows to a `partCol`-partitioned store, recovering a
+    * crashed [[swapRewrite]] first: an append into a root the swap
+    * moved aside would recreate the root, and the next recovery would
+    * find the live path present and orphan the rewritten store in
+    * `path.__compact_tmp`.
+    */
+  private[graft] def appendStore(rows: DataFrame, path: String,
+                                 partCol: String): Unit = {
+    val dst = new Path(path)
+    recoverStore(
+      dst.getFileSystem(rows.sparkSession.sessionState.newHadoopConf()),
+      dst)
+    rows.write.mode(SaveMode.Append).partitionBy(partCol).parquet(path)
+  }
 
   /** Current state of an append-only keyed store: highest-`__seq` row
     * per (pk, dt). Tolerates stores (or individual files) written
@@ -123,7 +135,7 @@ object Sinks {
     * The only window a reader can observe is between the two renames
     * (metadata ops, not data copies); a crash inside it leaves BOTH
     * the old and the compacted store on disk, and the next
-    * [[recoverStore]] (run by every [[readStore]] and every rewrite)
+    * [[recoverStore]] (run by every [[readStore]], append and rewrite)
     * swaps the completed tmp in. On HDFS-like stores rename is atomic;
     * a production lakehouse would use a table format with atomic
     * commits (Delta/Iceberg) instead, as the class doc notes.
@@ -155,7 +167,7 @@ object Sinks {
     * back to the set-aside previous store. No-op when the live path
     * exists.
     */
-  private def recoverStore(fs: FileSystem, dst: Path): Unit =
+  private[streaming] def recoverStore(fs: FileSystem, dst: Path): Unit =
     if (!fs.exists(dst)) {
       val tmp = new Path(dst.toString + TmpSuffix)
       val old = new Path(dst.toString + OldSuffix)

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * the benchmark corpus; the gram join is keyed by DISTINCT grams on
   * both sides, so a hot gram cannot explode it.
   *
-  * Replay safety: survivors land under `outPath/batch=<id>/` with
-  * overwrite — a replayed batch rewrites its own directory
+  * Replay safety: survivors land in the batch's own [[BatchDirs]]
+  * directory with overwrite — a replayed batch rewrites it
   * byte-identically (idempotency-by-path, same contract as the
   * near-dedup sink). The gate reads only the static index, so replays
   * need no self-match exclusion.
@@ -65,9 +65,9 @@ object StreamingDecontaminate {
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        gateBatch(batch, idx, idCol, textCol, n, maxHitFrac)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$bid")
-        ()
+        BatchDirs.write(
+          gateBatch(batch, idx, idCol, textCol, n, maxHitFrac),
+          outPath, bid)
       }
   }
 }

@@ -19,7 +19,7 @@ import graft.operators.Stats
   * replayed log (StreamingDriftSpec pins it).
   *
   * Replay safety is [[SumStore]]'s: counts SUM across batches, so each
-  * batch's partial OVERWRITES its own `batch=<id>` directory and an
+  * batch's partial OVERWRITES its own batch directory and an
   * at-least-once redelivery rewrites identical bytes — never
   * double-counts. [[compactCounts]] folds the store to ≤ `bins` rows
   * (same maintenance-window contract as every SumStore fold).

@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * the batch metric over the full replayed sample log.
   *
   * Replay safety: the per-batch partial OVERWRITES its own
-  * `batch=<id>` directory (the SumStore contract), so at-least-once
+  * batch directory (the SumStore contract), so at-least-once
   * redelivery rewrites identical bytes instead of double-counting a
   * sample. [[compactCounts]] folds the partials; maintenance window
   * only, like every SumStore fold.

@@ -16,7 +16,7 @@ import graft.operators.Graph
   *
   * Idempotency under at-least-once replay (including replays of
   * batches a compaction already folded in) comes from [[SumStore]]'s
-  * owned-directory + fold-watermark protocol.
+  * owned-directory + effective-directory protocol.
   *
   * Edge contract: like the batch operator, degrees count DISTINCT
   * edges — each (src, dst) pair must reach the sink in exactly one

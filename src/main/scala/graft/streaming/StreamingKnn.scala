@@ -20,10 +20,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * that looks like this?") and retrieval-index freshness.
   *
   * Replay safety (the [[StreamingNearDedup]] contract): both the
-  * neighbor output and the postings append land in `batch=<id>`
-  * directories with overwrite, and the probe reads the postings store
-  * EXCLUDING its own batch id — a batch replayed after a crash
-  * rewrites its directories byte-identically instead of
+  * neighbor output and the postings append land in the batch's own
+  * [[BatchDirs]] directories with overwrite, and the probe reads the
+  * postings store EXCLUDING its own batch id — a batch replayed after
+  * a crash rewrites its directories byte-identically instead of
   * double-appending or self-matching against its pre-crash postings.
   *
   * Centroids stay fixed forever by design (re-seeding would silently
@@ -35,25 +35,22 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 object StreamingKnn {
 
   /** The initial build's postings directory id: far below any merge
-    * target (`batch=-(upToBatch+1)`) so [[compactPostings]] can never
-    * mistake the seed directory for a crashed merge's published
-    * target, and below every live batch id so it is never excluded by
-    * a replay filter.
+    * target id `-(upToBatch+1)`, so [[BatchDirs]] never mistakes the
+    * seed directory for a merge target, and below every live batch id
+    * so it is never excluded by a replay filter.
     */
   private[streaming] val InitBatch = Long.MinValue
 
-  /** Deterministic postings dedup by id — the crashed-merge /
-    * rebalance healing step. [[knnSink]]'s contract is that
-    * `neighbor_id` is unique across the stream (an id re-ingested
-    * with a DIFFERENT vector is an upstream bug — the store is
-    * append-only and cannot represent both), but healing must not
-    * depend on it: when duplicates carry distinct payloads this
-    * keeps, per id, the row with the MINIMUM struct over the
-    * remaining columns (array ordering is lexicographic), so every
-    * read site — and [[compactPostings]]'s full-row `distinct`
-    * composed with it — converges on the same row regardless of
-    * partitioning, unlike `dropDuplicates(id)` which picks an
-    * arbitrary row per run.
+  /** Deterministic postings dedup by id — the rebalance healing step
+    * (the rebalance re-files EVERY directory, hidden ones included).
+    * [[knnSink]]'s contract is that `neighbor_id` is unique across the
+    * stream (an id re-ingested with a DIFFERENT vector is an upstream
+    * bug — the store is append-only and cannot represent both), but
+    * healing must not depend on it: when duplicates carry distinct
+    * payloads this keeps, per id, the row with the MINIMUM struct over
+    * the remaining columns (array ordering is lexicographic), so the
+    * result never depends on partitioning, unlike `dropDuplicates(id)`
+    * which picks an arbitrary row per run.
     */
   private[streaming] def dedupPostingsById(df: DataFrame): DataFrame = {
     val others = df.columns.filter(_ != "neighbor_id").toSeq
@@ -64,8 +61,8 @@ object StreamingKnn {
   }
 
   /** Build the index over the resident corpus and persist it:
-    * centroids at `centroidsPath`, postings under
-    * `postingsPath/batch=<InitBatch>/`. Must run once before the sink
+    * centroids at `centroidsPath`, postings in the [[InitBatch]]
+    * directory under `postingsPath`. Must run once before the sink
     * starts; the corpus must be non-empty (the seeds ARE the first
     * `cells` vectors).
     */
@@ -74,42 +71,27 @@ object StreamingKnn {
                 cells: Int = 16): Unit = {
     val ix = Similarity.ivfIndex(corpus, idCol, vecCol, cells)
     ix.centroids.write.mode("overwrite").parquet(centroidsPath)
-    ix.postings.write.mode("overwrite")
-      .parquet(s"$postingsPath/batch=$InitBatch")
-    ()
+    BatchDirs.write(ix.postings, postingsPath, InitBatch)
   }
 
   /** The persisted index as [[Similarity.IvfIndexFrames]].
-    * `excludeBatch` drops one `batch=` partition (partition-pruned,
-    * not scanned): a REPLAYED micro-batch must not probe its own
-    * pre-crash postings append.
-    *
-    * Crashed-merge duplicates: a [[compactPostings]] crash between
-    * its publish rename and its source deletes leaves every surviving
-    * source row duplicated inside the merge target — and the probe is
-    * a top-k heap ([[Similarity.topK]] keeps duplicates as separate
-    * entries), so a duplicated neighbor would occupy two ranks and
-    * displace the true k-th. The window is detected per read with one
-    * filesystem listing ([[BatchDirs.crashedMergeDups]]) and the
-    * postings dedup by id ONLY while it is open — zero plan cost on
-    * the normal path, and re-running the merge closes the window.
+    * `excludeBatch` drops one batch directory: a REPLAYED micro-batch
+    * must not probe its own pre-crash postings append. The probe is a
+    * top-k heap ([[Similarity.topK]] keeps duplicates as separate
+    * entries), so it relies on the effective-directory read: a
+    * [[compactPostings]] crash between its publish rename and its
+    * source deletes leaves the surviving sources hidden, never
+    * duplicated next to the merge target.
     */
   private[streaming] def readIndex(spark: SparkSession,
                                    centroidsPath: String,
                                    postingsPath: String,
                                    excludeBatch: Option[Long] = None)
-      : Similarity.IvfIndexFrames = {
-    val posts0 = spark.read.parquet(postingsPath)
-    val posts1 = excludeBatch.fold(posts0)(b =>
-      posts0.filter(col("batch") =!= b))
-    val posts2 = posts1.select(col("neighbor_id"), col("cv"), col("cell"))
-    val posts =
-      if (BatchDirs.crashedMergeDups(spark, postingsPath))
-        dedupPostingsById(posts2)
-      else posts2
+      : Similarity.IvfIndexFrames =
     Similarity.IvfIndexFrames(
-      spark.read.parquet(centroidsPath), posts)
-  }
+      spark.read.parquet(centroidsPath),
+      BatchDirs.readAll(spark, postingsPath, excludeBatch)
+        .select(col("neighbor_id"), col("cv"), col("cell")))
 
   /** One micro-batch: probe then append from ONE fused cell
     * assignment ([[Similarity.knnAndAppend]] — the assignment is the
@@ -132,20 +114,18 @@ object StreamingKnn {
       excludeBatch = Some(bid))
     Similarity.knnAndAppend(ix, batch, idCol, vecCol, k, nProbe) {
       (neighbors, appended) =>
-        neighbors.write.mode("overwrite")
-          .parquet(s"$outPath/batch=$bid")
-        appended.write.mode("overwrite")
-          .parquet(s"$postingsPath/batch=$bid")
+        BatchDirs.write(neighbors, outPath, bid)
+        BatchDirs.write(appended, postingsPath, bid)
     }
   }
 
   /** Attach the probe-and-append sink to a streaming vector frame.
     * Per batch: top-`k` neighbors of each vector against everything
-    * landed so far under `outPath/batch=<id>/`, the batch's own
-    * postings appended under `postingsPath/batch=<id>/`. `idCol` must
-    * be a bigint and UNIQUE across the stream — the store is
-    * append-only, so re-ingesting an id with a different vector
-    * cannot be represented; healing paths resolve such duplicates
+    * landed so far, in the batch's own directory under `outPath`; the
+    * batch's own postings in its directory under `postingsPath`.
+    * `idCol` must be a bigint and UNIQUE across the stream — the
+    * store is append-only, so re-ingesting an id with a different
+    * vector cannot be represented; the rebalance resolves duplicates
     * deterministically ([[dedupPostingsById]]) but the second vector
     * is lost by contract. [[initIndex]] must have run against the
     * same paths.
@@ -168,13 +148,12 @@ object StreamingKnn {
   /** Merge the per-micro-batch postings directories — the
     * [[BatchDirs.compactInPlace]] in-place maintenance merge (see its
     * scaladoc for the concurrency/crash-safety contract) with this
-    * store's row shape; the `distinct` heals duplicates from a crash
-    * between a prior publish and its source deletes.
+    * store's row shape.
     */
   def compactPostings(spark: SparkSession, postingsPath: String,
                       upToBatch: Long): Unit =
     BatchDirs.compactInPlace(spark, postingsPath, upToBatch,
-      _.select(col("neighbor_id"), col("cv"), col("cell")).distinct())
+      _.select(col("neighbor_id"), col("cv"), col("cell")))
 
   /** Cell-balance report over the LIVE store —
     * [[Similarity.ivfStats]] on the persisted index: the skew monitor
@@ -199,7 +178,7 @@ object StreamingKnn {
     *
     *  - every directory with id ≤ `upToBatch` (a COMMITTED batch id —
     *    the [[compactPostings]] contract) merges into ONE re-filed
-    *    `batch=-(upToBatch+1)` directory;
+    *    merge-target directory ([[BatchDirs.targetOf]]);
     *  - every LATER directory (an uncommitted batch that may still
     *    replay) is re-filed IN PLACE under its own id, so a replayed
     *    batch's `excludeBatch` pruning keeps working across the swap
@@ -292,8 +271,7 @@ object StreamingKnn {
     if (fs.exists(mergedStage)) {
       batchDirs().filter(_._1 <= upToBatch)
         .foreach { case (_, p) => fs.delete(p, true) }
-      val target = new org.apache.hadoop.fs.Path(root,
-        s"batch=${-(upToBatch + 1)}")
+      val target = BatchDirs.targetOf(postingsPath, upToBatch)
       if (!fs.rename(mergedStage, target))
         throw new java.io.IOException(s"rebalance: cannot publish $target")
     }
@@ -301,7 +279,7 @@ object StreamingKnn {
       .filter(_.getName.startsWith(".__rebal_b_"))
       .foreach { st =>
         val b = st.getName.stripPrefix(".__rebal_b_")
-        val live = new org.apache.hadoop.fs.Path(root, s"batch=$b")
+        val live = BatchDirs.dirOf(postingsPath, b.toLong)
         fs.delete(live, true)
         if (!fs.rename(st, live))
           throw new java.io.IOException(s"rebalance: cannot publish $live")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -26,11 +25,10 @@ import org.apache.spark.sql.functions._
   * trigger.
   *
   * Replay safety: both the landed output and the index append are
-  * written to a `batch=<id>` subdirectory with overwrite, so a batch
-  * replayed after a crash rewrites its own directories byte-identically
-  * instead of double-appending (same idempotency-by-path contract as
-  * the keyed serving store's `__seq`). Readers take the directory root
-  * (parquet partition discovery reads `batch=N` as a column).
+  * [[BatchDirs]] stores, so a batch replayed after a crash rewrites
+  * its own directories byte-identically instead of double-appending
+  * (same idempotency-by-path contract as the keyed serving store's
+  * `__seq`).
   */
 object StreamingNearDedup {
 
@@ -40,29 +38,18 @@ object StreamingNearDedup {
     StructField("sig", ArrayType(LongType, containsNull = false)),
     StructField("band", StringType)))
 
-  /** Current index contents. `excludeBatch` drops one `batch=` partition
-    * (partition-pruned, not scanned): a REPLAYED micro-batch must not
-    * see its own earlier, pre-crash index append, or every one of its
-    * docs would self-match and be dropped on the retry.
-    *
-    * The index root is only ever appended to or merged IN PLACE
-    * ([[compactIndex]] never renames the root away), so an existing
-    * root is always a complete index — no crash-recovery step is
-    * needed before the read.
+  /** Current index contents. `excludeBatch` drops one batch
+    * directory: a REPLAYED micro-batch must not see its own earlier,
+    * pre-crash index append, or every one of its docs would self-match
+    * and be dropped on the retry.
     */
   private[streaming] def readIndex(spark: SparkSession, path: String,
                                    excludeBatch: Option[Long] = None)
-      : DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) {
-      val df = spark.read.parquet(path)
-      excludeBatch.fold(df)(b => df.filter(col("batch") =!= b))
-        .select(col("did"), col("sig"), col("band"))
-    } else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], indexSchema)
-  }
+      : DataFrame =
+    BatchDirs.read(spark, path, excludeBatch)
+      .map(_.select(col("did"), col("sig"), col("band")))
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], indexSchema))
 
   /** Fraction of matching MinHash components — the LSH Jaccard
     * estimate shared with [[Dedup.minhashLshPairs]]. */
@@ -125,18 +112,17 @@ object StreamingNearDedup {
   /** Merge the per-micro-batch index directories — the
     * [[BatchDirs.compactInPlace]] in-place maintenance merge (see its
     * scaladoc for the concurrency/crash-safety contract) with this
-    * store's row shape: the `distinct` heals duplicates from a crash
-    * between a prior publish and its source deletes.
+    * store's row shape.
     */
   def compactIndex(spark: SparkSession, indexPath: String,
                    upToBatch: Long): Unit =
     BatchDirs.compactInPlace(spark, indexPath, upToBatch,
-      _.select(col("did"), col("sig"), col("band")).distinct())
+      _.select(col("did"), col("sig"), col("band")))
 
   /** Attach the near-dedup gate to a streaming document frame.
-    * Survivors land under `outPath/batch=<id>/`; their banded
-    * signatures append to `indexPath/batch=<id>/`. `idCol` must be a
-    * bigint (the index `did` key).
+    * Survivors land in the batch's own directory under `outPath`; their
+    * banded signatures in its own directory under `indexPath`. `idCol`
+    * must be a bigint (the index `did` key).
     */
   def nearDedupSink(docs: DataFrame, idCol: String, textCol: String,
                     indexPath: String, outPath: String,
@@ -157,10 +143,8 @@ object StreamingNearDedup {
         // kept feeds the landing write and the append's semi-join;
         // one materialization, bounded by the micro-batch
         val keptM = kept.localCheckpoint()
-        keptM.write.mode("overwrite").parquet(s"$outPath/batch=$bid")
-        banded.join(keptM.select(col(idCol).as("did")),
-            Seq("did"), "left_semi")
-          .write.mode("overwrite").parquet(s"$indexPath/batch=$bid")
-        ()
+        BatchDirs.write(keptM, outPath, bid)
+        BatchDirs.write(banded.join(keptM.select(col(idCol).as("did")),
+          Seq("did"), "left_semi"), indexPath, bid)
       }
 }

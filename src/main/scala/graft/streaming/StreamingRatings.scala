@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * (spec-pinned).
   *
   * Replay safety: the per-batch partial OVERWRITES its own
-  * `batch=<id>` directory (the SumStore contract), so at-least-once
+  * batch directory (the SumStore contract), so at-least-once
   * redelivery rewrites identical bytes instead of double-counting a
   * rating. [[compactCounts]] folds the partials; maintenance window
   * only, like every SumStore fold.

@@ -26,9 +26,9 @@ import graft.operators.Stats
   * StreamingScorerSpec pins it).
   *
   * Replay safety and compaction are [[SumStore]]'s: partials
-  * overwrite their own `batch=<id>` directory, re-delivery rewrites
-  * identical bytes, the fold watermark ignores late replays of
-  * folded batches.
+  * overwrite their own batch directory, re-delivery rewrites
+  * identical bytes, and the effective-directory read ignores late
+  * replays of folded batches.
   *
   * Scale shape: per batch ONE score-keyed map-side hash agg over the
   * micro-batch (≤ distinct scores rows written); the reads fold the

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-batch SEEN-KEY gate — the exact-key companion of
   * [[StreamingNearDedup]]'s content gate and the membership store a
@@ -9,20 +9,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * work queue): each micro-batch's NEW keys are returned for
   * downstream work and recorded; later batches' repeats are dropped.
   *
-  * Replay-STABLE emissions: membership is checked against every store
-  * directory EXCEPT the current batch's own (`batch != id`), and the
-  * fresh keys overwrite that owned `batch=<id>` directory — so an
-  * at-least-once redelivery of batch N sees exactly the store state N
-  * originally saw and returns the identical fresh set (a naive check
-  * against the full store would return EMPTY on replay, because N's
-  * own keys are already in it).
+  * Replay-STABLE emissions: a [[BatchDirs]] store. Membership is
+  * checked against every effective directory EXCEPT the current
+  * batch's own, and the fresh keys overwrite that owned directory —
+  * so an at-least-once redelivery of batch N sees exactly the store
+  * state N originally saw and returns the identical fresh set (a naive
+  * check against the full store would return EMPTY on replay, because
+  * N's own keys are already in it).
   *
-  * [[compactSeen]] folds the store to distinct keys in the reserved
-  * `batch=-1` directory; like [[SumStore.compact]] it must run in a
-  * maintenance window with the stream stopped — after a fold, a
-  * replayed already-folded batch would see its own keys under
-  * `batch=-1` (checkpointed batches never replay, so the window is
-  * the crash-recovery gap only).
+  * [[compactSeen]] folds the store in place to distinct keys; like
+  * [[SumStore.compact]] it must run in a maintenance window with the
+  * stream stopped — after a fold, a replayed already-folded batch
+  * would see its own keys in the merge target (checkpointed batches
+  * never replay, so the window is the crash-recovery gap only).
   *
   * Scale shape: one `dropDuplicates` on the batch and one left_anti
   * equi-join against the store per batch — at crawl scale, bucket the
@@ -30,11 +29,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * store side shuffle-free.
   */
 object StreamingSeen {
-
-  private val FoldId = -1L
-
-  private def batchDir(storePath: String, batchId: Long) =
-    s"$storePath/batch=$batchId"
 
   /** foreachBatch body: the batch's previously-UNSEEN rows (first
     * occurrence per key inside the batch wins via dropDuplicates),
@@ -44,40 +38,28 @@ object StreamingSeen {
   def unseenAndRecord(batch: DataFrame, keyCol: String,
                       storePath: String, batchId: Long): DataFrame = {
     require(batchId >= 0, s"batch ids are >= 0, got $batchId")
-    val spark = batch.sparkSession
-    // membership via the RECOVERING reader: a crash between
-    // compactSeen's two swap renames leaves the live path missing with
-    // the full store set aside — readStoreIfExists heals that before
-    // the read, and only a genuinely absent path (first batch of a
-    // fresh stream) reads as the empty store. A blanket Try here once
-    // treated ANY read failure as empty, re-emitting every seen key
-    // AND recreating the store root so recovery could never run.
-    val seen = Sinks.readStoreIfExists(spark, storePath)
-      .map(_.filter(col("batch").cast("long") =!= batchId)
-        .select(col(keyCol)))
+    val seen = BatchDirs.read(batch.sparkSession, storePath,
+        Some(batchId))
+      .map(_.select(col(keyCol)))
     val fresh0 = batch.dropDuplicates(keyCol)
     val fresh = seen.fold(fresh0)(s =>
       fresh0.join(s, Seq(keyCol), "left_anti"))
       .localCheckpoint() // the membership read must finish BEFORE the
                          // overwrite below rewrites this batch's dir
-    fresh.select(col(keyCol))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(batchDir(storePath, batchId))
+    BatchDirs.write(fresh.select(col(keyCol)), storePath, batchId)
     fresh
   }
 
   /** All keys ever recorded (distinct). */
   def seenKeys(spark: SparkSession, storePath: String,
                keyCol: String): DataFrame =
-    Sinks.readStore(spark, storePath).select(col(keyCol)).distinct()
+    BatchDirs.readAll(spark, storePath).select(col(keyCol)).distinct()
 
-  /** Fold the store to distinct keys in `batch=-1` via the staged
-    * swap; maintenance window only (see class doc).
+  /** Fold the store in place to distinct keys; maintenance window
+    * only (see class doc).
     */
   def compactSeen(spark: SparkSession, storePath: String,
                   keyCol: String): Unit =
-    Sinks.swapRewrite(spark, storePath, "batch") { store =>
-      store.select(col(keyCol)).distinct()
-        .withColumn("batch", lit(FoldId))
-    }
+    BatchDirs.compactAll(spark, storePath,
+      _.select(col(keyCol)).distinct())
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 import graft.operators.Sketch
 
@@ -50,12 +50,11 @@ object StreamingSketch {
                       groupCols: Seq[String], batchId: Long): Unit = {
     require(groupCols.nonEmpty,
       "groupCols must be non-empty (add a constant column for a global count)")
-    Sketch.hllRegisters(batch, value, groupCols)
-      .withColumn(Sinks.SeqCol, lit(batchId))
-      .withColumn(PartCol, col(groupCols.head).cast("string"))
-      .write.mode(SaveMode.Append)
-      .partitionBy(PartCol)
-      .parquet(storePath)
+    Sinks.appendStore(
+      Sketch.hllRegisters(batch, value, groupCols)
+        .withColumn(Sinks.SeqCol, lit(batchId))
+        .withColumn(PartCol, col(groupCols.head).cast("string")),
+      storePath, PartCol)
   }
 
   /** Wire a stream into an HLL register store. */
@@ -74,7 +73,7 @@ object StreamingSketch {
   def estimate(spark: SparkSession, storePath: String,
                groupCols: Seq[String]): DataFrame =
     Sketch.hllEstimate(
-      Sketch.hllMerge(spark.read.parquet(storePath).drop(PartCol),
+      Sketch.hllMerge(Sinks.readStore(spark, storePath).drop(PartCol),
         groupCols),
       groupCols)
 
@@ -90,22 +89,19 @@ object StreamingSketch {
   //
   // HLL registers max-merge, so blind re-appends are idempotent. The
   // count-based sketches SUM across shards — a replayed micro-batch
-  // would double-count. Idempotency here comes from ownership instead:
-  // each batch OVERWRITES its own `batch=<id>` partition directory
-  // (the same overwrite-by-batch-path contract StreamingNearDedup
-  // uses), so at-least-once redelivery rewrites identical bytes and
-  // the merged view cannot move. Readers sum across all batch
-  // partitions.
+  // would double-count — so they are plain [[SumStore]] stores: each
+  // batch overwrites its own partial, and readers sum the effective
+  // partials (exactly Sketch.cmsMerge / qsketchMerge).
 
-  private def batchDir(storePath: String, batchId: Long) =
-    s"$storePath/batch=$batchId"
+  private val CmsKeys = Seq("row", "cell")
+  private val QsketchKeys = Seq("qbucket")
+  private val Cnt = Seq("cnt")
 
   /** foreachBatch body: this batch's CMS counters, owned-by-path. */
   def writeCmsBatch(batch: DataFrame, storePath: String, value: Column,
                     groupCols: Seq[String], batchId: Long): Unit =
-    Sketch.cmsSketch(batch, value, groupCols)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(batchDir(storePath, batchId))
+    SumStore.writeBatch(Sketch.cmsSketch(batch, value, groupCols),
+      storePath, batchId)
 
   /** Wire a stream into a CMS counter store. */
   def cmsSink(stream: DataFrame, storePath: String, value: Column,
@@ -120,23 +116,20 @@ object StreamingSketch {
                   queries: DataFrame, queryCol: String,
                   groupCols: Seq[String]): DataFrame =
     Sketch.cmsLookup(
-      Sketch.cmsMerge(spark.read.parquet(storePath).drop("batch"),
-        groupCols),
+      SumStore.merged(spark, storePath, groupCols ++ CmsKeys, Cnt),
       queries, queryCol, groupCols)
 
   /** foreachBatch body: this batch's quantile buckets, owned-by-path. */
   def writeQsketchBatch(batch: DataFrame, storePath: String, value: Column,
                         groupCols: Seq[String], batchId: Long): Unit =
-    Sketch.qsketch(batch, value, groupCols)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(batchDir(storePath, batchId))
+    SumStore.writeBatch(Sketch.qsketch(batch, value, groupCols),
+      storePath, batchId)
 
   /** Permille quantiles over everything landed so far. */
   def qsketchEstimate(spark: SparkSession, storePath: String,
                       groupCols: Seq[String],
                       permilles: Seq[Int]): DataFrame =
     Sketch.qsketchQuantiles(
-      Sketch.qsketchMerge(spark.read.parquet(storePath).drop("batch"),
-        groupCols),
+      SumStore.merged(spark, storePath, groupCols ++ QsketchKeys, Cnt),
       groupCols, permilles)
 }

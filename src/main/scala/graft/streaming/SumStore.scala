@@ -1,63 +1,38 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Fold-watermarked SUM-merged parquet store — the shared idempotency
-  * machinery behind [[StreamingGraph]] (degree partials) and
-  * [[StreamingManifest]] (corpus-manifest partials). Counts SUM across
-  * micro-batches, so the HLL blind-re-append trick doesn't apply: a
-  * replayed batch would double-count. Instead:
+/** SUM-merged [[BatchDirs]] store — the shared idempotency machinery
+  * behind the streaming count stores ([[StreamingGraph]] degree
+  * partials, [[StreamingManifest]] corpus-manifest partials, the
+  * comparison, eval, rating, drift, scorer, quota and sketch-counter
+  * stores). Counts SUM across micro-batches, so the HLL blind-re-append
+  * trick doesn't apply: a replayed batch would double-count. Instead:
   *
-  *  - each micro-batch's PARTIAL aggregate OVERWRITES its own
-  *    `batch=<id>` directory (at-least-once redelivery rewrites
-  *    identical bytes);
-  *  - [[compact]] folds everything visible into ONE summed partition
-  *    in the RESERVED `batch=-1` directory (streaming batch ids are
-  *    ≥ 0, so no replay can ever overwrite the fold), carrying the
-  *    greatest absorbed batch id in the `__fold_wm` data column
-  *    (partials carry −1 there);
-  *  - readers take folded rows plus partials with `batch >` the
-  *    watermark — a batch replayed even AFTER a compaction folded it
-  *    in re-creates a directory below the watermark and is ignored,
-  *    never double-counted; re-folding with no new batches rewrites
-  *    the identical fold.
+  *  - each micro-batch's PARTIAL aggregate OVERWRITES its own batch
+  *    directory (at-least-once redelivery rewrites identical bytes);
+  *  - [[compact]] folds every effective directory into one summed
+  *    merge target in place ([[BatchDirs.compactInPlace]]);
+  *  - readers sum the effective directories only, so a batch replayed
+  *    even AFTER a fold absorbed it re-creates a directory the
+  *    effective set hides — ignored, never double-counted — and a fold
+  *    that crashed before its source deletes counts nothing twice.
   *
   * Contract: each logical input row must reach the sink in exactly one
   * batch (upstream incremental dedup guarantees this for crawl/corpus
   * feeds); partials must share one schema of `keyCols ++ sumCols`.
-  * [[compact]] swaps the WHOLE store directory, so it must run in a
-  * maintenance window with the writing stream STOPPED (the same
-  * offline requirement as [[Sinks.compact]]'s CompactionJob): a batch
-  * directory landed between the snapshot read and the swap renames
-  * would be silently dropped. Readers go through [[Sinks.readStore]],
-  * which first recovers any crashed half-finished swap.
+  * [[compact]] folds up to the newest batch present, so it must run in
+  * a maintenance window with the writing stream STOPPED: a batch still
+  * in flight would land below the fold and be hidden.
   */
 private[streaming] object SumStore {
-
-  private val WmCol = "__fold_wm"
-  private val FoldId = -1L
-
-  private def batchDir(storePath: String, batchId: Long) =
-    s"$storePath/batch=$batchId"
 
   /** Land one micro-batch's partial aggregate, owned-by-path. */
   def writeBatch(partial: DataFrame, storePath: String,
                  batchId: Long): Unit = {
     require(batchId >= 0, s"batch ids are >= 0, got $batchId")
-    partial.withColumn(WmCol, lit(FoldId))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(batchDir(storePath, batchId))
-  }
-
-  /** Rows a reader may count: the folded partition (if any) plus
-    * partials newer than the fold watermark.
-    */
-  private def effective(store: DataFrame): DataFrame = {
-    // 1-row driver scalar, never a broadcast subtree per reader job
-    val w = store.agg(max(col(WmCol))).head()
-    val wm = if (w.isNullAt(0)) FoldId else w.getLong(0)
-    store.filter(col(WmCol) >= 0 || col("batch").cast("long") > wm)
+    BatchDirs.write(partial, storePath, batchId)
   }
 
   private def rollup(eff: DataFrame, keyCols: Seq[String],
@@ -66,51 +41,34 @@ private[streaming] object SumStore {
       .agg(sum(col(sumCols.head)).as(sumCols.head),
         sumCols.tail.map(c => sum(col(c)).as(c)): _*)
 
-  /** Current per-key sums over everything landed so far.
-    * [[Sinks.readStore]] recovers a crashed half-finished swap first.
-    */
+  /** Current per-key sums over everything landed so far. */
   def merged(spark: SparkSession, storePath: String,
              keyCols: Seq[String], sumCols: Seq[String]): DataFrame =
-    rollup(effective(Sinks.readStore(spark, storePath)), keyCols,
-      sumCols)
+    rollup(BatchDirs.readAll(spark, storePath), keyCols, sumCols)
 
-  /** [[merged]] minus one batch directory, `None` when the store does
-    * not exist yet — the replay-stable read for a foreachBatch body
-    * that consults cumulative sums BEFORE overwriting its own partial
-    * (the [[StreamingSeen.unseenAndRecord]] membership pattern applied
-    * to sums): an at-least-once redelivery of batch N sees exactly the
-    * totals N originally saw. Same compaction caveat as the seen
-    * store: a batch replayed AFTER a fold absorbed it would see its
-    * own contribution (checkpointed batches never replay, so the
-    * window is the crash-recovery gap only).
+  /** [[merged]] minus one batch directory, `None` when nothing else
+    * has landed — the replay-stable read for a foreachBatch body that
+    * consults cumulative sums BEFORE overwriting its own partial (the
+    * [[StreamingSeen.unseenAndRecord]] membership pattern applied to
+    * sums): an at-least-once redelivery of batch N sees exactly the
+    * totals N originally saw. Same fold caveat as the seen store: a
+    * batch replayed AFTER a fold absorbed it would see its own
+    * contribution (checkpointed batches never replay, so the window is
+    * the crash-recovery gap only).
     */
   def mergedExcludingIfExists(spark: SparkSession, storePath: String,
                               keyCols: Seq[String], sumCols: Seq[String],
                               excludeBatch: Long): Option[DataFrame] =
-    Sinks.readStoreIfExists(spark, storePath).map { store =>
-      rollup(effective(store)
-        .filter(col("batch").cast("long") =!= excludeBatch),
-        keyCols, sumCols)
-    }
+    BatchDirs.read(spark, storePath, Some(excludeBatch))
+      .map(rollup(_, keyCols, sumCols))
 
-  /** Fold the store to one summed partition in `batch=-1`,
-    * watermarked at the greatest batch id absorbed, via the
-    * staged-swap protocol. Run from a maintenance window with the
-    * writing stream STOPPED (see class doc); bounds read
-    * amplification to |keys| + O(batches since last fold).
+  /** Fold the store in place to one summed merge target covering the
+    * newest batch present. Run from a maintenance window with the
+    * writing stream STOPPED (see class doc); bounds read amplification
+    * to |keys| + O(batches since last fold). Re-folding with no newer
+    * partials only deletes hidden directories.
     */
   def compact(spark: SparkSession, storePath: String,
               keyCols: Seq[String], sumCols: Seq[String]): Unit =
-    Sinks.swapRewrite(spark, storePath, "batch") { store =>
-      val eff = effective(store)
-      // new watermark: greatest id any effective row witnessed — a
-      // folded row witnessed up to its __fold_wm, a partial its own
-      // directory id
-      val w = eff.agg(max(greatest(col(WmCol),
-        col("batch").cast("long")))).head()
-      val wm = if (w.isNullAt(0)) FoldId else w.getLong(0)
-      rollup(eff, keyCols, sumCols)
-        .withColumn(WmCol, lit(wm))
-        .withColumn("batch", lit(FoldId))
-    }
+    BatchDirs.compactAll(spark, storePath, rollup(_, keyCols, sumCols))
 }

@@ -1,0 +1,25 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Source-level invariants that no runtime test can see. */
+class SourceLintSpec extends AnyFunSuite {
+
+  private def mainSources: Seq[Path] = {
+    val walk = Files.walk(Paths.get("src/main"))
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("the batch= directory layout is spelled only in BatchDirs") {
+    val offenders = mainSources
+      .filter(p => Files.readString(p).contains("batch="))
+      .map(_.getFileName.toString)
+    assert(offenders.toSet == Set("BatchDirs.scala"),
+      s"batch-directory layout built outside BatchDirs: $offenders")
+  }
+}

@@ -66,6 +66,15 @@ class DauAppWiringSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("an empty, mkdir'd dim-store root reads as the empty dim frame") {
+    val store = s"${tmp("dau_dim_empty")}/dim_store"
+    assert(new java.io.File(store).mkdirs())
+    val dims = StreamingApps.dimOrEmpty(spark, store, "user_info",
+      Seq("id", "gender", "birthday"))
+    assert(dims.columns.toSeq == Seq("id", "gender", "birthday"))
+    assert(dims.count() == 0L)
+  }
+
   test("routedPayload unions all five branches into one (topic, value)") {
     val pageJson =
       """{"common":{"ar":"1","ba":"b","ch":"c","is_new":"1","md":"m",

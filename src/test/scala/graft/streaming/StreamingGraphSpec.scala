@@ -76,6 +76,57 @@ class StreamingGraphSpec extends SparkSpec {
     // a second fold (now including batch 2) stays correct
     StreamingGraph.compactDegrees(spark, store)
     assert(merged(store) === batchParity(b1 ++ b2 ++ b3))
+    // a folded batch replayed after the second fold stays ignored, and
+    // a further fold with no newer partial leaves the view unchanged
+    StreamingGraph.writeDegreeBatch(b3.toDF("src", "dst"), store,
+      "src", "dst", 2L)
+    assert(merged(store) === batchParity(b1 ++ b2 ++ b3))
+    StreamingGraph.compactDegrees(spark, store)
+    assert(merged(store) === batchParity(b1 ++ b2 ++ b3))
+    assert(batchDirs(store) === Set("batch=-3"))
+  }
+
+  private def batchDirs(store: String): Set[String] =
+    new java.io.File(store).listFiles()
+      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
+
+  private def copyTree(from: java.nio.file.Path,
+                       to: java.nio.file.Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach(p => Files.copy(p, to.resolve(from.relativize(p))))
+    finally walk.close()
+  }
+
+  test("fold crash between publish and deletes counts nothing twice; " +
+      "a fold with no newer partials is a no-op") {
+    val store = tmp("deg_store_crash")
+    StreamingGraph.writeDegreeBatch(b1.toDF("src", "dst"), store,
+      "src", "dst", 0L)
+    StreamingGraph.writeDegreeBatch(b2.toDF("src", "dst"), store,
+      "src", "dst", 1L)
+    val expect = batchParity(b1 ++ b2)
+    // keep the fold's sources aside, fold, then put them back: the
+    // state a crash leaves after the publish rename, before the deletes
+    val aside = Files.createTempDirectory("deg_store_aside")
+    Seq("batch=0", "batch=1").foreach { d =>
+      copyTree(java.nio.file.Paths.get(store, d), aside.resolve(d))
+    }
+    StreamingGraph.compactDegrees(spark, store)
+    Seq("batch=0", "batch=1").foreach { d =>
+      copyTree(aside.resolve(d), java.nio.file.Paths.get(store, d))
+    }
+    assert(batchDirs(store) === Set("batch=-2", "batch=0", "batch=1"))
+    assert(merged(store) === expect, "surviving sources double-counted")
+    // re-running the fold only deletes the surviving sources
+    StreamingGraph.compactDegrees(spark, store)
+    assert(batchDirs(store) === Set("batch=-2"))
+    assert(merged(store) === expect)
+    // a second fold with no newer partials leaves the target untouched
+    val files = new java.io.File(store, "batch=-2").list().toSet
+    StreamingGraph.compactDegrees(spark, store)
+    assert(batchDirs(store) === Set("batch=-2"))
+    assert(new java.io.File(store, "batch=-2").list().toSet === files)
+    assert(merged(store) === expect)
   }
 
   test("warmPageRank: store-degree path is bit-compatible with the " +

@@ -309,15 +309,14 @@ class StreamingKnnSpec extends SparkSpec {
       .forall(!_.getName.startsWith(".__rebal_")))
   }
 
-  test("crashed-merge duplicate window: detected, probe dedups while " +
-      "open, closed by re-running the merge") {
+  test("crashed-merge duplicate window: surviving sources stay hidden, " +
+      "probe parity holds, re-running the merge cleans up") {
     val cents = tmp("sknn_dc"); val posts = tmp("sknn_dp")
     val out = tmp("sknn_do")
     StreamingKnn.initIndex(corpusDf, "vec_id", "embedding", cents,
       posts, cells = 8)
     StreamingKnn.processBatch(batchDf(100L, 5), 0L, "vec_id",
       "embedding", cents, posts, out, k = 3, nProbe = 8)
-    assert(!BatchDirs.crashedMergeDups(spark, posts))
     val clean = StreamingKnn.readIndex(spark, cents, posts)
       .postings.select("neighbor_id", "cell")
       .as[(Long, Long)].collect().toSet
@@ -331,10 +330,9 @@ class StreamingKnnSpec extends SparkSpec {
     spark.read.parquet(posts)
       .select($"neighbor_id", $"cv", $"cell")
       .write.parquet(s"$posts/batch=-1")
-    assert(BatchDirs.crashedMergeDups(spark, posts))
-    // every store row is now duplicated, yet the probe read dedups:
-    // same index contents, and the top-k heap sees no duplicate
-    // neighbor occupying two ranks
+    // every store row is now on disk twice, yet the probe reads only
+    // the effective directories: same index contents, and the top-k
+    // heap sees no duplicate neighbor occupying two ranks
     val ix = StreamingKnn.readIndex(spark, cents, posts)
     assert(ix.postings.select("neighbor_id", "cell")
       .as[(Long, Long)].collect().toSet === clean)
@@ -343,9 +341,11 @@ class StreamingKnnSpec extends SparkSpec {
     assert(knnSet(Similarity.knnAgainstIndex(ix, b3, "vec_id",
       "embedding", k = 3, nProbe = 8)) === cleanKnn)
     // re-running the merge completes the crashed cleanup (deletes the
-    // covered sources) and closes the window
+    // covered sources): only the merge target is left
     StreamingKnn.compactPostings(spark, posts, upToBatch = 0L)
-    assert(!BatchDirs.crashedMergeDups(spark, posts))
+    assert(new java.io.File(posts).listFiles()
+      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet ===
+      Set("batch=-1"))
     assert(StreamingKnn.readIndex(spark, cents, posts)
       .postings.select("neighbor_id", "cell")
       .as[(Long, Long)].collect().toSet === clean)

@@ -87,35 +87,6 @@ class StreamingPipelinesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("flatMapGroupsWithState dedup: first-wins with custom keyed state") {
-    import DauCustomState._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[StartEvent]
-    val day0 = 1700000000000L
-    val deduped = dedupExact(
-      src.toDS()
-        .withColumn("event_ts", timestamp_millis(col("ts")))
-        .withWatermark("event_ts", "24 hours")
-        .as[StartEvent](org.apache.spark.sql.Encoders.product[StartEvent]))
-    val q = deduped.writeStream
-      .format("memory").queryName("dau_fmgws")
-      .outputMode("append")
-      .option("checkpointLocation", tmp("fmgws_ckpt"))
-      .start()
-    try {
-      src.addData(
-        StartEvent("m1", "1", day0 + 5000),
-        StartEvent("m1", "1", day0 + 1000)) // same batch, earlier wins
-      q.processAllAvailable()
-      src.addData(StartEvent("m1", "1", day0 + 9000)) // cross-batch dup
-      src.addData(StartEvent("m2", "2", day0 + 100))
-      q.processAllAvailable()
-      val rows = spark.table("dau_fmgws").as[DauFirst].collect()
-        .map(r => r.mid -> r.ts).toMap
-      assert(rows == Map("m1" -> (day0 + 1000), "m2" -> (day0 + 100)))
-    } finally q.stop()
-  }
-
   test("full streaming DAU wide-row with broadcast dim enrichment") {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Page]
@@ -570,6 +541,23 @@ class StreamingPipelinesSpec extends SparkSpec {
       new java.io.File(oldDir, "stale").toPath, "stale copy")
     assert(view == Set("m1" -> 9)) // staged store won
     assert(fresh.isDirectory && !tmpDir.exists() && !oldDir.exists())
+  }
+
+  test("serving-store append after a crashed swap keeps the compacted " +
+      "history") {
+    val out = tmp("sink_swap_append")
+    Sinks.upsertBatch(Seq(("m1", "2024-01-05", 1), ("m2", "2024-01-05", 2))
+      .toDF("mid", "dt", "v"), out, "mid", batchId = 1L)
+    // crash between the swap's two renames: live missing, completed
+    // staging dir present; the next writer appends before any read
+    assert(new java.io.File(out)
+      .renameTo(new java.io.File(out + ".__compact_tmp")))
+    Sinks.upsertBatch(Seq(("m1", "2024-01-05", 3))
+      .toDF("mid", "dt", "v"), out, "mid", batchId = 2L)
+    assert(Sinks.latest(Sinks.readStore(spark, out), "mid")
+      .select("mid", "v").as[(String, Int)].collect().toSet ==
+      Set("m1" -> 3, "m2" -> 2))
+    assert(!new java.io.File(out + ".__compact_tmp").exists())
   }
 
   test("readStore keeps __seq when old files predate the column") {

@@ -73,6 +73,26 @@ class StreamingSketchSpec extends SparkSpec {
       rows.select("dt", "bucket").distinct().count())
   }
 
+  test("register append after a crashed compaction swap keeps the " +
+      "compacted history") {
+    val store = tmp("hll_store_swap")
+    StreamingSketch.appendRegisters(users("d1", 0, 500).toDF("dt", "mid"),
+      store, col("mid"), Seq("dt"), 0L)
+    val d1 = StreamingSketch.estimate(spark, store, Seq("dt"))
+      .as[(String, Long)].collect().toMap
+    // crash between compactRegisters' two renames: live missing,
+    // completed staging dir present; the next batch appends first
+    assert(new java.io.File(store)
+      .renameTo(new java.io.File(store + ".__compact_tmp")))
+    StreamingSketch.appendRegisters(users("d2", 0, 300).toDF("dt", "mid"),
+      store, col("mid"), Seq("dt"), 1L)
+    val got = StreamingSketch.estimate(spark, store, Seq("dt"))
+      .as[(String, Long)].collect().toMap
+    assert(got.keySet === Set("d1", "d2"))
+    assert(got("d1") === d1("d1"))
+    assert(math.abs(got("d2") - 300).toDouble / 300 < 0.05)
+  }
+
   test("streaming cms: cross-batch counts equal batch-union; replay idempotent") {
     implicit val sqlCtx = spark.sqlContext
     val store = tmp("cms_store")
