@@ -1,9 +1,7 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -43,32 +41,29 @@ import org.apache.spark.sql.types._
   * the encode reads (the chain form only ever fed `length`
   * arithmetic). Null token array ⇒ null, like the chain on null text.
   */
-case class BpeCounts(child: Expression, lhs: Seq[String], rhs: Seq[String])
-    extends UnaryExpression {
+object BpeCounts {
 
-  require(lhs.length == rhs.length,
-    s"lhs/rhs merge columns must align: ${lhs.length} vs ${rhs.length}")
+  /** `struct<n_sym, n_bpe>` of an `array<string>` column under the
+    * merges `lhs(i) + rhs(i)`, applied in step order.
+    */
+  def apply(toks: Column, lhs: Seq[String], rhs: Seq[String]): Column = {
+    require(lhs.length == rhs.length,
+      s"lhs/rhs merge columns must align: ${lhs.length} vs ${rhs.length}")
+    Kernel.call(BpeMerges(lhs, rhs), StructType(Seq(
+      StructField("n_sym", LongType, nullable = false),
+      StructField("n_bpe", LongType, nullable = false))),
+      Seq(Kernel.arg(toks, ArrayType(StringType))))
+  }
+}
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_sym", LongType, nullable = false),
-    StructField("n_bpe", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "bpe_counts"
+/** The prepared state of [[BpeCounts]]: the merge chain. */
+final case class BpeMerges(lhs: Seq[String], rhs: Seq[String]) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string>, got ${other.simpleString}")
-    }
+  override def toString: String = s"BpeMerges(${lhs.length} merges)"
 
   @transient private lazy val lhsArr: Array[String] = lhs.toArray
   @transient private lazy val rhsArr: Array[String] = rhs.toArray
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  /** One call per row from interpreted eval and generated code. */
   def compute(arr: ArrayData): InternalRow = {
     val merges = lhsArr.length
     var nSym = 0L
@@ -118,15 +113,4 @@ case class BpeCounts(child: Expression, lhs: Seq[String], rhs: Seq[String])
     }
     InternalRow(nSym, nBpe)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("bpeCounts", this,
-        classOf[BpeCounts].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"$self.compute($a);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): BpeCounts = copy(child = newChild)
 }

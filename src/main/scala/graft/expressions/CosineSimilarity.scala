@@ -1,149 +1,75 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-private[expressions] trait FloatArrayPair { self: BinaryExpression =>
-  // float OR double elements, independently per side (centroid tables
-  // are double for oracle bit-parity; corpus vectors are float)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float|double> arguments, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  protected def sideIsDouble(e: Expression): Boolean = e.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  /** Element read, widened to double (interpreted path). */
-  protected def elemAt(d: ArrayData, i: Int, isDouble: Boolean): Double =
-    if (isDouble) d.getDouble(i) else d.getFloat(i).toDouble
-  /** Element read, widened to double (generated Java). */
-  protected def elemJava(arr: String, i: String, isDouble: Boolean): String =
-    if (isDouble) s"$arr.getDouble($i)" else s"(double) $arr.getFloat($i)"
-}
-
-/** Whole-stage-codegen cosine similarity over two `array<float>`
-  * columns — the one place in this engine where a custom Catalyst
-  * `Expression` genuinely beats the built-ins: the declarative
+/** Cosine similarity over two `array<float|double>` columns (float or
+  * double independently per side: centroid tables are double for
+  * oracle bit-parity, corpus vectors are float). The declarative
   * formulation (`aggregate`/`zip_with` higher-order functions) has no
-  * `doGenCode` in Spark, so every vector element crosses an interpreted
-  * lambda boundary. This expression compiles to one tight primitive
-  * loop inside the surrounding WholeStageCodegen stage.
+  * generated code in Spark, so every vector element crosses an
+  * interpreted lambda boundary; this kernel is one static call of a
+  * tight primitive loop inside the surrounding WholeStageCodegen stage.
   *
   * Numerics are kept BIT-IDENTICAL to the declarative version
-  * (VectorFns.cosine) and the DuckDB oracle: each float widens to
+  * (VectorFns.cosineHof) and the DuckDB oracle: each float widens to
   * double, dot and both norms accumulate sequentially left-to-right,
   * result = dot / (sqrt(na) * sqrt(nb)). Null if either side is null or
   * lengths differ (the zip_with null-pad behavior).
   */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with FloatArrayPair {
+object CosineSimilarity {
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cosine_similarity"
+  /** `double` cosine of two vector columns (SQL `cosine_similarity`). */
+  def apply(a: Column, b: Column): Column =
+    Kernel.call(this, DoubleType, FloatArrays.args(a, b))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def compute(x: ArrayData, xd: Boolean,
+              y: ArrayData, yd: Boolean): java.lang.Double = {
     val n = x.numElements()
-    if (n != y.numElements()) null
-    else {
-      val ld = sideIsDouble(left); val rd = sideIsDouble(right)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val xi = elemAt(x, i, ld)
-        val yi = elemAt(y, i, rd)
-        dot += xi * yi; na += xi * xi; nb += yi * yi
-        i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
+    if (n != y.numElements()) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = FloatArrays.elem(x, i, xd)
+      val yi = FloatArrays.elem(y, i, yd)
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
     }
+    dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-        final int $n = $a.numElements();
-        if ($n != $b.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            final double $xi = ${elemJava(a, i, sideIsDouble(left))};
-            final double $yi = ${elemJava(b, i, sideIsDouble(right))};
-            $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-          }
-          ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-        }
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
 }
 
-/** Codegen'd dot product (same sequential-fold contract). */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with FloatArrayPair {
+/** Dot product (same sequential-fold contract; SQL `dot_product`). */
+object DotProduct {
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "dot_product"
+  def apply(a: Column, b: Column): Column =
+    Kernel.call(this, DoubleType, FloatArrays.args(a, b))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def compute(x: ArrayData, xd: Boolean,
+              y: ArrayData, yd: Boolean): java.lang.Double = {
     val n = x.numElements()
-    if (n != y.numElements()) null
-    else {
-      val ld = sideIsDouble(left); val rd = sideIsDouble(right)
-      var dot = 0.0; var i = 0
-      while (i < n) { dot += elemAt(x, i, ld) * elemAt(y, i, rd); i += 1 }
-      dot
+    if (n != y.numElements()) return null
+    var dot = 0.0; var i = 0
+    while (i < n) {
+      dot += FloatArrays.elem(x, i, xd) * FloatArrays.elem(y, i, yd)
+      i += 1
     }
+    dot
   }
+}
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-        final int $n = $a.numElements();
-        if ($n != $b.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          double $dot = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            $dot += ${elemJava(a, i, sideIsDouble(left))} *
-              ${elemJava(b, i, sideIsDouble(right))};
-          }
-          ${ev.value} = $dot;
-        }
-      """
-    })
+/** Float-or-double vector arguments, each widened to double per read. */
+private[expressions] object FloatArrays {
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
+  val types = Seq(ArrayType(FloatType), ArrayType(DoubleType))
+
+  /** A vector column plus its is-double flag. */
+  def arg(v: Column): Seq[Kernel.Arg] =
+    Seq(Kernel.arg(v, types: _*), Kernel.isDoubleArray(v))
+
+  def args(a: Column, b: Column): Seq[Kernel.Arg] = arg(a) ++ arg(b)
+
+  @inline def elem(d: ArrayData, i: Int, isDouble: Boolean): Double =
+    if (isDouble) d.getDouble(i) else d.getFloat(i).toDouble
 }

@@ -1,11 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** SparkSessionExtensions injector exposing the engine's native
-  * expressions to SQL:
+/** SparkSessionExtensions injector exposing the engine's kernels and
+  * aggregates to SQL:
   *
   * {{{
   *   SparkSession.builder()
@@ -25,51 +26,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-        "cosine_similarity"),
-      (children: Seq[Expression]) => {
-        checkArity("cosine_similarity", 2, children)
-        CosineSimilarity(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => {
-        checkArity("dot_product", 2, children)
-        DotProduct(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => {
-        checkArity("simhash64", 1, children)
-        SimHash64(children(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_md5"),
-      new ExpressionInfo(classOf[SimHashMd5].getName, "simhash_md5"),
-      (children: Seq[Expression]) => {
-        checkArity("simhash_md5", 2, children)
-        SimHashMd5(children(0),
-          intLit("simhash_md5", "bits", 1, children))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => {
-        checkArity("word_shingles", 2, children)
-        WordShingles(children(0), intLit("word_shingles", "n", 1, children))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => {
-        checkArity("minhash_sig", 3, children)
-        MinHashSig(children(0), intLit("minhash_sig", "k", 1, children),
-          intLit("minhash_sig", "shingleN", 2, children))
-      }))
+    // a scalar kernel's SQL builder returns the node its Column builder
+    // makes, so SQL and the operators run the same call
+    def kernel(name: String, arity: Int, owner: AnyRef)(
+        build: Args => Column): Unit =
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(owner.getClass.getName.stripSuffix("$"), name),
+        (children: Seq[Expression]) => {
+          checkArity(name, arity, children)
+          Bridge.expression(build(new Args(name, children)))
+        }))
+    kernel("cosine_similarity", 2, CosineSimilarity)(a =>
+      CosineSimilarity(a.col(0), a.col(1)))
+    kernel("dot_product", 2, DotProduct)(a => DotProduct(a.col(0), a.col(1)))
+    kernel("simhash64", 1, SimHash64)(a => SimHash64(a.col(0)))
+    kernel("simhash_md5", 2, SimHashMd5)(a =>
+      SimHashMd5(a.col(0), a.int(1, "bits")))
+    kernel("word_shingles", 2, WordShingles)(a =>
+      WordShingles(a.col(0), a.int(1, "n")))
+    kernel("minhash_sig", 3, MinHashSig)(a =>
+      MinHashSig(a.col(0), a.int(1, "k"), a.int(2, "shingleN")))
+    kernel("nfc_normalize", 1, NfcNormalize)(a => NfcNormalize(a.col(0)))
+    kernel("int8_quantize", 1, Int8Quantize)(a => Int8Quantize(a.col(0)))
+    kernel("int8_cosine", 2, Int8Cosine)(a =>
+      Int8Cosine(a.col(0), a.col(1)))
     ext.injectFunction((
       FunctionIdentifier("z_value"),
       new ExpressionInfo("graft.operators.Layout", "z_value"),
@@ -119,31 +100,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           intLit("top_k_by_score_str", "k", 2, children))
           .toAggregateExpression()
       }))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[Expression]) => {
-        checkArity("nfc_normalize", 1, children)
-        NfcNormalize(children(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("int8_quantize"),
-      new ExpressionInfo(classOf[Int8Quantize].getName, "int8_quantize"),
-      (children: Seq[Expression]) => {
-        checkArity("int8_quantize", 1, children)
-        Int8Quantize(children(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("int8_cosine"),
-      new ExpressionInfo(classOf[Int8Cosine].getName, "int8_cosine"),
-      (children: Seq[Expression]) => {
-        checkArity("int8_cosine", 2, children)
-        Int8Cosine(children(0), children(1))
-      }))
   }
 }
 
 object GraftExtensions {
+
+  /** A SQL call's resolved children, read as kernel-builder arguments. */
+  private final class Args(name: String, children: Seq[Expression]) {
+    def col(i: Int): Column = Bridge.column(children(i))
+    def int(i: Int, param: String): Int = intLit(name, param, i, children)
+  }
 
   private def checkArity(name: String, n: Int,
                          children: Seq[Expression]): Unit =

@@ -1,18 +1,17 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Whole-stage-codegen int8 quantization of an `array<float>` embedding
-  * — the compressed-corpus write path of [[graft.operators.Quantize]],
-  * in one tight primitive loop instead of three interpreted
+/** Int8 quantization of an `array<float>` embedding — the
+  * compressed-corpus write path of [[graft.operators.Quantize]], in
+  * one tight primitive loop instead of three interpreted
   * higher-order-function passes (`transform` for max|x|, `transform`
   * for the quantized components, `aggregate` for each checksum; HOF
-  * lambdas have no `doGenCode`, so every element crosses an
+  * lambdas have no generated code, so every element crosses an
   * interpreted-eval boundary — measured ~2 s of pure lambda overhead on
   * a 2 000×64 corpus, which at a billion-vector corpus is the whole
   * job).
@@ -33,31 +32,6 @@ import org.apache.spark.sql.types._
   * nulls (array_max semantics), the corresponding q_i is null, and
   * both checksums go null (aggregate over a null element).
   */
-case class Int8Quantize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = Int8Quantize.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "int8_quantize"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Int8Quantize.compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = Int8Quantize.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.compute($a);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Int8Quantize = copy(child = newChild)
-}
-
 object Int8Quantize {
 
   val schema: StructType = StructType(Seq(
@@ -67,7 +41,10 @@ object Int8Quantize {
     StructField("q_norm2", LongType, nullable = true),
     StructField("q_sum", LongType, nullable = true)))
 
-  /** One static call per row from interpreted eval and generated code. */
+  /** [[schema]] struct of an `array<float>` column (SQL `int8_quantize`). */
+  def apply(vec: Column): Column =
+    Kernel.call(this, schema, Seq(Kernel.arg(vec, ArrayType(FloatType))))
+
   def compute(arr: ArrayData): InternalRow = {
     val n = arr.numElements()
     // pass 1: max |x| over non-null elements (array_max skips nulls)
@@ -99,8 +76,7 @@ object Int8Quantize {
           sum += v.toLong
           i += 1
         }
-        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(q)
+        UnsafeArrayData.fromPrimitiveArray(q)
       } else {
         // rare path: preserve per-element nulls like transform() would
         val q = new Array[Any](n)
@@ -117,9 +93,9 @@ object Int8Quantize {
   }
 }
 
-/** Whole-stage-codegen integer cosine between two `array<tinyint>`
-  * quantized vectors — the [[graft.operators.Quantize.knnInt8]] hot
-  * path, evaluated per (corpus row × broadcast query), where the
+/** Integer cosine between two `array<tinyint>` quantized vectors —
+  * the [[graft.operators.Quantize.knnInt8]] hot path, evaluated per
+  * (corpus row × broadcast query), where the
   * `aggregate(zip_with(...))` formulation pays the interpreted-lambda
   * tax per ELEMENT per PAIR.
   *
@@ -129,50 +105,14 @@ object Int8Quantize {
   * null-pad ⇒ null sum), any element is null, or either norm is zero
   * (Spark's non-ANSI divide-by-zero ⇒ null).
   */
-case class Int8Cosine(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "int8_cosine"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(ByteType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<tinyint> arguments, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Int8Cosine.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cls = Int8Cosine.getClass.getName.stripSuffix("$")
-      val res = ctx.freshName("res")
-      s"""
-        final Object $res = $cls.compute($a, $b);
-        if ($res == null) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = ((java.lang.Double) $res).doubleValue();
-        }
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Int8Cosine =
-    copy(left = newLeft, right = newRight)
-}
-
 object Int8Cosine {
 
-  /** One static call per pair; null-boxed Double result. */
+  /** `double` cosine of two `array<tinyint>` columns (SQL `int8_cosine`). */
+  def apply(a: Column, b: Column): Column =
+    Kernel.call(this, DoubleType, Seq(
+      Kernel.arg(a, ArrayType(ByteType)), Kernel.arg(b, ArrayType(ByteType))))
+
+  /** Null-boxed Double result. */
   def compute(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null

@@ -1,21 +1,20 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-/** Whole-stage-codegen Johnson–Lindenstrauss projection: one narrow
-  * expression computing all `outDim` outputs of the ±1 sign-matrix
-  * projection in a single compiled loop nest.
+/** Johnson–Lindenstrauss projection: one narrow kernel call computing
+  * all `outDim` outputs of the ±1 sign-matrix projection in a single
+  * loop nest.
   *
   * This replaces the literal-folded formulation
   * (`array(sum-chain-of-±element_at, ...)`) whose tree was
   * outDim · inDim ≈ 4000 Catalyst nodes — analysis, optimization and
   * Janino compilation of that tree dominated small-batch latency, and
   * its generated code exceeded method-split thresholds. Here the plan
-  * carries ONE node; the sign matrix rides along as a reference object.
+  * carries ONE call; the sign matrix rides along as a binary literal.
   *
   * Numerics are BIT-IDENTICAL to the chain it replaces (and to the
   * DuckDB oracle text built by `Projection.oracleDim`): per output dim
@@ -29,97 +28,43 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * null ELEMENT among the first `inDim` → null (the chain's null
   * propagation — never an undefined garbage read).
   */
-case class JlProject(child: Expression, inDim: Int, outDim: Int,
-                     scale: Double, signs: Array[Byte])
-    extends UnaryExpression {
+object JlProject {
 
-  require(signs.length == inDim * outDim,
-    s"sign matrix must be inDim*outDim = ${inDim * outDim}, got ${signs.length}")
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "jl_project"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double>, got ${t.simpleString}")
+  /** `array<double>` projection of an `array<float|double>` column;
+    * `signs(j * inDim + i)` is the sign of input dim i in output dim j.
+    */
+  def apply(vec: Column, inDim: Int, outDim: Int, scale: Double,
+            signs: Array[Byte]): Column = {
+    require(signs.length == inDim * outDim,
+      s"sign matrix must be inDim*outDim = ${inDim * outDim}, got ${signs.length}")
+    Kernel.call(this, ArrayType(DoubleType, containsNull = false),
+      FloatArrays.arg(vec) ++ Seq(Kernel.param(inDim), Kernel.param(outDim),
+        Kernel.param(scale), Kernel.param(signs)))
   }
 
-  private def childIsDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    if (a.numElements() < inDim) null
-    else {
-      val isD = childIsDouble
-      val x = new Array[Double](inDim)
-      var i = 0
+  def compute(a: ArrayData, isDouble: Boolean, inDim: Int, outDim: Int,
+              scale: Double, signs: Array[Byte]): ArrayData = {
+    if (a.numElements() < inDim) return null
+    val x = new Array[Double](inDim)
+    var i = 0
+    while (i < inDim) {
+      if (a.isNullAt(i)) return null
+      x(i) = FloatArrays.elem(a, i, isDouble)
+      i += 1
+    }
+    val out = new Array[Double](outDim)
+    var j = 0
+    while (j < outDim) {
+      val off = j * inDim
+      var s = if (signs(off) > 0) x(0) else -x(0)
+      i = 1
       while (i < inDim) {
-        if (a.isNullAt(i)) return null
-        x(i) = if (isD) a.getDouble(i) else a.getFloat(i).toDouble
+        s += (if (signs(off + i) > 0) x(i) else -x(i))
         i += 1
       }
-      val out = new Array[Double](outDim)
-      var j = 0
-      while (j < outDim) {
-        val off = j * inDim
-        var s = if (signs(off) > 0) x(0) else -x(0)
-        i = 1
-        while (i < inDim) {
-          s += (if (signs(off + i) > 0) x(i) else -x(i))
-          i += 1
-        }
-        out(j) = scale * s
-        j += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(out)
+      out(j) = scale * s
+      j += 1
     }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val sg = ctx.addReferenceObj("jlSigns", signs, "byte[]")
-      val x = ctx.freshName("x")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val off = ctx.freshName("off")
-      val s = ctx.freshName("s")
-      val elem =
-        if (childIsDouble) s"$a.getDouble($i)"
-        else s"(double) $a.getFloat($i)"
-      s"""
-        if ($a.numElements() < $inDim) {
-          ${ev.isNull} = true;
-        } else {
-          final double[] $x = new double[$inDim];
-          for (int $i = 0; $i < $inDim; $i++) {
-            if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-            $x[$i] = $elem;
-          }
-          final double[] $out = new double[$outDim];
-          if (!${ev.isNull}) for (int $j = 0; $j < $outDim; $j++) {
-            final int $off = $j * $inDim;
-            double $s = $sg[$off] > 0 ? $x[0] : -$x[0];
-            for (int $i = 1; $i < $inDim; $i++) {
-              $s += $sg[$off + $i] > 0 ? $x[$i] : -$x[$i];
-            }
-            $out[$j] = $scale * $s;
-          }
-          if (!${ev.isNull}) {
-            ${ev.value} =
-              org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-                .fromPrimitiveArray($out);
-          }
-        }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): JlProject =
-    copy(child = newChild)
 }

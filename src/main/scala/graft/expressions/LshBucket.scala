@@ -1,13 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
-/** Codegen'd random-hyperplane LSH bucket id (see
-  * [[graft.functions.VectorFns.lshBucket]] for the declarative
+/** Random-hyperplane LSH bucket id (see
+  * [[graft.functions.VectorFns.lshBucketHof]] for the declarative
   * reference): `planes` sign bits of deterministic-hyperplane dot
   * products, packed into a Long. `seed` selects the independent hash
   * table for OR-amplification.
@@ -18,24 +16,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * long arithmetic, one IEEE divide + subtract), and each plane's dot
   * product accumulates sequentially in double.
   */
-case class LshBucket(child: Expression, planes: Int, seed: Int)
-    extends UnaryExpression {
+object LshBucket {
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "lsh_bucket"
+  /** `bigint` bucket of an `array<float>` column. */
+  def apply(vec: Column, planes: Int, seed: Int): Column =
+    Kernel.call(this, LongType, Seq(Kernel.arg(vec, ArrayType(FloatType)),
+      Kernel.param(planes), Kernel.param(seed)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.simpleString}")
-  }
-
-  private def hp(g: Long, i: Long): Double =
-    ((g * 2654435761L + i * 40503L) % 1000003L).toDouble / 1000003.0 - 0.5
-
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
+  def compute(x: ArrayData, planes: Int, seed: Int): Long = {
     val n = x.numElements()
     var bucket = 0L
     var j = 0
@@ -44,7 +32,9 @@ case class LshBucket(child: Expression, planes: Int, seed: Int)
       var dot = 0.0
       var i = 0
       while (i < n) {
-        dot += x.getFloat(i).toDouble * hp(g, i.toLong)
+        val hp = ((g * 2654435761L + i * 40503L) % 1000003L).toDouble /
+          1000003.0 - 0.5
+        dot += x.getFloat(i).toDouble * hp
         i += 1
       }
       if (dot > 0) bucket += (1L << j)
@@ -52,34 +42,4 @@ case class LshBucket(child: Expression, planes: Int, seed: Int)
     }
     bucket
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val g = ctx.freshName("g")
-      val dot = ctx.freshName("dot")
-      val hpv = ctx.freshName("hpv")
-      val bucket = ctx.freshName("bucket")
-      s"""
-        final int $n = $v.numElements();
-        long $bucket = 0L;
-        for (int $j = 0; $j < $planes; $j++) {
-          final long $g = ${seed.toLong} * $planes + $j;
-          double $dot = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            final double $hpv =
-              (double) (($g * 2654435761L + $i * 40503L) % 1000003L)
-                / 1000003.0 - 0.5;
-            $dot += (double) $v.getFloat($i) * $hpv;
-          }
-          if ($dot > 0) $bucket += (1L << $j);
-        }
-        ${ev.value} = $bucket;
-      """
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): LshBucket = copy(child = newChild)
 }

@@ -1,18 +1,16 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** k-wide MinHash signature of a TOKEN array in ONE narrow pass — the
   * codegen replacement for the declarative chain
   * `shingles (interpreted HOFs) → array_distinct → explode → md5-prefix
   * hash → k min-aggregates`: per row, the distinct word `shingleN`-gram
-  * shingles are built in tight Java (no interpreted lambda per
+  * shingles are built in one loop (no interpreted lambda per
   * element), each shingle is md5-hashed ONCE (the oracle-reproducible
   * `hash32`: first 8 hex chars of md5 as an unsigned 32-bit value), and
   * k universal-hash permutations `(2j+1)·m + 40503·(j+1) mod (2³¹−1)`
@@ -21,53 +19,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * Signature values are bit-identical to the aggregate form
   * (parity-tested in DedupSpec); rows with fewer than `shingleN` tokens
   * yield NULL (the aggregate path drops such docs in its groupBy) —
-  * callers filter `isNotNull`. Null token elements are skipped. Beyond
+  * callers filter `isNotNull`. Null token elements read as empty
+  * strings (the [[WordShingles]] convention). Beyond
   * deleting the (doc, shingle) explode and its exchange, this also
   * removes the interpreted HOF shingle construction from the hot path —
   * measured ~4× on the signature stage.
   */
-case class MinHashSig(child: Expression, k: Int, shingleN: Int)
-    extends UnaryExpression {
-
-  require(k > 0, "k must be positive")
-  require(shingleN > 0, "shingleN must be positive")
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val sig = MinHashSig.compute(input.asInstanceOf[ArrayData], k, shingleN)
-    if (sig == null) null else UnsafeArrayData.fromPrimitiveArray(sig)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = classOf[MinHashSig].getName
-      val arr = classOf[UnsafeArrayData].getName
-      val sig = ctx.freshName("sig")
-      s"""
-        final long[] $sig = $cls.compute($a, $k, $shingleN);
-        if ($sig == null) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = $arr.fromPrimitiveArray($sig);
-        }
-      """
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): MinHashSig = copy(child = newChild)
-}
-
 object MinHashSig {
+
+  /** `array<bigint>` signature of an `array<string>` column (SQL
+    * `minhash_sig`).
+    */
+  def apply(toks: Column, k: Int, shingleN: Int): Column = {
+    require(k > 0, "k must be positive")
+    require(shingleN > 0, "shingleN must be positive")
+    Kernel.call(this, ArrayType(LongType, containsNull = false),
+      Seq(Kernel.arg(toks, ArrayType(StringType)), Kernel.param(k),
+        Kernel.param(shingleN)))
+  }
 
   private val P = 2147483647L // 2^31 - 1, matches TextFns.P
 
@@ -108,10 +77,9 @@ object MinHashSig {
     * token array — shingling delegated to
     * [[WordShingles.distinctShingles]] (ONE implementation of the
     * parity-critical convention). Returns null when the row produces no
-    * shingles (fewer than `n` tokens). One static call per row from
-    * both interpreted eval and generated code.
+    * shingles (fewer than `n` tokens).
     */
-  def compute(arr: ArrayData, k: Int, n: Int): Array[Long] = {
+  def compute(arr: ArrayData, k: Int, n: Int): ArrayData = {
     val shingles = WordShingles.distinctShingles(arr, n)
     if (shingles.isEmpty) return null
     val sig = Array.fill(k)(P)
@@ -125,6 +93,6 @@ object MinHashSig {
         p += 1
       }
     }
-    sig
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 }

@@ -1,10 +1,9 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Per-row nearest-centroid ranking against a DRIVER-RESIDENT codebook
@@ -20,10 +19,11 @@ import org.apache.spark.sql.types._
   * FAISS shape: the coarse quantizer lives in memory, assignment is a
   * streaming scan.
   *
-  * Children: `sub` (int — the codebook selector; PQ subspace id, or
-  * `lit(0)` for the single-codebook callers) and `vec`
-  * (array<float|double>). `centsBySub(s)` is codebook `s` as
-  * (cell, centroid) pairs sorted by cell ascending.
+  * Arguments: `sub` (int — the codebook selector; PQ subspace id, or
+  * `lit(0)` for the single-codebook callers; out of range throws
+  * IllegalArgumentException) and `vec` (array<float|double>).
+  * `centsBySub(s)` is codebook `s` as (cell, centroid) pairs sorted by
+  * cell ascending.
   *
   * Output: array<struct<cell: bigint, score: double>> of the best
   * `keep` cells, best first — EXACTLY the first `keep` rows of the
@@ -41,9 +41,9 @@ import org.apache.spark.sql.types._
   * declarative forms, so assignments (and emitted scores) are
   * bit-identical — the DuckDB oracle hashes pin it.
   *
-  * KNOWN DIVERGENCE on NULL input vectors (r15 advice note): as a
-  * BinaryExpression this returns null when `vec` is null, so a
-  * subsequent explode/posexplode DROPS the row — whereas the replaced
+  * KNOWN DIVERGENCE on NULL input vectors (r15 advice note): a null
+  * `vec` (or `sub`) gives null, so a subsequent explode/posexplode
+  * DROPS the row — whereas the replaced
   * broadcast-join + window assigned a null vector to the LOWEST cell
   * with a null score. Length-MISMATCHED vectors are unaffected (they
   * score null per cell and keep the window's null ordering, pinned by
@@ -51,63 +51,61 @@ import org.apache.spark.sql.types._
   * construction; callers over nullable vector columns must pre-filter
   * or coalesce if the old null-row behavior matters.
   */
-case class NearestCells(sub: Expression, vec: Expression,
-                        centsBySub: Seq[Seq[(Long, IndexedSeq[Double])]],
-                        keep: Int, bySqDist: Boolean)
-    extends BinaryExpression with CodegenFallback {
+object NearestCells {
 
-  require(keep >= 1, s"keep must be >= 1, got $keep")
-  require(centsBySub.nonEmpty, "centsBySub must not be empty")
+  /** Single-codebook ranking column (the kmeans/IVF callers). */
+  def single(vec: Column, cents: Seq[(Long, IndexedSeq[Double])],
+             keep: Int, bySqDist: Boolean): Column =
+    bySub(lit(0), vec, Seq(cents), keep, bySqDist)
 
-  override def left: Expression = sub
-  override def right: Expression = vec
-  override def prettyName: String = "nearest_cells"
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("score", DoubleType, nullable = true))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (sub.dataType == IntegerType && vecOk)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (int, array<float|double>), got " +
-        s"${sub.dataType.simpleString}/${vec.dataType.simpleString}")
-  }
-
-  // lazy: children are unresolved at construction (dataType throws)
-  @transient private lazy val vecIsDouble = vec.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  // flat primitive codebooks for the eval loop (cells sorted asc by
-  // construction contract; enforced here so tie-breaking is correct)
-  @transient private lazy val cellsArr: Array[Array[Long]] =
-    centsBySub.map { cs =>
-      val sorted = cs.map(_._1).toArray
-      require(sorted.sameElements(sorted.sorted),
+  /** Per-subspace codebook ranking column (the PQ callers). */
+  def bySub(sub: Column, vec: Column,
+            centsBySub: Seq[Seq[(Long, IndexedSeq[Double])]],
+            keep: Int, bySqDist: Boolean): Column = {
+    require(keep >= 1, s"keep must be >= 1, got $keep")
+    require(centsBySub.nonEmpty, "centsBySub must not be empty")
+    // cells ascending is the (score, cell ASC) tiebreak's contract
+    centsBySub.foreach { cs =>
+      val cells = cs.map(_._1)
+      require(cells == cells.sorted,
         "centsBySub codebooks must be sorted by cell ascending")
-      sorted
-    }.toArray
+    }
+    Kernel.call(Codebooks(centsBySub, keep, bySqDist),
+      ArrayType(StructType(Seq(
+        StructField("cell", LongType, nullable = false),
+        StructField("score", DoubleType, nullable = true))),
+        containsNull = false),
+      Kernel.arg(sub, IntegerType) +: FloatArrays.arg(vec))
+  }
+}
+
+/** The prepared state of [[NearestCells]]: the codebooks, how many
+  * cells to keep and the metric. Equal codebooks make equal kernels.
+  */
+final case class Codebooks(centsBySub: Seq[Seq[(Long, IndexedSeq[Double])]],
+                           keep: Int, bySqDist: Boolean) {
+
+  override def toString: String =
+    s"Codebooks(${centsBySub.size}x${centsBySub.map(_.size).max} cells, " +
+      s"keep=$keep, ${if (bySqDist) "sqdist" else "cosine"})"
+
+  // flat primitive codebooks for the scoring loop
+  @transient private lazy val cellsArr: Array[Array[Long]] =
+    centsBySub.map(_.map(_._1).toArray).toArray
   @transient private lazy val cvArr: Array[Array[Array[Double]]] =
     centsBySub.map(_.map(_._2.toArray).toArray).toArray
 
   /** score of vec x against centroid c — null (as java.lang.Double)
     * when lengths differ, matching zip_with's null-pad behavior.
     */
-  private def score(x: ArrayData, c: Array[Double]): java.lang.Double = {
+  private def score(x: ArrayData, xd: Boolean,
+                    c: Array[Double]): java.lang.Double = {
     val n = x.numElements()
     if (n != c.length) null
     else if (bySqDist) {
       var acc = 0.0; var i = 0
       while (i < n) {
-        val xi = if (vecIsDouble) x.getDouble(i) else x.getFloat(i).toDouble
+        val xi = FloatArrays.elem(x, i, xd)
         val d = xi - c(i)
         acc += d * d
         i += 1
@@ -116,7 +114,7 @@ case class NearestCells(sub: Expression, vec: Expression,
     } else {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < n) {
-        val xi = if (vecIsDouble) x.getDouble(i) else x.getFloat(i).toDouble
+        val xi = FloatArrays.elem(x, i, xd)
         val ci = c(i)
         dot += xi * ci; na += xi * xi; nb += ci * ci
         i += 1
@@ -127,7 +125,7 @@ case class NearestCells(sub: Expression, vec: Expression,
   }
 
   /** true when a ranks strictly better than b under the window order
-    * this expression replaces. Cosine: DESC — NaN above all values,
+    * this kernel replaces. Cosine: DESC — NaN above all values,
     * null below all (nulls last). SqDist: ASC — null above all (nulls
     * first), NaN below every real value (Double.compare: NaN greatest).
     */
@@ -142,14 +140,12 @@ case class NearestCells(sub: Expression, vec: Expression,
       else java.lang.Double.compare(a, b) > 0
     }
 
-  override def nullSafeEval(subV: Any, vecV: Any): Any = {
-    val s = subV.asInstanceOf[Int]
+  def compute(s: Int, x: ArrayData, xd: Boolean): ArrayData = {
     if (s < 0 || s >= cellsArr.length)
       throw new IllegalArgumentException(
-        s"$prettyName: sub $s out of range [0, ${cellsArr.length})")
+        s"nearest_cells: sub $s out of range [0, ${cellsArr.length})")
     val cells = cellsArr(s)
     val cvs = cvArr(s)
-    val x = vecV.asInstanceOf[ArrayData]
     val m = math.min(keep, cells.length)
     // insertion into a best-first buffer; cells iterate ASCENDING, so
     // on ties the earlier (lower) cell stays ahead — the (score, cell
@@ -159,7 +155,7 @@ case class NearestCells(sub: Expression, vec: Expression,
     var filled = 0
     var ci = 0
     while (ci < cells.length) {
-      val sc = score(x, cvs(ci))
+      val sc = score(x, xd, cvs(ci))
       // find insertion position: first slot whose kept score this one
       // strictly beats (stable for ties — lower cell already in place)
       var pos = filled
@@ -184,27 +180,4 @@ case class NearestCells(sub: Expression, vec: Expression,
     }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestCells =
-    copy(sub = newLeft, vec = newRight)
-}
-
-object NearestCells {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.lit
-  import org.apache.spark.sql.graftbridge.Bridge
-
-  /** Single-codebook ranking column (the kmeans/IVF callers). */
-  def single(vec: Column, cents: Seq[(Long, IndexedSeq[Double])],
-             keep: Int, bySqDist: Boolean): Column =
-    Bridge.column(NearestCells(Bridge.expression(lit(0)),
-      Bridge.expression(vec), Seq(cents), keep, bySqDist))
-
-  /** Per-subspace codebook ranking column (the PQ callers). */
-  def bySub(sub: Column, vec: Column,
-            centsBySub: Seq[Seq[(Long, IndexedSeq[Double])]],
-            keep: Int, bySqDist: Boolean): Column =
-    Bridge.column(NearestCells(Bridge.expression(sub),
-      Bridge.expression(vec), centsBySub, keep, bySqDist))
 }

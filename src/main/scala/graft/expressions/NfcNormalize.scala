@@ -2,13 +2,11 @@ package graft.expressions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFC normalization as a native codegen expression — the
+/** Unicode NFC normalization as a native kernel — the
   * canonicalization pass every web-scale text pipeline runs before
   * hashing/dedup (a composed "é" and its decomposed twin are DIFFERENT
   * byte strings, so un-normalized corpora silently fail exact dedup,
@@ -17,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Spark has no built-in for this; the usual escape hatch is a Scala
   * UDF (per-row boxing, no codegen, a black box to Catalyst). This is
-  * instead a proper `UnaryExpression` with `doGenCode` — one static
-  * call inside the surrounding WholeStageCodegen loop, with an
+  * instead a `StaticInvoke` of [[compute]] — one static call inside
+  * the surrounding WholeStageCodegen loop, with an
   * already-normalized fast path (`Normalizer.isNormalized`, true for
   * virtually all real text) that returns the input UTF8String without
   * allocating.
@@ -26,34 +24,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Cross-engine: implements Unicode canonical composition per UAX #15,
   * same as DuckDB's `nfc_normalize` (utf8proc) — the oracle twin.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "nfc_normalize"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    NfcNormalize.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = NfcNormalize.getClass.getName.stripSuffix("$")
-    defineCodeGen(ctx, ev, a => s"$cls.compute($a)")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NfcNormalize = copy(child = newChild)
-}
-
 object NfcNormalize {
 
-  /** One static implementation for interpreted eval AND generated code.
-    * Returns the INPUT object when already NFC (no allocation) — the
+  /** NFC form of a string column (SQL `nfc_normalize`); null only for
+    * null input.
+    */
+  def apply(text: Column): Column =
+    Kernel.call(this, StringType, Seq(Kernel.arg(text, StringType)),
+      returnNullable = false)
+
+  /** Returns the INPUT object when already NFC (no allocation) — the
     * overwhelmingly common case.
     */
   def compute(s: UTF8String): UTF8String = {

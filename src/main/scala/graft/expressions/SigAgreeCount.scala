@@ -1,13 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
-/** Whole-stage-codegen count of agreeing positions between two
-  * `array<bigint>` MinHash signatures — the per-candidate-pair kernel
+/** Count of agreeing positions between two `array<bigint>` MinHash
+  * signatures — the per-candidate-pair kernel
   * of [[graft.operators.Dedup.minhashLshPairs]] /
   * `incrementalMinhashPairs`, where the declarative form
   * `size(filter(zip_with(a, b, ===), x => x))` crosses an interpreted
@@ -19,43 +17,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * position counts iff both elements are present (non-null) and equal;
   * length overhang contributes nothing. Null if either array is null.
   */
-case class SigAgreeCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sig_agree_count"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SigAgreeCount.compute(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cls = SigAgreeCount.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.compute($a, $b);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SigAgreeCount =
-    copy(left = newLeft, right = newRight)
-}
-
 object SigAgreeCount {
 
-  /** One static call per pair from interpreted eval and generated code. */
+  /** `int` agreement count of two `array<bigint>` signature columns. */
+  def apply(a: Column, b: Column): Column =
+    Kernel.call(this, IntegerType, Seq(
+      Kernel.arg(a, ArrayType(LongType)), Kernel.arg(b, ArrayType(LongType))))
+
   def compute(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0

@@ -1,11 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** 64-bit SimHash signature of a token array in ONE narrow pass — the
   * codegen replacement for the explode → xxhash64 → 64 conditional-sum
@@ -23,44 +21,13 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
   * ELEMENT hashes to the seed (Spark's `xxhash64` of a null input
   * returns the seed unchanged, never null).
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash64"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = classOf[SimHash64].getName
-      val sig = ctx.freshName("sig")
-      s"""
-        final Long $sig = $cls.compute($a);
-        if ($sig == null) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = $sig.longValue();
-        }
-      """
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SimHash64 = copy(child = newChild)
-}
-
 object SimHash64 {
 
-  /** One static call per row from interpreted eval AND generated code —
-    * a single implementation cannot diverge between the two paths.
-    * Boxed return: null ⇔ empty input (the aggregate path's
+  /** `bigint` signature of an `array<string>` column (SQL `simhash64`). */
+  def apply(toks: Column): Column =
+    Kernel.call(this, LongType, Seq(Kernel.arg(toks, ArrayType(StringType))))
+
+  /** Boxed return: null ⇔ empty input (the aggregate path's
     * doc-dropping semantics).
     */
   def compute(arr: ArrayData): java.lang.Long = {

@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** `bits`-wide SimHash over a token array using the oracle-reproducible
   * md5-prefix hash — the shuffle-free codegen form of the explode →
@@ -21,47 +19,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * elements hash as 0 (the aggregate's `otherwise(-1)` branch on a
   * null md5 hash).
   */
-case class SimHashMd5(child: Expression, bits: Int)
-    extends UnaryExpression {
-
-  require(bits > 0 && bits <= 64, "bits must be in 1..64")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash_md5"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashMd5.compute(input.asInstanceOf[ArrayData], bits)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = classOf[SimHashMd5].getName
-      val sig = ctx.freshName("sig")
-      s"""
-        final Long $sig = $cls.compute($a, $bits);
-        if ($sig == null) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = $sig.longValue();
-        }
-      """
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SimHashMd5 = copy(child = newChild)
-}
-
 object SimHashMd5 {
 
-  /** One static call per row (md5 loop stays out of generated Java and
-    * the interpreter alike). Boxed return: null ⇔ empty input.
-    */
+  /** `bigint` signature of an `array<string>` column (SQL `simhash_md5`). */
+  def apply(toks: Column, bits: Int): Column = {
+    require(bits > 0 && bits <= 64, "bits must be in 1..64")
+    Kernel.call(this, LongType,
+      Seq(Kernel.arg(toks, ArrayType(StringType)), Kernel.param(bits)))
+  }
+
+  /** Boxed return: null ⇔ empty input. */
   def compute(arr: ArrayData, bits: Int): java.lang.Long = {
     val n = arr.numElements()
     if (n == 0) return null

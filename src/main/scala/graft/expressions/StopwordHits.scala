@@ -1,18 +1,16 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-list stopword hit counts of a token array in ONE pass — the
   * round-1 "single-pass combined hit-counter": the declarative form
   * runs one interpreted `filter` higher-order function over the token
   * array PER LANGUAGE (5× per row for quality scoring, 5× again for
-  * language-ID); this expression looks each token up once in a
+  * language-ID); this kernel looks each token up once in a
   * precompiled hash map of word→list-membership bitmask and bumps all
   * matching counters. Output: `array<long>` of hit counts, one per
   * input list, exactly `TextFns.hitCount(toks, list)` per element
@@ -21,25 +19,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * `lists` is a plan-time constant (≤ 64 lists — bitmask-bound, far
   * above any language-ID roster).
   */
-case class StopwordHits(child: Expression, lists: Seq[Seq[String]])
-    extends UnaryExpression {
+object StopwordHits {
 
-  require(lists.nonEmpty && lists.size <= 64,
-    "1..64 stopword lists supported")
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "stopword_hits"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
+  /** `array<bigint>` hit counts of an `array<string>` column. */
+  def apply(toks: Column, lists: Seq[Seq[String]]): Column = {
+    require(lists.nonEmpty && lists.size <= 64,
+      "1..64 stopword lists supported")
+    Kernel.call(StopwordLists(lists), ArrayType(LongType, containsNull = false),
+      Seq(Kernel.arg(toks, ArrayType(StringType))))
   }
+}
+
+/** The prepared state of [[StopwordHits]]: equal lists make equal
+  * kernels, so the plan shows (and dedups) one call per list set.
+  */
+final case class StopwordLists(lists: Seq[Seq[String]]) {
+
+  override def toString: String = s"StopwordLists(${lists.size} lists)"
 
   /** word → bitmask of the lists containing it; built once per
-    * task-deserialized expression instance.
+    * deserialized instance.
     */
   @transient private lazy val masks: java.util.HashMap[UTF8String, java.lang.Long] = {
     val m = new java.util.HashMap[UTF8String, java.lang.Long]()
@@ -53,7 +52,6 @@ case class StopwordHits(child: Expression, lists: Seq[Seq[String]])
     m
   }
 
-  /** One call per row from interpreted eval and generated code. */
   def compute(arr: ArrayData): ArrayData = {
     val counts = new Array[Long](lists.size)
     val n = arr.numElements()
@@ -74,16 +72,4 @@ case class StopwordHits(child: Expression, lists: Seq[Seq[String]])
     }
     UnsafeArrayData.fromPrimitiveArray(counts)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("stopwordHits", this,
-      classOf[StopwordHits].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StopwordHits = copy(child = newChild)
 }

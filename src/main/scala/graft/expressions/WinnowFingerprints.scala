@@ -1,10 +1,8 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - grid: for 1-based char position i in [1, len−k+1], h(i) = the
   *    first 8 hex chars of md5(substr(text, i, k)) parsed as a long —
   *    byte-identical to `conv(substring(md5(...), 1, 8), 16, 10)`
-  *    (md5 of the substring's UTF-8 bytes, lowercase hex);
+  *    ([[MinHashSig.hash32]] of the substring by code point);
   *  - picks: per window of w consecutive grid entries, the RIGHTMOST
   *    minimal hash (ties advance right — the winnowing robustness
   *    rule), windows only where the grid has ≥ w entries;
@@ -30,50 +28,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * full windows exist, so `explode` drops the row exactly like the
   * declarative form.
   */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+object WinnowFingerprints {
 
-  require(k >= 1, s"k must be >= 1, got $k")
-  require(w >= 1, s"w must be >= 1, got $w")
+  /** `array<struct<h, pos>>` fingerprints of a string column. */
+  def apply(text: Column, k: Int, w: Int): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(w >= 1, s"w must be >= 1, got $w")
+    Kernel.call(this, ArrayType(StructType(Seq(
+      StructField("h", LongType, nullable = false),
+      StructField("pos", LongType, nullable = false))),
+      containsNull = false),
+      Seq(Kernel.arg(text, StringType), Kernel.param(k), Kernel.param(w)))
+  }
 
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("h", LongType, nullable = false),
-    StructField("pos", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "winnow_fingerprints"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    val len = t.numChars()
-    val n = len - k + 1 // k-gram count
+  def compute(t: UTF8String, k: Int, w: Int): ArrayData = {
+    val n = t.numChars() - k + 1 // k-gram count
     if (n < w) return new GenericArrayData(Array.empty[Any])
-    val md = java.security.MessageDigest.getInstance("MD5")
     val hs = new Array[Long](n)
     var i = 0
     while (i < n) {
-      // substring by character (code point), the Substring/`substr`
-      // convention; md5 over its UTF-8 bytes; first 8 hex chars = the
-      // first 4 digest bytes, read big-endian as an unsigned int
-      md.reset()
-      md.update(t.substring(i, i + k).getBytes)
-      val d = md.digest()
-      hs(i) = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      hs(i) = MinHashSig.hash32(t.substring(i, i + k))
       i += 1
     }
-    // rightmost-min per window, dedup on (h, pos) in first-pick order
-    val seen = new java.util.LinkedHashSet[Long]() // pos fits in int —
-    // encode (pos << 33) | h is unsafe (h is 32-bit); (pos, h) both
-    // ≤ 2^32: pack pos in the high 31 bits, h in the low 32
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    // rightmost-min per window, dedup on (pos, h) in first-pick order:
+    // pos in the high 32 bits, the 32-bit h in the low 32
+    val seen = new java.util.HashSet[Long]()
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var j = 0
     while (j + w <= n) {
       var bi = j
@@ -82,15 +62,10 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
         if (hs(x) <= hs(bi)) bi = x
         x += 1
       }
-      val key = (bi.toLong << 32) | hs(bi)
-      if (seen.add(key)) out += ((hs(bi), bi + 1L)) // 1-based pos
+      if (seen.add((bi.toLong << 32) | hs(bi)))
+        out += InternalRow(hs(bi), bi + 1L) // 1-based pos
       j += 1
     }
-    new GenericArrayData(out.map { case (h, p) =>
-      InternalRow(h, p)
-    }.toArray[Any])
+    new GenericArrayData(out.toArray)
   }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WinnowFingerprints = copy(child = newChild)
 }

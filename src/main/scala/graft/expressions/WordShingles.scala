@@ -1,50 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Distinct word n-gram shingles of a token array, built in tight Java —
-  * the codegen form of `array_distinct(TextFns.shingles(...))`, whose
-  * `transform`/`slice`/`array_join` higher-order functions run as
-  * interpreted lambdas per element (measured ~4× slower on corpus-scale
-  * inputs; see MinHashSig). Shingle text is tokens joined by single
-  * spaces (the `array_join(slice(toks, i, n), " ")` convention);
-  * distinctness keeps FIRST-occurrence order; fewer than n tokens ⇒
-  * empty array (explode then drops the row, matching the declarative
-  * form). Null token elements read as empty strings.
-  */
-case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n > 0, "n must be positive")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WordShingles.compute(input.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = classOf[WordShingles].getName
-      s"${ev.value} = $cls.compute($a, $n);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordShingles = copy(child = newChild)
-}
 
 /** EVERY word n-gram of a token array, in order, WITH multiplicity —
   * the language-model sibling of [[WordShingles]] (whose distinctness
@@ -61,43 +20,24 @@ case class WordShingles(child: Expression, n: Int)
   * \s+-split tokens, which are never null; callers introducing
   * nullable token arrays must pre-coalesce.
   */
-case class WordGrams(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n > 0, "n must be positive")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "word_grams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WordGrams.compute(input.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = classOf[WordGrams].getName
-      s"${ev.value} = $cls.compute($a, $n);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordGrams = copy(child = newChild)
-}
-
 object WordGrams {
 
   private val SPACE = UTF8String.fromString(" ")
 
-  /** One static call per row from interpreted eval and generated code. */
-  def compute(arr: ArrayData, n: Int): ArrayData = {
+  /** `array<string>` of the word `n`-grams of an `array<string>` column. */
+  def apply(toks: Column, n: Int): Column = {
+    require(n > 0, "n must be positive")
+    Kernel.call(this, ArrayType(StringType, containsNull = false),
+      Seq(Kernel.arg(toks, ArrayType(StringType)), Kernel.param(n)))
+  }
+
+  def compute(arr: ArrayData, n: Int): ArrayData =
+    new GenericArrayData(grams(arr, n))
+
+  /** The n-grams in order (UTF8String elements). */
+  private[expressions] def grams(arr: ArrayData, n: Int): Array[Any] = {
     val total = arr.numElements()
-    if (total < n) return new GenericArrayData(Array.empty[Any])
+    if (total < n) return Array.empty[Any]
     val toks = new Array[UTF8String](total)
     var t = 0
     while (t < total) {
@@ -114,7 +54,7 @@ object WordGrams {
       out(i) = UTF8String.concatWs(SPACE, parts: _*)
       i += 1
     }
-    new GenericArrayData(out)
+    out
   }
 }
 
@@ -124,37 +64,15 @@ object WordGrams {
   * (interpreted per element). Substrings are by character (code
   * point), the `substr` convention; fewer than n chars ⇒ empty array.
   */
-case class CharGrams(child: Expression, n: Int)
-    extends UnaryExpression {
+object CharGrams {
 
-  require(n > 0, "n must be positive")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "char_grams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
+  /** `array<string>` of the character `n`-grams of a string column. */
+  def apply(text: Column, n: Int): Column = {
+    require(n > 0, "n must be positive")
+    Kernel.call(this, ArrayType(StringType, containsNull = false),
+      Seq(Kernel.arg(text, StringType), Kernel.param(n)))
   }
 
-  override def nullSafeEval(input: Any): Any =
-    CharGrams.compute(input.asInstanceOf[UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = classOf[CharGrams].getName
-      s"${ev.value} = $cls.compute($a, $n);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CharGrams = copy(child = newChild)
-}
-
-object CharGrams {
-  /** One static call per row from interpreted eval and generated code. */
   def compute(t: UTF8String, n: Int): ArrayData = {
     val len = t.numChars()
     if (len < n) return new GenericArrayData(Array.empty[Any])
@@ -168,42 +86,41 @@ object CharGrams {
   }
 }
 
+/** Distinct word n-gram shingles of a token array, built in one tight loop —
+  * the codegen form of `array_distinct(TextFns.shingles(...))`, whose
+  * `transform`/`slice`/`array_join` higher-order functions run as
+  * interpreted lambdas per element (measured ~4× slower on corpus-scale
+  * inputs; see MinHashSig). Shingle text is tokens joined by single
+  * spaces (the `array_join(slice(toks, i, n), " ")` convention);
+  * distinctness keeps FIRST-occurrence order; fewer than n tokens ⇒
+  * empty array (explode then drops the row, matching the declarative
+  * form). Null token elements read as empty strings.
+  */
 object WordShingles {
 
-  private val SPACE = UTF8String.fromString(" ")
+  /** `array<string>` of the distinct word `n`-gram shingles of an
+    * `array<string>` column (SQL `word_shingles`).
+    */
+  def apply(toks: Column, n: Int): Column = {
+    require(n > 0, "n must be positive")
+    Kernel.call(this, ArrayType(StringType, containsNull = false),
+      Seq(Kernel.arg(toks, ArrayType(StringType)), Kernel.param(n)))
+  }
 
   /** THE shingle convention, in one place: distinct word n-grams of the
-    * token array, first-occurrence order, tokens joined by single
-    * spaces, null tokens read as empty strings. Shared by
-    * [[WordShingles]] and [[MinHashSig]] so the parity-critical
-    * convention cannot fork between the two tight-Java paths (the
-    * declarative mirror is `array_distinct(TextFns.shingles(...))`,
-    * the oracle mirror is ExtensionQueries' `shSql`).
+    * token array ([[WordGrams]]' grams), first-occurrence order. Shared
+    * by [[WordShingles]] and [[MinHashSig]] so the parity-critical
+    * convention cannot fork between the two kernels (the declarative
+    * mirror is `array_distinct(TextFns.shingles(...))`, the oracle
+    * mirror is ExtensionQueries' `shSql`).
     */
   def distinctShingles(arr: ArrayData,
                        n: Int): java.util.LinkedHashSet[UTF8String] = {
     val seen = new java.util.LinkedHashSet[UTF8String]()
-    val total = arr.numElements()
-    if (total < n) return seen
-    val toks = new Array[UTF8String](total)
-    var t = 0
-    while (t < total) {
-      toks(t) = if (arr.isNullAt(t)) UTF8String.EMPTY_UTF8
-        else arr.getUTF8String(t)
-      t += 1
-    }
-    var i = 0
-    while (i <= total - n) {
-      val parts = new Array[UTF8String](n)
-      var j = 0
-      while (j < n) { parts(j) = toks(i + j); j += 1 }
-      seen.add(UTF8String.concatWs(SPACE, parts: _*))
-      i += 1
-    }
+    WordGrams.grams(arr, n).foreach(g => seen.add(g.asInstanceOf[UTF8String]))
     seen
   }
 
-  /** One static call per row from interpreted eval and generated code. */
   def compute(arr: ArrayData, n: Int): ArrayData =
     new GenericArrayData(distinctShingles(arr, n).toArray)
 }

@@ -39,10 +39,7 @@ object TextFns {
     // chain ran interpreted per element; coalesce keeps this function's
     // null-text contract (empty array, not null)
     coalesce(
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.expressions.WordGrams(
-          org.apache.spark.sql.graftbridge.Bridge.expression(toks(text)),
-          n)),
+      graft.expressions.WordGrams(toks(text), n),
       array().cast("array<string>"))
 
   /** Deterministic 32-bit non-negative hash of a string: first 8 hex
@@ -110,12 +107,10 @@ object TextFns {
     size(filter(tokArr, t => t.isin(words.map(lit): _*)))
 
   /** Unicode NFC canonicalization via the codegen
-    * [[graft.expressions.NfcNormalize]] expression (DuckDB oracle twin:
+    * [[graft.expressions.NfcNormalize]] kernel (DuckDB oracle twin:
     * `nfc_normalize`). Run BEFORE content hashing — composed and
     * decomposed forms of the same text must dedup together.
     */
   def nfc(c: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.expressions.NfcNormalize(
-        org.apache.spark.sql.graftbridge.Bridge.expression(c)))
+    graft.expressions.NfcNormalize(c)
 }

@@ -34,17 +34,14 @@ object VectorFns {
   def cosineHof(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Cosine similarity via the codegen'd Catalyst expression
+  /** Cosine similarity via the generated-code kernel
     * [[graft.expressions.CosineSimilarity]] — bit-identical to
     * [[cosineHof]] (same sequential double folds), but compiled into
     * the surrounding WholeStageCodegen loop instead of crossing an
     * interpreted lambda per element.
     */
   def cosine(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.expressions.CosineSimilarity(
-        org.apache.spark.sql.graftbridge.Bridge.expression(a),
-        org.apache.spark.sql.graftbridge.Bridge.expression(b)))
+    graft.expressions.CosineSimilarity(a, b)
 
   /** Deterministic pseudo-random hyperplane component for plane `j`,
     * dimension `i` (0-based): integer LCG-style mix mapped into
@@ -73,8 +70,5 @@ object VectorFns {
     * bit-identical to [[lshBucketHof]].
     */
   def lshBucket(vec: Column, planes: Int, seed: Int = 0): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.expressions.LshBucket(
-        org.apache.spark.sql.graftbridge.Bridge.expression(vec),
-        planes, seed))
+    graft.expressions.LshBucket(vec, planes, seed)
 }

@@ -41,14 +41,13 @@ object Corpus {
     graft.functions.Par.fanOut(df) // gated repartition (r15) — see Par
 
   /** Distinct word n-gram shingles via the codegen
-    * [[graft.expressions.WordShingles]] expression — semantically
+    * [[graft.expressions.WordShingles]] kernel — semantically
     * `array_distinct(TextFns.shingles(c, n))`, but the declarative HOF
     * chain (transform/slice/array_join) runs interpreted per element
     * and dominates the scan on corpus-scale text (see Dedup.shingled).
     */
   private def distinctShingles(c: Column, n: Int): Column =
-    Bridge.column(graft.expressions.WordShingles(
-      Bridge.expression(TextFns.toks(c)), n))
+    graft.expressions.WordShingles(TextFns.toks(c), n)
 
   /** Top-`topK` keywords per document by TF-IDF-style score.
     *
@@ -457,10 +456,7 @@ object Corpus {
     val grams = fanOut(docs).select(col(idCol),
       // codegen distinct-shingle kernel (first-occurrence order, the
       // array_distinct(shingles) convention — r14)
-      explode(org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.expressions.WordShingles(
-          org.apache.spark.sql.graftbridge.Bridge.expression(
-            TextFns.toks(col(textCol))), n)))
+      explode(graft.expressions.WordShingles(TextFns.toks(col(textCol)), n))
         .as("gram"))
     val dfreq = grams.groupBy(col("gram"))
       .agg(count(lit(1)).as("__df"))
@@ -542,10 +538,7 @@ object Corpus {
         // codegen n-gram kernel (r14): the transform/slice/array_join
         // HOF ran interpreted per element; < n tokens ⇒ empty array,
         // which posexplode drops like the unguarded when() it replaces
-        posexplode(org.apache.spark.sql.graftbridge.Bridge.column(
-          graft.expressions.WordGrams(
-            org.apache.spark.sql.graftbridge.Bridge.expression(
-              col("__t")), n)))
+        posexplode(graft.expressions.WordGrams(col("__t"), n))
           .as(Seq("__p0", "gram")))
       .select(col(idCol), (col("__p0") + 1).cast("long").as("p"),
         col("gram"))
@@ -1512,10 +1505,8 @@ object Corpus {
         // per-position struct HOF ran interpreted per element (r14)
         val best = vocab
           .select(col("wc"), split(trim(col("s"), US), US + US).as("sy"))
-          .select(col("wc"), explode(org.apache.spark.sql.graftbridge
-            .Bridge.column(graft.expressions.WordGrams(
-              org.apache.spark.sql.graftbridge.Bridge.expression(
-                col("sy")), 2))).as("bg"))
+          .select(col("wc"),
+            explode(graft.expressions.WordGrams(col("sy"), 2)).as("bg"))
           .groupBy(substring_index(col("bg"), " ", 1).as("lhs"),
             substring_index(col("bg"), " ", -1).as("rhs"))
           .agg(sum(col("wc")).as("pc"))
@@ -1572,11 +1563,8 @@ object Corpus {
     require(ms.length <= 4096,
       s"merge table must have <= 4096 rows (got more) — not a " +
         "bpeTrain output?")
-    val counts = org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.expressions.BpeCounts(
-        org.apache.spark.sql.graftbridge.Bridge.expression(
-          TextFns.toks(col(textCol))),
-        ms.map(_.getString(1)).toSeq, ms.map(_.getString(2)).toSeq))
+    val counts = graft.expressions.BpeCounts(TextFns.toks(col(textCol)),
+      ms.map(_.getString(1)).toSeq, ms.map(_.getString(2)).toSeq)
     docs.select(col(idCol), counts.as("__bc"))
       .select(col(idCol), col("__bc.n_sym").as("n_sym"),
         col("__bc.n_bpe").as("n_bpe"))

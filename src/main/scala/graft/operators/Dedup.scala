@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.{TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Document-deduplication operators for training-data pipelines.
@@ -150,11 +149,10 @@ object Dedup {
     * of them) in the declarative form.
     */
   private def sigAgree(a: Column, b: Column): Column =
-    Bridge.column(graft.expressions.SigAgreeCount(
-      Bridge.expression(a), Bridge.expression(b)))
+    graft.expressions.SigAgreeCount(a, b)
 
   /** Distinct (docId, shingle) pairs — shingle construction via the
-    * codegen [[graft.expressions.WordShingles]] expression (the
+    * codegen [[graft.expressions.WordShingles]] kernel (the
     * declarative HOF chain is interpreted per element and measurably
     * slower); the explode stays because the inverted index needs the
     * exploded rows.
@@ -162,8 +160,8 @@ object Dedup {
   private def shingled(docs: DataFrame, idCol: String, textCol: String,
                        n: Int): DataFrame =
     fanOut(docs).select(col(idCol).as("did"),
-        explode(Bridge.column(graft.expressions.WordShingles(
-          Bridge.expression(TextFns.toks(col(textCol))), n))).as("sh"))
+        explode(graft.expressions.WordShingles(
+          TextFns.toks(col(textCol)), n)).as("sh"))
 
   /** Shared inverted-index pair core under [[jaccardPairs]] /
     * [[containmentPairs]]: build the distinct-shingle index (with the
@@ -382,7 +380,7 @@ object Dedup {
     *
     * Two scale moves vs the naive form:
     *  - signatures per row via the codegen
-    *    [[graft.expressions.SimHashMd5]] expression (each token
+    *    [[graft.expressions.SimHashMd5]] kernel (each token
     *    md5-hashed once, 16 counters folded locally — no explode, no
     *    signature-stage shuffle);
     *  - candidate pairs via pigeonhole blocking: the 16 bits split
@@ -395,8 +393,8 @@ object Dedup {
     require(maxHamming <= 3,
       "4-band pigeonhole blocking only covers Hamming <= 3")
     val sigs = fanOut(docs).select(col(idCol).as("did"),
-        Bridge.column(graft.expressions.SimHashMd5(
-          Bridge.expression(TextFns.toks(col(textCol))), 16)).as("sig"))
+        graft.expressions.SimHashMd5(TextFns.toks(col(textCol)), 16)
+          .as("sig"))
       .filter(col("sig").isNotNull) // null text/zero tokens: doc dropped
       // one cheap shuffle by sig → the three consumers below (distinct
       // + both expansion joins) all reuse a single exchange instead of
@@ -433,7 +431,7 @@ object Dedup {
   }
 
   /** k-wide MinHash signatures via the codegen
-    * [[graft.expressions.MinHashSig]] expression: one narrow pass per
+    * [[graft.expressions.MinHashSig]] kernel: one narrow pass per
     * doc — distinct n-gram shingling, md5 hashing and k permutation
     * minimums all in tight Java (the declarative shingle chain is
     * interpreted HOFs, measured ~4× slower) — NO shuffle in the
@@ -444,8 +442,8 @@ object Dedup {
   def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
                   n: Int, k: Int): DataFrame =
     fanOut(docs).select(col(idCol).as("did"),
-        Bridge.column(graft.expressions.MinHashSig(
-          Bridge.expression(TextFns.toks(col(textCol))), k, n)).as("sig"))
+        graft.expressions.MinHashSig(TextFns.toks(col(textCol)), k, n)
+          .as("sig"))
       .filter(col("sig").isNotNull)
 
   /** Declarative formulation of [[minhashSigs]] (explode → hash once →
@@ -473,7 +471,7 @@ object Dedup {
     * is occupied and Hamming neighborhoods blanket the space); 64 bits
     * keeps signatures sparse at any realistic corpus size.
     *
-    * Computed by the codegen [[graft.expressions.SimHash64]] expression:
+    * Computed by the codegen [[graft.expressions.SimHash64]] kernel:
     * one narrow pass, NO shuffle — each doc's tokens hash once (xxhash64)
     * into 64 local counters inside WholeStageCodegen. Bit-identical to
     * the explode + 64-conditional-sum-aggregates form
@@ -483,8 +481,7 @@ object Dedup {
   def simhash64Sigs(docs: DataFrame, idCol: String,
                     textCol: String): DataFrame =
     fanOut(docs).select(col(idCol).as("did"),
-        Bridge.column(graft.expressions.SimHash64(
-          Bridge.expression(TextFns.toks(col(textCol))))).as("sig"))
+        graft.expressions.SimHash64(TextFns.toks(col(textCol))).as("sig"))
       // null sig = null text or zero tokens — the aggregate path's
       // groupBy drops such docs; match it
       .filter(col("sig").isNotNull)
@@ -522,8 +519,8 @@ object Dedup {
   def simhash64Md5Sigs(docs: DataFrame, idCol: String,
                        textCol: String): DataFrame =
     fanOut(docs).select(col(idCol).as("did"),
-        Bridge.column(graft.expressions.SimHashMd5(
-          Bridge.expression(TextFns.toks(col(textCol))), 64)).as("sig"))
+        graft.expressions.SimHashMd5(TextFns.toks(col(textCol)), 64)
+          .as("sig"))
       .filter(col("sig").isNotNull)
 
   /** SimHash near-dup pairs over 64-bit signatures: pigeonhole banding

@@ -197,6 +197,9 @@ object Pq {
     * with the index living as plain parquet-able DataFrames. Output:
     * (query_id, neighbor_id, rank, adist), ascending approximate
     * squared-L2 like [[pqKnn]]; self-pairs excluded.
+    * The IVF index's `centroids.cell` must be byte/short/int/long: a
+    * `DecimalType(p,0)` (or any non-integral) cell id is rejected
+    * upfront by [[Similarity.collectCents]].
     */
   def ivfPqAgainstIndex(ivf: Similarity.IvfIndexFrames,
                         codebooks: DataFrame, codes: DataFrame,

@@ -47,7 +47,7 @@ object Projection {
     * `outDim` dims. Output: input columns minus `vecCol`, plus
     * `projCol` array<double> of length `outDim`.
     *
-    * Compiles to ONE codegen expression
+    * Compiles to ONE kernel call
     * ([[graft.expressions.JlProject]]) rather than an
     * outDim·inDim-node literal chain — bit-identical numerics (same
     * sign constants, same left-to-right add order, same exact scale),
@@ -58,10 +58,8 @@ object Projection {
     val signs = Array.tabulate(outDim * inDim) { n =>
       sign(n % inDim, n / inDim).toByte
     }
-    val projected = org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.expressions.JlProject(
-        org.apache.spark.sql.graftbridge.Bridge.expression(col(vecCol)),
-        inDim, outDim, scaleOf(outDim), signs))
+    val projected = graft.expressions.JlProject(col(vecCol), inDim, outDim,
+      scaleOf(outDim), signs)
     df.withColumn(projCol, projected).drop(vecCol)
   }
 

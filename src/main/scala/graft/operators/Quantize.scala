@@ -37,9 +37,7 @@ object Quantize {
     * Emits (id, qvec, scale, q_norm2, q_sum).
     */
   def int8Full(embs: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val q = org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.expressions.Int8Quantize(
-        org.apache.spark.sql.graftbridge.Bridge.expression(col(vecCol))))
+    val q = graft.expressions.Int8Quantize(col(vecCol))
     embs.select(col(idCol), q.as("__q"))
       .select(col(idCol), col("__q.qvec").as("qvec"),
         col("__q.scale").as("scale"), col("__q.q_norm2").as("q_norm2"),
@@ -49,15 +47,12 @@ object Quantize {
   /** Integer cosine between two int8 vectors: exact int64 dot and
     * norms (64 dims × 127² ≪ 2⁶³ — no overflow, no float-order
     * nondeterminism), one double division at the end. Null when either
-    * norm is zero. Codegen expression ([[graft.expressions.Int8Cosine]])
+    * norm is zero. Generated-code kernel ([[graft.expressions.Int8Cosine]])
     * — this runs per (corpus × query) pair in [[knnInt8]], where the
     * interpreted-lambda tax multiplies by the pair count.
     */
   def intCosine(qa: Column, qb: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.expressions.Int8Cosine(
-        org.apache.spark.sql.graftbridge.Bridge.expression(qa),
-        org.apache.spark.sql.graftbridge.Bridge.expression(qb)))
+    graft.expressions.Int8Cosine(qa, qb)
 
   /** Exact top-k under the QUANTIZED metric (the compressed-corpus
     * analogue of [[Similarity.bruteKnn]]): corpus and queries are

@@ -499,6 +499,9 @@ object Similarity {
     * |corpus|. Recall loses only neighbors whose cell the query didn't
     * probe — raise nProbe (or refine the centroids) to trade cost for
     * recall.
+    * The corpus ids become cell ids, so `idCol` must be byte/short/
+    * int/long: a `DecimalType(p,0)` (or any non-integral) id is
+    * rejected upfront by [[collectCents]].
     */
   def ivfKnn(corpus: DataFrame, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
@@ -534,7 +537,9 @@ object Similarity {
     * numerically — a string cell column would fail the ANSI cast (or
     * silently swap lexicographic for numeric tie order, and '01'
     * would round-trip as '1', desyncing postings.cell from
-    * centroids.cell). Checked upfront with a clear message instead.
+    * centroids.cell). Checked upfront with a clear message instead;
+    * `DecimalType(p,0)` ids are rejected too, though integral in value,
+    * rather than narrowed to a long.
     */
   private[operators] def collectCents(seeds: DataFrame, cellCol: String,
                                       vecCol: String)
@@ -598,6 +603,9 @@ object Similarity {
     * cell. [[ivfKnn]] is exactly `knnAgainstIndex(ivfIndex(corpus),
     * queries)` — proven by spec — so a persisted index returns the
     * same neighbors the one-shot operator would.
+    * The corpus ids become cell ids, so `idCol` must be byte/short/
+    * int/long: a `DecimalType(p,0)` (or any non-integral) id is
+    * rejected upfront by [[collectCents]].
     */
   def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                cells: Int = 16, refineIters: Int = 0,
@@ -619,6 +627,9 @@ object Similarity {
     * silently re-cluster the whole store), the returned postings rows
     * union/append onto the persisted inverted file. Per-batch cost is
     * |batch| × |centroids| — the corpus is never re-read.
+    * The index's `centroids.cell` must be byte/short/int/long: a
+    * `DecimalType(p,0)` (or any non-integral) cell id is rejected
+    * upfront by [[collectCents]].
     */
   def ivfAppend(index: IvfIndexFrames, batch: DataFrame,
                 idCol: String, vecCol: String): DataFrame =
@@ -680,6 +691,9 @@ object Similarity {
     * [[ivfStats]], then atomically swap the persisted centroid +
     * postings tables; in-flight probes keep reading the old store.
     * `cells` defaults (-1) to the index's own cell count.
+    * The corpus ids become cell ids, so `idCol` must be byte/short/
+    * int/long: a `DecimalType(p,0)` (or any non-integral) id is
+    * rejected upfront by [[collectCents]].
     */
   def ivfRebalance(index: IvfIndexFrames, cells: Int = -1,
                    refineIters: Int = 0,
@@ -739,6 +753,9 @@ object Similarity {
     * (the [[graft.operators.JoinOps]] pattern, proven for the minhash
     * index in PushdownSpec). Output: (query_id, neighbor_id, rank,
     * cosine), self-pairs excluded.
+    * The index's `centroids.cell` must be byte/short/int/long: a
+    * `DecimalType(p,0)` (or any non-integral) cell id is rejected
+    * upfront by [[collectCents]].
     */
   def knnAgainstIndex(index: IvfIndexFrames, batch: DataFrame,
                       idCol: String, vecCol: String, k: Int,
@@ -766,6 +783,9 @@ object Similarity {
     * still computes correct values, but every later action on it
     * re-derives the assignment uncached — exactly the double cost
     * the fusion removes.
+    * The index's `centroids.cell` must be byte/short/int/long: a
+    * `DecimalType(p,0)` (or any non-integral) cell id is rejected
+    * upfront by [[collectCents]].
     */
   def knnAndAppend[T](index: IvfIndexFrames, batch: DataFrame,
                       idCol: String, vecCol: String, k: Int,
@@ -822,6 +842,9 @@ object Similarity {
     * a positive-heavy neighborhood in an unprobed cell stays unseen,
     * the [[ivfKnn]] trade. Raise `nProbe` (or `refineIters`) to buy
     * recall.
+    * The corpus ids become cell ids, so `idCol` must be byte/short/
+    * int/long: a `DecimalType(p,0)` (or any non-integral) id is
+    * rejected upfront by [[collectCents]].
     */
   def hardNegativesIvf(corpus: DataFrame, queries: DataFrame,
                        idCol: String, vecCol: String,

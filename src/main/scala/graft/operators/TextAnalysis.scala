@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.DoubleType
 
 /** Text-analysis operators: token stats, quality scoring, language ID,
@@ -48,16 +47,15 @@ object TextAnalysis {
   }
 
   /** All per-language stopword hit counts in ONE pass over the tokens
-    * (the codegen [[graft.expressions.StopwordHits]] expression — the
+    * (the codegen [[graft.expressions.StopwordHits]] kernel — the
     * declarative form re-filters the token array once per language).
     * Kept in its own projection so CollapseProject can't inline the
     * expensive expression into each per-language consumer.
     */
   private def withHits(docs: DataFrame, textCol: String): DataFrame =
     fanOut(docs).withColumn("__hits",
-      Bridge.column(graft.expressions.StopwordHits(
-        Bridge.expression(TextFns.toks(col(textCol))),
-        stopwords.map(_._2))))
+      graft.expressions.StopwordHits(TextFns.toks(col(textCol)),
+        stopwords.map(_._2)))
 
   /** Language-ID: stopword-hit count per language, argmax with
     * first-listed-language tiebreak. Adds (pred_lang, hits).
@@ -104,8 +102,8 @@ object TextAnalysis {
     */
   def qualityCol(text: Column): Column =
     qualityBlend(text, TextFns.toks(text),
-      Bridge.column(graft.expressions.StopwordHits(
-        Bridge.expression(TextFns.toks(text)), stopwords.map(_._2))))
+      graft.expressions.StopwordHits(
+        TextFns.toks(text), stopwords.map(_._2)))
 
   /** Quality score in [0,1]: weighted blend of length saturation,
     * lexical diversity, stopword ratio and punct scarcity. All terms are
@@ -144,8 +142,7 @@ object TextAnalysis {
     // when-guarded form it replaces)
     val perGram = fanOut(docs)
       .select(col(idCol),
-        explode(Bridge.column(graft.expressions.WordGrams(
-          Bridge.expression(TextFns.toks(col(textCol))), n)))
+        explode(graft.expressions.WordGrams(TextFns.toks(col(textCol)), n))
           .as("gram"))
       .groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("c"))
     perGram.groupBy(col(idCol)).agg(
@@ -211,8 +208,8 @@ object TextAnalysis {
     // HOF shingle chain leaves the hot path
     val shfp = fanOut(docs)
       .select(col(idCol),
-        explode(Bridge.column(graft.expressions.WordShingles(
-          Bridge.expression(TextFns.toks(col(textCol))), 3))).as("sh"))
+        explode(graft.expressions.WordShingles(
+          TextFns.toks(col(textCol)), 3)).as("sh"))
       .groupBy(col(idCol)).agg(min(md5(col("sh"))).as("shfp"))
     exact.join(shfp, Seq(idCol), "left")
       .select(col(idCol), col("exact_fp"),
@@ -251,8 +248,8 @@ object TextAnalysis {
     // replicated exactly (spec- and oracle-pinned).
     fanOut(docs)
       .select(col(idCol),
-        explode(Bridge.column(graft.expressions.WinnowFingerprints(
-          Bridge.expression(lower(col(textCol))), k, w))).as("f"))
+        explode(graft.expressions.WinnowFingerprints(
+          lower(col(textCol)), k, w)).as("f"))
       .select(col(idCol), col("f.pos").as("pos"), col("f.h").as("fp"))
   }
 
@@ -497,8 +494,7 @@ object TextAnalysis {
     // per-position transform/substr HOF ran interpreted per element;
     // same substrings (by character, < 3 chars ⇒ empty)
     def tris(c: Column): Column =
-      Bridge.column(graft.expressions.CharGrams(
-        Bridge.expression(lower(c)), 3))
+      graft.expressions.CharGrams(lower(c), 3)
     // score-side occurrence table first: in SELF-SCORING mode (the
     // ext_charlm_score shape — same frame as train and score) the
     // model's trigram counts are the per-doc counts re-summed, so the
@@ -608,8 +604,7 @@ object TextAnalysis {
     // codegen n-gram kernel (r14): the per-position transform/concat
     // HOF chain ran interpreted per element; same strings (single-
     // space join, empty for < 2 tokens), measured >3× faster
-    Bridge.column(graft.expressions.WordGrams(
-      Bridge.expression(TextFns.toks(c)), 2))
+    graft.expressions.WordGrams(TextFns.toks(c), 2)
 
   /** Interpolated Kneser-Ney BIGRAM language-model scoring — the
     * word-level LM quality signal (CCNet-style perplexity filtering)
@@ -794,10 +789,8 @@ object TextAnalysis {
     // codegen, AFTER the aggregations (r15) — same strings, same
     // counts, narrower exchanges.
     def tris(df: DataFrame, keep: Seq[Column]): DataFrame =
-      df.select(keep :+ explode(org.apache.spark.sql.graftbridge.Bridge
-          .column(graft.expressions.WordGrams(
-            org.apache.spark.sql.graftbridge.Bridge.expression(
-              TextFns.toks(col(textCol))), 3))).as("tri"): _*)
+      df.select(keep :+ explode(graft.expressions.WordGrams(
+        TextFns.toks(col(textCol)), 3)).as("tri"): _*)
     def p12Of(c: Column) = substring_index(c, " ", 2)
     def s23Of(c: Column) = substring_index(c, " ", -2)
     def w3Of(c: Column) = substring_index(c, " ", -1)
@@ -1166,8 +1159,7 @@ object TextAnalysis {
       // codegen n-gram kernel (r14; coalesce keeps the empty-not-null
       // contract for the size()-based tot_n columns)
       else coalesce(
-        Bridge.column(graft.expressions.WordGrams(
-          Bridge.expression(t), n)),
+        graft.expressions.WordGrams(t, n),
         array().cast("array<string>"))
     val base = df.select(col(idCol),
       TextFns.toks(col(predCol)).as("__tp"),

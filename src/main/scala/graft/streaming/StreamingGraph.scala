@@ -73,13 +73,11 @@ object StreamingGraph {
     * accumulated (the store keeps degrees, not endpoints, so the
     * contribution join still needs it) and every node must have an
     * out-edge, as in the batch operator. All three contract pieces are
-    * `require`-checked by default — a store/edge-list divergence (an
+    * `require`-checked — a store/edge-list divergence (an
     * un-landed batch, a stale edge list) would otherwise return
     * plausible-but-wrong ranks silently: `|edges| == Σ out_deg` (one
     * count per side, no shuffle) catches aggregate drift, and an
     * endpoints⊄store-nodes anti-join probe catches unknown nodes.
-    * `validate = false` skips the two probes when the caller has its
-    * own landing barrier and the extra edge-list pass matters.
     * `prevRanks` is `(node, pr_fx)`; newly discovered nodes absent
     * from it start at the teleport value. Bit-compatible with the
     * batch operator: same loop, same integer arithmetic, so
@@ -87,8 +85,7 @@ object StreamingGraph {
     */
   def warmPageRank(spark: SparkSession, storePath: String,
                    edges: DataFrame, srcCol: String, dstCol: String,
-                   prevRanks: DataFrame, iters: Int,
-                   validate: Boolean = true): DataFrame = {
+                   prevRanks: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val deg = degrees(spark, storePath).persist(MEMORY_AND_DISK)
     val nodes = deg.select(col("node")).persist(MEMORY_AND_DISK)
@@ -100,18 +97,16 @@ object StreamingGraph {
       col("out_deg").as("__od")).persist(MEMORY_AND_DISK)
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .persist(MEMORY_AND_DISK)
-    if (validate) {
-      val sumOd = deg.agg(sum(col("out_deg"))).head.getLong(0)
-      val ne = e.count()
-      require(ne == sumOd, s"degree store and edge list diverge: " +
-        s"|edges| = $ne but store Σ out_deg = $sumOd — a batch is " +
-        "un-landed or the edge list is stale/non-distinct")
-      val unknown = e.select(col("__src").as("node"))
-        .union(e.select(col("__dst").as("node")))
-        .join(nodes, Seq("node"), "left_anti").limit(1).count()
-      require(unknown == 0, "degree store and edge list diverge: an " +
-        "edge endpoint is missing from the store's node set")
-    }
+    val sumOd = deg.agg(sum(col("out_deg"))).head.getLong(0)
+    val ne = e.count()
+    require(ne == sumOd, s"degree store and edge list diverge: " +
+      s"|edges| = $ne but store Σ out_deg = $sumOd — a batch is " +
+      "un-landed or the edge list is stale/non-distinct")
+    val unknown = e.select(col("__src").as("node"))
+      .union(e.select(col("__dst").as("node")))
+      .join(nodes, Seq("node"), "left_anti").limit(1).count()
+    require(unknown == 0, "degree store and edge list diverge: an " +
+      "edge endpoint is missing from the store's node set")
     val teleportFx = (15L * Graph.PrScale) / (100L * n)
     val ranks0 = nodes
       .join(prevRanks.select(col("node"),

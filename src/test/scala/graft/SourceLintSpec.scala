@@ -22,4 +22,17 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.toSet == Set("BatchDirs.scala"),
       s"batch-directory layout built outside BatchDirs: $offenders")
   }
+
+  test("every scalar kernel reaches Catalyst through one call path") {
+    // a kernel is one `compute` behind a StaticInvoke or Invoke (see
+    // graft.expressions.Kernel); hand-written generated code or an
+    // interpreted-only fallback would be a second per-row path
+    val tokens = Seq("doGenCode", "nullSafeCodeGen", "defineCodeGen",
+      "CodegenFallback")
+    val offenders = mainSources.flatMap { p =>
+      val src = Files.readString(p)
+      tokens.filter(src.contains).map(t => s"${p.getFileName}: $t")
+    }
+    assert(offenders.isEmpty, s"hand-written codegen in main: $offenders")
+  }
 }

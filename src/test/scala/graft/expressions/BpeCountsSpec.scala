@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 
 /** Pin of the fused [[BpeCounts]] kernel against the per-merge
@@ -38,8 +37,7 @@ class BpeCountsSpec extends SparkSpec {
 
   private def kernelCounts(textCol: Column,
                            merges: Seq[(String, String)]): Column =
-    Bridge.column(BpeCounts(Bridge.expression(TextFns.toks(textCol)),
-      merges.map(_._1), merges.map(_._2)))
+    BpeCounts(TextFns.toks(textCol), merges.map(_._1), merges.map(_._2))
 
   private def docs: DataFrame = Seq(
     (1L, "abab abc"),            // cascade: a+b=ab, ab+ab? etc.

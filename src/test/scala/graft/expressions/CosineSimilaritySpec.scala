@@ -114,6 +114,21 @@ class CosineSimilaritySpec extends SparkSpec {
       assert(analysisError(
         "SELECT minhash_sig(array('a'), cast(rand()*4 AS INT), 1)")
         .contains("foldable"))                          // non-literal k
+      // a wrong argument type fails analysis too — never an implicit
+      // cast (array(1.0) is array<decimal>, which could be cast to
+      // array<tinyint>) and never a runtime ClassCastException
+      Seq("cosine_similarity('a', 'b')",
+        "dot_product(array('a'), array(CAST(1 AS FLOAT)))",
+        "simhash64(1)",
+        "simhash_md5(array(1), 16)",
+        "word_shingles('a b c', 2)",
+        "minhash_sig(array(1L), 4, 1)",
+        "nfc_normalize(array('a'))",
+        "int8_quantize(array(1.0D))",
+        "int8_cosine(array(1.0), array(1.0))",
+        "z_value(array(1), 1L, 4)").foreach { call =>
+        withClue(call)(analysisError(s"SELECT $call"))
+      }
     } finally {
       org.apache.spark.sql.SparkSession.setActiveSession(spark)
       org.apache.spark.sql.SparkSession.setDefaultSession(spark)

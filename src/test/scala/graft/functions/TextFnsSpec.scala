@@ -45,7 +45,6 @@ class TextFnsSpec extends SparkSpec {
   }
 
   test("StopwordHits matches per-language hitCount on the corpus") {
-    import org.apache.spark.sql.graftbridge.Bridge
     val lists = graft.operators.TextAnalysis.stopwords
     val corpus = graft.tables.Tables.documents(spark,
         "/root/testdata/sf0.001")
@@ -53,9 +52,8 @@ class TextFnsSpec extends SparkSpec {
       .union(Seq((9001L, "the der le el 的 the"), (9002L, ""))
         .toDF("doc_id", "text")) // multi-list words + repeats + empty
     val onePass = corpus.select($"doc_id",
-        Bridge.column(graft.expressions.StopwordHits(
-          Bridge.expression(TextFns.toks($"text")),
-          lists.map(_._2))).as("h"))
+        graft.expressions.StopwordHits(TextFns.toks($"text"),
+          lists.map(_._2)).as("h"))
       .as[(Long, Seq[Long])].collect().toMap
     val declarative = corpus.select($"doc_id" +:
         lists.map { case (_, words) =>

@@ -223,15 +223,13 @@ class DedupSpec extends SparkSpec {
 
   test("WordShingles matches array_distinct(TextFns.shingles) as a set") {
     import graft.functions.TextFns
-    import org.apache.spark.sql.graftbridge.Bridge
     val corpus = graft.tables.Tables.documents(spark,
         "/root/testdata/sf0.001")
       .select($"doc_id", $"text")
       .union(Seq((9001L, "a b"), (9002L, "x y z x y z")).toDF(
         "doc_id", "text")) // shorter-than-n + repeated-window docs
     val expr = corpus.select($"doc_id",
-        Bridge.column(graft.expressions.WordShingles(
-          Bridge.expression(TextFns.toks($"text")), 3)).as("sh"))
+        graft.expressions.WordShingles(TextFns.toks($"text"), 3).as("sh"))
       .as[(Long, Seq[String])].collect().toMap
     val decl = corpus.select($"doc_id",
         array_distinct(TextFns.shingles($"text", 3)).as("sh"))
@@ -244,7 +242,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("SigAgreeCount matches size(filter(zip_with(===))) exactly") {
-    import org.apache.spark.sql.graftbridge.Bridge
     val rows = Seq(
       (Seq(1L, 2L, 3L), Seq(1L, 9L, 3L)),   // partial agreement
       (Seq(1L, 2L), Seq(1L, 2L)),            // full agreement
@@ -253,8 +250,7 @@ class DedupSpec extends SparkSpec {
       (Seq(7L), Seq(8L))                      // no agreement
     ).toDF("a", "b")
     val got = rows.select(
-        Bridge.column(graft.expressions.SigAgreeCount(
-          Bridge.expression($"a"), Bridge.expression($"b"))).as("fast"),
+        graft.expressions.SigAgreeCount($"a", $"b").as("fast"),
         size(filter(zip_with($"a", $"b", (x, y) => x === y),
           p => p)).as("slow"))
       .as[(Int, Int)].collect()
