@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: dump `explain("formatted")` for named queries (or
   * all) so pushdown (`PushedFilters`), broadcasts, and WholeStageCodegen
-  * spans can be reviewed. Usage:
+  * spans can be reviewed. AQE is off: with it on, every dump is the
+  * initial `AdaptiveSparkPlan isFinalPlan=false`, which shows no
+  * codegen spans. Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
   */
 object Explain {
@@ -18,6 +20,7 @@ object Explain {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

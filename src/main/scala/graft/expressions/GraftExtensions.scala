@@ -26,8 +26,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // a scalar kernel's SQL builder returns the node its Column builder
-    // makes, so SQL and the operators run the same call
+    // a kernel's (or aggregate's) SQL builder returns the node its
+    // Column builder makes, so SQL and the operators run the same call
     def kernel(name: String, arity: Int, owner: AnyRef)(
         build: Args => Column): Unit =
       ext.injectFunction((
@@ -81,25 +81,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           Seq(bit(a, i, 2 * i), bit(b, i, 2 * i + 1)))
           .reduce[Expression](Add(_, _))
       }))
-    ext.injectFunction((
-      FunctionIdentifier("top_k_by_score"),
-      new ExpressionInfo(classOf[TopKByScore].getName, "top_k_by_score"),
-      (children: Seq[Expression]) => {
-        checkArity("top_k_by_score", 3, children)
-        TopKByScore(children(0), children(1),
-          intLit("top_k_by_score", "k", 2, children))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("top_k_by_score_str"),
-      new ExpressionInfo(classOf[TopKByScoreStr].getName,
-        "top_k_by_score_str"),
-      (children: Seq[Expression]) => {
-        checkArity("top_k_by_score_str", 3, children)
-        TopKByScoreStr(children(0), children(1),
-          intLit("top_k_by_score_str", "k", 2, children))
-          .toAggregateExpression()
-      }))
+    // one aggregate for a bigint or a string id; `top_k_by_score_str`
+    // is its older string-id name
+    Seq("top_k_by_score", "top_k_by_score_str").foreach { name =>
+      kernel(name, 3, TopKByScore)(a =>
+        TopKByScore(a.col(0), a.col(1), a.int(2, "k")))
+    }
   }
 }
 

@@ -1,12 +1,11 @@
 package graft.expressions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil, TypeUtils}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Bounded top-k aggregate: keeps the k highest-scoring (score, id)
@@ -20,8 +19,15 @@ import org.apache.spark.sql.types._
   * (shuffle volume = |corpus| × |queries|); this aggregate shuffles
   * ≤ partitions × k rows per query.
   *
-  * Output: array<struct<score double, id bigint>> sorted score desc,
-  * id asc.
+  * The id is a bigint or a string, and Catalyst does everything that
+  * depends on its type: the id ordering (UTF-8 byte order for
+  * strings, Spark's string sort), the copy of a reused `UTF8String`,
+  * and the partial buffer's serialized form. Scores order like Spark's
+  * DESC sort: NaN first, `0.0 = -0.0`. Rows with a null score or id are
+  * skipped.
+  *
+  * Output: array<struct<score double, id <id type>>> sorted score
+  * desc, id asc.
   */
 case class TopKByScore(
     score: Expression,
@@ -29,62 +35,60 @@ case class TopKByScore(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKBuffer] {
+    extends TypedImperativeAggregate[TopKBuffer] with ExpectsInputTypes {
 
   require(k > 0, "k must be positive")
 
   override def children: Seq[Expression] = Seq(score, id)
+  override def inputTypes =
+    Seq(DoubleType, Bridge.exactly(LongType, StringType))
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("score", DoubleType, nullable = false),
-    StructField("id", LongType, nullable = false))), containsNull = false)
+    StructField("id", id.dataType, nullable = false))), containsNull = false)
   override def prettyName: String = "top_k_by_score"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (score.dataType, id.dataType) match {
-      case (DoubleType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (s, i) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (double, bigint), got " +
-          s"${s.simpleString}/${i.simpleString}")
-    }
+  @transient private lazy val idOrdering =
+    TypeUtils.getInterpretedOrdering(id.dataType)
+  // a partial buffer travels as its emitted array, in UnsafeRow form
+  @transient private lazy val toUnsafe =
+    UnsafeProjection.create(Array[DataType](dataType))
 
-  override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
+  override def createAggregationBuffer(): TopKBuffer =
+    new TopKBuffer(k, idOrdering)
 
   override def update(buf: TopKBuffer, input: InternalRow): TopKBuffer = {
     val s = score.eval(input)
-    val i = id.eval(input)
-    if (s != null && i != null)
-      buf.offer(s.asInstanceOf[Double], i.asInstanceOf[Long])
+    // most rows lose on score alone; their id is never read
+    if (s != null && buf.mayAdmit(s.asInstanceOf[Double])) {
+      val i = id.eval(input)
+      if (i != null) buf.offer(s.asInstanceOf[Double], i)
+    }
     buf
   }
 
   override def merge(buf: TopKBuffer, other: TopKBuffer): TopKBuffer = {
-    buf.mergeFrom(other); buf
+    other.items.foreach { case (s, i) => buf.offer(s, i) }
+    buf
   }
 
-  override def eval(buf: TopKBuffer): Any = {
-    val sorted = buf.sortedDesc
-    new GenericArrayData(sorted.map { case (s, i) =>
-      InternalRow(s, i)
-    })
-  }
+  override def eval(buf: TopKBuffer): Any =
+    new GenericArrayData(buf.sortedDesc.map { case (s, i) => InternalRow(s, i) })
 
-  override def serialize(buf: TopKBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    val items = buf.items
-    out.writeInt(items.length)
-    items.foreach { case (s, i) => out.writeDouble(s); out.writeLong(i) }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: TopKBuffer): Array[Byte] =
+    toUnsafe(InternalRow(eval(buf))).getBytes
 
   override def deserialize(bytes: Array[Byte]): TopKBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new TopKBuffer(k)
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    val pairs = row.getArray(0)
+    val buf = createAggregationBuffer()
     var j = 0
-    while (j < n) { buf.offer(in.readDouble(), in.readLong()); j += 1 }
+    while (j < pairs.numElements()) {
+      val p = pairs.getStruct(j, 2)
+      buf.offer(p.getDouble(0), p.get(1, id.dataType))
+      j += 1
+    }
     buf
   }
 
@@ -97,44 +101,51 @@ case class TopKByScore(
     copy(score = newChildren(0), id = newChildren(1))
 }
 
-/** Bounded min-heap of (score, id): evicts the WORST element — lowest
-  * score, ties by larger id — so the kept set matches the first k rows
-  * of (score DESC, id ASC) ordering deterministically.
-  */
-final class TopKBuffer(k: Int) {
-  // ordering where the head is the worst kept element
-  private val heap = new java.util.PriorityQueue[(Double, Long)](
-    k, (a: (Double, Long), b: (Double, Long)) => {
-      val c = java.lang.Double.compare(a._1, b._1)
-      if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-    })
+object TopKByScore {
 
-  def offer(score: Double, id: Long): Unit = {
-    if (heap.size < k) { heap.offer((score, id)); () }
-    else {
-      val worst = heap.peek()
-      // Double.compare, not primitive > : NaN must order ABOVE every
-      // value (Spark's DESC sort puts NaN first), or NaN-scored rows
-      // would be silently dropped here but ranked first by the window
-      // formulation this aggregate claims to match
-      val c = java.lang.Double.compare(score, worst._1)
-      val better = c > 0 || (c == 0 && id < worst._2)
-      if (better) { heap.poll(); heap.offer((score, id)); () }
-    }
+  /** The aggregate over `score` (double) and `id` (bigint or string),
+    * as a column for `agg` (SQL `top_k_by_score`).
+    */
+  def apply(score: Column, id: Column, k: Int): Column =
+    Bridge.column(new TopKByScore(Bridge.expression(score),
+      Bridge.expression(id), k).toAggregateExpression())
+}
+
+/** Bounded heap of (score, id) whose head is the WORST kept pair —
+  * lowest score, ties by larger id — so the kept set is the first k
+  * pairs of the (score DESC, id ASC) emission order.
+  */
+final class TopKBuffer(k: Int, idOrdering: Ordering[Any]) {
+
+  /** Negative when `a` is emitted before `b`. */
+  private def rank(as: Double, ai: Any, bs: Double, bi: Any): Int = {
+    val c = SQLOrderingUtil.compareDoubles(bs, as)
+    if (c != 0) c else idOrdering.compare(ai, bi)
   }
 
-  def mergeFrom(other: TopKBuffer): Unit =
-    other.items.foreach { case (s, i) => offer(s, i) }
+  private val heap = new java.util.PriorityQueue[(Double, Any)](
+    k, (a: (Double, Any), b: (Double, Any)) => rank(b._1, b._2, a._1, a._2))
 
-  def items: Array[(Double, Long)] =
-    heap.toArray(Array.empty[(Double, Long)])
+  /** False when a pair with this score cannot be kept, whatever its id. */
+  def mayAdmit(score: Double): Boolean =
+    heap.size < k || SQLOrderingUtil.compareDoubles(score, heap.peek()._1) >= 0
 
-  /** (score desc, id asc) — the emission order; NaN sorts first, like
-    * Spark's DESC ordering.
+  /** Offer a pair; an admitted id is copied, since the caller's value
+    * (a scan's `UTF8String`) may be reused for the next row.
     */
-  def sortedDesc: Array[(Double, Long)] =
-    items.sortWith { (a, b) =>
-      val c = java.lang.Double.compare(a._1, b._1)
-      if (c != 0) c > 0 else a._2 < b._2
+  def offer(score: Double, id: Any): Unit =
+    if (heap.size < k) heap.offer((score, InternalRow.copyValue(id)))
+    else {
+      val worst = heap.peek()
+      if (rank(score, id, worst._1, worst._2) < 0) {
+        heap.poll()
+        heap.offer((score, InternalRow.copyValue(id)))
+      }
     }
+
+  def items: Array[(Double, Any)] = heap.toArray(Array.empty[(Double, Any)])
+
+  /** (score desc, id asc) — the emission order. */
+  def sortedDesc: Array[(Double, Any)] =
+    items.sortWith((a, b) => rank(a._1, a._2, b._1, b._2) < 0)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.functions.TextFns
+import graft.expressions.TopKByScore
+import graft.functions.{Par, TextFns}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -34,12 +35,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Corpus {
 
-  /** Spread a (possibly single-split) corpus before per-row text work —
-    * see Dedup.fanOut for rationale.
-    */
-  private def fanOut(df: DataFrame): DataFrame =
-    graft.functions.Par.fanOut(df) // gated repartition (r15) — see Par
-
   /** Distinct word n-gram shingles via the codegen
     * [[graft.expressions.WordShingles]] kernel — semantically
     * `array_distinct(TextFns.shingles(c, n))`, but the declarative HOF
@@ -60,8 +55,8 @@ object Corpus {
     * (score desc, token asc).
     *
     * (r15 A/B note: a bounded-heap rewrite of the per-doc rank — the
-    * shared TopKByScoreStr aggregate with the (token, tf, df) payload
-    * NUL-encoded in the heap id — measured 0.92× at bench scale and
+    * shared TopKByScore aggregate with the (token, tf, df) payload
+    * NUL-encoded in a string heap id — measured 0.92× at bench scale and
     * was REVERTED: per-doc groups are small, so the window sort is
     * cheap, while the TypedImperativeAggregate pays object
     * aggregation + buffer serialization per partial. The heap form
@@ -71,7 +66,7 @@ object Corpus {
     */
   def tfidf(docs: DataFrame, idCol: String, textCol: String,
             topK: Int): DataFrame = {
-    val tf = fanOut(docs)
+    val tf = Par.fanOut(docs)
       .select(col(idCol), explode(TextFns.toks(col(textCol))).as("token"))
       .groupBy(col(idCol), col("token"))
       .agg(count(lit(1)).as("tf"))
@@ -160,11 +155,7 @@ object Corpus {
     val lnFx = floor(log(u) * 1e12 + 0.5).cast(LongType)
     val e = (-lnFx).cast(DoubleType) / lit(1e12) /
       col(weightCol).cast(DoubleType)
-    val topk = Bridge.column(
-      graft.expressions.TopKByScore(
-        Bridge.expression(-e),
-        Bridge.expression(col(idCol).cast(LongType)), k)
-        .toAggregateExpression())
+    val topk = TopKByScore(-e, col(idCol).cast(LongType), k)
     val winners = df
       .filter(col(weightCol).isNotNull && col(weightCol) > 0)
       .agg(topk.as("__topk"))
@@ -415,7 +406,7 @@ object Corpus {
   def dropBoilerplateLines(docs: DataFrame, idCol: String,
                            textCol: String, maxDocFreq: Int): DataFrame = {
     require(maxDocFreq >= 1, s"maxDocFreq must be >= 1, got $maxDocFreq")
-    val pos = fanOut(docs).select(col(idCol),
+    val pos = Par.fanOut(docs).select(col(idCol),
         posexplode(split(col(textCol), "\r?\n")).as(Seq("li", "raw")))
       .select(col(idCol), col("li"), trim(col("raw")).as("line"))
     val lineDocs = pos.select(col(idCol), col("line")).distinct()
@@ -453,7 +444,7 @@ object Corpus {
     */
   def ngramNovelty(docs: DataFrame, idCol: String, textCol: String,
                    n: Int): DataFrame = {
-    val grams = fanOut(docs).select(col(idCol),
+    val grams = Par.fanOut(docs).select(col(idCol),
       // codegen distinct-shingle kernel (first-occurrence order, the
       // array_distinct(shingles) convention — r14)
       explode(graft.expressions.WordShingles(TextFns.toks(col(textCol)), n))
@@ -481,7 +472,7 @@ object Corpus {
     val grams = transform(
       sequence(lit(1), size(toks) - (n - 1)),
       i => array_join(slice(toks, i, lit(n)), " "))
-    val positions = fanOut(docs)
+    val positions = Par.fanOut(docs)
       .select(col(idCol), explode(when(size(toks) >= n, grams)).as("gram"))
     // distinct docs per gram: distinct pairs first (hash agg), then
     // count — both shuffles keyed by gram, map-side combined
@@ -532,7 +523,7 @@ object Corpus {
     // (the pageRankFrom/decontaminateBloom convention) so the corpus
     // tokenize scan and the gram-keyed election shuffle run once, not
     // once per downstream subtree
-    val base = fanOut(docs).select(col(idCol), toksC.as("__t"))
+    val base = Par.fanOut(docs).select(col(idCol), toksC.as("__t"))
       .persist(MEMORY_AND_DISK)
     val grams = base.select(col(idCol),
         // codegen n-gram kernel (r14): the transform/slice/array_join
@@ -584,14 +575,10 @@ object Corpus {
     * through the heap's score is exact.
     */
   def vocabTopK(docs: DataFrame, textCol: String, k: Int): DataFrame = {
-    val counts = fanOut(docs)
+    val counts = Par.fanOut(docs)
       .select(explode(TextFns.toks(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("ct"))
-    val topk = Bridge.column(
-      graft.expressions.TopKByScoreStr(
-        Bridge.expression(col("ct").cast(DoubleType)),
-        Bridge.expression(col("token")), k)
-        .toAggregateExpression())
+    val topk = TopKByScore(col("ct").cast(DoubleType), col("token"), k)
     counts.agg(topk.as("topk"))
       .select(posexplode(col("topk")).as(Seq("pos", "t")))
       .select(col("t.id").as("token"),
@@ -622,7 +609,7 @@ object Corpus {
     * (N, V) totals are a broadcast 1-row crossJoin.
     */
   def lmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = fanOut(docs)
+    val tok = Par.fanOut(docs)
       .select(col(idCol), explode(TextFns.toks(col(textCol))).as("token"))
     val counts = tok.groupBy(col("token")).agg(count(lit(1)).as("__c"))
     val totals = counts.agg(sum(col("__c")).as("__N"),
@@ -696,11 +683,8 @@ object Corpus {
     require(Seq(ByteType, ShortType, IntegerType, LongType)
       .contains(idType),
       s"capPerKey needs an integral idCol, got ${idType.simpleString}")
-    val topk = Bridge.column(
-      graft.expressions.TopKByScore(
-        Bridge.expression(col(scoreCol).cast(DoubleType)),
-        Bridge.expression(col(idCol).cast(LongType)), k)
-        .toAggregateExpression())
+    val topk = TopKByScore(col(scoreCol).cast(DoubleType),
+      col(idCol).cast(LongType), k)
     df.groupBy(col(keyCol)).agg(topk.as("__topk"))
       .select(col(keyCol), posexplode(col("__topk")).as(Seq("__pos", "__t")))
       .select(col(keyCol), col("__t.id").as(idCol),
@@ -815,7 +799,7 @@ object Corpus {
     * the one-shot and incremental paths cannot drift.
     */
   def evalGramIndex(eval: DataFrame, textCol: String, n: Int): DataFrame =
-    fanOut(eval).select(
+    Par.fanOut(eval).select(
         explode(distinctShingles(col(textCol), n))
           .as("gram"))
       .distinct()
@@ -841,13 +825,13 @@ object Corpus {
                           trainIdCol: String, evalIdCol: String,
                           textCol: String, n: Int,
                           maxGramDocFreq: Int = 1000): DataFrame = {
-    val tg = fanOut(train).select(col(trainIdCol),
+    val tg = Par.fanOut(train).select(col(trainIdCol),
       explode(distinctShingles(col(textCol), n)).as("gram"))
     val rare = tg.groupBy(col("gram"))
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxGramDocFreq)
       .select(col("gram"))
-    val eg = fanOut(eval).select(col(evalIdCol),
+    val eg = Par.fanOut(eval).select(col(evalIdCol),
       explode(distinctShingles(col(textCol), n)).as("gram"))
     val etot = eval.select(col(evalIdCol),
       size(distinctShingles(col(textCol), n)).cast("long")
@@ -884,7 +868,7 @@ object Corpus {
     val idx = gramIndex.select(col("gram"))
     val evalGrams = (if (assumeDistinct) idx else idx.distinct())
       .withColumn("__hit", lit(1L))
-    fanOut(train).select(col(idCol),
+    Par.fanOut(train).select(col(idCol),
         explode(distinctShingles(col(textCol), n))
           .as("gram"))
       .join(evalGrams, Seq("gram"), "left")
@@ -935,7 +919,7 @@ object Corpus {
             s"grids are integer arithmetic); '$c' is ${other.simpleString}")
       }
     }
-    val base = fanOut(docs).select(col(idCol),
+    val base = Par.fanOut(docs).select(col(idCol),
         col(scoreCol).cast("long").as("__s"),
         size(TextFns.toks(col(textCol))).cast("long").as("__n"))
       .localCheckpoint()
@@ -1023,7 +1007,7 @@ object Corpus {
     require(n >= 1, s"block size must be >= 1, got $n")
     val toks = TextFns.toks(col(textCol))
     val nBlocks = ceil(size(toks) / lit(n.toDouble)).cast("int")
-    val b = fanOut(docs).select(col(idCol),
+    val b = Par.fanOut(docs).select(col(idCol),
         explode(transform(sequence(lit(0), nBlocks - 1), i =>
           struct(i.cast("int").as("bi"),
             array_join(slice(toks, i * n + 1, lit(n)), " ").as("btxt"))))
@@ -1064,7 +1048,7 @@ object Corpus {
     val nChunks = greatest(
       ceil((size(toks) - overlap) / lit(stride.toDouble)).cast("int"),
       lit(1))
-    fanOut(docs).select(col(idCol),
+    Par.fanOut(docs).select(col(idCol),
         explode(transform(sequence(lit(0), nChunks - 1), i =>
           struct(i.cast("int").as("chunk_idx"),
             slice(toks, i * stride + 1, lit(maxTokens)).as("ctoks"))))
@@ -1147,7 +1131,7 @@ object Corpus {
   def packSequences(docs: DataFrame, idCol: String, textCol: String,
                     seqLen: Int, bucketSize: Int = 0): DataFrame = {
     val toks = TextFns.toks(col(textCol))
-    val base = fanOut(docs).select(col(idCol), col(textCol),
+    val base = Par.fanOut(docs).select(col(idCol), col(textCol),
       size(toks).cast("long").as("__n"))
     packLayout(base, idCol, seqLen, bucketSize)
       .select(col(idCol), col("seq_id"),
@@ -1182,7 +1166,7 @@ object Corpus {
   def packSequencesCounts(docs: DataFrame, idCol: String,
                           nTokCol: String, seqLen: Int,
                           bucketSize: Int = 0): DataFrame = {
-    val base = fanOut(docs).select(col(idCol),
+    val base = Par.fanOut(docs).select(col(idCol),
       col(nTokCol).cast("long").as("__n"))
     packLayout(base, idCol, seqLen, bucketSize)
       .select(col(idCol), col("seq_id"),
@@ -1345,7 +1329,7 @@ object Corpus {
         org.apache.spark.sql.catalyst.expressions.Literal(
           bloomBytes, org.apache.spark.sql.types.BinaryType),
         Bridge.expression(xxhash64(g))))
-    val shingled = fanOut(train).select(col(idCol),
+    val shingled = Par.fanOut(train).select(col(idCol),
       distinctShingles(col(textCol), n).as("__g"))
     // narrow totals — explode semantics kept: zero-gram docs drop out
     val totals = shingled
@@ -1379,7 +1363,7 @@ object Corpus {
     */
   def rareTokenStats(docs: DataFrame, idCol: String, textCol: String,
                      dfMax: Long): DataFrame = {
-    val positions = fanOut(docs)
+    val positions = Par.fanOut(docs)
       .select(col(idCol), explode(TextFns.toks(col(textCol))).as("token"))
     val df = positions.distinct()
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -1428,7 +1412,7 @@ object Corpus {
                        targetPred: Column, buckets: Int = 64,
                        scale: Long = 1000000L): DataFrame = {
     require(buckets > 0 && scale > 0, s"buckets/scale must be positive")
-    val toks = fanOut(docs).select(col(idCol), targetPred.as("__tgt"),
+    val toks = Par.fanOut(docs).select(col(idCol), targetPred.as("__tgt"),
         explode(TextFns.toks(col(textCol))).as("token"))
       .select(col(idCol), col("__tgt"),
         (TextFns.hash32(col("token")) % buckets).as("bucket"))
@@ -1487,7 +1471,7 @@ object Corpus {
     val spark = docs.sparkSession
     import spark.implicits._
     val US = "\u001f"
-    var vocab = fanOut(docs)
+    var vocab = Par.fanOut(docs)
       .select(explode(TextFns.toks(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
@@ -1612,7 +1596,7 @@ object Corpus {
     */
   def temperatureMix(docs: DataFrame, srcCol: String,
                      textCol: String): DataFrame = {
-    val perSrc = fanOut(docs)
+    val perSrc = Par.fanOut(docs)
       .select(col(srcCol).as("source"),
         size(TextFns.toks(col(textCol))).cast("long").as("__nt"))
       .groupBy(col("source"))
@@ -1699,7 +1683,7 @@ object Corpus {
                     n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val grams = fanOut(docs)
+    val grams = Par.fanOut(docs)
       .select(col(idCol),
         explode(distinctShingles(col(textCol), n)).as("__gram"))
       .persist(MEMORY_AND_DISK)
@@ -1735,7 +1719,7 @@ object Corpus {
                     textCol: String): DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val st = fanOut(docs)
+    val st = Par.fanOut(docs)
       .select(col(groupCol),
         explode(TextFns.toks(col(textCol))).as("__tok"))
       .groupBy(col(groupCol), col("__tok"))
@@ -1778,7 +1762,7 @@ object Corpus {
                     textCol: String): DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val st = fanOut(docs)
+    val st = Par.fanOut(docs)
       .select(col(groupCol),
         explode(TextFns.toks(col(textCol))).as("__tok"))
       .groupBy(col(groupCol), col("__tok"))
@@ -1826,7 +1810,7 @@ object Corpus {
                          mergeTable: DataFrame): DataFrame = {
     val enc = bpeEncode(docs, idCol, textCol, mergeTable)
       .select(col(idCol), col("n_bpe"))
-    fanOut(docs)
+    Par.fanOut(docs)
       .select(col(idCol), col(groupCol),
         size(TextFns.toks(col(textCol))).cast("long").as("__nw"))
       .join(enc, Seq(idCol))
@@ -1909,7 +1893,7 @@ object Corpus {
   def mixtureWeights(docs: DataFrame, groupCol: String,
                      textCol: String): DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
-    val grp = fanOut(docs)
+    val grp = Par.fanOut(docs)
       .select(col(groupCol),
         size(TextFns.toks(col(textCol))).cast("long").as("__nt"))
       .groupBy(col(groupCol)).agg(sum(col("__nt")).as("n_tokens"))

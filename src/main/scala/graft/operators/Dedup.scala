@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{TextFns, VectorFns}
+import graft.functions.{Par, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -106,7 +106,7 @@ object Dedup {
   def dedupParagraphs(docs: DataFrame, idCol: String, textCol: String,
                       sep: String = "\n\n"): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pars = fanOut(docs)
+    val pars = Par.fanOut(docs)
       .select(col(idCol),
         posexplode(split(col(textCol),
           java.util.regex.Pattern.quote(sep))).as(Seq("__idx", "__p")))
@@ -133,15 +133,6 @@ object Dedup {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
 
-  /** Spread a (possibly single-split) corpus across the cluster before
-    * CPU-heavy per-row work: hashing/shingling cost dwarfs the shuffle
-    * of raw text. Gated (r15): on a real cluster big inputs arrive
-    * pre-split and the shuffle is skipped outright — see
-    * [[graft.functions.Par.fanOut]].
-    */
-  private def fanOut(df: DataFrame): DataFrame =
-    graft.functions.Par.fanOut(df) // gated repartition (r15) — see Par
-
   /** Agreeing-position count between two MinHash signatures via the
     * codegen [[graft.expressions.SigAgreeCount]] kernel — semantically
     * `size(filter(zip_with(a, b, ===), x => x))`, which runs an
@@ -159,7 +150,7 @@ object Dedup {
     */
   private def shingled(docs: DataFrame, idCol: String, textCol: String,
                        n: Int): DataFrame =
-    fanOut(docs).select(col(idCol).as("did"),
+    Par.fanOut(docs).select(col(idCol).as("did"),
         explode(graft.expressions.WordShingles(
           TextFns.toks(col(textCol)), n)).as("sh"))
 
@@ -392,7 +383,7 @@ object Dedup {
                    maxHamming: Int): DataFrame = {
     require(maxHamming <= 3,
       "4-band pigeonhole blocking only covers Hamming <= 3")
-    val sigs = fanOut(docs).select(col(idCol).as("did"),
+    val sigs = Par.fanOut(docs).select(col(idCol).as("did"),
         graft.expressions.SimHashMd5(TextFns.toks(col(textCol)), 16)
           .as("sig"))
       .filter(col("sig").isNotNull) // null text/zero tokens: doc dropped
@@ -441,7 +432,7 @@ object Dedup {
     */
   def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
                   n: Int, k: Int): DataFrame =
-    fanOut(docs).select(col(idCol).as("did"),
+    Par.fanOut(docs).select(col(idCol).as("did"),
         graft.expressions.MinHashSig(TextFns.toks(col(textCol)), k, n)
           .as("sig"))
       .filter(col("sig").isNotNull)
@@ -480,7 +471,7 @@ object Dedup {
     */
   def simhash64Sigs(docs: DataFrame, idCol: String,
                     textCol: String): DataFrame =
-    fanOut(docs).select(col(idCol).as("did"),
+    Par.fanOut(docs).select(col(idCol).as("did"),
         graft.expressions.SimHash64(TextFns.toks(col(textCol))).as("sig"))
       // null sig = null text or zero tokens — the aggregate path's
       // groupBy drops such docs; match it
@@ -492,7 +483,7 @@ object Dedup {
     */
   private[operators] def simhash64SigsAgg(docs: DataFrame, idCol: String,
                                           textCol: String): DataFrame = {
-    val hashed = fanOut(docs).select(col(idCol).as("did"),
+    val hashed = Par.fanOut(docs).select(col(idCol).as("did"),
         explode(TextFns.toks(col(textCol))).as("t"))
       .select(col("did"), xxhash64(col("t")).as("m"))
     // bitwiseAND, not shiftright+mod: m is signed and bit 63 matters
@@ -518,7 +509,7 @@ object Dedup {
     */
   def simhash64Md5Sigs(docs: DataFrame, idCol: String,
                        textCol: String): DataFrame =
-    fanOut(docs).select(col(idCol).as("did"),
+    Par.fanOut(docs).select(col(idCol).as("did"),
         graft.expressions.SimHashMd5(TextFns.toks(col(textCol)), 64)
           .as("sig"))
       .filter(col("sig").isNotNull)
@@ -806,7 +797,7 @@ object Dedup {
   def embeddingPairs(embs: DataFrame, idCol: String, vecCol: String,
                      threshold: Double, planes: Int = 8,
                      tables: Int = 1): DataFrame = {
-    val b = fanOut(embs).select(col(idCol).as("vid"), col(vecCol).as("v"),
+    val b = Par.fanOut(embs).select(col(idCol).as("vid"), col(vecCol).as("v"),
         explode(array((0 until tables).map(t =>
           struct(lit(t).as("t"),
             VectorFns.lshBucket(col(vecCol), planes, t).as("bucket"))): _*))
@@ -887,7 +878,8 @@ object Dedup {
     require(planes >= 1 && planes <= 62,
       s"planes must be in [1,62] (bucket ids are a long bitmask), " +
         s"got $planes")
-    val m = fanOut(embs).select(col(idCol).as("__id"), col(vecCol).as("__v"),
+    val m = Par.fanOut(embs).select(col(idCol).as("__id"),
+      col(vecCol).as("__v"),
       VectorFns.lshBucket(col(vecCol), planes).as("bucket"))
     val reps = m.groupBy(col("bucket")).agg(min(col("__id")).as("rep_id"))
     val repVecs = m.select(col("__id"), col("__v"))

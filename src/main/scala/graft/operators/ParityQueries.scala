@@ -557,14 +557,10 @@ object ParityQueries {
         |  row_number() OVER (ORDER BY ct DESC, user_id) AS rn
         | FROM (SELECT user_id, COUNT(*) AS ct FROM events GROUP BY user_id))
         |WHERE rn <= 24 ORDER BY rn""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.graftbridge.Bridge
       val counts = events(s, d).groupBy(col("user_id"))
         .agg(count(lit(1)).as("ct"))
-      val topk = Bridge.column(
-        graft.expressions.TopKByScore(
-          Bridge.expression(col("ct").cast(DoubleType)),
-          Bridge.expression(col("user_id")), 24)
-          .toAggregateExpression())
+      val topk = graft.expressions.TopKByScore(
+        col("ct").cast(DoubleType), col("user_id"), 24)
       counts.agg(topk.as("topk"))
         .select(posexplode(col("topk")).as(Seq("pos", "t")))
         .select(col("t.id").as("user_id"),

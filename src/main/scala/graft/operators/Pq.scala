@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Cols, TextFns}
+import graft.functions.{Cols, Par, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -42,9 +42,6 @@ import org.apache.spark.sql.types.DoubleType
   * vectors.
   */
 object Pq {
-
-  private def fanOut(df: DataFrame): DataFrame =
-    graft.functions.Par.fanOut(df) // gated repartition (r15) — see Par
 
   /** Sequential-fold squared-L2 distance between a float subvector and
     * a double codeword — bit-matches the oracle's
@@ -100,7 +97,7 @@ object Pq {
           (c.toLong, v.slice(s * dsub, (s + 1) * dsub).toIndexedSeq)
         }.toSeq
       }
-    val vs = subvecs(fanOut(emb), idCol, vecCol, m, dsub)
+    val vs = subvecs(Par.fanOut(emb), idCol, vecCol, m, dsub)
     // assignment = ONE narrow per-subspace NearestCells projection
     // (r14: replaces the broadcast join + per-(vector, subspace)
     // row_number window, which shuffled |corpus| × m × ksub
@@ -172,7 +169,7 @@ object Pq {
           r.getSeq[Number](2).map(_.doubleValue()).toIndexedSeq))
         .sortBy(_._1).toSeq
     }
-    val vs = subvecs(fanOut(batch), idCol, vecCol, m, dsub)
+    val vs = subvecs(Par.fanOut(batch), idCol, vecCol, m, dsub)
     // try_element_at (r15, advice hardening): a sub with no codebook
     // rows makes NearestCells return an EMPTY array, and under Spark
     // 4's default ANSI mode a plain element_at(empty, 1) throws before
@@ -342,7 +339,7 @@ object Pq {
           explode(graft.expressions.NearestCells.single(
             col("__v"), seedCents, keep, bySqDist = false)).as("__c"))
         .select(col(id), col("__c.cell").as("__cell0"))
-    val corpusCells = assign(fanOut(corpus), "neighbor_id", 1)
+    val corpusCells = assign(Par.fanOut(corpus), "neighbor_id", 1)
     val queryProbes = assign(queries, "query_id", nProbe)
     val cand = corpusCells.join(broadcast(queryProbes), Seq("__cell0"))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -1,10 +1,9 @@
 package graft.operators
 
 import graft.expressions.TopKByScore
-import graft.functions.{TextFns, VectorFns}
+import graft.functions.{Par, TextFns, VectorFns}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -21,12 +20,6 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object Similarity {
 
-  /** Spread a (possibly single-split) corpus before per-row vector math
-    * — see Dedup.fanOut for rationale.
-    */
-  private def fanOut(df: DataFrame): DataFrame =
-    graft.functions.Par.fanOut(df) // gated repartition (r15) — see Par
-
   /** Per-query top-k of `scored(query_id, neighbor_id, cosine)` via the
     * bounded-heap aggregate [[graft.expressions.TopKByScore]] — runs
     * map-side, so the shuffle carries ≤ partitions × k rows per query
@@ -35,10 +28,7 @@ object Similarity {
     * `row_number() OVER (ORDER BY cosine DESC, neighbor_id)` exactly.
     */
   private[operators] def topK(scored: DataFrame, k: Int): DataFrame = {
-    val agg = Bridge.column(
-      TopKByScore(Bridge.expression(col("cosine")),
-        Bridge.expression(col("neighbor_id")), k)
-        .toAggregateExpression())
+    val agg = TopKByScore(col("cosine"), col("neighbor_id"), k)
     scored.groupBy(col("query_id")).agg(agg.as("topk"))
       .select(col("query_id"),
         posexplode(col("topk")).as(Seq("pos", "t")))
@@ -54,7 +44,7 @@ object Similarity {
                idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv"))
-    val c = fanOut(corpus).select(col(idCol).as("neighbor_id"),
+    val c = Par.fanOut(corpus).select(col(idCol).as("neighbor_id"),
       col(vecCol).as("cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", VectorFns.cosine(col("qv"), col("cv")))
@@ -84,7 +74,7 @@ object Similarity {
       col(vecCol).as("qv"))
     val pos = positives.select(col(posQueryCol).as("__pq"),
       col(posDocCol).as("__pd"))
-    val c = fanOut(corpus).select(col(idCol).as("neighbor_id"),
+    val c = Par.fanOut(corpus).select(col(idCol).as("neighbor_id"),
       col(vecCol).as("cv"))
     val scored = c
       .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
@@ -254,7 +244,7 @@ object Similarity {
                      labelCol: String,
                      threshold: Double = 0.0): DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
-    val pos = fanOut(emb.filter(col(labelCol).isNotNull))
+    val pos = Par.fanOut(emb.filter(col(labelCol).isNotNull))
       .select(col(idCol), col(labelCol).as("label"),
         posexplode(col(vecCol)).as(Seq("pos", "__f")))
       .withColumn("__v", col("__f").cast("double"))
@@ -314,7 +304,7 @@ object Similarity {
   def centroidCounts(df: DataFrame, groupCol: String,
                      vecCol: String): DataFrame = {
     import graft.functions.Cols.fxSum
-    val fanned = fanOut(df)
+    val fanned = Par.fanOut(df)
     val dims = fanned
       .select(col(groupCol),
         posexplode(col(vecCol)).as(Seq("pos", "__f")))
@@ -615,10 +605,10 @@ object Similarity {
     val seeds =
       if (refineIters <= 0) seeds0
       else refineSeeds(
-        fanOut(corpus).select(col(idCol).as("vid"), col(vecCol).as("v")),
+        Par.fanOut(corpus).select(col(idCol).as("vid"), col(vecCol).as("v")),
         seeds0, refineIters, refineFraction)
     IvfIndexFrames(seeds,
-      assignCells(seeds, fanOut(corpus), idCol, vecCol,
+      assignCells(seeds, Par.fanOut(corpus), idCol, vecCol,
         "neighbor_id", "cv", 1))
   }
 
@@ -633,7 +623,7 @@ object Similarity {
     */
   def ivfAppend(index: IvfIndexFrames, batch: DataFrame,
                 idCol: String, vecCol: String): DataFrame =
-    assignCells(index.centroids, fanOut(batch), idCol, vecCol,
+    assignCells(index.centroids, Par.fanOut(batch), idCol, vecCol,
       "neighbor_id", "cv", 1)
 
   /** Cell-balance report over an IVF index — the operational health
@@ -792,7 +782,7 @@ object Similarity {
                       nProbe: Int = 4)(
       consume: (DataFrame, DataFrame) => T): T = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    val ranked = assignCellsRanked(index.centroids, fanOut(batch),
+    val ranked = assignCellsRanked(index.centroids, Par.fanOut(batch),
         idCol, vecCol, "query_id", "qv", nProbe)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -885,7 +875,7 @@ object Similarity {
         .select(col(id), col(v), col("tb.t").as("t"),
           col("tb.bucket").as("bucket"))
     val q = withBuckets(queries, "query_id", "qv")
-    val c = withBuckets(fanOut(corpus), "neighbor_id", "cv")
+    val c = withBuckets(Par.fanOut(corpus), "neighbor_id", "cv")
     val cand = c.join(broadcast(q), Seq("t", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -936,7 +926,7 @@ object Similarity {
         (i.toLong,
           r.getSeq[Number](1).map(_.doubleValue()).toIndexedSeq)
       }
-    val vecs = fanOut(emb)
+    val vecs = Par.fanOut(emb)
       .select(col(idCol).as("vid"), col(vecCol).as("v"))
     // assignment = ONE narrow NearestCells projection (r14: replaces
     // the broadcast join + per-vector row_number window, which
@@ -989,7 +979,7 @@ object Similarity {
                       tables: Int = 1): DataFrame = {
     import graft.functions.VectorFns
     def bucketed(df: DataFrame, idName: String, vName: String) =
-      fanOut(df).select(col(idCol).as(idName), col(vecCol).as(vName),
+      Par.fanOut(df).select(col(idCol).as(idName), col(vecCol).as(vName),
           explode(array((0 until tables).map(t =>
             struct(lit(t).as("t"),
               VectorFns.lshBucket(col(vecCol), planes, t).as("bucket")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFns
+import graft.functions.{Par, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -10,12 +10,6 @@ import org.apache.spark.sql.types.DoubleType
   * pass over the corpus, no shuffle, fully codegen'd.
   */
 object TextAnalysis {
-
-  /** Spread a (possibly single-split) corpus before per-row text work —
-    * see Dedup.fanOut for rationale.
-    */
-  private def fanOut(df: DataFrame): DataFrame =
-    graft.functions.Par.fanOut(df) // gated repartition (r15) — see Par
 
   /** Per-language stopword lists for the n-gram/stopword language-ID
     * heuristic. Deliberately tiny and public-knowledge; real pipelines
@@ -33,17 +27,18 @@ object TextAnalysis {
     */
   def tokenStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col("__toks")
-    fanOut(docs).withColumn("__toks", TextFns.toks(col(textCol))).select(col(idCol),
-      size(t).cast("long").as("n_tokens"),
-      size(array_distinct(t)).cast("long").as("n_distinct"),
-      length(col(textCol)).cast("long").as("n_chars"),
-      (aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast(DoubleType) /
-        size(t).cast(DoubleType)).as("avg_token_len"),
-      // BPE-ish subword proxy: words + single digits + punct runs —
-      // the shape of a GPT-2-style pre-tokenizer pass
-      size(regexp_extract_all(col(textCol),
-        lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
-        .cast("long").as("bpeish_tokens"))
+    Par.fanOut(docs).withColumn("__toks", TextFns.toks(col(textCol)))
+      .select(col(idCol),
+        size(t).cast("long").as("n_tokens"),
+        size(array_distinct(t)).cast("long").as("n_distinct"),
+        length(col(textCol)).cast("long").as("n_chars"),
+        (aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast(DoubleType) /
+          size(t).cast(DoubleType)).as("avg_token_len"),
+        // BPE-ish subword proxy: words + single digits + punct runs —
+        // the shape of a GPT-2-style pre-tokenizer pass
+        size(regexp_extract_all(col(textCol),
+          lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
+          .cast("long").as("bpeish_tokens"))
   }
 
   /** All per-language stopword hit counts in ONE pass over the tokens
@@ -53,7 +48,7 @@ object TextAnalysis {
     * expensive expression into each per-language consumer.
     */
   private def withHits(docs: DataFrame, textCol: String): DataFrame =
-    fanOut(docs).withColumn("__hits",
+    Par.fanOut(docs).withColumn("__hits",
       graft.expressions.StopwordHits(TextFns.toks(col(textCol)),
         stopwords.map(_._2)))
 
@@ -140,7 +135,7 @@ object TextAnalysis {
     // the transform/slice/array_join HOF ran interpreted per element;
     // < n tokens ⇒ empty array, which explode drops like the
     // when-guarded form it replaces)
-    val perGram = fanOut(docs)
+    val perGram = Par.fanOut(docs)
       .select(col(idCol),
         explode(graft.expressions.WordGrams(TextFns.toks(col(textCol)), n))
           .as("gram"))
@@ -188,7 +183,7 @@ object TextAnalysis {
     val indentFrac = indent / nLines
     val termFrac = term / nLines
     val score = symFrac * 5.0 + indentFrac * 2.0 + termFrac * 3.0
-    fanOut(docs).select(col(idCol),
+    Par.fanOut(docs).select(col(idCol),
       symFrac.as("sym_frac"), indentFrac.as("indent_frac"),
       termFrac.as("term_frac"), score.as("code_score"),
       when(score >= threshold, "code").otherwise("prose").as("label"))
@@ -206,7 +201,7 @@ object TextAnalysis {
     // distinct shingles via the codegen WordShingles expression — the
     // min-aggregate is unaffected by distinctness, and the interpreted
     // HOF shingle chain leaves the hot path
-    val shfp = fanOut(docs)
+    val shfp = Par.fanOut(docs)
       .select(col(idCol),
         explode(graft.expressions.WordShingles(
           TextFns.toks(col(textCol)), 3)).as("sh"))
@@ -246,7 +241,7 @@ object TextAnalysis {
     // grid HOF and an array allocation + w interpreted lambda calls
     // per window in the picks HOF. Hashes, tie rule and pick order are
     // replicated exactly (spec- and oracle-pinned).
-    fanOut(docs)
+    Par.fanOut(docs)
       .select(col(idCol),
         explode(graft.expressions.WinnowFingerprints(
           lower(col(textCol)), k, w)).as("f"))
@@ -354,7 +349,7 @@ object TextAnalysis {
     require(vocabSize >= 1 && vocabSize <= (1 << 20),
       s"vocabSize must be in [1, 2^20], got $vocabSize")
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val occ = fanOut(docs)
+    val occ = Par.fanOut(docs)
       .select(col(idCol), explode(TextFns.toks(col(textCol))).as("__tok"))
       .groupBy(col(idCol), col("__tok")).agg(count(lit(1)).as("__m"))
       .persist(MEMORY_AND_DISK)
@@ -402,7 +397,7 @@ object TextAnalysis {
   def sourceDrift(docs: DataFrame, groupCol: String,
                   textCol: String): DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
-    val tok = fanOut(docs).select(col(groupCol).as("grp"),
+    val tok = Par.fanOut(docs).select(col(groupCol).as("grp"),
       explode(TextFns.toks(col(textCol))).as("token"))
     val gc = tok.groupBy(col("grp"), col("token"))
       .agg(count(lit(1)).as("c"))
@@ -446,7 +441,7 @@ object TextAnalysis {
   def sourceEntropy(docs: DataFrame, groupCol: String,
                     textCol: String): DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
-    val tok = fanOut(docs).select(col(groupCol),
+    val tok = Par.fanOut(docs).select(col(groupCol),
       explode(TextFns.toks(col(textCol))).as("token"))
     val counts = tok.groupBy(col(groupCol), col("token"))
       .agg(count(lit(1)).as("__c"))
@@ -501,7 +496,7 @@ object TextAnalysis {
     // train side is a reagg of the cached occurrence table instead of
     // a second full corpus scan+explode (r15, the KN-scorer pattern)
     val selfScore = train eq score
-    val occ0 = fanOut(score)
+    val occ0 = Par.fanOut(score)
       .select(col(idCol), explode(tris(col(textCol))).as("tri"))
       .groupBy(col(idCol), col("tri")).agg(count(lit(1)).as("__m"))
     val occ = if (selfScore)
@@ -509,7 +504,7 @@ object TextAnalysis {
       else occ0
     val c3 = (if (selfScore)
         occ.groupBy(col("tri")).agg(sum(col("__m")).as("__c3"))
-      else fanOut(train)
+      else Par.fanOut(train)
         .select(explode(tris(col(textCol))).as("tri"))
         .groupBy(col("tri")).agg(count(lit(1)).as("__c3")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -571,7 +566,7 @@ object TextAnalysis {
         length(regexp_replace(col(textCol), s"[$cls]", "")))
         .cast("long")
     }
-    val withCounts = counts.foldLeft(fanOut(docs)) {
+    val withCounts = counts.foldLeft(Par.fanOut(docs)) {
       case (df, (name, c)) => df.withColumn(s"n_$name", c)
     }
     // argmax with fixed priority: a later script must be STRICTLY
@@ -661,7 +656,7 @@ object TextAnalysis {
     // so the train side becomes a reagg of the cached occurrence
     // table instead of a second full corpus scan+explode (r15)
     val selfScore = train eq score
-    val occ0 = fanOut(score)
+    val occ0 = Par.fanOut(score)
       .select(col(idCol), explode(bigrams(col(textCol))).as("bg"))
       .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("__m"))
     val occP = if (selfScore) occ0.persist(MEMORY_AND_DISK) else occ0
@@ -669,7 +664,7 @@ object TextAnalysis {
     // the scoring join) — persist it once
     val cb = (if (selfScore)
         occP.groupBy(col("bg")).agg(sum(col("__m")).as("__c12"))
-      else fanOut(train)
+      else Par.fanOut(train)
         .select(explode(bigrams(col(textCol))).as("bg"))
         .groupBy(col("bg")).agg(count(lit(1)).as("__c12")))
       .persist(MEMORY_AND_DISK)
@@ -678,7 +673,7 @@ object TextAnalysis {
     val cont = cb.groupBy(substring_index(col("bg"), " ", -1).as("__w2"))
       .agg(count(lit(1)).as("__n1c"))
     val totals = cb.agg(count(lit(1)).as("__T")).crossJoin(
-      fanOut(train).select(explode(TextFns.toks(col(textCol))).as("__tk"))
+      Par.fanOut(train).select(explode(TextFns.toks(col(textCol))).as("__tk"))
         .agg(countDistinct(col("__tk")).as("__V")))
     val occ = occP
       .withColumn("__w1", substring_index(col("bg"), " ", 1))
@@ -800,7 +795,7 @@ object TextAnalysis {
     // so the train side becomes a reagg of the cached occurrence
     // table instead of a second full corpus scan+explode (r15)
     val selfScore = train eq score
-    val occ0 = tris(fanOut(score), Seq(col(idCol)))
+    val occ0 = tris(Par.fanOut(score), Seq(col(idCol)))
       .groupBy(col(idCol), col("tri"))
       .agg(count(lit(1)).as("__m"))
     val occP = if (selfScore) occ0.persist(MEMORY_AND_DISK) else occ0
@@ -810,7 +805,7 @@ object TextAnalysis {
     val ct0 =
       if (selfScore)
         occP.groupBy(col("tri")).agg(sum(col("__m")).as("__c123"))
-      else tris(fanOut(train), Seq.empty)
+      else tris(Par.fanOut(train), Seq.empty)
         .groupBy(col("tri")).agg(count(lit(1)).as("__c123"))
     val ct = (if (minCount > 1) ct0.filter(col("__c123") >= minCount)
               else ct0)
@@ -823,7 +818,7 @@ object TextAnalysis {
         substring_index(s23Of(col("tri")), " ", 1).as("w2"))
       .agg(count(lit(1)).as("__nmid"))
     // bigram-level backoff tables — knBigramScore's model, reused
-    val cb = fanOut(train)
+    val cb = Par.fanOut(train)
       .select(explode(wordBigrams(col(textCol))).as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("__c12"))
       .persist(MEMORY_AND_DISK)
@@ -832,7 +827,7 @@ object TextAnalysis {
     val cont = cb.groupBy(substring_index(col("bg"), " ", -1).as("w3"))
       .agg(count(lit(1)).as("__n1c"))
     val totals = cb.agg(count(lit(1)).as("__T")).crossJoin(
-      fanOut(train).select(explode(TextFns.toks(col(textCol))).as("__tk"))
+      Par.fanOut(train).select(explode(TextFns.toks(col(textCol))).as("__tk"))
         .agg(countDistinct(col("__tk")).as("__V")))
     val occ = occP
       .withColumn("p12", p12Of(col("tri")))
@@ -914,7 +909,7 @@ object TextAnalysis {
     val toks = explode(TextFns.toks(col(textCol)))
     // (label, token) counts feed the model head AND the per-token wfx
     // table — persist the one hash-agg both read
-    val clt = fanOut(train)
+    val clt = Par.fanOut(train)
       .select(col(labelCol).as("__lab"), toks.as("__tok"))
       .groupBy(col("__lab"), col("__tok")).agg(count(lit(1)).as("__c"))
       .persist(MEMORY_AND_DISK)
@@ -961,7 +956,7 @@ object TextAnalysis {
     // so summing wfx per occurrence == summing m·wfx per distinct
     // token), left-joined so out-of-vocabulary tokens keep counting
     // toward N_d with 0 contribution
-    val perDoc = fanOut(score)
+    val perDoc = Par.fanOut(score)
       .select(col(idCol), toks.as("__tok"))
       .join(lncW, Seq("__tok"), "left")
       .groupBy(col(idCol))

@@ -126,7 +126,8 @@ class CosineSimilaritySpec extends SparkSpec {
         "nfc_normalize(array('a'))",
         "int8_quantize(array(1.0D))",
         "int8_cosine(array(1.0), array(1.0))",
-        "z_value(array(1), 1L, 4)").foreach { call =>
+        "z_value(array(1), 1L, 4)",
+        "top_k_by_score(1.0D, 1.0D, 2)").foreach { call =>
         withClue(call)(analysisError(s"SELECT $call"))
       }
     } finally {

@@ -1,47 +1,65 @@
 package graft.expressions
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Bit-parity of the string-keyed bounded-heap top-k against the window
-  * formulation it claims to match, plus the serde and byte-order paths
-  * the oracle queries (ASCII tokens) never exercise.
+/** Bit-parity of the bounded-heap top-k against the window formulation
+  * it claims to match, for a string id and (where the id type decides
+  * anything) a bigint id, plus the serde and byte-order paths the
+  * oracle queries (ASCII tokens) never exercise.
   */
 class TopKByScoreStrSpec extends SparkSpec {
   import spark.implicits._
 
-  private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    val topk = Bridge.column(
-      TopKByScoreStr(
-        Bridge.expression(col("score").cast(DoubleType)),
-        Bridge.expression(col("id")), k)
-        .toAggregateExpression())
-    df.agg(topk.as("t"))
+  // rows, not tuples: Row equality holds NaN equal to NaN
+  private def viaAgg(df: DataFrame, k: Int): Array[Row] =
+    df.agg(TopKByScore(col("score").cast(DoubleType), col("id"), k).as("t"))
       .select(posexplode(col("t")).as(Seq("pos", "x")))
       .select(col("x.id"), col("x.score"))
-      .as[(String, Double)].collect()
-  }
+      .collect()
 
-  private def viaSort(df: org.apache.spark.sql.DataFrame, k: Int) =
+  private def viaSort(df: DataFrame, k: Int): Array[Row] =
     df.orderBy(col("score").desc, col("id"))
       .select(col("id"), col("score"))
-      .as[(String, Double)].take(k)
+      .take(k)
+
+  // Row equality holds 0.0 equal to -0.0; the score bits do not
+  private def scoreBits(rows: Array[Row]): Seq[Long] =
+    rows.toSeq.map(r => java.lang.Double.doubleToLongBits(r.getDouble(1)))
 
   test("matches ORDER BY score DESC, id over many partitions") {
-    val df = spark.range(500)
-      .select(concat(lit("tok"), col("id") % 37).as("id"),
+    def mod37(id: Column => Column) = spark.range(500)
+      .select(id(col("id") % 37).as("id"),
         (col("id") % 11).cast(DoubleType).as("score"))
       .repartition(8)
-    assert(viaAgg(df, 10) === viaSort(df, 10))
+    // Spark sorts 0.0 = -0.0 and breaks the tie by id
+    val signedZeros = Seq((5L, 0.0), (9L, 0.0), (1L, -0.0), (3L, -0.0))
+    val cases = Seq(
+      "string" -> mod37(n => concat(lit("tok"), n)),
+      "bigint" -> mod37(identity),
+      "string ±0.0" -> signedZeros.map { case (i, s) => (s"tok$i", s) }
+        .toDF("id", "score").repartition(2),
+      "bigint ±0.0" -> signedZeros.toDF("id", "score").repartition(2),
+      "bigint NaN" -> Seq((4L, Double.NaN), (2L, 1.0), (7L, Double.NaN),
+        (1L, Double.PositiveInfinity), (3L, Double.NegativeInfinity),
+        (6L, 1.0)).toDF("id", "score").repartition(2))
+    for ((name, df) <- cases; k <- Seq(3, 10)) withClue(s"$name k=$k: ") {
+      assert(viaAgg(df, k) === viaSort(df, k))
+      assert(scoreBits(viaAgg(df, k)) === scoreBits(viaSort(df, k)))
+    }
   }
 
   test("ties on score break by id ascending; k > n returns all") {
-    val df = Seq(("b", 1.0), ("a", 1.0), ("c", 1.0)).toDF("id", "score")
-    assert(viaAgg(df, 2) === Array(("a", 1.0), ("b", 1.0)))
-    assert(viaAgg(df, 99).length === 3)
+    for ((df, a, b) <- Seq(
+        (Seq(("b", 1.0), ("a", 1.0), ("c", 1.0)).toDF("id", "score"), "a", "b"),
+        (Seq((2L, 1.0), (1L, 1.0), (3L, 1.0)).toDF("id", "score"), 1L, 2L))) {
+      assert(viaAgg(df, 2) === Array(Row(a, 1.0), Row(b, 1.0)))
+      assert(viaAgg(df, 99).length === 3)
+    }
   }
 
   test("non-ASCII ids order by UTF-8 bytes (Spark's string order)") {
@@ -53,24 +71,24 @@ class TopKByScoreStrSpec extends SparkSpec {
   }
 
   test("serde roundtrip preserves buffer contents") {
-    val e = TopKByScoreStr(
-      Bridge.expression(lit(0.0)), Bridge.expression(lit("x")), 3)
-    val buf = e.createAggregationBuffer()
-    buf.offer(2.0, UTF8String.fromString("beta"))
-    buf.offer(3.0, UTF8String.fromString("日本語"))
-    buf.offer(1.0, UTF8String.fromString("alpha"))
-    buf.offer(4.0, UTF8String.fromString("gamma")) // evicts alpha
-    val back = e.deserialize(e.serialize(buf))
-    assert(back.sortedDesc.toSeq === buf.sortedDesc.toSeq)
-    assert(back.sortedDesc.map(_._2.toString).toSeq ===
-      Seq("gamma", "日本語", "beta"))
+    // ids offered with scores 2, 3, 1, 4: the last evicts the third
+    for ((id, ids, want) <- Seq(
+        (Literal("x"), Seq("beta", "日本語", "alpha", "gamma")
+          .map(UTF8String.fromString), Seq("gamma", "日本語", "beta")),
+        (Literal(0L), Seq(20L, 30L, 10L, 40L), Seq("40", "30", "20")))) {
+      val e = TopKByScore(Literal(0.0), id, 3)
+      val buf = e.createAggregationBuffer()
+      ids.zip(Seq(2.0, 3.0, 1.0, 4.0)).foreach { case (i, s) => buf.offer(s, i) }
+      val back = e.deserialize(e.serialize(buf))
+      assert(back.sortedDesc.toSeq === buf.sortedDesc.toSeq)
+      assert(back.sortedDesc.map(_._2.toString).toSeq === want)
+    }
   }
 
   test("NaN scores rank first, like Spark's DESC ordering") {
     val df = Seq(("n", Double.NaN), ("h", 9.0), ("l", 1.0))
       .toDF("id", "score").repartition(2)
-    // compare ids only: NaN != NaN would fail tuple equality
-    assert(viaAgg(df, 2).map(_._1) === viaSort(df, 2).map(_._1))
-    assert(viaAgg(df, 2).head._1 === "n")
+    assert(viaAgg(df, 2).map(_.get(0)) === viaSort(df, 2).map(_.get(0)))
+    assert(viaAgg(df, 2).head.get(0) === "n")
   }
 }

@@ -8,6 +8,12 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
+/** One delivered event of [[DauEvictionProps]]. Top level, not nested
+  * in the object: Spark's generated encoder cannot construct a case
+  * class nested in an object and falls back to interpreted evaluation.
+  */
+case class DauEvictionEvent(mid: String, ts: Long)
+
 /** Property-based check of the A2 streaming dedup's DAY-BOUNDARY
   * semantics (`dropDuplicatesWithinWatermark("mid","dt")` + 24 h
   * watermark, [[DauPipeline.dedupDailyStreaming]]) — the SURVEY §7
@@ -37,14 +43,12 @@ object DauEvictionProps extends Properties("dauEviction") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(100)
 
-  private case class S(mid: String, ts: Long)
-
   private lazy val spark = SparkSpec.spark
 
-  private lazy val source: MemoryStream[S] = {
+  private lazy val source: MemoryStream[DauEvictionEvent] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    MemoryStream[S]
+    MemoryStream[DauEvictionEvent]
   }
 
   private lazy val query = {
@@ -92,7 +96,7 @@ object DauEvictionProps extends Properties("dauEviction") {
     Prop.forAllNoShrink(scenarioGen) { case (nBatches, evs) =>
       val k = scenario; scenario += 1
       val base = Epoch0 + k.toLong * 10 * 24 * H
-      val rows = evs.map(e => (S(s"c${k}_m${e.mid}",
+      val rows = evs.map(e => (DauEvictionEvent(s"c${k}_m${e.mid}",
         base + (e.offH * H).toLong), e.batch))
       // one event per (mid, dt) per batch → deterministic first-wins
       val byBatch = (0 until nBatches).map { b =>
