@@ -16,8 +16,4 @@ object Q {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
-
-  /** A query with no SQL-expressible oracle (driver does rows-only check). */
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

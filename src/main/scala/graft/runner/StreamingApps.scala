@@ -17,15 +17,16 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingApps {
 
-  /** Read the dim store fresh (per batch) — empty frame with the right
-    * schema when the store doesn't exist yet or is an empty root (cold
-    * start before the CDC app's first write), so dependent apps start
-    * cleanly and pick up dims as they appear.
+  /** Read the dim store's effective directories fresh (per batch) —
+    * empty frame with the right schema when the store doesn't exist yet
+    * or is an empty root (cold start before the CDC app's first write),
+    * so dependent apps start cleanly and pick up dims as they appear.
+    * A listing, then one plan: no probe job.
     */
   private[runner] def dimOrEmpty(spark: SparkSession, storePath: String,
                                  table: String,
                                  fields: Seq[String]): DataFrame =
-    Sinks.readStoreIfExists(spark, storePath).map { store =>
+    BatchDirs.read(spark, storePath).map { store =>
       CdcSplit.latestDims(store)
         .filter(col("table") === table)
         .select(json_tuple(col("data"), fields: _*).as(fields))
@@ -90,7 +91,9 @@ object StreamingApps {
     }.reduce(_ unionByName _)
 
   /** ODS CDC splitter: Maxwell topic in → per-table per-op fact topics
-    * + dim-table upserts (parquet keyed store standing in for Redis).
+    * + dim-table upserts (a [[BatchDirs]] keyed store standing in for
+    * Redis: each batch overwrites its own directory, so a replay leaves
+    * one copy).
     */
   object OdsDbApp {
     def main(args: Array[String]): Unit = {
@@ -115,8 +118,8 @@ object StreamingApps {
               .save()
             // batch id rides along as __seq: same-second CDC updates
             // landing in different batches keep their arrival order
-            Sinks.appendStore(CdcSplit.dims(cached, dimTables, bid),
-              s"$out/dim_store", "table")
+            BatchDirs.write(CdcSplit.dims(cached, dimTables, bid),
+              s"$out/dim_store", bid, Seq("table"))
           } finally { cached.unpersist(); () }
         }
         .start()
@@ -222,12 +225,14 @@ object StreamingApps {
     }
   }
 
-  /** Maintenance entry point: rewrite an append-only store to
-    * latest-only rows, bounding the read-side dedup under sustained
-    * write volume.  `CompactionJob dim <path>` compacts a
+  /** Offline maintenance entry point: fold a [[BatchDirs]] store in
+    * place to latest-only rows, bounding the read-side dedup under
+    * sustained write volume. `CompactionJob dim <path>` folds a
     * [[CdcSplit]] dim store (one row per (table, id), tombstones
-    * kept); `CompactionJob serving <path> <pk>` compacts a
-    * [[Sinks.upsertBatch]] serving table (one row per (pk, dt)).
+    * kept); `CompactionJob serving <path> <pk>` folds a
+    * [[Sinks.upsertBatch]] serving table (one row per (pk, dt)). Run
+    * it with the writing stream stopped: a batch still being written
+    * would land below the fold and be hidden.
     */
   object CompactionJob {
     private[graft] def run(spark: SparkSession,

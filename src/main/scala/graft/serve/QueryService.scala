@@ -22,12 +22,13 @@ import org.apache.spark.sql.functions._
   */
 object QueryService {
 
-  /** Serving tables are append-only keyed stores ([[graft.streaming
-    * .Sinks.upsertBatch]]): every read resolves last-write-wins per
-    * (pk, dt) via [[graft.streaming.Sinks.latest]]. The dt filters
-    * below still prune partitions — the compaction window is
-    * partitioned by (pk, dt), so Catalyst pushes partition-column
-    * predicates beneath it.
+  /** Serving tables are keyed stores with one directory per batch
+    * ([[graft.streaming.Sinks.upsertBatch]]): every read scans the
+    * effective directories and resolves last-write-wins per (pk, dt)
+    * via [[graft.streaming.Sinks.latest]]. The dt filters below still
+    * prune partitions — `dt` partitions each batch directory, and the
+    * compaction window is partitioned by (pk, dt), so Catalyst pushes
+    * partition-column predicates beneath it.
     */
   private def dauTable(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.Sinks.latest(

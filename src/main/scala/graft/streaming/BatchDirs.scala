@@ -6,18 +6,22 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** The one owner of the `batch=<id>` store layout behind every
-  * owned-by-path streaming store (the [[SumStore]] partials, the
-  * [[StreamingSeen]] membership store, the near-dedup MinHash index,
-  * the incremental-ANN postings): each micro-batch OVERWRITES its own
-  * `batch=<id>` directory, so an at-least-once redelivery rewrites
-  * identical bytes instead of appending twice.
+  * owned-by-path streaming store: the [[Sinks]] serving tables, the
+  * [[CdcSplit]] dim store, the [[StreamingSketch]] HLL registers, the
+  * [[SumStore]] partials, the [[StreamingSeen]] membership store, the
+  * near-dedup MinHash index and the incremental-ANN postings. Each
+  * micro-batch OVERWRITES its own `batch=<id>` directory, keeping the
+  * store's inner partitioning (`dt`, `table`, `__part`) below it, so an
+  * at-least-once redelivery rewrites identical bytes instead of
+  * appending a second copy.
   *
   * Maintenance merges IN PLACE under the store root ([[compactInPlace]]):
   * every directory with id ≤ u (including prior merges, which live at
   * negative ids) is rewritten into one `batch=-(u+1)` target, then the
   * covered sources are deleted. At a 5 s trigger a store grows ~17k
   * directories/day, and join planning degrades with file count long
-  * before data size matters. The root itself is never renamed or
+  * before data size matters (past 32 directories a read's file listing
+  * also runs as a Spark job). The root itself is never renamed or
   * replaced.
   *
   * Readers see the EFFECTIVE directories ([[read]]): the newest merge
@@ -40,16 +44,38 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    in a maintenance window — between micro-batches, or with the
   *    stream stopped.
   *
+  * A reader may briefly miss a batch's rows while a replay of that
+  * batch overwrites its directory (the overwrite deletes before it
+  * writes).
+  *
   * `u` must be a batch id the streaming checkpoint has COMMITTED when
   * the stream keeps running: the one batch that can still replay after
   * a crash must keep its own directory, or its replay's self-exclusion
   * (`excludeBatch`) would stop seeing it. The staging write is
   * dot-prefixed (invisible to listing) and the publish is one rename,
   * so the store is never missing or partial.
+  *
+  * A root with no `batch=` directory at all is a PLAIN root (parquet
+  * written by another tool) and reads whole. Any other data beside the
+  * `batch=` directories, or in a root a batch is written or merged
+  * into, comes from an older layout: it is not migrated, and the call
+  * fails loudly rather than let the effective-set read hide its rows.
   */
-private[streaming] object BatchDirs {
+private[graft] object BatchDirs {
 
-  private val Prefix = "batch="
+  private val BatchCol = "batch"
+  private val Prefix = s"$BatchCol="
+
+  /** Rows of `dirs`, a subset of the root's batch directories. The
+    * root is the partition-discovery base, so the partitioning below
+    * each directory (`dt`, `table`, ...) comes back as columns; the
+    * batch id itself is not one.
+    */
+  private def readDirs(spark: SparkSession, rootPath: String,
+                       dirs: Seq[Path]): DataFrame =
+    spark.read.option("basePath", rootPath)
+      .parquet(dirs.map(_.toString): _*)
+      .drop(BatchCol)
 
   /** A store's directory for batch `id`. */
   def dirOf(rootPath: String, id: Long): Path =
@@ -59,25 +85,52 @@ private[streaming] object BatchDirs {
   def targetOf(rootPath: String, upToBatch: Long): Path =
     dirOf(rootPath, -(upToBatch + 1))
 
-  /** Land one batch's rows in its own directory, owned-by-path. */
-  def write(df: DataFrame, rootPath: String, batchId: Long): Unit =
-    df.write.mode(SaveMode.Overwrite)
+  /** Land one batch's rows in its own directory, owned-by-path,
+    * partitioned below it by `partitionCols`.
+    */
+  def write(df: DataFrame, rootPath: String, batchId: Long,
+            partitionCols: Seq[String] = Nil): Unit = {
+    val root = new Path(rootPath)
+    listBatchIds(fsOf(df.sparkSession, root), root) // refuses a legacy root
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
       .parquet(dirOf(rootPath, batchId).toString)
+  }
 
   private def fsOf(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** The store's `batch=<id>` directories as (id, path); other names
-    * (dot-prefixed staging, non-numeric ids) are ignored.
+  /** The root's `batch=<id>` directories as (id, path), and its other
+    * visible entries. Dot- and underscore-prefixed names (staging,
+    * `_SUCCESS`) are neither; so are `batch=` names with no numeric id.
     */
-  def listBatchIds(fs: FileSystem, root: Path): Seq[(Long, Path)] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(Prefix))
-      .flatMap(p => p.getName.stripPrefix(Prefix).toLongOption
-        .map(_ -> p))
+  private def layout(fs: FileSystem, root: Path)
+      : (Seq[(Long, Path)], Seq[Path]) = {
+    val visible =
+      if (!fs.exists(root)) Nil
+      else fs.listStatus(root).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith(".") || n.startsWith("_")
+      }
+    val (batches, other) = visible.partition(_.getPath.getName.startsWith(Prefix))
+    (batches.filter(_.isDirectory).map(_.getPath)
+      .flatMap(p => p.getName.stripPrefix(Prefix).toLongOption.map(_ -> p)),
+      other.map(_.getPath))
+  }
+
+  private def refuseLegacy(root: Path, other: Seq[Path]): Unit =
+    if (other.nonEmpty) throw new IllegalStateException(
+      s"store $root holds ${other.head.getName} outside batch= " +
+        "directories: it was written under an older store layout, " +
+        "which is not migrated")
+
+  /** The store's `batch=<id>` directories as (id, path); throws when
+    * the root also holds data outside them (see the class doc).
+    */
+  def listBatchIds(fs: FileSystem, root: Path): Seq[(Long, Path)] = {
+    val (dirs, other) = layout(fs, root)
+    refuseLegacy(root, other)
+    dirs
+  }
 
   /** The newest merge target's u, read from its `batch=-(u+1)` name.
     * The seed directory `batch=Long.MinValue` ([[StreamingKnn]]'s
@@ -95,19 +148,21 @@ private[streaming] object BatchDirs {
   /** The store's effective rows (see the class doc), minus
     * `excludeBatch`'s own directory — the replay-stable read for a
     * micro-batch that consults the store before overwriting its own
-    * directory. `None` when the store is absent or nothing is left to
-    * read. A root set aside by a crashed whole-root swap (the fold
-    * protocol before in-place merges) is restored first.
+    * directory. A plain root (no `batch=` directory) reads whole.
+    * `None` when the store is absent or nothing is left to read. No
+    * Spark job runs here beyond Spark's own file listing.
     */
   def read(spark: SparkSession, rootPath: String,
            excludeBatch: Option[Long] = None): Option[DataFrame] = {
     val root = new Path(rootPath)
-    val fs = fsOf(spark, root)
-    Sinks.recoverStore(fs, root)
-    val dirs = effective(listBatchIds(fs, root))
-      .filterNot { case (id, _) => excludeBatch.contains(id) }
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_._2.toString): _*))
+    val (dirs, other) = layout(fsOf(spark, root), root)
+    if (dirs.isEmpty) Option.when(other.nonEmpty)(spark.read.parquet(rootPath))
+    else {
+      refuseLegacy(root, other)
+      val live = effective(dirs)
+        .filterNot { case (id, _) => excludeBatch.contains(id) }
+      Option.when(live.nonEmpty)(readDirs(spark, rootPath, live.map(_._2)))
+    }
   }
 
   /** [[read]] for a store that must hold rows. */
@@ -115,17 +170,20 @@ private[streaming] object BatchDirs {
               excludeBatch: Option[Long] = None): DataFrame =
     read(spark, rootPath, excludeBatch).getOrElse(
       throw new FileNotFoundException(
-        s"no batch directories under $rootPath"))
+        s"Path does not exist or holds no store data: $rootPath"))
 
   /** Merge as described in the class doc; `project` shapes (or folds)
-    * the store's rows. Re-running after any crash completes the
-    * merge: a surviving staging dir is discarded, an already-published
-    * target flips the call to cleanup-only. No-op when the store does
-    * not exist or at most one effective directory is covered.
+    * the store's rows, and the target is partitioned by
+    * `partitionCols` like the directories it replaces. Re-running
+    * after any crash completes the merge: a surviving staging dir is
+    * discarded, an already-published target flips the call to
+    * cleanup-only. No-op when the store does not exist or at most one
+    * effective directory is covered.
     */
   def compactInPlace(spark: SparkSession, rootPath: String,
                      upToBatch: Long,
-                     project: DataFrame => DataFrame): Unit = {
+                     project: DataFrame => DataFrame,
+                     partitionCols: Seq[String] = Nil): Unit = {
     // -(Long.MaxValue + 1) would overflow to Long.MinValue — exactly
     // StreamingKnn's seed-directory id. Real batch ids are
     // checkpoint-assigned small longs; reject the boundary instead of
@@ -148,8 +206,8 @@ private[streaming] object BatchDirs {
       if (live.size > 1) {
         val tmp = new Path(root, ".__merge_tmp")
         fs.delete(tmp, true) // stale staging from a crash mid-write
-        project(spark.read.parquet(live.map(_.toString): _*))
-          .write.mode(SaveMode.Overwrite)
+        project(readDirs(spark, rootPath, live))
+          .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
           .parquet(tmp.toString)
         if (!fs.rename(tmp, target))
           throw new IOException(s"store merge: cannot publish $target")
@@ -164,10 +222,11 @@ private[streaming] object BatchDirs {
     * no newer batch only deletes hidden directories.
     */
   def compactAll(spark: SparkSession, rootPath: String,
-                 project: DataFrame => DataFrame): Unit = {
+                 project: DataFrame => DataFrame,
+                 partitionCols: Seq[String] = Nil): Unit = {
     val root = new Path(rootPath)
     val ids = listBatchIds(fsOf(spark, root), root).map(_._1)
     (watermark(ids) ++ ids.filter(_ >= 0)).maxOption
-      .foreach(compactInPlace(spark, rootPath, _, project))
+      .foreach(compactInPlace(spark, rootPath, _, project, partitionCols))
   }
 }

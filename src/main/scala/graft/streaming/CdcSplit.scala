@@ -9,6 +9,12 @@ import org.apache.spark.sql.types._
   * decode the op type, route fact tables to per-table per-op topics and
   * dim tables to a keyed upsert store.
   *
+  * The dim store is a [[BatchDirs]] store partitioned by `table` below
+  * each batch directory: each micro-batch overwrites its own
+  * directory with its [[dims]] rows, readers resolve the effective
+  * directories through [[latestDims]], and [[compactDimStore]] folds
+  * them in place.
+  *
   * The reference holds the fact/dim table registries in Redis sets
   * re-read each batch; here they're plain parameters — a `foreachBatch`
   * caller can re-read its own config table per batch and pass fresh
@@ -65,7 +71,7 @@ object CdcSplit {
     */
   private def lwwOrder(hasSeq: Boolean): Seq[org.apache.spark.sql.Column] =
     Seq(col("ts").desc) ++
-      (if (hasSeq) Seq(coalesce(col("__seq"), lit(0L)).desc) else Nil) ++
+      (if (hasSeq) Seq(col("__seq").desc) else Nil) ++
       Seq(
         when(col("op") === "D", 3).when(col("op") === "U", 2)
           .otherwise(1).desc,
@@ -74,9 +80,9 @@ object CdcSplit {
   /** Dim branch: last-write-wins upsert set for `dimTables`, keyed by
     * (table, id) — id extracted from the row payload (reference
     * :144-163 keys Redis as DIM:{TABLE}:{id}). Within one batch the
-    * latest (ts, op, data) wins deterministically; the caller appends
-    * to its dim store per batch, stamping the micro-batch id so
-    * same-second updates arriving in DIFFERENT batches keep their
+    * latest (ts, op, data) wins deterministically; the caller writes
+    * the batch's own dim-store directory, stamping the micro-batch id
+    * so same-second updates arriving in DIFFERENT batches keep their
     * arrival order across the store.
     */
   def dims(decodedDf: DataFrame, dimTables: Set[String],
@@ -92,9 +98,9 @@ object CdcSplit {
       .withColumn("__seq", lit(batchId))
   }
 
-  /** Latest surviving row per (table, id) of the append-only dim store
-    * with tombstones kept — the merge half of the last-write-wins
-    * contract (shared by [[latestDims]] and [[compactDimStore]]).
+  /** Latest surviving row per (table, id) of the dim store with
+    * tombstones kept — the merge half of the last-write-wins contract
+    * (shared by [[latestDims]] and [[compactDimStore]]).
     */
   private def latestWithTombstones(dimStore: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -104,26 +110,25 @@ object CdcSplit {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** Read the append-only dim store back as current state: latest row
-    * per (table, id) — the read-side half of the last-write-wins
-    * contract (writers append per batch; readers compact).
+  /** Read the dim store back as current state: latest row per
+    * (table, id) — the read-side half of the last-write-wins contract
+    * (writers own a directory per batch; readers resolve).
     */
   def latestDims(dimStore: DataFrame): DataFrame =
     latestWithTombstones(dimStore)
       .filter(col("op") =!= "D") // deleted dims are absent, not stale
 
-  /** Maintenance job: rewrite the dim store to one row per (table, id)
-    * so [[latestDims]]'s read-side dedup stays O(live keys) under
-    * sustained CDC volume (the store is otherwise append-only forever —
-    * the reference's Redis SET was O(1) per key). Delete tombstones are
-    * KEPT: dropping them would let an older, slower-arriving image of
-    * the same key win after compaction; tombstone GC is a retention
-    * policy (age out rows older than the max accepted CDC lateness),
-    * not part of correctness. The rewrite stages into a sibling dir
-    * and swaps in by rename ([[Sinks.swapRewrite]]) — a failure leaves
-    * the previous store intact and recoverable.
+  /** Maintenance job: fold the dim store in place to one row per
+    * (table, id) so [[latestDims]]'s read-side dedup stays O(live keys)
+    * under sustained CDC volume (the store otherwise gains a directory
+    * per batch forever — the reference's Redis SET was O(1) per key).
+    * Delete tombstones are KEPT: dropping them would let an older,
+    * slower-arriving image of the same key win after compaction;
+    * tombstone GC is a retention policy (age out rows older than the
+    * max accepted CDC lateness), not part of correctness. Run with the
+    * CDC stream stopped ([[BatchDirs.compactAll]]).
     */
   def compactDimStore(spark: org.apache.spark.sql.SparkSession,
                       path: String): Unit =
-    Sinks.swapRewrite(spark, path, "table")(latestWithTombstones)
+    BatchDirs.compactAll(spark, path, latestWithTombstones, Seq("table"))
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** SUM-merged [[BatchDirs]] store — the shared idempotency machinery
   * behind the streaming count stores ([[StreamingGraph]] degree
   * partials, [[StreamingManifest]] corpus-manifest partials, the
-  * comparison, eval, rating, drift, scorer, quota and sketch-counter
-  * stores). Counts SUM across micro-batches, so the HLL blind-re-append
-  * trick doesn't apply: a replayed batch would double-count. Instead:
+  * comparison, eval, rating, drift, scorer and quota stores). Counts
+  * SUM across micro-batches, so a batch that landed twice would
+  * double-count. Instead:
   *
   *  - each micro-batch's PARTIAL aggregate OVERWRITES its own batch
   *    directory (at-least-once redelivery rewrites identical bytes);

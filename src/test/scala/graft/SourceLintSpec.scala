@@ -23,6 +23,18 @@ class SourceLintSpec extends AnyFunSuite {
       s"batch-directory layout built outside BatchDirs: $offenders")
   }
 
+  test("stores have one protocol: no append + staged-swap machinery") {
+    // every store writes, reads and folds through BatchDirs; a
+    // schema-merging read or a whole-root swap directory would be the
+    // second protocol coming back
+    val tokens = Seq("mergeSchema", "__compact_tmp", "__compact_old")
+    val offenders = mainSources.flatMap { p =>
+      val src = Files.readString(p)
+      tokens.filter(src.contains).map(t => s"${p.getFileName}: $t")
+    }
+    assert(offenders.isEmpty, s"second store protocol in main: $offenders")
+  }
+
   test("every scalar kernel reaches Catalyst through one call path") {
     // a kernel is one `compute` behind a StaticInvoke or Invoke (see
     // graft.expressions.Kernel); hand-written generated code or an

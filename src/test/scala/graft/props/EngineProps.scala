@@ -282,9 +282,9 @@ object EngineProps extends Properties("graft") {
       }
     }
 
-  // append-only serving store: for ANY batch sequence, the read view
-  // equals the sequential last-write-wins model — and re-appending any
-  // batch under its original id never changes the view (replay safety)
+  // serving store: for ANY batch sequence, the read view equals the
+  // sequential last-write-wins model — and re-delivering any batch
+  // under its original id leaves one copy of it (replay safety)
   property("Sinks.latest equals sequential last-write-wins upserts") =
     Prop.forAll(
       Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n,
@@ -307,11 +307,13 @@ object EngineProps extends Properties("graft") {
       // replay the last batch under its original id
       Sinks.upsertBatch(batches.last.toDF("pk", "dt", "v"), out, "pk",
         batchId = (batches.size - 1).toLong, tsCol = Some("v"))
-      val got = Sinks.latest(spark.read.parquet(out), "pk")
+      val store = Sinks.readStore(spark, out)
+      val got = Sinks.latest(store, "pk")
         .select("pk", "dt", "v").collect()
         .map(r => (r.getString(0), r.get(1).toString) -> r.getInt(2))
         .toMap
-      got == model.toMap
+      got == model.toMap &&
+        store.count() == batches.map(_.map(r => (r._1, r._2)).distinct.size).sum
     }
 
   // Incremental ingestion is LOSSLESS for any corpus split: the

@@ -1,7 +1,7 @@
 package graft.runner
 
 import graft.SparkSpec
-import graft.streaming.{CdcSplit, DauPipeline, LogSplit, Page, Sinks}
+import graft.streaming.{BatchDirs, CdcSplit, DauPipeline, LogSplit, Page, Sinks}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -48,16 +48,16 @@ class DauAppWiringSpec extends SparkSpec {
       // crash, rows land unenriched
       src.addData(Page("m1", "1", "110000", null, day0))
       q.processAllAvailable()
-      // dim CDC lands AFTER the query started
-      CdcSplit.dims(CdcSplit.decoded(CdcSplit.parse(Seq(
+      // dim CDC lands AFTER the query started (OdsDbApp's dim write)
+      BatchDirs.write(CdcSplit.dims(CdcSplit.decoded(CdcSplit.parse(Seq(
           """{"database":"g","table":"user_info","type":"insert","ts":9,"data":{"id":"1","gender":"F","birthday":"1995-06-15"}}""",
           """{"database":"g","table":"base_province","type":"insert","ts":9,"data":{"id":"110000","name":"Beijing","area_code":"010","iso_code":"CN-11","iso_3166_2":"CN-BJ"}}"""
-        ).toDF("value"))), Set("user_info", "base_province"))
-        .write.mode("append").partitionBy("table").parquet(store)
+        ).toDF("value"))), Set("user_info", "base_province"), 0L),
+        store, 0L, Seq("table"))
       // batch 2: same user from a new device — now enriched
       src.addData(Page("m2", "1", "110000", null, day0 + 60000))
       q.processAllAvailable()
-      val got = Sinks.latest(spark.read.parquet(dauOut), "mid")
+      val got = Sinks.latest(Sinks.readStore(spark, dauOut), "mid")
         .select("mid", "user_gender", "province_name").collect()
         .map(r => r.getString(0) -> ((r.getString(1), r.getString(2))))
         .toMap

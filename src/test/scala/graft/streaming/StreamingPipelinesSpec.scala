@@ -418,7 +418,10 @@ class StreamingPipelinesSpec extends SparkSpec {
       ("m2", "2024-01-06", 12)).toDF("mid", "dt", "v")
     Sinks.upsertBatch(batch, out, "mid", batchId = 7L)
     Sinks.upsertBatch(batch, out, "mid", batchId = 7L) // replayed batch
-    val got = Sinks.latest(spark.read.parquet(out), "mid")
+    // the replay rewrote its own batch: one copy of the two winners
+    // on disk, not an appended second copy
+    assert(spark.read.parquet(out).count() == 2)
+    val got = Sinks.latest(Sinks.readStore(spark, out), "mid")
     assert(got.count() == 2) // PK-deduped, not duplicated by replay
     assert(got.select("dt").distinct().count() == 2)
     // deterministic in-batch winner: highest v for the (m1, day) dup
@@ -435,7 +438,12 @@ class StreamingPipelinesSpec extends SparkSpec {
     Sinks.upsertBatch(Seq(("m3", "2024-01-05", 3), ("m2", "2024-01-05", 9),
         ("m2", "2024-01-06", 4))
       .toDF("mid", "dt", "v"), out, "mid", batchId = 2L)
-    val got = Sinks.latest(spark.read.parquet(out), "mid")
+    // an empty batch (a stateful query's no-data batch) lands nothing
+    Sinks.upsertBatch(Seq(("m9", "2024-01-05", 0)).toDF("mid", "dt", "v")
+      .limit(0), out, "mid", batchId = 3L)
+    val store = Sinks.readStore(spark, out)
+    assert(store.columns.toSet == Set("mid", "v", "dt", Sinks.SeqCol))
+    val got = Sinks.latest(store, "mid")
       .select("mid", "dt", "v").collect()
       // dt comes back as DateType (partition-column type inference)
       .map(r => (r.getString(0), r.get(1).toString) -> r.getInt(2)).toMap
@@ -450,22 +458,22 @@ class StreamingPipelinesSpec extends SparkSpec {
     val out = tmp("sink_appendonly")
     Sinks.upsertBatch(Seq(("m1", "2024-01-05", 1), ("m2", "2024-01-06", 2))
       .toDF("mid", "dt", "v"), out, "mid", batchId = 1L)
-    def day05Files = {
-      val d = new java.io.File(s"$out/dt=2024-01-05")
+    def files(dir: String) = {
+      val d = new java.io.File(dir)
       d.listFiles().filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> f.lastModified()).toSet
     }
-    val before = day05Files
-    // second batch touches only 2024-01-06 — and even the touched
-    // partition is appended to, not replaced
-    val day06Before = new java.io.File(s"$out/dt=2024-01-06")
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    val day05 = files(s"$out/batch=1/dt=2024-01-05")
+    val day06 = files(s"$out/batch=1/dt=2024-01-06")
+    // second batch touches only 2024-01-06, in its own directory;
+    // the first batch's files of both days stay byte-identical
     Sinks.upsertBatch(Seq(("m9", "2024-01-06", 9))
       .toDF("mid", "dt", "v"), out, "mid", batchId = 2L)
-    assert(day05Files == before) // untouched partition byte-identical
-    val day06After = new java.io.File(s"$out/dt=2024-01-06")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(day06After > day06Before) // append, not overwrite
+    assert(files(s"$out/batch=1/dt=2024-01-05") == day05)
+    assert(files(s"$out/batch=1/dt=2024-01-06") == day06)
+    assert(new java.io.File(s"$out/batch=2").list()
+      .filterNot(_.startsWith("_")).filterNot(_.startsWith(".")).toSet ==
+      Set("dt=2024-01-06"))
   }
 
   test("compaction preserves the read view and bounds the store") {
@@ -475,72 +483,66 @@ class StreamingPipelinesSpec extends SparkSpec {
       Sinks.upsertBatch(Seq(("m1", "2024-01-05", i), ("m2", "2024-01-05", i))
         .toDF("mid", "dt", "v"), out, "mid", batchId = i.toLong)
     }
-    val viewBefore = Sinks.latest(spark.read.parquet(out), "mid")
+    def view = Sinks.latest(Sinks.readStore(spark, out), "mid")
       .select("mid", "v").as[(String, Int)].collect().toSet
-    assert(spark.read.parquet(out).count() == 10) // history accumulated
+    val viewBefore = view
+    assert(Sinks.readStore(spark, out).count() == 10) // history accumulated
     Sinks.compact(spark, out, "mid")
-    assert(spark.read.parquet(out).count() == 2)  // latest-only now
-    val viewAfter = Sinks.latest(spark.read.parquet(out), "mid")
-      .select("mid", "v").as[(String, Int)].collect().toSet
-    assert(viewAfter == viewBefore)
-    assert(viewAfter == Set("m1" -> 5, "m2" -> 5))
+    assert(Sinks.readStore(spark, out).count() == 2)  // latest-only now
+    assert(spark.read.parquet(out).count() == 2) // sources deleted
+    assert(view == viewBefore)
+    assert(viewBefore == Set("m1" -> 5, "m2" -> 5))
     // a post-compaction batch still upserts over the compacted rows
     Sinks.upsertBatch(Seq(("m1", "2024-01-05", 42))
       .toDF("mid", "dt", "v"), out, "mid", batchId = 6L)
-    val viewNext = Sinks.latest(spark.read.parquet(out), "mid")
-      .select("mid", "v").as[(String, Int)].collect().toSet
-    assert(viewNext == Set("m1" -> 42, "m2" -> 5))
+    assert(view == Set("m1" -> 42, "m2" -> 5))
   }
 
   test("compaction swap: staged rewrite recovers from crashes and failures") {
     val out = tmp("sink_swap")
     (1 to 3).foreach { i =>
-      Sinks.upsertBatch(Seq(("m1", "2024-01-05", i))
+      Sinks.upsertBatch(Seq(("m1", "2024-01-05", i), ("m2", "2024-01-05", i))
         .toDF("mid", "dt", "v"), out, "mid", batchId = i.toLong)
     }
     def view = Sinks.latest(Sinks.readStore(spark, out), "mid")
       .select("mid", "v").as[(String, Int)].collect().toSet
-    // a failed rewrite job must leave the live store untouched — the
-    // old in-place overwrite (delete-then-write) lost it
+    // a failed fold job leaves every batch directory in place
     intercept[RuntimeException] {
-      Sinks.swapRewrite(spark, out, "dt")(_ =>
-        sys.error("executor died mid-compaction"))
+      BatchDirs.compactAll(spark, out,
+        _ => sys.error("executor died mid-compaction"), Seq("dt"))
     }
-    assert(view == Set("m1" -> 3))
-    // stale staging dir from a crash mid-write is cleaned, not swapped
-    val tmpDir = new java.io.File(out + ".__compact_tmp")
-    tmpDir.mkdirs()
+    assert(view == Set("m1" -> 3, "m2" -> 3))
+    assert(Sinks.readStore(spark, out).count() == 6)
+    // stale staging from a crash mid-write is invisible, then discarded
+    val staging = new java.io.File(s"$out/.__merge_tmp")
+    staging.mkdirs()
     java.nio.file.Files.writeString(
-      new java.io.File(tmpDir, "junk").toPath, "not parquet")
+      new java.io.File(staging, "junk").toPath, "not parquet")
+    assert(view == Set("m1" -> 3, "m2" -> 3))
     Sinks.compact(spark, out, "mid")
-    assert(view == Set("m1" -> 3))
-    assert(!tmpDir.exists() && !new java.io.File(out + ".__compact_old").exists())
-    // crash between the two renames: live dir gone, completed staging
-    // dir present → the next reader heals the store transparently
-    assert(new java.io.File(out).renameTo(tmpDir))
-    assert(view == Set("m1" -> 3)) // readStore recovered it
-    assert(new java.io.File(out).isDirectory && !tmpDir.exists())
-    // crash after moving the live store aside but before staging ever
-    // completed → fall back to the set-aside previous store
-    assert(new java.io.File(out).renameTo(
-      new java.io.File(out + ".__compact_old")))
-    assert(view == Set("m1" -> 3))
-    // the exact between-the-two-renames state: BOTH the set-aside old
-    // store AND a completed staging dir exist, live missing. Recovery
-    // must prefer the staging dir (its write job finished — it may
-    // hold newer compacted data) and drop the old copy, not resurrect
-    // the stale store over it.
-    Sinks.upsertBatch(Seq(("m1", "2024-01-05", 9))
-      .toDF("mid", "dt", "v"), out, "mid", batchId = 9L)
-    val fresh = new java.io.File(out)
-    val oldDir = new java.io.File(out + ".__compact_old")
-    // stage = current (v=9) store; old = a stale pre-compaction copy
-    assert(fresh.renameTo(tmpDir))
-    oldDir.mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(oldDir, "stale").toPath, "stale copy")
-    assert(view == Set("m1" -> 9)) // staged store won
-    assert(fresh.isDirectory && !tmpDir.exists() && !oldDir.exists())
+    assert(view == Set("m1" -> 3, "m2" -> 3))
+    assert(!staging.exists())
+    assert(Sinks.readStore(spark, out).count() == 2)
+  }
+
+  test("a serving fold crashed after publish counts nothing twice") {
+    val out = tmp("sink_fold_crash")
+    (1 to 3).foreach { i =>
+      Sinks.upsertBatch(Seq(("m1", "2024-01-05", i), (s"k$i", "2024-01-05", i))
+        .toDF("mid", "dt", "v"), out, "mid", batchId = i.toLong)
+    }
+    def view = Sinks.latest(Sinks.readStore(spark, out), "mid")
+      .select("mid", "v").as[(String, Int)].collect().toSet
+    val before = view
+    FoldCrash.afterPublish(out)(Sinks.compact(spark, out, "mid"))
+    // the sources are back on disk beside the target, yet hidden
+    assert(spark.read.parquet(out).count() == 6 + 4)
+    assert(Sinks.readStore(spark, out).count() == 4)
+    assert(view == before)
+    // re-running the fold only deletes the hidden sources
+    Sinks.compact(spark, out, "mid")
+    assert(spark.read.parquet(out).count() == 4)
+    assert(view == before)
   }
 
   test("serving-store append after a crashed swap keeps the compacted " +
@@ -548,59 +550,109 @@ class StreamingPipelinesSpec extends SparkSpec {
     val out = tmp("sink_swap_append")
     Sinks.upsertBatch(Seq(("m1", "2024-01-05", 1), ("m2", "2024-01-05", 2))
       .toDF("mid", "dt", "v"), out, "mid", batchId = 1L)
-    // crash between the swap's two renames: live missing, completed
-    // staging dir present; the next writer appends before any read
-    assert(new java.io.File(out)
-      .renameTo(new java.io.File(out + ".__compact_tmp")))
-    Sinks.upsertBatch(Seq(("m1", "2024-01-05", 3))
+    Sinks.upsertBatch(Seq(("m2", "2024-01-05", 5))
       .toDF("mid", "dt", "v"), out, "mid", batchId = 2L)
+    FoldCrash.afterPublish(out)(Sinks.compact(spark, out, "mid"))
+    // the next batch lands before anyone finishes the fold's cleanup
+    Sinks.upsertBatch(Seq(("m1", "2024-01-05", 3))
+      .toDF("mid", "dt", "v"), out, "mid", batchId = 3L)
     assert(Sinks.latest(Sinks.readStore(spark, out), "mid")
       .select("mid", "v").as[(String, Int)].collect().toSet ==
-      Set("m1" -> 3, "m2" -> 2))
-    assert(!new java.io.File(out + ".__compact_tmp").exists())
+      Set("m1" -> 3, "m2" -> 5))
+    assert(Sinks.readStore(spark, out).count() == 3) // target 2 + batch 3
   }
 
-  test("readStore keeps __seq when old files predate the column") {
-    val out = tmp("sink_mixed")
-    // legacy file: written before the sequence column existed
-    Seq(("m1", "2024-01-05", 1)).toDF("mid", "dt", "v")
+  test("a write into a root from the older layout fails loudly") {
+    val out = tmp("sink_legacy")
+    // a serving root as the append layout left it: dt partitions
+    // straight under the root
+    Seq(("m1", "2024-01-05", 1, 0L)).toDF("mid", "dt", "v", Sinks.SeqCol)
       .write.mode("append").partitionBy("dt").parquet(out)
-    // new writer appends with __seq
-    Sinks.upsertBatch(Seq(("m1", "2024-01-05", 2))
-      .toDF("mid", "dt", "v"), out, "mid", batchId = 5L)
-    // single-footer inference could drop __seq entirely; readStore
-    // merges schemas so legacy rows surface it as null (→ seq 0) and
-    // the new row wins deterministically
-    val got = Sinks.latest(Sinks.readStore(spark, out), "mid")
-      .select("mid", "v").as[(String, Int)].collect().toSet
-    assert(got == Set("m1" -> 2))
-    // and compaction of the mixed store preserves that view
-    Sinks.compact(spark, out, "mid")
-    val after = Sinks.latest(Sinks.readStore(spark, out), "mid")
-      .select("mid", "v").as[(String, Int)].collect().toSet
-    assert(after == Set("m1" -> 2))
+    val err = intercept[IllegalStateException] {
+      Sinks.upsertBatch(Seq(("m1", "2024-01-05", 2))
+        .toDF("mid", "dt", "v"), out, "mid", batchId = 5L)
+    }
+    assert(err.getMessage.contains("dt=2024-01-05"))
+    assert(err.getMessage.contains("older store layout"))
+    intercept[IllegalStateException](Sinks.compact(spark, out, "mid"))
+    // nothing was written; the plain root still reads whole
+    assert(!new java.io.File(s"$out/batch=5").exists())
+    assert(Sinks.latest(Sinks.readStore(spark, out), "mid")
+      .select("mid", "v").as[(String, Int)].collect().toSet ==
+      Set("m1" -> 1))
+    // a root that holds batch directories AND older data refuses reads
+    // too, rather than hide the older rows
+    Seq(("m2", "2024-01-05", 2, 6L)).toDF("mid", "dt", "v", Sinks.SeqCol)
+      .write.partitionBy("dt").parquet(s"$out/batch=6")
+    intercept[IllegalStateException](Sinks.readStore(spark, out))
   }
+
+  test("a root with no batch directory is read whole") {
+    // written exactly as a dim-store bootstrap outside the engine does
+    // it: the CDC dim branch appended as plain table-partitioned parquet
+    val store = tmp("plain_root")
+    val drop = s"${tmp("plain_drop")}/dims.json"
+    java.nio.file.Files.write(java.nio.file.Paths.get(drop),
+      java.util.Arrays.asList(
+        """{"database":"g","table":"user_info","type":"bootstrap-insert","ts":1,"data":{"id":"1","gender":"F"}}""",
+        """{"database":"g","table":"base_province","type":"bootstrap-insert","ts":1,"data":{"id":"11","name":"BJ"}}"""))
+    CdcSplit.dims(CdcSplit.decoded(CdcSplit.parse(spark.read.text(drop))),
+        Set("user_info", "base_province"))
+      .write.mode("append").partitionBy("table").parquet(store)
+    val got = CdcSplit.latestDims(Sinks.readStore(spark, store))
+      .select("table", "id").as[(String, String)].collect().toSet
+    assert(got == Set(("user_info", "1"), ("base_province", "11")))
+    // an absent root is an error naming the path, not an empty store
+    val err = intercept[java.io.FileNotFoundException](
+      Sinks.readStore(spark, s"$store-absent"))
+    assert(err.getMessage.contains("Path does not exist"))
+  }
+
+  private def cdc(json: String*) =
+    CdcSplit.decoded(CdcSplit.parse(json.toDF("value")))
+
+  /** The runner's OdsDbApp dim write. */
+  private def landDims(decoded: org.apache.spark.sql.DataFrame,
+                       store: String, bid: Long): Unit =
+    BatchDirs.write(CdcSplit.dims(decoded, Set("user_info", "base_province"),
+      bid), store, bid, Seq("table"))
 
   test("CompactionJob main dispatches dim and serving compaction") {
     val dim = tmp("cj_dim")
-    CdcSplit.dims(CdcSplit.decoded(CdcSplit.parse(Seq(
-        """{"database":"g","table":"user_info","type":"insert","ts":1,"data":{"id":"1","gender":"F"}}""",
-        """{"database":"g","table":"user_info","type":"update","ts":2,"data":{"id":"1","gender":"M"}}"""
-      ).toDF("value"))), Set("user_info"))
-      .write.mode("append").partitionBy("table").parquet(dim)
-    // two history rows → run the dim job through its dispatch core
-    // (main owns/stops its own session; tests drive run())
+    landDims(cdc(
+      """{"database":"g","table":"user_info","type":"insert","ts":1,"data":{"id":"1","gender":"F"}}"""),
+      dim, 0L)
+    landDims(cdc(
+      """{"database":"g","table":"user_info","type":"update","ts":2,"data":{"id":"1","gender":"M"}}""",
+      """{"database":"g","table":"user_info","type":"insert","ts":2,"data":{"id":"2","gender":"F"}}"""),
+      dim, 1L)
+    def dimView = CdcSplit.latestDims(Sinks.readStore(spark, dim))
+      .select("id", "data").as[(String, String)].collect().toSet
+    val dimBefore = dimView
+    // run the dim job through its dispatch core (main owns/stops its
+    // own session; tests drive run())
     graft.runner.StreamingApps.CompactionJob.run(spark, Seq("dim", dim))
-    assert(spark.read.parquet(dim).count() == 1)
+    assert(Sinks.readStore(spark, dim).count() == 2) // one row per key
+    assert(dimView == dimBefore)
+    assert(new java.io.File(dim).list().filter(_.startsWith("batch="))
+      .toSeq == Seq("batch=-2"))
     val serving = tmp("cj_serving")
     (1 to 3).foreach(i => Sinks.upsertBatch(
-      Seq(("k", "2024-01-05", i)).toDF("pk", "dt", "v"),
-      serving, "pk", batchId = i.toLong))
+      Seq(("k", "2024-01-05", i), (s"k$i", "2024-01-06", i))
+        .toDF("pk", "dt", "v"), serving, "pk", batchId = i.toLong))
+    def servingView = Sinks.latest(Sinks.readStore(spark, serving), "pk")
+      .select("pk", "dt", "v").collect().map(_.toString).toSet
+    val servingBefore = servingView
     graft.runner.StreamingApps.CompactionJob.run(spark,
       Seq("serving", serving, "pk"))
-    assert(spark.read.parquet(serving).count() == 1)
+    assert(Sinks.readStore(spark, serving).count() == 4)
+    assert(servingView == servingBefore)
     assert(Sinks.latest(Sinks.readStore(spark, serving), "pk")
-      .select("v").as[Int].head() == 3)
+      .filter(col("pk") === "k").select("v").as[Int].head() == 3)
+    // the fold keeps the dt partitioning below its target directory
+    assert(new java.io.File(s"$serving/batch=-4").list()
+      .filter(_.startsWith("dt=")).toSet ==
+      Set("dt=2024-01-05", "dt=2024-01-06"))
     // bad args fail fast instead of silently doing nothing
     intercept[RuntimeException] {
       graft.runner.StreamingApps.CompactionJob.run(spark, Seq("nope"))
@@ -615,22 +667,18 @@ class StreamingPipelinesSpec extends SparkSpec {
       """{"database":"g","table":"user_info","type":"update","ts":2,"data":{"id":"1","gender":"M"}}""",
       """{"database":"g","table":"user_info","type":"insert","ts":1,"data":{"id":"2","gender":"F"}}""",
       """{"database":"g","table":"user_info","type":"delete","ts":3,"data":{"id":"2","gender":"F"}}""",
-      """{"database":"g","table":"base_province","type":"insert","ts":1,"data":{"id":"11","name":"BJ"}}"""
-    ).toDF("value")
-    // append each row as its own micro-batch (worst-case history)
-    raw.collect().foreach { r =>
-      CdcSplit.dims(CdcSplit.decoded(CdcSplit.parse(
-          Seq(r.getString(0)).toDF("value"))),
-          Set("user_info", "base_province"))
-        .write.mode("append").partitionBy("table").parquet(out)
-    }
-    def view = CdcSplit.latestDims(spark.read.parquet(out))
+      """{"database":"g","table":"base_province","type":"insert","ts":1,"data":{"id":"11","name":"BJ"}}""")
+    // each row as its own micro-batch (worst-case history)
+    raw.zipWithIndex.foreach { case (j, i) => landDims(cdc(j), out, i.toLong) }
+    // at-least-once: the first batch redelivered under its own id
+    landDims(cdc(raw.head), out, 0L)
+    def view = CdcSplit.latestDims(Sinks.readStore(spark, out))
       .select("table", "id", "op").as[(String, String, String)]
       .collect().toSet
     val before = view
-    assert(spark.read.parquet(out).count() == 5)
+    assert(spark.read.parquet(out).count() == 5) // one copy on disk
     CdcSplit.compactDimStore(spark, out)
-    assert(spark.read.parquet(out).count() == 3) // one row/key, D kept
+    assert(Sinks.readStore(spark, out).count() == 3) // one row/key, D kept
     assert(view == before)
     assert(before == Set(("user_info", "1", "U"),
       ("base_province", "11", "I"))) // id=2 tombstoned away
@@ -638,16 +686,12 @@ class StreamingPipelinesSpec extends SparkSpec {
 
   test("same-second updates across batches keep arrival order via __seq") {
     val out = tmp("dim_seq")
-    def land(json: String, bid: Long) =
-      CdcSplit.dims(CdcSplit.decoded(CdcSplit.parse(
-          Seq(json).toDF("value"))), Set("user_info"), bid)
-        .write.mode("append").partitionBy("table").parquet(out)
     // first batch's payload sorts HIGHER lexicographically (Z > A):
     // without the batch-id tiebreak, the payload-desc fallback would
     // resurrect it over the later arrival
-    land("""{"database":"g","table":"user_info","type":"update","ts":5,"data":{"id":"1","gender":"Z"}}""", 1L)
-    land("""{"database":"g","table":"user_info","type":"update","ts":5,"data":{"id":"1","gender":"A"}}""", 2L)
-    val got = CdcSplit.latestDims(spark.read.parquet(out))
+    landDims(cdc("""{"database":"g","table":"user_info","type":"update","ts":5,"data":{"id":"1","gender":"Z"}}"""), out, 1L)
+    landDims(cdc("""{"database":"g","table":"user_info","type":"update","ts":5,"data":{"id":"1","gender":"A"}}"""), out, 2L)
+    val got = CdcSplit.latestDims(Sinks.readStore(spark, out))
       .select(get_json_object(col("data"), "$.gender")).as[String]
       .collect().toSeq
     assert(got == Seq("A")) // later batch wins the same-second tie

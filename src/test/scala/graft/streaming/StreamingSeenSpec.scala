@@ -41,17 +41,20 @@ class StreamingSeenSpec extends SparkSpec {
   test("membership survives a compaction crash between the swap renames") {
     val store = tmp()
     assert(gate(store, 0L, "u/a", "u/b") === Set("u/a", "u/b"))
-    // simulate compactSeen dying after rename(live -> old), before
-    // rename(tmp -> live): the live path is MISSING, the full store is
-    // set aside — the old Try-based read saw this as an empty store,
-    // re-emitted u/a and u/b, and the batch write recreated the store
-    // root so the set-aside store was never restored
-    val fs = new java.io.File(store)
-    val aside = new java.io.File(store + ".__compact_old")
-    assert(fs.renameTo(aside), "test setup: could not set the store aside")
-    assert(gate(store, 1L, "u/a", "u/c") === Set("u/c"))
+    assert(gate(store, 1L, "u/b", "u/c") === Set("u/c"))
+    // the fold swaps its staged target in by rename, then deletes the
+    // directories it covers; it dies between the two, so the covered
+    // directories sit on disk beside the target
+    FoldCrash.afterPublish(store)(
+      StreamingSeen.compactSeen(spark, store, "url"))
+    assert(gate(store, 2L, "u/a", "u/d") === Set("u/d"))
     assert(StreamingSeen.seenKeys(spark, store, "url")
-      .as[String].collect().toSet === Set("u/a", "u/b", "u/c"))
-    assert(!aside.exists(), "recovery must consume the set-aside store")
+      .as[String].collect().toSet === Set("u/a", "u/b", "u/c", "u/d"))
+    // the next fold finishes the cleanup: one target directory is left
+    StreamingSeen.compactSeen(spark, store, "url")
+    assert(new java.io.File(store).list()
+      .count(_.startsWith("batch=")) === 1)
+    assert(StreamingSeen.seenKeys(spark, store, "url")
+      .as[String].collect().toSet === Set("u/a", "u/b", "u/c", "u/d"))
   }
 }

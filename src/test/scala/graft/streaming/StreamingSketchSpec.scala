@@ -9,9 +9,10 @@ import java.nio.file.Files
 case class DauEvent(dt: String, mid: String)
 
 /** Streaming approximate DAU on MemoryStream: per-micro-batch registers
-  * append into the store, estimates max-merge across batches, replayed
-  * batches cannot move the answer, and the result equals the batch HLL
-  * over the union exactly (merge is lossless by construction).
+  * land in their own batch directory, estimates max-merge across
+  * batches, replayed batches leave one copy and cannot move the answer,
+  * and the result equals the batch HLL over the union exactly (merge is
+  * lossless by construction).
   */
 class StreamingSketchSpec extends SparkSpec {
   import spark.implicits._
@@ -55,20 +56,26 @@ class StreamingSketchSpec extends SparkSpec {
   test("replayed batch append cannot move the estimate; compaction view-equal") {
     val store = tmp("hll_store2")
     val b1 = users("d1", 0, 500).toDF("dt", "mid")
-    StreamingSketch.appendRegisters(b1, store, col("mid"), Seq("dt"), 0L)
+    StreamingSketch.writeRegisters(b1, store, col("mid"), Seq("dt"), 0L)
     val before = StreamingSketch.estimate(spark, store, Seq("dt"))
       .as[(String, Long)].collect().toMap
-    // at-least-once: the same micro-batch lands twice
-    StreamingSketch.appendRegisters(b1, store, col("mid"), Seq("dt"), 0L)
+    val onDisk = spark.read.parquet(store).count()
+    // at-least-once: the same micro-batch lands twice — one copy stays
+    StreamingSketch.writeRegisters(b1, store, col("mid"), Seq("dt"), 0L)
+    assert(spark.read.parquet(store).count() === onDisk)
     val after = StreamingSketch.estimate(spark, store, Seq("dt"))
       .as[(String, Long)].collect().toMap
     assert(before === after)
     // compaction bounds the store at one row per (group, bucket)
+    StreamingSketch.writeRegisters(users("d1", 300, 900).toDF("dt", "mid"),
+      store, col("mid"), Seq("dt"), 1L)
+    val grown = StreamingSketch.estimate(spark, store, Seq("dt"))
+      .as[(String, Long)].collect().toMap
     StreamingSketch.compactRegisters(spark, store, Seq("dt"))
     val compacted = StreamingSketch.estimate(spark, store, Seq("dt"))
       .as[(String, Long)].collect().toMap
-    assert(compacted === before)
-    val rows = spark.read.parquet(store)
+    assert(compacted === grown)
+    val rows = BatchDirs.readAll(spark, store)
     assert(rows.count() ==
       rows.select("dt", "bucket").distinct().count())
   }
@@ -76,86 +83,35 @@ class StreamingSketchSpec extends SparkSpec {
   test("register append after a crashed compaction swap keeps the " +
       "compacted history") {
     val store = tmp("hll_store_swap")
-    StreamingSketch.appendRegisters(users("d1", 0, 500).toDF("dt", "mid"),
+    StreamingSketch.writeRegisters(users("d1", 0, 500).toDF("dt", "mid"),
       store, col("mid"), Seq("dt"), 0L)
+    StreamingSketch.writeRegisters(users("d1", 250, 700).toDF("dt", "mid"),
+      store, col("mid"), Seq("dt"), 1L)
     val d1 = StreamingSketch.estimate(spark, store, Seq("dt"))
       .as[(String, Long)].collect().toMap
-    // crash between compactRegisters' two renames: live missing,
-    // completed staging dir present; the next batch appends first
-    assert(new java.io.File(store)
-      .renameTo(new java.io.File(store + ".__compact_tmp")))
-    StreamingSketch.appendRegisters(users("d2", 0, 300).toDF("dt", "mid"),
-      store, col("mid"), Seq("dt"), 1L)
+    // the fold crashes after publishing its target, before deleting
+    // the batch directories it covers; the next batch lands first
+    FoldCrash.afterPublish(store)(
+      StreamingSketch.compactRegisters(spark, store, Seq("dt")))
+    StreamingSketch.writeRegisters(users("d2", 0, 300).toDF("dt", "mid"),
+      store, col("mid"), Seq("dt"), 2L)
     val got = StreamingSketch.estimate(spark, store, Seq("dt"))
       .as[(String, Long)].collect().toMap
     assert(got.keySet === Set("d1", "d2"))
     assert(got("d1") === d1("d1"))
     assert(math.abs(got("d2") - 300).toDouble / 300 < 0.05)
-  }
-
-  test("streaming cms: cross-batch counts equal batch-union; replay idempotent") {
-    implicit val sqlCtx = spark.sqlContext
-    val store = tmp("cms_store")
-    val src = MemoryStream[DauEvent]
-    val q = StreamingSketch.cmsSink(src.toDF(), store,
-        col("mid"), Seq("dt"))
-      .option("checkpointLocation", tmp("cms_ckpt"))
-      .start()
-    try {
-      src.addData(users("d1", 0, 50) ++ users("d1", 0, 50): _*) // ×2 each
-      q.processAllAvailable()
-      src.addData(users("d1", 0, 30): _*) // mid-0..29 now ×3
-      q.processAllAvailable()
-    } finally q.stop()
-    val probes = Seq(("d1", "mid-0"), ("d1", "mid-40")).toDF("dt", "token")
-    val got = StreamingSketch.cmsEstimate(spark, store, probes, "token",
-        Seq("dt"))
-      .as[(String, String, Long)].collect()
-      .map { case (_, t, c) => t -> c }.toMap
-    val batchGot = Sketch.cmsLookup(
-        Sketch.cmsSketch(
-          (users("d1", 0, 50) ++ users("d1", 0, 50) ++ users("d1", 0, 30))
-            .toDF("dt", "mid"), col("mid"), Seq("dt")),
-        probes, "token", Seq("dt"))
-      .as[(String, String, Long)].collect()
-      .map { case (_, t, c) => t -> c }.toMap
-    assert(got === batchGot)
-    assert(got("mid-0") >= 3 && got("mid-40") >= 2) // CMS never undercounts
-    // at-least-once: batch 1 redelivered under the same id
-    StreamingSketch.writeCmsBatch(users("d1", 0, 30).toDF("dt", "mid"),
-      store, col("mid"), Seq("dt"), 1L)
-    val replayed = StreamingSketch.cmsEstimate(spark, store, probes,
-        "token", Seq("dt"))
-      .as[(String, String, Long)].collect()
-      .map { case (_, t, c) => t -> c }.toMap
-    assert(replayed === got)
-  }
-
-  test("streaming qsketch: quantiles equal the batch sketch over the union") {
-    val store = tmp("qs_store")
-    val b1 = (1 to 4000).map(i => ("d1", i.toLong)).toDF("dt", "v")
-    val b2 = (4001 to 5000).map(i => ("d1", i.toLong)).toDF("dt", "v")
-    StreamingSketch.writeQsketchBatch(b1, store, col("v"), Seq("dt"), 0L)
-    StreamingSketch.writeQsketchBatch(b2, store, col("v"), Seq("dt"), 1L)
-    // replay of batch 1 — same path, same bytes, no double count
-    StreamingSketch.writeQsketchBatch(b2, store, col("v"), Seq("dt"), 1L)
-    val got = StreamingSketch.qsketchEstimate(spark, store, Seq("dt"),
-        Seq(500, 900)).as[(String, Int, Long)].collect()
-      .map { case (_, p, v) => p -> v }.toMap
-    val direct = Sketch.qsketchQuantiles(
-        Sketch.qsketch(b1.union(b2), col("v"), Seq("dt")),
-        Seq("dt"), Seq(500, 900)).as[(String, Int, Long)].collect()
-      .map { case (_, p, v) => p -> v }.toMap
-    assert(got === direct)
-    // sanity: p50 of 1..5000 bucketed to 3 sig digits = 2500
-    assert(got(500) === 2500L)
+    // the effective read skips the covered sources: the target's
+    // registers plus batch 2's, nothing counted from batches 0 and 1
+    val target = spark.read.parquet(s"$store/batch=-2").count()
+    assert(BatchDirs.readAll(spark, store).count() ===
+      target + spark.read.parquet(s"$store/batch=2").count())
   }
 
   test("store stays bounded: at most 4096 registers per group per batch") {
     val store = tmp("hll_store3")
     val big = (0 until 20000).map(i => DauEvent("d1", s"u$i"))
       .toDF("dt", "mid")
-    StreamingSketch.appendRegisters(big, store, col("mid"), Seq("dt"), 0L)
-    assert(spark.read.parquet(store).count() <= Sketch.NumRegisters)
+    StreamingSketch.writeRegisters(big, store, col("mid"), Seq("dt"), 0L)
+    assert(BatchDirs.readAll(spark, store).count() <= Sketch.NumRegisters)
   }
 }
