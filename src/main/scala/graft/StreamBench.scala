@@ -698,7 +698,8 @@ object StreamBench {
     * coverage contract StreamBenchSpec lints: every
     * `streaming/Streaming*.scala` with a foreachBatch entry point
     * (plus the transform-only curation pipeline) must appear in
-    * `values`, and [[apps]] must measure exactly `keySet` — so a new
+    * `values`, every other `Streaming*` object must be called from one
+    * that does, and [[apps]] must measure exactly `keySet` — so a new
     * streaming pipeline cannot land without a latency row.
     */
   private[graft] val covers: Map[String, String] = Map(

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * tight primitive loop inside the surrounding WholeStageCodegen stage.
   *
   * Numerics are kept BIT-IDENTICAL to the declarative version
-  * (VectorFns.cosineHof) and the DuckDB oracle: each float widens to
-  * double, dot and both norms accumulate sequentially left-to-right,
-  * result = dot / (sqrt(na) * sqrt(nb)). Null if either side is null or
+  * (`cosineHof` in CosineSimilaritySpec) and the DuckDB oracle: each
+  * float widens to double, dot and both norms accumulate sequentially
+  * left-to-right, result = dot / (sqrt(na) * sqrt(nb)). Null if either side is null or
   * lengths differ (the zip_with null-pad behavior).
   */
 object CosineSimilarity {

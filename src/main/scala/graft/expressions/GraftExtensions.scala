@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.operators.Layout
 import org.apache.spark.sql.{AnalysisException, Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -51,36 +52,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     kernel("int8_quantize", 1, Int8Quantize)(a => Int8Quantize(a.col(0)))
     kernel("int8_cosine", 2, Int8Cosine)(a =>
       Int8Cosine(a.col(0), a.col(1)))
-    ext.injectFunction((
-      FunctionIdentifier("z_value"),
-      new ExpressionInfo("graft.operators.Layout", "z_value"),
-      (children: Seq[Expression]) => {
-        // catalyst nodes directly: a function builder's children are
-        // already resolved, so Column-DSL trees (which re-wrap as
-        // unresolved functions) can't be returned here
-        import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, Cast, Multiply, ShiftRight}
-        import org.apache.spark.sql.types.LongType
-        checkArity("z_value", 3, children)
-        val bits = intLit("z_value", "bits", 2, children)
-        if (bits < 1 || bits > 31)
-          throw new AnalysisException(
-            errorClass = "UNEXPECTED_INPUT_TYPE",
-            messageParameters = Map(
-              "paramIndex" -> "3",
-              "functionName" -> "`z_value`",
-              "requiredType" -> "\"INT in [1, 31]\"",
-              "inputSql" -> s"\"$bits\"",
-              "inputType" -> "\"INT\""))
-        val a = Cast(children(0), LongType)
-        val b = Cast(children(1), LongType)
-        def bit(e: Expression, i: Int, pos: Int): Expression =
-          Multiply(
-            BitwiseAnd(ShiftRight(e, Literal(i)), Literal(1L)),
-            Literal(1L << pos))
-        (0 until bits).flatMap(i =>
-          Seq(bit(a, i, 2 * i), bit(b, i, 2 * i + 1)))
-          .reduce[Expression](Add(_, _))
-      }))
+    kernel("z_value", 3, Layout) { a =>
+      val bits = a.int(2, "bits")
+      if (bits < 1 || bits > 31)
+        throw new AnalysisException(
+          errorClass = "UNEXPECTED_INPUT_TYPE",
+          messageParameters = Map(
+            "paramIndex" -> "3",
+            "functionName" -> "`z_value`",
+            "requiredType" -> "\"INT in [1, 31]\"",
+            "inputSql" -> s"\"$bits\"",
+            "inputType" -> "\"INT\""))
+      Layout.zValue2(a.col(0), a.col(1), bits)
+    }
     // one aggregate for a bigint or a string id; `top_k_by_score_str`
     // is its older string-id name
     Seq("top_k_by_score", "top_k_by_score_str").foreach { name =>

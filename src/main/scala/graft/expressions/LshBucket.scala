@@ -4,9 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
-/** Random-hyperplane LSH bucket id (see
-  * [[graft.functions.VectorFns.lshBucketHof]] for the declarative
-  * reference): `planes` sign bits of deterministic-hyperplane dot
+/** Random-hyperplane LSH bucket id (see `lshBucketHof` in
+  * CosineSimilaritySpec for the declarative reference): `planes` sign bits of deterministic-hyperplane dot
   * products, packed into a Long. `seed` selects the independent hash
   * table for OR-amplification.
   *

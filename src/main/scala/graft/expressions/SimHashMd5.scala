@@ -6,9 +6,9 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** `bits`-wide SimHash over a token array using the oracle-reproducible
   * md5-prefix hash — the shuffle-free codegen form of the explode →
-  * md5-hash → N conditional-sum aggregates stage in the md5-based
-  * [[graft.operators.Dedup.simhashPairs]] paths (which must stay
-  * md5-based so the DuckDB oracle can reproduce them; the xxhash64
+  * md5-hash → N conditional-sum aggregates stage behind
+  * [[graft.operators.Dedup.simhashPairs64Md5]] (which must stay
+  * md5-based so the DuckDB oracle can reproduce it; the xxhash64
   * production form is [[SimHash64]]). Token hash: the 32-bit md5
   * prefix ([[MinHashSig.hash32]]) for `bits` <= 32, the 64-bit prefix
   * ([[MinHashSig.hash64]]) above that — a 32-bit hash has no entropy

@@ -13,8 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * language-ID); this kernel looks each token up once in a
   * precompiled hash map of word→list-membership bitmask and bumps all
   * matching counters. Output: `array<long>` of hit counts, one per
-  * input list, exactly `TextFns.hitCount(toks, list)` per element
-  * (null tokens match nothing; a word on several lists counts on each).
+  * input list, each exactly TextFnsSpec's declarative
+  * `hitCount(toks, list)` (null tokens match nothing; a word on several
+  * lists counts on each).
   *
   * `lists` is a plan-time constant (≤ 64 lists — bitmask-bound, far
   * above any language-ID roster).

@@ -71,7 +71,7 @@ object ExtensionQueries {
     }.mkString("(", " + ", ")")
 
   /** k-wide MinHash signature over distinct n-gram shingles (mirrors
-    * TextFns.minhash).
+    * [[graft.expressions.MinHashSig]]).
     */
   private def minhashSql(n: Int, k: Int): String =
     s"list_transform(range(0, $k), j -> coalesce(" +
@@ -1333,13 +1333,6 @@ object ExtensionQueries {
         .select(col("doc_id"), col("cluster_id"), col("split"))
         .orderBy(col("doc_id"))
     },
-
-    // The 16-bit SimHash variant (Dedup.simhashPairs) is spec-gated
-    // only (DedupSpec "near-identical docs within small hamming
-    // radius"): its 65,536-value signature space saturates as the
-    // corpus grows, so its sig-pair expansion join is the one shape
-    // here that degrades with scale — the 64-bit production twin below
-    // carries the registry/bench slot instead.
 
     // 64-bit SimHash path under a FULL oracle via the md5-prefix
     // signature twin: the oracle rebuilds each 64-bit signature from

@@ -56,23 +56,6 @@ object TextFns {
   def hash60(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast(LongType)
 
-  private val P = 2147483647L // 2^31-1, Mersenne prime
-
-  /** The j-th MinHash permutation applied to a 32-bit hash value. */
-  def perm(j: Int, h: Column): Column =
-    (lit(2L * j + 1) * h + lit(40503L * (j + 1))) % P
-
-  /** k-wide MinHash signature over an array of shingle strings: for each
-    * j, min over shingles of perm(j, hash32(shingle)). NULL-safe on empty
-    * arrays (signature element = P).
-    */
-  def minhash(shingleArr: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), j =>
-      coalesce(
-        array_min(transform(shingleArr, s => (
-          (j * 2 + 1) * hash32(s) + (j + 1) * 40503L) % P)),
-        lit(P)))
-
   /** LSH band signatures: group the k-wide signature into `bands` bands
     * of k/bands rows each; each band key is "bandIdx:v1,v2,..". Same band
     * key ⇔ candidate pair. Returns array of band-key strings.
@@ -84,27 +67,8 @@ object TextFns {
         array_join(slice(sig, b * rows + 1, lit(rows)), ",")))
   }
 
-  /** 16-bit SimHash over a token array: per bit b, sum +-1 by bit b of
-    * each token's hash32; bit set iff sum > 0. Ties (sum == 0) → 0.
-    */
-  def simhash16(tokArr: Column): Column = {
-    val bits = (0 until 16).map { b =>
-      val bitSum = aggregate(tokArr, lit(0L),
-        (acc, t) => acc +
-          when(shiftright(hash32(t), b) % 2 === 1, 1L).otherwise(-1L))
-      when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** Hamming distance between two small non-negative int hashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** Count of tokens of `text` found in `words` (language-ID /
-    * stopword-ratio primitive).
-    */
-  def hitCount(tokArr: Column, words: Seq[String]): Column =
-    size(filter(tokArr, t => t.isin(words.map(lit): _*)))
 
   /** Unicode NFC canonicalization via the codegen
     * [[graft.expressions.NfcNormalize]] kernel (DuckDB oracle twin:

@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *  - [[minhashLshPairs]] — MinHash signatures banded into LSH buckets;
   *    candidates = same band key (an equi-join-able groupBy, scales as
   *    the bucket sizes, not n²), verified with estimated Jaccard.
-  *  - [[simhashPairs]] — 16-bit SimHash; bucket by exact signature, then
-  *    pair signatures within Hamming radius via the small distinct-
-  *    signature set (|sigs| ≤ 2^16 regardless of corpus size).
+  *  - [[simhashPairs64]] — 64-bit SimHash; pair the distinct
+  *    signatures within a Hamming radius by 8×8-band pigeonhole
+  *    blocking, then expand the signature pairs to doc pairs.
   *  - [[embeddingPairs]] — cosine near-dup over embeddings; candidates
   *    blocked by random-hyperplane LSH bucket, exact cosine on survivors.
   *
@@ -351,7 +351,7 @@ object Dedup {
     // no aggregation exchange for ReuseExchange to share, so without
     // this both self-join sides would re-run the md5 shingle hashing;
     // repartition(band) is reused by both sides AND pre-partitions the
-    // equi-join (same pattern as simhashPairs' repartition(sig))
+    // equi-join (same pattern as simhashPairs64's repartition(sig))
     val banded = minhashIndex(docs, idCol, textCol, n, k, bands)
       .repartition(col("band"))
     // estimate + threshold BEFORE the pair dedup: the candidate set is
@@ -366,61 +366,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** SimHash near-dup pairs: 16-bit signatures, pairs within Hamming
-    * distance ≤ `maxHamming` (≤ 3 here by construction of the blocking).
-    *
-    * Two scale moves vs the naive form:
-    *  - signatures per row via the codegen
-    *    [[graft.expressions.SimHashMd5]] kernel (each token
-    *    md5-hashed once, 16 counters folded locally — no explode, no
-    *    signature-stage shuffle);
-    *  - candidate pairs via pigeonhole blocking: the 16 bits split
-    *    into 4 bands of 4 — any pair within Hamming ≤ 3 must agree on
-    *    at least one whole band, so candidates come from a band-value
-    *    equi-join, never an O(n²) theta join.
-    */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3,
-      "4-band pigeonhole blocking only covers Hamming <= 3")
-    val sigs = Par.fanOut(docs).select(col(idCol).as("did"),
-        graft.expressions.SimHashMd5(TextFns.toks(col(textCol)), 16)
-          .as("sig"))
-      .filter(col("sig").isNotNull) // null text/zero tokens: doc dropped
-      // one cheap shuffle by sig → the three consumers below (distinct
-      // + both expansion joins) all reuse a single exchange instead of
-      // re-computing the signatures per consumer
-      // (A/B-measured in tools/ab_simhash.scala)
-      .repartition(col("sig"))
-    // Pair by DISTINCT signature first: |sigs| ≪ |docs| on real corpora
-    // (16-bit space caps it at 65536 regardless of corpus size), so all
-    // banding/Hamming work runs on the signature set and doc pairs are
-    // produced by direct expansion joins — no doc-level candidate dedup.
-    val distinctSigs = sigs.select(col("sig")).distinct()
-    val banded = distinctSigs
-      .select(col("sig"), explode(array((0 until 4).map(i =>
-        struct(lit(i).as("bi"),
-          (shiftright(col("sig"), 4 * i) % 16).as("bv"))): _*)).as("band"))
-      .select(col("sig"), col("band.bi").as("bi"), col("band.bv").as("bv"))
-    // ordered signature pairs (incl. self-pairs) within the radius;
-    // ordered + the did_a < did_b constraint below yields each unordered
-    // doc pair exactly once
-    val sigPairs = banded.as("x")
-      .join(banded.as("y"),
-        col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv"))
-      .select(col("x.sig").as("sig_a"), col("y.sig").as("sig_b"),
-        TextFns.hamming(col("x.sig"), col("y.sig")).cast("int")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("sig_a", "sig_b")
-    sigs.as("a")
-      .join(broadcast(sigPairs), col("a.sig") === col("sig_a"))
-      .join(sigs.as("b"),
-        col("b.sig") === col("sig_b") && col("a.did") < col("b.did"))
-      .select(col("a.did").as("id_a"), col("b.did").as("id_b"),
-        col("hamming"))
-  }
-
   /** k-wide MinHash signatures via the codegen
     * [[graft.expressions.MinHashSig]] kernel: one narrow pass per
     * doc — distinct n-gram shingling, md5 hashing and k permutation
@@ -428,7 +373,8 @@ object Dedup {
     * interpreted HOFs, measured ~4× slower) — NO shuffle in the
     * signature stage. Docs with fewer than n tokens yield null and are
     * dropped, matching the aggregate path's groupBy semantics.
-    * Bit-identical to [[minhashSigsAgg]] (parity-tested).
+    * Bit-identical to the explode → hash once → k min-aggregates form
+    * (the declarative reference in `DedupSpec`).
     */
   def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
                   n: Int, k: Int): DataFrame =
@@ -437,37 +383,16 @@ object Dedup {
           .as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** Declarative formulation of [[minhashSigs]] (explode → hash once →
-    * k min-aggregates in one hash-agg). One shuffle; kept as the
-    * reference for the codegen expression's parity check.
-    */
-  private[operators] def minhashSigsAgg(docs: DataFrame, idCol: String,
-                                        textCol: String,
-                                        n: Int, k: Int): DataFrame = {
-    val P = 2147483647L
-    val hashed = shingled(docs, idCol, textCol, n)
-      .select(col("did"), TextFns.hash32(col("sh")).as("m"))
-    val minAggs = (0 until k).map(j =>
-      min((lit(2L * j + 1) * col("m") + lit(40503L * (j + 1))) % P)
-        .as(s"mh$j"))
-    hashed.groupBy("did")
-      .agg(minAggs.head, minAggs.tail: _*)
-      .select(col("did"),
-        array((0 until k).map(j => col(s"mh$j")): _*).as("sig"))
-  }
-
-  /** 64-bit SimHash signatures — the production-scale path. The 16-bit
-    * [[simhashPairs]] form is oracle-reproducible but saturates on a
-    * large corpus (2^16 distinct values ⇒ at web scale every signature
-    * is occupied and Hamming neighborhoods blanket the space); 64 bits
-    * keeps signatures sparse at any realistic corpus size.
+  /** 64-bit SimHash signatures — the production-scale path. 64 bits
+    * keep signatures sparse at any realistic corpus size, where a
+    * 16-bit space saturates (2^16 distinct values ⇒ at web scale every
+    * signature is occupied and Hamming neighborhoods blanket the space).
     *
     * Computed by the codegen [[graft.expressions.SimHash64]] kernel:
     * one narrow pass, NO shuffle — each doc's tokens hash once (xxhash64)
     * into 64 local counters inside WholeStageCodegen. Bit-identical to
-    * the explode + 64-conditional-sum-aggregates form
-    * ([[simhash64SigsAgg]], kept as the declarative reference and
-    * parity check).
+    * the explode + 64-conditional-sum-aggregates form (the declarative
+    * reference in `DedupSpec`).
     */
   def simhash64Sigs(docs: DataFrame, idCol: String,
                     textCol: String): DataFrame =
@@ -476,27 +401,6 @@ object Dedup {
       // null sig = null text or zero tokens — the aggregate path's
       // groupBy drops such docs; match it
       .filter(col("sig").isNotNull)
-
-  /** Declarative formulation of [[simhash64Sigs]] (explode → hash once
-    * → 64 conditional sums in one hash-agg). One shuffle; used to
-    * bit-parity-check the codegen expression.
-    */
-  private[operators] def simhash64SigsAgg(docs: DataFrame, idCol: String,
-                                          textCol: String): DataFrame = {
-    val hashed = Par.fanOut(docs).select(col(idCol).as("did"),
-        explode(TextFns.toks(col(textCol))).as("t"))
-      .select(col("did"), xxhash64(col("t")).as("m"))
-    // bitwiseAND, not shiftright+mod: m is signed and bit 63 matters
-    val bitAggs = (0 until 64).map(b =>
-      sum(when(col("m").bitwiseAND(lit(1L << b)) =!= 0, 1L)
-        .otherwise(-1L)).as(s"b$b"))
-    hashed.groupBy("did")
-      .agg(bitAggs.head, bitAggs.tail: _*)
-      .select(col("did"),
-        (0 until 64).map(b =>
-          when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("sig"))
-  }
 
   /** 64-bit md5-prefix SimHash signatures — the oracle-reproducible
     * twin of [[simhash64Sigs]]: same codegen one-pass shape
@@ -517,10 +421,11 @@ object Dedup {
   /** SimHash near-dup pairs over 64-bit signatures: pigeonhole banding
     * into 8 bands of 8 bits — any pair within Hamming ≤ 7 agrees on at
     * least one whole band, so candidates come from a band-value
-    * equi-join. Same distinct-signature pairing as the 16-bit form, but
-    * the signature-pair join is left to the planner (no broadcast
-    * hint): at 2^64 the distinct-signature set grows with the corpus,
-    * so AQE should pick the join strategy from actual sizes.
+    * equi-join. Pairs come from the DISTINCT signatures, expanded to
+    * doc pairs by equi-joins; the signature-pair join is left to the
+    * planner (no broadcast hint): at 2^64 the distinct-signature set
+    * grows with the corpus, so AQE should pick the join strategy from
+    * actual sizes.
     */
   def simhashPairs64(docs: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int): DataFrame =

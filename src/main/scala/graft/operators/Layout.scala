@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, Cast, Expression, Literal, Multiply, ShiftRight}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.LongType
 
-/** Data-layout operators: Z-order (Morton) interleaving and the
-  * range-clustered writer shape built on it.
+/** Data-layout operators: Z-order (Morton) interleaving.
   *
   * Why an engine needs this at 100 TB: parquet data skipping works off
   * per-file / per-row-group min-max statistics, and a table sorted by
@@ -14,10 +15,10 @@ import org.apache.spark.sql.functions._
   * min-max pruning stays effective for predicates on any interleaved
   * dimension (the Delta/Iceberg OPTIMIZE ZORDER design).
   *
-  * The interleave itself is a pure-Column bit expression — statically
-  * unrolled per bit, whole-stage-codegen'd, no UDF — and reproducible
-  * in plain SQL on any engine (the oracle mirrors it with `>>`/`&`
-  * arithmetic).
+  * The interleave itself is a tree of Catalyst's own bit nodes —
+  * statically unrolled per bit, whole-stage-codegen'd, no UDF — and
+  * reproducible in plain SQL on any engine (the oracle mirrors it with
+  * `>>`/`&` arithmetic).
   */
 object Layout {
 
@@ -26,29 +27,20 @@ object Layout {
     * at 2i+1. `bits` ≤ 31 (result fits a signed 64-bit). Inputs are
     * masked to `bits` bits, so out-of-range values wrap rather than
     * corrupt the ordering of in-range ones.
+    *
+    * Built from Catalyst nodes rather than the Column DSL, so the SQL
+    * `z_value` builder, whose children arrive resolved, returns this
+    * same tree.
     */
   def zValue2(a: Column, b: Column, bits: Int): Column = {
     require(bits >= 1 && bits <= 31, s"bits must be in [1,31], got $bits")
-    val al = a.cast("long")
-    val bl = b.cast("long")
-    (0 until bits).map { i =>
-      shiftright(al, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i)) +
-        shiftright(bl, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1))
-    }.reduce(_ + _)
+    def bit(e: Expression, i: Int, pos: Int): Expression =
+      Multiply(BitwiseAnd(ShiftRight(e, Literal(i)), Literal(1L)),
+        Literal(1L << pos))
+    val al = Cast(Bridge.expression(a), LongType)
+    val bl = Cast(Bridge.expression(b), LongType)
+    Bridge.column((0 until bits).map[Expression] { i =>
+      Add(bit(al, i, 2 * i), bit(bl, i, 2 * i + 1))
+    }.reduce(Add(_, _)))
   }
-
-  /** Cluster a frame for write-out by the Z-order of two columns:
-    * range-partition on the interleaved key (partition boundaries from
-    * a reservoir sample, so output files hold disjoint z-ranges) and
-    * sort within each partition. A parquet write of the result gives
-    * every file a tight min-max envelope on BOTH `a` and `b`. The
-    * z key rides along as `zCol` for inspection/pruning; drop it
-    * after writing if undesired.
-    */
-  def clusterByZOrder(df: DataFrame, a: Column, b: Column, bits: Int,
-                      numPartitions: Int,
-                      zCol: String = "z_value"): DataFrame =
-    df.withColumn(zCol, zValue2(a, b, bits))
-      .repartitionByRange(numPartitions, col(zCol))
-      .sortWithinPartitions(col(zCol))
 }

@@ -17,9 +17,6 @@ import org.apache.spark.sql.types.IntegerType
   * independent of corpus size — the plan survives a 100× scale-up where
   * the global-window form funnels every matching row to one task.
   *
-  * For unbounded paging depth prefer [[keyset]]: O(scan + size), the
-  * classic "WHERE key > lastSeen ORDER BY key LIMIT size".
-  *
   * `keys` must be a deterministic total order (unique key columns) —
   * the same requirement the oracle's row_number ORDER BY already has.
   */
@@ -67,24 +64,5 @@ object Paging {
           .as("rn"): _*)
       .withColumn("rn", col("rn").cast(IntegerType))
       .filter(col("rn") > from)
-  }
-
-  /** Keyset pagination: the page after `lastSeen` (exclusive) under
-    * ORDER BY `key` — O(size) state anywhere, the production path for
-    * deep paging. `lastSeen = None` starts at the first page.
-    *
-    * Contract: the key must be NON-NULL (callers page on a primary key
-    * like `detail_id`). A nullable key cannot keyset-paginate — null
-    * rows sort first on page one but `key > lastSeen` is
-    * null-rejecting, so they would vanish from every later page.
-    * Null-keyed rows are therefore filtered out up front: they are
-    * excluded from EVERY page, consistently, rather than silently
-    * appearing on page one and dropping out afterwards.
-    */
-  def keyset(df: DataFrame, key: String, lastSeen: Option[Column],
-             size: Int): DataFrame = {
-    val nonNull = df.filter(col(key).isNotNull)
-    val after = lastSeen.fold(nonNull)(ls => nonNull.filter(col(key) > ls))
-    after.orderBy(col(key)).limit(size)
   }
 }

@@ -740,8 +740,8 @@ object Similarity {
     * broadcast into an equi-join on cell id, so per-batch cost is
     * |postings| × nProbe / cells candidate scores; store the postings
     * bucketed by `cell` and the probe join shuffles nothing at all
-    * (the [[graft.operators.JoinOps]] pattern, proven for the minhash
-    * index in PushdownSpec). Output: (query_id, neighbor_id, rank,
+    * (the bucketed-table pattern, proven for the minhash index in
+    * PushdownSpec). Output: (query_id, neighbor_id, rank,
     * cosine), self-pairs excluded.
     * The index's `centroids.cell` must be byte/short/int/long: a
     * `DecimalType(p,0)` (or any non-integral) cell id is rejected
@@ -994,18 +994,5 @@ object Similarity {
       .select(col("corpus_id"), col("probe_id"), col("cosine"))
     if (tables > 1) matches.dropDuplicates("corpus_id", "probe_id")
     else matches
-  }
-
-  /** Corpus rows surviving semantic decontamination: anti-join on the
-    * matched ids (the match set is ≤ |corpus| ids — the corpus itself
-    * streams through untouched).
-    */
-  def semanticFilter(corpus: DataFrame, probes: DataFrame, idCol: String,
-                     vecCol: String, threshold: Double, planes: Int = 8,
-                     tables: Int = 1): DataFrame = {
-    val hit = semanticMatches(corpus, probes, idCol, vecCol, threshold,
-        planes, tables)
-      .select(col("corpus_id").as(idCol)).distinct()
-    corpus.join(hit, Seq(idCol), "left_anti")
   }
 }

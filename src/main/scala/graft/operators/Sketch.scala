@@ -197,11 +197,6 @@ object Sketch {
         Seq(col("rc.row").as("row"), col("rc.cell").as("cell")): _*)
       .agg(count(lit(1)).as("cnt"))
 
-  /** Merge sketches (cell-wise sum) — cross-shard / cross-day rollup. */
-  def cmsMerge(sketch: DataFrame, groupCols: Seq[String]): DataFrame =
-    sketch.groupBy((groupCols ++ Seq("row", "cell")).map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"))
-
   /** Approximate pairwise set overlap between groups by
     * inclusion–exclusion over HLL registers: |A∩B| ≈ est(A) + est(B) −
     * est(A∪B), where the union's registers are the bucket-wise max.

@@ -99,7 +99,7 @@ object QueryService {
     * (orderBy + limit) with `rn` rebuilt on the ≤ from+size survivors —
     * see [[graft.operators.Paging]]; the total is a scalar aggregate
     * broadcast onto the page. No global single-partition window at any
-    * match-set size. For deep paging use [[detailByItemAfter]].
+    * match-set size.
     */
   def detailByItem(spark: SparkSession, orderWideDir: String,
                    itemName: String, date: String,
@@ -116,35 +116,6 @@ object QueryService {
       .orderBy(col("rn"))
   }
 
-  /** [[detailByItem]] in RELEVANCE order — the reference's actual ES
-    * `_score` ordering (PublisherMapperImpl.java:194), approximated by
-    * [[graft.operators.Relevance]]'s exact tf × linear-idf with ties
-    * broken by `detail_id`. Document frequencies come from the WHOLE
-    * day's store (the "index"), not the match-filtered hit set — under
-    * the AND-match filter every hit contains every token, so hit-set
-    * dfs would degenerate to N and erase the idf weighting. Same
-    * distributed page shape as [[detailByItem]]: score negated so the
-    * ascending TakeOrderedAndProject pagination applies unchanged.
-    */
-  def detailByItemRelevance(spark: SparkSession, orderWideDir: String,
-                            itemName: String, date: String,
-                            pageNo: Int, pageSize: Int = 20): DataFrame = {
-    val from = (pageNo - 1) * pageSize
-    val day = orderWideTable(spark, orderWideDir)
-      .filter(col("dt") === date)
-    val base = graft.operators.Relevance.scored(
-        day.filter(Cols.matchAnd(col("sku_name"), itemName)),
-        "sku_name", itemName, corpus = Some(day))
-      .withColumn("sku_name", Cols.highlight(col("sku_name"), itemName))
-      .withColumn("__negscore", -col("score"))
-    val total = base.agg(count(lit(1)).as("total"))
-    graft.operators.Paging.paginate(base, Seq("__negscore", "detail_id"),
-        from, pageSize)
-      .drop("__negscore")
-      .crossJoin(broadcast(total))
-      .orderBy(col("rn"))
-  }
-
   /** Match count alone (the `total` of [[detailByItem]] without a
     * page) — the serving layer falls back to this when a requested
     * page is past the last row, where no page row carries the total.
@@ -155,21 +126,4 @@ object QueryService {
       .filter(col("dt") === date &&
         Cols.matchAnd(col("sku_name"), itemName))
       .count()
-
-  /** Keyset-paginated `detailByItem`: the page after `afterDetailId`
-    * (exclusive; None = first page) ordered by `detail_id` — the
-    * production path for unbounded result sets: O(pageSize) state
-    * anywhere, no offset scan, no window.
-    */
-  def detailByItemAfter(spark: SparkSession, orderWideDir: String,
-                        itemName: String, date: String,
-                        afterDetailId: Option[Long],
-                        pageSize: Int = 20): DataFrame = {
-    val base = orderWideTable(spark, orderWideDir)
-      .filter(col("dt") === date &&
-        Cols.matchAnd(col("sku_name"), itemName))
-      .withColumn("sku_name", Cols.highlight(col("sku_name"), itemName))
-    graft.operators.Paging.keyset(base, "detail_id",
-      afterDetailId.map(lit(_)), pageSize)
-  }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * the application jar).
   *
   * Integration-coverage note: an in-process broker round-trip spec
-  * (produce → readStream → split → kafkaSink → assert) was scoped and
+  * (produce → readStream → split → Kafka write → assert) was scoped and
   * is ENV-BLOCKED in this build environment — the provided Spark
   * distribution ships neither `spark-sql-kafka-0-10` nor
   * `kafka-clients` (verified against /opt/spark/jars), and dependency

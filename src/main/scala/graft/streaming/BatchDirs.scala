@@ -86,31 +86,42 @@ private[graft] object BatchDirs {
     dirOf(rootPath, -(upToBatch + 1))
 
   /** Land one batch's rows in its own directory, owned-by-path,
-    * partitioned below it by `partitionCols`.
+    * partitioned below it by `partitionCols`. An empty frame written
+    * with partition columns leaves no file to carry the schema, only
+    * `_SUCCESS`; that directory is deleted, so the batch reads as
+    * absent instead of failing schema inference on every later read.
     */
   def write(df: DataFrame, rootPath: String, batchId: Long,
             partitionCols: Seq[String] = Nil): Unit = {
     val root = new Path(rootPath)
-    listBatchIds(fsOf(df.sparkSession, root), root) // refuses a legacy root
+    val fs = fsOf(df.sparkSession, root)
+    listBatchIds(fs, root) // refuses a legacy root
+    val dir = dirOf(rootPath, batchId)
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-      .parquet(dirOf(rootPath, batchId).toString)
+      .parquet(dir.toString)
+    if (!fs.listStatus(dir).exists(st => isData(st.getPath.getName)))
+      fs.delete(dir, true)
   }
 
   private def fsOf(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** Spark's own listing rule: dot-prefixed names (staging) and
+    * underscore-prefixed ones (`_SUCCESS`) hold no store data, except a
+    * partition directory such as `__part=3`.
+    */
+  private def isData(name: String): Boolean =
+    !name.startsWith(".") && (!name.startsWith("_") || name.contains("="))
+
   /** The root's `batch=<id>` directories as (id, path), and its other
-    * visible entries. Dot- and underscore-prefixed names (staging,
-    * `_SUCCESS`) are neither; so are `batch=` names with no numeric id.
+    * visible entries. Names that hold no data (see [[isData]]) are
+    * neither; so are `batch=` names with no numeric id.
     */
   private def layout(fs: FileSystem, root: Path)
       : (Seq[(Long, Path)], Seq[Path]) = {
     val visible =
       if (!fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq.filterNot { st =>
-        val n = st.getPath.getName
-        n.startsWith(".") || n.startsWith("_")
-      }
+      else fs.listStatus(root).toSeq.filter(st => isData(st.getPath.getName))
     val (batches, other) = visible.partition(_.getPath.getName.startsWith(Prefix))
     (batches.filter(_.isDirectory).map(_.getPath)
       .flatMap(p => p.getName.stripPrefix(Prefix).toLongOption.map(_ -> p)),

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Serving-store sinks: the engine's replacement for the reference's
   * per-day Elasticsearch indexes with doc-id upsert (MyEsUtils.scala:
@@ -103,35 +102,4 @@ object Sinks {
     */
   def readStore(spark: SparkSession, path: String): DataFrame =
     BatchDirs.readAll(spark, path)
-
-  /** Kafka sink (reference K1, MyKafkaUtils.scala:61-114): rows
-    * serialized as JSON values; per-record topic routing via an
-    * existing `topic` column (the CdcSplit fact branch) or a fixed
-    * topic. The `topic` column is excluded from the payload ONLY when
-    * it is being consumed for routing — under a fixed topic option a
-    * data column that happens to be named `topic` still serializes.
-    * Flush-before-commit, acks and idempotent produce are the sink's
-    * own contract — none of the reference's hand-rolled producer
-    * lifecycle survives.
-    */
-  def kafkaSink(df: DataFrame, servers: String, checkpoint: String,
-                topic: Option[String] = None,
-                trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : DataStreamWriter[Row] = {
-    val routing = topic.isEmpty && df.columns.contains("topic")
-    val dataCols =
-      (if (routing) df.columns.filter(_ != "topic") else df.columns)
-        .toIndexedSeq.map(col)
-    val payload =
-      if (routing)
-        df.select(col("topic"), to_json(struct(dataCols: _*)).as("value"))
-      else
-        df.select(to_json(struct(dataCols: _*)).as("value"))
-    val w = payload.writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-    topic.fold(w)(t => w.option("topic", t))
-  }
 }

@@ -25,8 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale shape: one `dropDuplicates` on the batch and one left_anti
   * equi-join against the store per batch — at crawl scale, bucket the
-  * store by key (the [[graft.operators.JoinOps]] pattern) to keep the
-  * store side shuffle-free.
+  * store by key to keep the store side shuffle-free.
   */
 object StreamingSeen {
 

@@ -11,7 +11,10 @@ package graft
   * `streaming/Streaming*.scala` pipeline with a foreachBatch entry
   * point must be covered by a named latency row, and the measured app
   * set must be exactly `covers.keySet` — a new streaming pipeline
-  * cannot land without a p50/p95 row in BENCH_r{N}.
+  * cannot land without a p50/p95 row in BENCH_r{N}. Every
+  * `streaming/Streaming*.scala` object must moreover be a covered
+  * pipeline or be called from one, so an unwired module cannot sit
+  * in main unmeasured and unreached.
   */
 class StreamBenchSpec extends SparkSpec {
 
@@ -52,5 +55,33 @@ class StreamBenchSpec extends SparkSpec {
     val missing = withForeachBatch -- covered
     assert(missing.isEmpty,
       s"streaming pipelines without a bench latency row: $missing")
+  }
+
+  test("every streaming/Streaming*.scala object is covered or called " +
+      "from a covered pipeline's code") {
+    val dir = new java.io.File("src/main/scala/graft/streaming")
+    assert(dir.isDirectory, s"not run from the repo root: $dir")
+    def code(f: java.io.File): String =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .replaceAll("(?s)/\\*.*?\\*/", "") // block + doc comments
+        .replaceAll("//[^\n]*", "")
+    val objects = dir.listFiles()
+      .filter(f => f.getName.startsWith("Streaming") &&
+        f.getName.endsWith(".scala"))
+      .flatMap(f => """(?m)^(?:private\[\w+\] )?object (\w+)""".r
+        .findAllMatchIn(code(f)).map(_.group(1)))
+      .toSet
+    assert(objects.nonEmpty, "lint found no objects — glob bug?")
+    val covered = StreamBench.covers.values.toSet
+    val coveredCode = covered.toSeq.map { name =>
+      val f = new java.io.File(dir, s"$name.scala")
+      assert(f.isFile, s"covered pipeline $name has no source at $f")
+      code(f)
+    }
+    val unreached = (objects -- covered).filterNot(o =>
+      coveredCode.exists(s"\\b$o\\b".r.findFirstIn(_).isDefined))
+    assert(unreached.isEmpty,
+      s"streaming objects neither covered nor called from a covered " +
+        s"pipeline: $unreached")
   }
 }

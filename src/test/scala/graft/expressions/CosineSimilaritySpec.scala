@@ -3,17 +3,46 @@ package graft.expressions
 import graft.SparkSpec
 import graft.functions.VectorFns
 import graft.tables.Tables
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 class CosineSimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  // Declarative (higher-order-function) references for the kernels:
+  // sequential double folds, the form the DuckDB oracle mirrors.
+  private def d(c: Column): Column = c.cast(DoubleType)
+
+  private def fsum(arr: Column): Column =
+    aggregate(arr, lit(0.0), (acc, v) => acc + v)
+
+  private def cosineHof(a: Column, b: Column): Column = {
+    def norm(v: Column) = sqrt(fsum(transform(v, x => d(x) * d(x))))
+    fsum(zip_with(a, b, (x, y) => d(x) * d(y))) / (norm(a) * norm(b))
+  }
+
+  /** Hyperplane component for plane `j`, dimension `i`: an integer
+    * LCG-style mix mapped into [-0.5, 0.5).
+    */
+  private def hyperplane(j: Int, i: Column): Column =
+    (((lit(2654435761L) * j) + i * 40503L) % 1000003L)
+      .cast(DoubleType) / 1000003.0 - 0.5
+
+  private def lshBucketHof(vec: Column, planes: Int, seed: Int): Column =
+    (0 until planes).map { j =>
+      val dotJ = fsum(zip_with(vec,
+        sequence(lit(0), size(vec) - 1),
+        (x, i) => d(x) * hyperplane(seed * planes + j, i)))
+      when(dotJ > 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
 
   test("codegen cosine is BIT-identical to the HOF fold on real embeddings") {
     val e = Tables.embeddings(spark, sf0001).limit(100)
     val both = e.as("a").crossJoin(e.as("b"))
       .select(
         VectorFns.cosine($"a.embedding", $"b.embedding").as("fast"),
-        VectorFns.cosineHof($"a.embedding", $"b.embedding").as("hof"))
+        cosineHof($"a.embedding", $"b.embedding").as("hof"))
     val diff = both.filter(
       !($"fast" === $"hof" || ($"fast".isNull && $"hof".isNull))).count()
     assert(diff == 0)
@@ -27,7 +56,7 @@ class CosineSimilaritySpec extends SparkSpec {
       case (l, r) =>
         val diff = e.as("a").crossJoin(e.as("b"))
           .select(VectorFns.cosine(l, r).as("fast"),
-            VectorFns.cosineHof(l, r).as("hof"))
+            cosineHof(l, r).as("hof"))
           .filter(!($"fast" === $"hof")).count()
         assert(diff == 0)
     }
@@ -38,7 +67,7 @@ class CosineSimilaritySpec extends SparkSpec {
     (0 until 4).foreach { seed =>
       val diff = e.select(
         VectorFns.lshBucket($"embedding", 6, seed).as("fast"),
-        VectorFns.lshBucketHof($"embedding", 6, seed).as("hof"))
+        lshBucketHof($"embedding", 6, seed).as("hof"))
         .filter($"fast" =!= $"hof").count()
       assert(diff == 0, s"seed=$seed")
     }

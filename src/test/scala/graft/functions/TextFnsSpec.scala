@@ -1,10 +1,31 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TextFnsSpec extends SparkSpec {
   import spark.implicits._
+
+  private val P = 2147483647L // 2^31-1, Mersenne prime
+
+  /** Declarative k-wide MinHash over an array of shingle strings: for
+    * each j, min over shingles of `(2j+1)·hash32 + 40503·(j+1) mod P`
+    * (the permutations of [[graft.expressions.MinHashSig]]). NULL-safe
+    * on empty arrays (signature element = P).
+    */
+  private def minhash(shingleArr: Column, k: Int): Column =
+    transform(sequence(lit(0), lit(k - 1)), j =>
+      coalesce(
+        array_min(transform(shingleArr, s => (
+          (j * 2 + 1) * TextFns.hash32(s) + (j + 1) * 40503L) % P)),
+        lit(P)))
+
+  /** Declarative count of the tokens found in `words` — the reference
+    * for [[graft.expressions.StopwordHits]].
+    */
+  private def hitCount(tokArr: Column, words: Seq[String]): Column =
+    size(filter(tokArr, t => t.isin(words.map(lit): _*)))
 
   test("shingles: n-grams with short-doc edge cases") {
     val df = Seq("a b c d", "a b", "a").toDF("t")
@@ -27,18 +48,23 @@ class TextFnsSpec extends SparkSpec {
       (3L, "completely different words here with nothing shared at all")
     ).toDF("id", "t")
     val sigs = df.select($"id",
-      TextFns.minhash(array_distinct(TextFns.shingles($"t", 3)), 24)
+      minhash(array_distinct(TextFns.shingles($"t", 3)), 24)
         .as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))
     assert(sigs(1L).size == 24)
+    // the declarative form is the reference the MinHashSig kernel matches
+    val kernel = df.select($"id",
+        graft.expressions.MinHashSig(TextFns.toks($"t"), 24, 3).as("sig"))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(kernel == sigs)
   }
 
   test("lshBands: identical signatures collide in every band") {
     val df = Seq((1L, "x y z w v u"), (2L, "x y z w v u")).toDF("id", "t")
     val bands = df.select($"id", explode(TextFns.lshBands(
-        TextFns.minhash(array_distinct(TextFns.shingles($"t", 2)), 24),
+        minhash(array_distinct(TextFns.shingles($"t", 2)), 24),
         24, 6)).as("b"))
     val collisions = bands.groupBy("b").count().filter($"count" === 2).count()
     assert(collisions == 6)
@@ -57,7 +83,7 @@ class TextFnsSpec extends SparkSpec {
       .as[(Long, Seq[Long])].collect().toMap
     val declarative = corpus.select($"doc_id" +:
         lists.map { case (_, words) =>
-          TextFns.hitCount(TextFns.toks($"text"), words).cast("long")
+          hitCount(TextFns.toks($"text"), words).cast("long")
         }: _*)
       .collect().map(r => r.getLong(0) ->
         (1 to lists.size).map(r.getLong(_)).toSeq).toMap
@@ -65,21 +91,5 @@ class TextFnsSpec extends SparkSpec {
     declarative.foreach { case (id, hits) =>
       assert(onePass(id) == hits, s"doc $id")
     }
-  }
-
-  test("simhash16: equal text → 0 hamming; disjoint text differs") {
-    val df = Seq(
-      (1L, "alpha beta gamma delta"),
-      (2L, "alpha beta gamma delta"),
-      (3L, "zeta eta theta iota kappa lambda")
-    ).toDF("id", "t")
-    val sigs = df.select($"id", TextFns.simhash16(TextFns.toks($"t")))
-      .as[(Long, Long)].collect().toMap
-    assert(sigs(1L) == sigs(2L))
-    assert(sigs(3L) != sigs(1L))
-    assert(sigs.values.forall(s => s >= 0 && s < 65536))
-    val ham = Seq((sigs(1L), sigs(3L))).toDF("a", "b")
-      .select(TextFns.hamming($"a", $"b")).as[Long].head()
-    assert(ham > 0 && ham <= 16)
   }
 }

@@ -1,10 +1,51 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.TextFns
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Declarative reference for [[Dedup.minhashSigs]]: explode the
+    * distinct shingles → hash once → k min-aggregates in one hash-agg.
+    */
+  private def minhashSigsAgg(docs: DataFrame, idCol: String,
+                             textCol: String, n: Int, k: Int): DataFrame = {
+    val P = 2147483647L
+    val hashed = docs.select(col(idCol).as("did"),
+        explode(graft.expressions.WordShingles(
+          TextFns.toks(col(textCol)), n)).as("sh"))
+      .select(col("did"), TextFns.hash32(col("sh")).as("m"))
+    val minAggs = (0 until k).map(j =>
+      min((lit(2L * j + 1) * col("m") + lit(40503L * (j + 1))) % P)
+        .as(s"mh$j"))
+    hashed.groupBy("did")
+      .agg(minAggs.head, minAggs.tail: _*)
+      .select(col("did"),
+        array((0 until k).map(j => col(s"mh$j")): _*).as("sig"))
+  }
+
+  /** Declarative reference for [[Dedup.simhash64Sigs]]: explode →
+    * xxhash64 once → 64 conditional sums in one hash-agg.
+    */
+  private def simhash64SigsAgg(docs: DataFrame, idCol: String,
+                               textCol: String): DataFrame = {
+    val hashed = docs.select(col(idCol).as("did"),
+        explode(TextFns.toks(col(textCol))).as("t"))
+      .select(col("did"), xxhash64(col("t")).as("m"))
+    // bitwiseAND, not shiftright+mod: m is signed and bit 63 matters
+    val bitAggs = (0 until 64).map(b =>
+      sum(when(col("m").bitwiseAND(lit(1L << b)) =!= 0, 1L)
+        .otherwise(-1L)).as(s"b$b"))
+    hashed.groupBy("did")
+      .agg(bitAggs.head, bitAggs.tail: _*)
+      .select(col("did"),
+        (0 until 64).map(b =>
+          when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce(_ + _).as("sig"))
+  }
 
   // 1↔2 exact dup (mod case/space), 3≈4 near-dup (one token edited),
   // 5 unrelated.
@@ -214,15 +255,7 @@ class DedupSpec extends SparkSpec {
     assert(mae < 0.15, s"mean abs error $mae over ${errs.size} pairs")
   }
 
-  test("simhashPairs: near-identical docs within small hamming radius") {
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      .as[(Long, Long, Int)].collect()
-    val m = pairs.map(p => (p._1, p._2) -> p._3).toMap
-    assert(m((1L, 2L)) == 0) // same tokens → same signature
-  }
-
   test("WordShingles matches array_distinct(TextFns.shingles) as a set") {
-    import graft.functions.TextFns
     val corpus = graft.tables.Tables.documents(spark,
         "/root/testdata/sf0.001")
       .select($"doc_id", $"text")
@@ -266,7 +299,7 @@ class DedupSpec extends SparkSpec {
         "doc_id", "text")) // 9002/9003: sub-n tokens + null → dropped
     val expr = Dedup.minhashSigs(corpus, "doc_id", "text", n = 3, k = 8)
       .as[(Long, Seq[Long])].collect().toMap
-    val agg = Dedup.minhashSigsAgg(corpus, "doc_id", "text", n = 3, k = 8)
+    val agg = minhashSigsAgg(corpus, "doc_id", "text", n = 3, k = 8)
       .as[(Long, Seq[Long])].collect().toMap
     assert(agg.nonEmpty)
     assert(expr.keySet == agg.keySet) // same doc-dropping semantics
@@ -284,7 +317,7 @@ class DedupSpec extends SparkSpec {
         (9003L, ""), (9004L, null)).toDF("doc_id", "text"))
     val expr = Dedup.simhash64Sigs(corpus, "doc_id", "text")
       .as[(Long, Long)].collect().toMap
-    val agg = Dedup.simhash64SigsAgg(corpus, "doc_id", "text")
+    val agg = simhash64SigsAgg(corpus, "doc_id", "text")
       .as[(Long, Long)].collect().toMap
     assert(agg.nonEmpty)
     assert(expr.keySet == agg.keySet) // same doc-dropping semantics

@@ -34,38 +34,4 @@ class LayoutSpec extends SparkSpec {
       Layout.zValue2(lit(1L), lit(1L), bits = 32)
     }
   }
-
-  test("clusterByZOrder: partitions hold disjoint sorted z-ranges") {
-    val df = spark.range(4096).select(
-      ($"id" % 64).as("x"), ($"id" / 64).cast("long").as("y"))
-    val clustered = Layout.clusterByZOrder(df, $"x", $"y", bits = 6,
-      numPartitions = 4)
-    val ranges = clustered
-      .select(spark_partition_id().as("p"), $"z_value")
-      .groupBy($"p")
-      .agg(min($"z_value").as("lo"), max($"z_value").as("hi"),
-        count(lit(1)).as("n"))
-      .as[(Int, Long, Long, Long)].collect().sortBy(_._1)
-    assert(ranges.map(_._4).sum === 4096L)
-    // ranges are disjoint and ordered: each partition's lo exceeds the
-    // previous partition's hi (range partitioning on the z key)
-    ranges.sliding(2).foreach {
-      case Array(a, b) => assert(b._2 > a._3)
-      case _           => ()
-    }
-    // z-locality is a property of the KEY, not of the sampled
-    // partition boundaries (repartitionByRange samples with a random
-    // seed, so a partition may straddle a quadrant and legitimately
-    // span the full x range): within every fixed 4-bit z prefix, both
-    // dimensions are confined to a 16-wide band — an interleave that
-    // dropped either dimension's bits would leave that dimension's
-    // spread at the full 63 for some prefix
-    val spread = clustered
-      .select(shiftright($"z_value", 8).as("zp"), $"x", $"y")
-      .groupBy($"zp")
-      .agg((max($"x") - min($"x")).as("dx"), (max($"y") - min($"y")).as("dy"))
-      .as[(Long, Long, Long)].collect()
-    assert(spread.map(_._2).max <= 15L, s"x not clustered: ${spread.toSeq}")
-    assert(spread.map(_._3).max <= 15L, s"y not clustered: ${spread.toSeq}")
-  }
 }

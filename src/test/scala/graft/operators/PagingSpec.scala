@@ -31,27 +31,4 @@ class PagingSpec extends SparkSpec {
     // full ranking: (1,x)=1, (2,dup)=2,3,4, (3,y)=5 → page (1,2] = rns 2,3
     assert(page == Set((2L, "dup", 2), (2L, "dup", 3)))
   }
-
-  test("keyset returns the page strictly after the last-seen key") {
-    val df = (1L to 10L).map(i => (i, s"v$i")).toDF("k", "v")
-    val got = Paging.keyset(df, "k",
-        Some(org.apache.spark.sql.functions.lit(4L)), 3)
-      .select("k").as[Long].collect().toSeq
-    assert(got == Seq(5L, 6L, 7L))
-  }
-
-  test("keyset excludes null keys from every page, not just later ones") {
-    // without the guard, null-keyed rows appear on page one (NULLS
-    // FIRST) but `key > lastSeen` is null-rejecting — they'd silently
-    // vanish from all later pages. The contract is: excluded everywhere.
-    val df = Seq((Some(1L), "a"), (None, "n1"), (Some(2L), "b"),
-      (None, "n2"), (Some(3L), "c")).toDF("k", "v")
-    val page1 = Paging.keyset(df, "k", None, 2)
-      .select("v").as[String].collect().toSeq
-    assert(page1 == Seq("a", "b"))
-    val page2 = Paging.keyset(df, "k",
-        Some(org.apache.spark.sql.functions.lit(2L)), 2)
-      .select("v").as[String].collect().toSeq
-    assert(page2 == Seq("c"))
-  }
 }

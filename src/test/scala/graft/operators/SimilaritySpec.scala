@@ -452,10 +452,6 @@ class SimilaritySpec extends SparkSpec {
       .select("corpus_id").as[Long].collect().toSet
     assert(m.contains(100L) && m.contains(101L))
     assert(!m.contains(200L) && !m.contains(201L))
-    val kept = Similarity.semanticFilter(corpus, probes, "vec_id",
-        "embedding", threshold = 0.9, planes = 2, tables = 4)
-      .select("vec_id").as[Long].collect().toSet
-    assert(kept == Set(200L, 201L))
   }
 
   test("hardNegatives: positives and self never rank; the nearest " +

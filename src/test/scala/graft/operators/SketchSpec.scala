@@ -68,17 +68,6 @@ class SketchSpec extends SparkSpec {
     }
   }
 
-  test("cms merge across shards equals the direct sketch") {
-    val df = (0 until 5000).map(i => (s"t${i % 97}", i % 5))
-      .toDF("v", "shard")
-    val direct = Sketch.cmsSketch(df, col("v"), Seq.empty)
-      .orderBy("row", "cell").as[(Int, Long, Long)].collect()
-    val merged = Sketch.cmsMerge(
-        Sketch.cmsSketch(df, col("v"), Seq("shard")), Seq.empty)
-      .orderBy("row", "cell").as[(Int, Long, Long)].collect()
-    assert(direct.sameElements(merged))
-  }
-
   test("cms absent-token estimate is bounded by epsilon * N") {
     val df = (0 until 3000).map(i => s"present$i").toDF("v")
     val sketch = Sketch.cmsSketch(df, col("v"), Seq.empty)

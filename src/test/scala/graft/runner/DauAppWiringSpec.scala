@@ -75,6 +75,29 @@ class DauAppWiringSpec extends SparkSpec {
     assert(dims.count() == 0L)
   }
 
+  test("a dim store whose only batch held no dim rows reads as the " +
+      "empty dim frame") {
+    val store = s"${tmp("dau_dim_nodims")}/dim_store"
+    // OdsDbApp's dim write of a batch that carried only fact rows
+    BatchDirs.write(CdcSplit.dims(CdcSplit.decoded(CdcSplit.parse(Seq(
+        """{"database":"g","table":"order_info","type":"insert","ts":9,"data":{"id":"7","user_id":"1"}}"""
+      ).toDF("value"))), Set("user_info", "base_province"), 0L),
+      store, 0L, Seq("table"))
+    val dims = StreamingApps.dimOrEmpty(spark, store, "user_info",
+      Seq("id", "gender", "birthday"))
+    assert(dims.columns.toSeq == Seq("id", "gender", "birthday"))
+    assert(dims.count() == 0L)
+  }
+
+  test("a serving store made only of empty batches reads as absent") {
+    val out = s"${tmp("dau_serve_empty")}/dau"
+    val none = Seq.empty[(String, String, Long)].toDF("mid", "dt", "event_ts")
+    Sinks.upsertBatch(none, out, "mid", "dt", 0L, Some("event_ts"))
+    Sinks.upsertBatch(none, out, "mid", "dt", 1L, Some("event_ts"))
+    assert(BatchDirs.read(spark, out).isEmpty)
+    intercept[java.io.FileNotFoundException](Sinks.readStore(spark, out))
+  }
+
   test("routedPayload unions all five branches into one (topic, value)") {
     val pageJson =
       """{"common":{"ar":"1","ba":"b","ch":"c","is_new":"1","md":"m",

@@ -88,26 +88,4 @@ class QueryServiceSpec extends SparkSpec {
       "widget", "2024-01-05", pageNo = 2, pageSize = 1)
     assert(page2.select("detail_id").as[Long].collect().toSeq == Seq(2L))
   }
-
-  test("detailByItemRelevance orders by tf-idf score, ties by key") {
-    val out = Files.createTempDirectory("ow_rel").toString + "/ow"
-    val rows = Seq(
-      // "widget widget" repeats the query token → highest tf
-      (1L, "red widget", "F", 25, 10.0, "2024-01-05"),
-      (2L, "widget widget", "M", 31, 20.0, "2024-01-05"),
-      (3L, "blue gadget", "F", 19, 30.0, "2024-01-05"), // no match
-      (4L, "big widget", "F", 28, 40.0, "2024-01-05"))
-      .toDF("detail_id", "sku_name", "user_gender", "user_age",
-        "split_total_amount", "dt")
-    Sinks.upsertBatch(rows, out, "detail_id")
-    val page = QueryService.detailByItemRelevance(spark, out,
-        "widget", "2024-01-05", pageNo = 1, pageSize = 3)
-      .select("rn", "detail_id", "score", "total")
-      .as[(Int, Long, Double, Long)].collect().toSeq
-    // doc 2 scores double tf; 1 and 4 tie on score and order by key
-    assert(page.map(_._2) == Seq(2L, 1L, 4L))
-    assert(page.map(_._1) == Seq(1, 2, 3))
-    assert(page.head._3 == 2 * page(1)._3) // tf 2 vs tf 1, same idf
-    assert(page.forall(_._4 == 3L))        // total = match count
-  }
 }
