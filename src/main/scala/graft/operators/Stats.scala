@@ -948,10 +948,15 @@ object Stats {
     * (n_pos, n_neg, b, auc, lo, hi) — `auc` the exact unweighted
     * point estimate.
     *
-    * Scale shape: the b× fan-out lands on the UNIT rows once
+    * The point estimate is resample −1, where every unit weighs 1:
+    * its counts are the unweighted table, so its AUC is [[auc]]'s bit
+    * for bit, and the one closing aggregate picks it beside the
+    * percentile over resamples 0..b−1.
+    *
+    * Scale shape: the (b+1)× fan-out lands on the UNIT rows once
     * (narrow), then everything is (resample, score)-keyed map-side
-    * hash aggs + the bucketed grouped prefix sum + a b-row
-    * percentile. Nothing corpus² and nothing driver-side beyond the
+    * hash aggs + the bucketed grouped prefix sum + one closing
+    * aggregate. Nothing corpus² and nothing driver-side beyond the
     * prefix sum's bounded range probe.
     */
   def aucCi(df: DataFrame, idCol: String, scoreFxCol: String,
@@ -960,26 +965,13 @@ object Stats {
     require(b >= 2 && b <= 100000, s"b must be in [2, 100000], got $b")
     require(lower >= 0 && upper <= 1 && lower < upper,
       s"need 0 <= lower < upper <= 1, got lower=$lower upper=$upper")
-    import graft.functions.TextFns
     import org.apache.spark.sql.types.{DoubleType, LongType}
-    // persisted: the bootstrap fan-out and the unweighted point
-    // estimate both read this frame (the cb convention)
-    val units = df
+    val wCounts = df
       .filter(col(scoreFxCol).isNotNull && col(labelCol).isNotNull)
       .select(col(idCol).cast("string").as("__id"),
         col(scoreFxCol).cast(LongType).as("__s"),
         col(labelCol).as("__y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val u = TextFns.hash32(concat(col("__r").cast("string"), lit(":"),
-      col("__id")))
-    val wgt = PoissonCdf32.zipWithIndex.foldRight(lit(8L)) {
-      case ((thr, k), rest) => when(col("__u") < thr, lit(k.toLong))
-        .otherwise(rest)
-    }
-    val wCounts = units
-      .withColumn("__r", explode(sequence(lit(0), lit(b - 1))))
-      .withColumn("__u", u)
-      .withColumn("__w", wgt)
+      .transform(resampled(b))
       .groupBy(col("__r"), col("__s"))
       .agg(sum(when(col("__y"), col("__w")).otherwise(0L)).as("np"),
         sum(when(col("__y"), 0L).otherwise(col("__w"))).as("nn"))
@@ -990,21 +982,22 @@ object Stats {
     // the same way as the grouped auc/ksTest)
     val perR = cumBelowByValueGrouped(wCounts, Seq("__r"), "__s",
         Seq("nn"))
-      .withColumn("cnn", col("cum_nn"))
       .groupBy(col("__r"))
       .agg(sum(col("np")).as("__p"), sum(col("nn")).as("__n"),
-        sum(d19(col("np")) * (d19(col("cnn")) * 2 + d19(col("nn"))))
+        sum(d19(col("np")) * (d19(col("cum_nn")) * 2 + d19(col("nn"))))
           .as("__m2"))
-      .select(when(col("__p") > 0 && col("__n") > 0,
-        col("__m2").cast(DoubleType) /
-          (lit(2.0) * col("__p").cast(DoubleType) *
-            col("__n").cast(DoubleType))).as("__a"))
-    val ci = perR.agg(percentile(col("__a"), lit(lower)).as("lo"),
-      percentile(col("__a"), lit(upper)).as("hi"))
-    auc(units, "__s", "__y")
-      .crossJoin(broadcast(ci))
-      .select(col("n_pos"), col("n_neg"), lit(b).as("b"), col("auc"),
-        col("lo"), col("hi"))
+      .select(col("__r"), col("__p"), col("__n"),
+        when(col("__p") > 0 && col("__n") > 0,
+          col("__m2").cast(DoubleType) /
+            (lit(2.0) * col("__p").cast(DoubleType) *
+              col("__n").cast(DoubleType))).as("__a"))
+    val point = col("__r") === -1
+    val boot = when(col("__r") >= 0, col("__a"))
+    perR.agg(coalesce(max(when(point, col("__p"))), lit(0L)).as("n_pos"),
+      coalesce(max(when(point, col("__n"))), lit(0L)).as("n_neg"),
+      lit(b).as("b"), max(when(point, col("__a"))).as("auc"),
+      percentile(boot, lit(lower)).as("lo"),
+      percentile(boot, lit(upper)).as("hi"))
   }
 
   /** Spearman rank correlation between two integral (fixed-point)
@@ -1888,11 +1881,14 @@ object Stats {
     * interpolation (≡ DuckDB `quantile_cont`, parity proven by
     * a8_percentiles/ext_winsorize).
     *
-    * Scale shape: one narrow `explode(sequence(0, b−1))` fan-out (b×
-    * the data, the [[Corpus.epochShuffle]] shape), one (key,
-    * resample)-keyed map-side-combining hash agg, one percentile agg
-    * per key, one key-keyed join of two ≤|keys|-row frames. No
-    * window, no global sort, nothing driver-side.
+    * The point estimate is resample −1, where every unit weighs 1:
+    * fxTerm(1.0·x) = fxTerm(x) and Σw = n, so its mean is the exact
+    * mean bit for bit. A null key is no group (the oracle's `USING`).
+    *
+    * Scale shape: one narrow `explode(sequence(−1, b−1))` fan-out
+    * ((b+1)× the data, the [[Corpus.epochShuffle]] shape), one (key,
+    * resample)-keyed map-side-combining hash agg, one closing agg per
+    * key. No join, no window, no global sort, nothing driver-side.
     */
   def bootstrapCi(df: DataFrame, idCol: String, valueCol: String,
                   b: Int, lower: Double = 0.025, upper: Double = 0.975,
@@ -1909,41 +1905,43 @@ object Stats {
       require(lower >= 0 && upper <= 1 && lower < upper,
         s"need 0 <= lower < upper <= 1, got lower=$lower upper=$upper")
       import graft.functions.Cols.{fxSum, fxVal}
-      import graft.functions.TextFns
       import org.apache.spark.sql.types.DoubleType
       val keys = groupCols.map(col)
-      val units = df.filter(col(valueCol).isNotNull)
+      val point = col("__r") === -1
+      val boot = when(col("__r") >= 0, col("__m"))
+      df.filter(keys.foldLeft(col(valueCol).isNotNull)(_ && _.isNotNull))
         .select(keys ++ Seq(col(idCol).cast("string").as("__id"),
           col(valueCol).cast(DoubleType).as("__x")): _*)
-      val pt = units.groupBy(keys: _*)
-        .agg(count(lit(1)).as("n"), fxSum(col("__x"), scale).as("__sfx"))
-      val u = TextFns.hash32(concat(col("__r").cast("string"), lit(":"),
-        col("__id")))
-      val w = PoissonCdf32.zipWithIndex.foldRight(lit(8L)) {
-        case ((t, k), rest) => when(col("__u") < t, lit(k.toLong))
-          .otherwise(rest)
-      }
-      val ci = units
-        .withColumn("__r", explode(sequence(lit(0), lit(b - 1))))
-        .withColumn("__u", u)
-        .withColumn("__w", w)
+        .transform(resampled(b))
         .groupBy(keys :+ col("__r"): _*)
         .agg(fxSum(col("__w").cast(DoubleType) * col("__x"), scale)
             .as("__mfx"),
           sum(col("__w")).as("__wn"))
-        .select(keys :+ when(col("__wn") > 0,
+        .select(keys ++ Seq(col("__r"), col("__wn"),
+          when(col("__wn") > 0,
             fxVal(col("__mfx"), scale) / col("__wn").cast(DoubleType))
-          .as("__m"): _*)
+            .as("__m")): _*)
         .groupBy(keys: _*)
-        .agg(percentile(col("__m"), lit(lower)).as("lo"),
-          percentile(col("__m"), lit(upper)).as("hi"))
-      pt.join(ci, groupCols)
-        .select(keys ++ Seq(col("n"), lit(b).as("b"),
-          when(col("n") > 0,
-            fxVal(col("__sfx"), scale) / col("n").cast(DoubleType))
-            .as("mean"),
-          col("lo"), col("hi")): _*)
+        .agg(coalesce(max(when(point, col("__wn"))), lit(0L)).as("n"),
+          lit(b).as("b"), max(when(point, col("__m"))).as("mean"),
+          percentile(boot, lit(lower)).as("lo"),
+          percentile(boot, lit(upper)).as("hi"))
     }
+
+  /** `units` (string id `__id`) fanned out to resamples `__r` in
+    * −1..b−1 with weight `__w`: 1 at the point estimate −1, else the
+    * [[PoissonCdf32]] cut of u = hash32(r ":" id).
+    */
+  private def resampled(b: Int)(units: DataFrame): DataFrame = {
+    val w = PoissonCdf32.zipWithIndex.foldRight(lit(8L)) {
+      case ((t, k), rest) => when(col("__u") < t, lit(k.toLong))
+        .otherwise(rest)
+    }
+    units.withColumn("__r", explode(sequence(lit(-1), lit(b - 1))))
+      .withColumn("__u", graft.functions.TextFns.hash32(
+        concat(col("__r").cast("string"), lit(":"), col("__id"))))
+      .withColumn("__w", when(col("__r") < 0, lit(1L)).otherwise(w))
+  }
 
   /** Paired-difference bootstrap CI — the A/B model-comparison
     * decision in one row: given PAIRED per-unit scores (two models

@@ -903,4 +903,158 @@ class StatsSpec extends SparkSpec {
       assert(rows(Seq("g")) === Nil, name)
     }
   }
+
+  // Parity witnesses: the two-pass bootstrap CIs that the one-pass
+  // kernels replaced. Each computes its point estimate as a separate
+  // plan (aucCi through the ungrouped `auc`, bootstrapCi through a
+  // per-key count/sum) and joins it to the percentile over resamples
+  // 0..b-1 only.
+  private def twoPassWeights(units: DataFrame, b: Int): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val w = Stats.PoissonCdf32.zipWithIndex.foldRight(lit(8L)) {
+      case ((t, k), rest) => when(col("__u") < t, lit(k.toLong))
+        .otherwise(rest)
+    }
+    units.withColumn("__r", explode(sequence(lit(0), lit(b - 1))))
+      .withColumn("__u", graft.functions.TextFns.hash32(
+        concat(col("__r").cast("string"), lit(":"), col("__id"))))
+      .withColumn("__w", w)
+  }
+
+  private def aucCiTwoPass(df: DataFrame, idCol: String,
+                           scoreFxCol: String, labelCol: String,
+                           b: Int): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+    def d19(c: org.apache.spark.sql.Column) = c.cast(DecimalType(19, 0))
+    val units = df
+      .filter(col(scoreFxCol).isNotNull && col(labelCol).isNotNull)
+      .select(col(idCol).cast("string").as("__id"),
+        col(scoreFxCol).cast(LongType).as("__s"),
+        col(labelCol).as("__y"))
+    val wCounts = twoPassWeights(units, b)
+      .groupBy(col("__r"), col("__s"))
+      .agg(sum(when(col("__y"), col("__w")).otherwise(0L)).as("np"),
+        sum(when(col("__y"), 0L).otherwise(col("__w"))).as("nn"))
+    val perR = Stats.cumBelowByValueGrouped(wCounts, Seq("__r"), "__s",
+        Seq("nn"))
+      .groupBy(col("__r"))
+      .agg(sum(col("np")).as("__p"), sum(col("nn")).as("__n"),
+        sum(d19(col("np")) * (d19(col("cum_nn")) * 2 + d19(col("nn"))))
+          .as("__m2"))
+      .select(when(col("__p") > 0 && col("__n") > 0,
+        col("__m2").cast(DoubleType) /
+          (lit(2.0) * col("__p").cast(DoubleType) *
+            col("__n").cast(DoubleType))).as("__a"))
+    val ci = perR.agg(percentile(col("__a"), lit(0.025)).as("lo"),
+      percentile(col("__a"), lit(0.975)).as("hi"))
+    Stats.auc(units, "__s", "__y")
+      .crossJoin(broadcast(ci))
+      .select(col("n_pos"), col("n_neg"), lit(b).as("b"), col("auc"),
+        col("lo"), col("hi"))
+  }
+
+  private def bootstrapCiTwoPass(df: DataFrame, idCol: String,
+                                 valueCol: String, b: Int,
+                                 groupCols: Seq[String]): DataFrame = {
+    import graft.functions.Cols.{fxSum, fxVal}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.DoubleType
+    val scale = 1e9
+    if (groupCols.isEmpty)
+      bootstrapCiTwoPass(df.withColumn("__bsg", lit(0)), idCol,
+        valueCol, b, Seq("__bsg")).drop("__bsg")
+    else {
+      val keys = groupCols.map(col)
+      val units = df.filter(col(valueCol).isNotNull)
+        .select(keys ++ Seq(col(idCol).cast("string").as("__id"),
+          col(valueCol).cast(DoubleType).as("__x")): _*)
+      val pt = units.groupBy(keys: _*)
+        .agg(count(lit(1)).as("n"), fxSum(col("__x"), scale).as("__sfx"))
+      val ci = twoPassWeights(units, b)
+        .groupBy(keys :+ col("__r"): _*)
+        .agg(fxSum(col("__w").cast(DoubleType) * col("__x"), scale)
+            .as("__mfx"),
+          sum(col("__w")).as("__wn"))
+        .select(keys :+ when(col("__wn") > 0,
+            fxVal(col("__mfx"), scale) / col("__wn").cast(DoubleType))
+          .as("__m"): _*)
+        .groupBy(keys: _*)
+        .agg(percentile(col("__m"), lit(0.025)).as("lo"),
+          percentile(col("__m"), lit(0.975)).as("hi"))
+      pt.join(ci, groupCols)
+        .select(keys ++ Seq(col("n"), lit(b).as("b"),
+          when(col("n") > 0,
+            fxVal(col("__sfx"), scale) / col("n").cast(DoubleType))
+            .as("mean"),
+          col("lo"), col("hi")): _*)
+    }
+  }
+
+  private def sameFrame(got: DataFrame, want: DataFrame,
+                        clue: String): Unit = {
+    assert(got.schema === want.schema, clue)
+    // Row equality compares doubles bit-wise (0.0 and -0.0 differ)
+    def rows(d: DataFrame) = d.collect().toSeq.sortBy(_.toString)
+    assert(rows(got) === rows(want), clue)
+  }
+
+  test("aucCi and bootstrapCi: the one-pass point estimate (resample " +
+      "-1) equals the two-pass witnesses, rows and schemas") {
+    val ties = (0L until 90L)
+      .map(i => (i, Option((i * 13) % 5), Option((i * 7) % 11 < 5)))
+    val oneClass = (0L until 40L).map(i => (i, Option(i % 9), Option(true)))
+    val nulls = ties.take(30) ++ Seq((200L, None, Some(true)),
+      (201L, Some(3L), None), (202L, None, None))
+    val empty = Seq.empty[(Long, Option[Long], Option[Boolean])]
+    val aucCases = Seq("ties" -> ties, "one class" -> oneClass,
+      "null score or label" -> nulls, "empty" -> empty)
+    // value = the score as a double; the group key of the grouped
+    // cases splits the ids, with one group whose values are all null
+    // and one null key
+    def vals(rows: Seq[(Long, Option[Long], Option[Boolean])]) =
+      rows.map { case (i, s, _) =>
+        (i, s.map(_ / 4.0), if (i % 3 == 0) "a" else "b") }
+    val grouped = vals(ties) ++ Seq((300L, None, "allnull"),
+      (301L, None, "allnull"), (302L, Some(0.5), null),
+      (303L, Some(0.25), null))
+    for (b <- Seq(8, 32)) {
+      for ((name, rows) <- aucCases) {
+        val df = rows.toDF("id", "s", "y")
+        sameFrame(Stats.aucCi(df, "id", "s", "y", b),
+          aucCiTwoPass(df, "id", "s", "y", b), s"aucCi $name b=$b")
+        val v = vals(rows).toDF("id", "x", "g")
+        sameFrame(Stats.bootstrapCi(v, "id", "x", b),
+          bootstrapCiTwoPass(v, "id", "x", b, Nil),
+          s"bootstrapCi $name b=$b")
+        sameFrame(Stats.bootstrapCi(v, "id", "x", b, groupCols = Seq("g")),
+          bootstrapCiTwoPass(v, "id", "x", b, Seq("g")),
+          s"grouped bootstrapCi $name b=$b")
+      }
+      val g = grouped.toDF("id", "x", "g")
+      sameFrame(Stats.bootstrapCi(g, "id", "x", b, groupCols = Seq("g")),
+        bootstrapCiTwoPass(g, "id", "x", b, Seq("g")),
+        s"grouped bootstrapCi, all-null group and null key, b=$b")
+    }
+  }
+
+  test("aucCi plans one checkpoint and bootstrapCi plans no join: the " +
+      "point estimate rides in the resample pass") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.LogicalRDD
+    val df = (0L until 60L)
+      .map(i => (i, (i * 13) % 7, (i * 7) % 11 < 5, (i % 4).toDouble))
+      .toDF("id", "s", "y", "x")
+    // the grouped prefix sum's localCheckpoint (read by both of its
+    // branches) is the only LogicalRDD: no ungrouped point-estimate
+    // prefix sum (its checkpoint and its collected offsets frame)
+    val rdds = Stats.aucCi(df, "id", "s", "y", b = 8)
+      .queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }
+    assert(rdds.distinct.size === 1)
+    for (gs <- Seq(Nil, Seq("y"))) {
+      val plan = Stats.bootstrapCi(df, "id", "x", b = 8, groupCols = gs)
+        .queryExecution.optimizedPlan
+      assert(plan.collect { case j: Join => j }.isEmpty, s"$gs\n$plan")
+    }
+  }
 }
