@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project}
 
-/** Input-parallelism spreading, shared by the operator modules. */
+/** Input-parallelism spreading and eager checkpoints, shared by the
+  * operator modules.
+  */
 object Par {
 
   /** Spread a (possibly single-split) input across the cluster before
@@ -39,5 +41,26 @@ object Par {
       df.queryExecution.toRdd.getNumPartitions).toOption
       .exists(_ >= target)
     if (wideEnough) df else df.repartition(target)
+  }
+
+  /** Eager `localCheckpoint` of `df` that also returns scalar
+    * aggregates over the checkpointed rows, computed by the same job:
+    * `aggs` ride a `Dataset.observe` directly beneath the checkpoint,
+    * so its `CollectMetrics` node is the root of the checkpointed plan
+    * and runs in the checkpoint job's result stage, where accumulator
+    * updates apply once per partition — the scalars stay exact under
+    * task retries, and no second execution probes the checkpointed
+    * rows for them. The row holds one value per `aggs` entry, in
+    * order (null where the aggregate is null, e.g. `min` over no
+    * rows). `observe` rejects DISTINCT aggregates. The checkpoint
+    * keeps its trade-off: its blocks live in executor storage with no
+    * lineage, so losing an executor fails the jobs that read it.
+    */
+  def checkpointObserving(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"__obs$i") }
+    val cp = df.observe(obs, named.head, named.tail: _*).localCheckpoint()
+    val m = obs.get
+    (cp, Row.fromSeq(named.indices.map(i => m(s"__obs$i"))))
   }
 }

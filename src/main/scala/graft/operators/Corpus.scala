@@ -255,10 +255,11 @@ object Corpus {
     * eval near the gate).
     *
     * Ties in `scoreCol` break by ascending `idCol`, so the order is
-    * total and partition-invariant. Eager note: the scalar aggregate
-    * and bucket counts run at call time; the ranked frame is locally
-    * checkpointed so the rank window runs once across them and the
-    * final plan.
+    * total and partition-invariant. Eager note: the ranked frame is
+    * locally checkpointed (its job also observes the max rank and the
+    * group count) and the bucket counts collect at call time; the
+    * checkpoint runs the rank window once across them and the final
+    * plan.
     */
   def curriculumOrder(df: DataFrame, groupCol: String, idCol: String,
                       scoreCol: String,
@@ -266,11 +267,13 @@ object Corpus {
     require(maxGroups >= 1, s"maxGroups must be >= 1, got $maxGroups")
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col(scoreCol).desc, col(idCol))
-    val ranked = df
-      .withColumn("grp_rank", row_number().over(w).cast("long"))
-      .localCheckpoint()
-    val head = ranked
-      .agg(max(col("grp_rank")), countDistinct(col(groupCol))).head()
+    // groups counted as rank-1 rows with a non-null key: equal to
+    // countDistinct (which `observe` rejects), as grp_rank is a
+    // row_number per group
+    val (ranked, head) = Par.checkpointObserving(
+      df.withColumn("grp_rank", row_number().over(w).cast("long")),
+      max(col("grp_rank")),
+      count(when(col("grp_rank") === 1L && col(groupCol).isNotNull, 1)))
     if (head.isNullAt(0)) // empty input: no positions to assign
       return ranked.withColumn("global_pos", lit(0L))
     val maxN = head.getLong(0)
@@ -901,7 +904,8 @@ object Corpus {
     * are auto-sized so occupied (band, chunk) pairs stay ≤ 2^20 for
     * any id distribution; every window partition is bounded by its
     * chunk. Same integral-id contract and EAGER/localCheckpoint
-    * behavior as [[packSequences]] (two driver jobs at build time).
+    * behavior as [[packSequences]]: two driver jobs at build time, the
+    * checkpoint (observing the ranges and counts) and chunk totals.
     */
   def selectByBudget(docs: DataFrame, idCol: String, scoreCol: String,
                      textCol: String, budget: Long,
@@ -919,16 +923,15 @@ object Corpus {
             s"grids are integer arithmetic); '$c' is ${other.simpleString}")
       }
     }
-    val base = Par.fanOut(docs).select(col(idCol),
+    val (base, mm) = Par.checkpointObserving(
+      Par.fanOut(docs).select(col(idCol),
         col(scoreCol).cast("long").as("__s"),
-        size(TextFns.toks(col(textCol))).cast("long").as("__n"))
-      .localCheckpoint()
-    val mm = base.agg(
+        size(TextFns.toks(col(textCol))).cast("long").as("__n")),
       min(col("__s")), max(col("__s")),
       min(col(idCol).cast("long")), max(col(idCol).cast("long")),
       sum(when(col("__s").isNull || col(idCol).isNull, 1L)
         .otherwise(0L)),
-      count(lit(1))).head()
+      count(lit(1)))
     if (mm.getLong(5) == 0L)
       return base.select(col(idCol), col("__s").as(scoreCol),
         lit(0L).as("band"), col("__n").as("n_tokens"),
@@ -1887,19 +1890,19 @@ object Corpus {
     * order-independent and oracle-exact.
     *
     * Scale shape: one token-count hash agg to the ≤|sources| row set
-    * (locally checkpointed — it feeds the scalar denominator and the
-    * output), one driver scalar, one narrow projection.
+    * (locally checkpointed; the checkpoint job also observes the
+    * scalar denominator, one execution), one narrow projection.
     */
   def mixtureWeights(docs: DataFrame, groupCol: String,
                      textCol: String): DataFrame = {
     import graft.functions.Cols.{fxSum, fxVal}
-    val grp = Par.fanOut(docs)
-      .select(col(groupCol),
-        size(TextFns.toks(col(textCol))).cast("long").as("__nt"))
-      .groupBy(col(groupCol)).agg(sum(col("__nt")).as("n_tokens"))
-      .localCheckpoint()
     val inv = lit(1.0) / col("n_tokens").cast("double")
-    val dRow = grp.agg(fxSum(inv, 1e12)).head()
+    val (grp, dRow) = Par.checkpointObserving(
+      Par.fanOut(docs)
+        .select(col(groupCol),
+          size(TextFns.toks(col(textCol))).cast("long").as("__nt"))
+        .groupBy(col(groupCol)).agg(sum(col("__nt")).as("n_tokens")),
+      fxSum(inv, 1e12))
     require(!dRow.isNullAt(0), "mixtureWeights needs a non-empty corpus")
     val denom = dRow.getLong(0).toDouble / 1e12
     grp.select(col(groupCol), col("n_tokens"),

@@ -508,13 +508,14 @@ object Dedup {
     *    decreases while ANY node changes and is equal exactly at the
     *    fixpoint — ONE scalar aggregate per iteration (decimal
     *    accumulation: 10^12 long ids would overflow a long sum),
-    *    where a per-node old-vs-new comparison costs a whole extra
-    *    join per iteration.
+    *    observed by the iteration's checkpoint job, where a per-node
+    *    old-vs-new comparison costs a whole extra join per iteration.
     *  - SIZE-GATED DRIVER UNION-FIND: the duplicate graph is tiny
     *    relative to the corpus (pairs, not docs). When the
-    *    checkpointed pair set is at most `maxDriverPairs` (and ids
-    *    are Long), exact union-find on the driver resolves components
-    *    in one pass and the label map broadcasts back — one collect +
+    *    checkpointed pair set (counted by its checkpoint job) is at
+    *    most `maxDriverPairs` (and ids are Long), exact union-find on
+    *    the driver resolves components in one pass and the label map
+    *    broadcasts back — one collect +
     *    one broadcast join instead of diameter× (join + agg +
     *    checkpoint) jobs. Above the gate (or non-long ids) the
     *    distributed loop runs unchanged, so a pathological pair
@@ -523,13 +524,14 @@ object Dedup {
   def clusters(docs: DataFrame, idCol: String, pairs: DataFrame,
                maxIter: Int = 20,
                maxDriverPairs: Long = 2000000L): DataFrame = {
-    val pc = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .localCheckpoint()
+    val (pc, nPairs) = Par.checkpointObserving(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
+      count(lit(1)))
     val longIds =
       docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
         pc.schema.fields.forall(
           _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && pc.count() <= maxDriverPairs)
+    if (longIds && nPairs.getLong(0) <= maxDriverPairs)
       return clustersDriver(docs, idCol, pc)
     val edges = pc
       .union(pc.select(col("dst").as("src"), col("src").as("dst")))
@@ -539,15 +541,15 @@ object Dedup {
     // become a component's min label — same contract as seeding from
     // docs, at endpoint-sized loop cost (the semi-join broadcasts the
     // small endpoint set against the corpus ids)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .join(docs.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .withColumn("cluster_id", col("id")).localCheckpoint()
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(
-        sum(col("cluster_id").cast(DecimalType(38, 0)))).head()
-      if (v.isNullAt(0)) java.math.BigDecimal.ZERO else v.getDecimal(0)
+    def checkpointLabels(df: DataFrame) = {
+      val (cp, v) = Par.checkpointObserving(df,
+        sum(col("cluster_id").cast(DecimalType(38, 0))))
+      (cp, if (v.isNullAt(0)) java.math.BigDecimal.ZERO else v.getDecimal(0))
     }
-    var prevSum = labelSum(labels)
+    var (labels, prevSum) = checkpointLabels(
+      edges.select(col("src").as("id")).distinct()
+        .join(docs.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        .withColumn("cluster_id", col("id")))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -555,13 +557,11 @@ object Dedup {
         .join(labels.withColumnRenamed("id", "dst2"),
           col("dst") === col("dst2"))
         .groupBy(col("src")).agg(min(col("cluster_id")).as("nmin"))
-      val next = labels
+      val (next, nextSum) = checkpointLabels(labels
         .join(neighborMin, labels("id") === neighborMin("src"), "left")
         .select(col("id"),
           least(col("cluster_id"),
-            coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
-        .localCheckpoint()
-      val nextSum = labelSum(next)
+            coalesce(col("nmin"), col("cluster_id"))).as("cluster_id")))
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       labels = next
@@ -607,8 +607,8 @@ object Dedup {
     * semi-join: an invalid endpoint neither labels nor bridges.
     * `pc` must be checkpointed (src, dst) pairs within the collect gate.
     */
-  private def clustersDriver(docs: DataFrame, idCol: String,
-                             pc: DataFrame): DataFrame = {
+  private[operators] def clustersDriver(docs: DataFrame, idCol: String,
+                                         pc: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val raw = pc.as[(Long, Long)].collect()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Par
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -156,8 +157,10 @@ object Graph {
     * the result is bit-identical under any partitioning and a plain
     * unrolled-CTE SQL oracle reproduces it. Loop invariants are
     * persisted and each half-step's |nodes|-bounded frame is
-    * localCheckpoint'ed (r15 — see `normalize`), so both runtime work
-    * AND the logical plan stay linear in `iters`; like
+    * localCheckpoint'ed with its total observed by the same job (r15;
+    * ONE SQL execution per half-step — see `normalize`; eager, and its
+    * blocks are lost with an executor), so both runtime work AND the
+    * logical plan stay linear in `iters`; like
     * [[Corpus.decontaminateBloom]]'s index, the frames stay cached for
     * the returned plan's lifetime (Spark evicts LRU under pressure).
     */
@@ -213,30 +216,35 @@ object Graph {
       .union(e.select(col("__dst").as("node"))).distinct()
       .persist(MEMORY_AND_DISK)
 
-    // raw keyed sums → L1-normalized scores joined back onto all nodes.
-    // The normalized frame is localCheckpoint'ed, not just persisted
-    // (r15, the btStrengthsFromCounts fix, guide §3.3/§5): each
-    // half-step's frame feeds the next half-step's join AND the
-    // convergence check AND the final join, so a persist-only chain
-    // kept the full logical lineage — Catalyst re-planned a tree that
-    // doubled per half-step (the 4335-Exchange printed plan of
-    // ext_hits) even though runtime read every subtree from cache.
-    // The checkpoint truncates the plan to a LogicalRDD of ≤ |nodes|
-    // rows. It is eager: each half-step pays ONE extra job to
-    // materialize the normalized join (the totRow head only
-    // materializes the pre-join `raw`). Its blocks live in executor
-    // storage with no lineage to recompute from, so losing an
-    // executor mid-run fails the job, where the persist it replaced
-    // would have recomputed the lost partitions.
-    def normalize(raw0: DataFrame, keyCol: String, out: String) = {
-      val raw = raw0.persist(MEMORY_AND_DISK)
-      val totRow = raw.agg(sum(col("__raw"))).head
+    // score-0 rows for the nodes with no raw row on a side (no in-edge
+    // from a non-null source; no out-edge to a non-null destination),
+    // so `raw ∪ zeros` holds every node once. Loop invariants.
+    def zeros(from: String, to: String) = nodes
+      .join(e.filter(col(from).isNotNull), col("node") === col(to),
+        "left_anti")
+      .select(col("node"), lit(0L).as("__raw")).persist(MEMORY_AND_DISK)
+    val (authZeros, hubZeros) = (zeros("__src", "__dst"),
+      zeros("__dst", "__src"))
+
+    // raw ∪ zeros is localCheckpoint'ed, its total observed by the
+    // checkpoint job; the divide is a lazy projection over it. A
+    // checkpoint, not a persist (r15, the btStrengthsFromCounts fix,
+    // guide §3.3/§5): each half-step's frame feeds the next
+    // half-step's join AND the convergence check AND the final join,
+    // so a persist-only chain kept the full logical lineage — Catalyst
+    // re-planned a tree that doubled per half-step (the 4335-Exchange
+    // printed plan of ext_hits) even though runtime read every subtree
+    // from cache. The checkpoint truncates the plan to a LogicalRDD of
+    // ≤ |nodes| rows. It is eager, and its blocks live in executor
+    // storage with no lineage, so losing an executor mid-run fails the
+    // job, where a persist would have recomputed the lost partitions.
+    def normalize(raw: DataFrame, zeros: DataFrame, out: String) = {
+      val (cp, totRow) = Par.checkpointObserving(
+        raw.toDF("node", "__raw").union(zeros), sum(col("__raw")))
       val tot = if (totRow.isNullAt(0)) 0L else totRow.getLong(0)
       val divisor = math.max(tot / PrScale, 1L)
-      nodes.join(raw, col("node") === col(keyCol), "left_outer")
-        .select(col("node"),
-          expr(s"coalesce(__raw, 0L) div ${divisor}L").as(out))
-        .localCheckpoint()
+      cp.select(col("node"),
+        expr(s"coalesce(__raw, 0L) div ${divisor}L").as(out))
     }
 
     var hub = seedOpt match {
@@ -257,10 +265,10 @@ object Graph {
       val prevHub = hub
       val aRaw = e.join(hub, col("__src") === col("node"))
         .groupBy(col("__dst")).agg(sum(col("hub_fx")).as("__raw"))
-      auth = normalize(aRaw, "__dst", "auth_fx")
+      auth = normalize(aRaw, authZeros, "auth_fx")
       val hRaw = e.join(auth, col("__dst") === col("node"))
         .groupBy(col("__src")).agg(sum(col("auth_fx")).as("__raw"))
-      hub = normalize(hRaw, "__src", "hub_fx")
+      hub = normalize(hRaw, hubZeros, "hub_fx")
       executed += 1
       if (it < iters && (it >= 2 || seedOpt.nonEmpty)) {
         val moved = hub.join(prevHub

@@ -391,7 +391,8 @@ object Similarity {
     * shuffle, no window, no pair join. Cost is O(k·|candidates|) scans
     * — MMR is a SHORTLIST operator: run it on an ANN/topK result (10³
     * –10⁵ rows), never the raw corpus; `maxCandidates` enforces that
-    * contract (count check at build, driver-side).
+    * contract (a count observed by the checkpoint job, checked
+    * driver-side at build).
     */
   def mmrSelect(items: DataFrame, idCol: String, vecCol: String,
                 scoreCol: String, k: Int, lambda: Double,
@@ -401,11 +402,13 @@ object Similarity {
       s"lambda must be in [0,1], got $lambda")
     val spark = items.sparkSession
     import spark.implicits._
-    var cand = items.select(col(idCol).as("id"), col(vecCol).as("vec"),
+    val (cand0, nRow) = Par.checkpointObserving(
+      items.select(col(idCol).as("id"), col(vecCol).as("vec"),
         col(scoreCol).cast("double").as("rel"),
-        lit(0.0).as("max_sim"))
-      .localCheckpoint()
-    val n = cand.count()
+        lit(0.0).as("max_sim")),
+      count(lit(1)))
+    var cand = cand0
+    val n = nRow.getLong(0)
     require(n <= maxCandidates,
       s"mmrSelect is a shortlist operator: got $n candidates > " +
         s"$maxCandidates — run ANN/topK first or raise maxCandidates")

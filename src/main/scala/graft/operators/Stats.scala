@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Par
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -336,6 +337,22 @@ object Stats {
         when(pe < 1.0, (po - pe) / (lit(1.0) - pe)).as("kappa"))
   }
 
+  /** Eager localCheckpoint of a prefix-sum input, with the auto
+    * bucket width from the (min, max) of its integral `valCol` that the
+    * checkpoint job observes: the range over 2^20 buckets, at least
+    * 4096 (4096 for an empty input — any grid works). Double
+    * arithmetic: max − min on extreme values would overflow long, and
+    * the bound only needs to hold approximately.
+    */
+  private def checkpointWidth(grouped: DataFrame,
+                              valCol: String): (DataFrame, Long) = {
+    val v = col(valCol).cast(org.apache.spark.sql.types.LongType)
+    val (base, r) = Par.checkpointObserving(grouped, min(v), max(v))
+    (base, if (r.isNullAt(0)) 4096L else math.max(4096L, math.ceil(
+      (r.getLong(1).toDouble - r.getLong(0).toDouble + 1) / (1 << 20))
+      .toLong))
+  }
+
   /** Per-distinct-value table of `valCol` (an INTEGRAL column) with
     * the EXCLUSIVE cumulative sum of each `sumCols` entry over all
     * SMALLER values — the global order statistic every rank-based
@@ -352,9 +369,10 @@ object Stats {
     * [[Corpus.packSequences]]'s offset engine; rows TIED on the value
     * order their cumulative sums arbitrarily). `bucketSize` > 0
     * overrides the auto width (the packer's knob for clustered sparse
-    * id spaces). Output adds `cum_<c>` per sum column. Eager (the
-    * range agg + totals collect run at call time); input is locally
-    * checkpointed so upstream aggs run once.
+    * id spaces). Output adds `cum_<c>` per sum column. Eager: the
+    * input is locally checkpointed (so upstream aggs run once) with
+    * its value range observed by that same job, then the bucket
+    * totals collect — two executions at call time.
     */
   private[operators] def cumBelowByValue(grouped: DataFrame,
                                          valCol: String,
@@ -363,20 +381,8 @@ object Stats {
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.LongType
-    val base = grouped.localCheckpoint()
-    val width: Long =
-      if (bucketSize > 0) bucketSize.toLong
-      else {
-        val r = base.agg(min(col(valCol).cast(LongType)),
-          max(col(valCol).cast(LongType))).head()
-        if (r.isNullAt(0)) 4096L // empty input — any grid works
-        else {
-          // double arithmetic: max-min on extreme values would
-          // overflow long; the bound only needs to hold approximately
-          val range = r.getLong(1).toDouble - r.getLong(0).toDouble + 1
-          math.max(4096L, math.ceil(range / (1 << 20)).toLong)
-        }
-      }
+    val (base, autoWidth) = checkpointWidth(grouped, valCol)
+    val width = if (bucketSize > 0) bucketSize.toLong else autoWidth
     val bkt = base.withColumn("__bkt",
       expr(s"(cast($valCol as long) - pmod(cast($valCol as long), " +
         s"${width}L)) div ${width}L"))
@@ -429,7 +435,9 @@ object Stats {
     *  3. a co-partitioned equi-join adding offset + in-bucket.
     *
     * Exact integer sums, so callers' results are bit-identical to the
-    * single-window form they replace.
+    * single-window form they replace. Eager: one execution at call
+    * time, the input's local checkpoint, which also observes the
+    * value range that sizes the buckets.
     */
   private[operators] def cumBelowByValueGrouped(grouped: DataFrame,
                                                 groupCols: Seq[String],
@@ -437,18 +445,7 @@ object Stats {
                                                 sumCols: Seq[String])
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.LongType
-    val base = grouped.localCheckpoint()
-    val r = base.agg(min(col(valCol).cast(LongType)),
-      max(col(valCol).cast(LongType))).head()
-    val width: Long =
-      if (r.isNullAt(0)) 4096L // empty input — any grid works
-      else {
-        // double arithmetic: max-min on extreme values would overflow
-        // long; the bound only needs to hold approximately
-        val range = r.getLong(1).toDouble - r.getLong(0).toDouble + 1
-        math.max(4096L, math.ceil(range / (1 << 20)).toLong)
-      }
+    val (base, width) = checkpointWidth(grouped, valCol)
     val gcols = groupCols.map(col)
     val bkt = base.withColumn("__bkt",
       expr(s"(cast($valCol as long) - pmod(cast($valCol as long), " +
