@@ -909,12 +909,10 @@ object Corpus {
     */
   def selectByBudget(docs: DataFrame, idCol: String, scoreCol: String,
                      textCol: String, budget: Long,
-                     bands: Int = 100, chunkSize: Long = 0): DataFrame = {
+                     bands: Int = 100): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     require(bands >= 1 && bands <= 100000,
       s"bands must be in [1, 100000], got $bands")
-    require(chunkSize >= 0,
-      s"chunkSize must be >= 1 (or 0 = auto), got $chunkSize")
     Seq(idCol -> "id", scoreCol -> "score").foreach { case (c, role) =>
       docs.schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType => ()
@@ -950,10 +948,8 @@ object Corpus {
     // chunk grid: ≤ 2^20 / bands chunks so (band × chunk) pairs stay
     // driver-bounded even if every chunk holds every band
     val idRange = mm.getLong(3).toDouble - mm.getLong(2).toDouble + 1
-    val effChunk: Long =
-      if (chunkSize > 0) chunkSize
-      else math.max(4096L,
-        math.ceil(idRange / math.max(1, (1 << 20) / bands)).toLong)
+    val effChunk = math.max(4096L,
+      math.ceil(idRange / math.max(1, (1 << 20) / bands)).toLong)
     // exact floor-division on longs (subtracting pmod makes the
     // numerator divisible, so `div` is exact and equals floor even
     // for negative ids; a double `/` would misplace ids above 2^53)
@@ -1108,35 +1104,34 @@ object Corpus {
     * vs numerically between the two levels, silently corrupting the
     * global packing order. Enforced at plan-build time.
     *
-    * `bucketSize` controls the fan: occupied buckets ≤
-    * min(|docs|, id-range / bucketSize). The default (0 = auto)
-    * derives it from the OBSERVED id range so the driver pass is
-    * provably ≤ 2^20 rows for any id distribution — auto-sizing
+    * The bucket width derives from the OBSERVED id range so the
+    * driver pass is provably ≤ 2^20 rows for any id distribution; it
     * assumes ids spread roughly uniformly over their range (dense
-    * surrogate keys, the common case); for a heavily CLUSTERED sparse
-    * id space pass an explicit bucketSize so each bucket's
-    * in-partition sort stays bounded too.
+    * surrogate keys, the common case) — in a heavily CLUSTERED sparse
+    * id space one bucket can hold most docs, and its in-partition sort
+    * is then that cluster's size.
     *
     * EAGER NOTE: building this DataFrame runs Spark jobs up front
-    * (the id min/max agg when auto-sizing, and the bucket-totals
-    * collect) — unlike the lazy sibling operators. The input subplan
-    * is locally checkpointed so upstream gates/joins run ONCE across
-    * those jobs and the final query — and, unlike `persist` (whose
-    * SQL-cache entry survives until an explicit `unpersist` this
-    * lazy-returning operator has no hook to issue), the checkpoint
-    * RDD is released by the ContextCleaner once the result is
-    * unreachable, so repeated calls cannot leak executor storage.
+    * (the input's local checkpoint, which observes the id range, and
+    * the bucket-totals collect) — unlike the lazy sibling operators.
+    * The input subplan is locally checkpointed so upstream gates/joins
+    * run ONCE across those jobs and the final query — and, unlike
+    * `persist` (whose SQL-cache entry survives until an explicit
+    * `unpersist` this lazy-returning operator has no hook to issue),
+    * the checkpoint RDD is released by the ContextCleaner once the
+    * result is unreachable, so repeated calls cannot leak executor
+    * storage.
     * Trade-off: localCheckpoint storage is not fault-tolerant — an
     * executor loss after build fails the query and the caller
     * retries (acceptable for a batch job; a production pipeline
     * wanting FT here should reliable-`checkpoint` its input).
     */
   def packSequences(docs: DataFrame, idCol: String, textCol: String,
-                    seqLen: Int, bucketSize: Int = 0): DataFrame = {
+                    seqLen: Int): DataFrame = {
     val toks = TextFns.toks(col(textCol))
     val base = Par.fanOut(docs).select(col(idCol), col(textCol),
       size(toks).cast("long").as("__n"))
-    packLayout(base, idCol, seqLen, bucketSize)
+    packLayout(base, idCol, seqLen)
       .select(col(idCol), col("seq_id"),
         (col("__start") + 1).as("doc_tok_start"),
         (col("__off") + col("__start") - col("seq_id") * seqLen + 1)
@@ -1167,11 +1162,10 @@ object Corpus {
     * long, docs with count < 1 drop (the text variant's rule).
     */
   def packSequencesCounts(docs: DataFrame, idCol: String,
-                          nTokCol: String, seqLen: Int,
-                          bucketSize: Int = 0): DataFrame = {
+                          nTokCol: String, seqLen: Int): DataFrame = {
     val base = Par.fanOut(docs).select(col(idCol),
       col(nTokCol).cast("long").as("__n"))
-    packLayout(base, idCol, seqLen, bucketSize)
+    packLayout(base, idCol, seqLen)
       .select(col(idCol), col("seq_id"),
         (col("__start") + 1).as("doc_tok_start"),
         (col("__off") + col("__start") - col("seq_id") * seqLen + 1)
@@ -1189,10 +1183,8 @@ object Corpus {
     * localCheckpoint eagerness).
     */
   private def packLayout(base0: DataFrame, idCol: String,
-                         seqLen: Int, bucketSize: Int): DataFrame = {
+                         seqLen: Int): DataFrame = {
     require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
-    require(bucketSize >= 0,
-      s"bucketSize must be >= 1 (or 0 = auto), got $bucketSize")
     base0.schema(idCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType => ()
       case other => throw new IllegalArgumentException(
@@ -1203,11 +1195,10 @@ object Corpus {
     // the global token offset IS the exclusive prefix sum of __n in
     // id order — Stats.cumBelowByValue holds the ONE copy of the
     // bucketed two-level zipWithIndex machinery (in-bucket window +
-    // driver-folded bucket offsets, ≤ 2^20 driver rows under auto
-    // sizing); doc ids are the unique "values", so its one-row-per-
-    // value contract is the packer's unique-id contract
-    val withOff = Stats.cumBelowByValue(base0, idCol, Seq("__n"),
-        bucketSize)
+    // driver-folded bucket offsets, ≤ 2^20 driver rows); doc ids are
+    // the unique "values", so its one-row-per-value contract is the
+    // packer's unique-id contract
+    val withOff = Stats.cumBelowByValue(base0, Nil, idCol, Seq("__n"))
       .withColumnRenamed("cum___n", "__off")
       .filter(col("__n") >= 1)
     val sFirst = floor(col("__off") / seqLen).cast("long")

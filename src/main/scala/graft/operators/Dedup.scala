@@ -611,15 +611,13 @@ object Dedup {
                                          pc: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val raw = pc.as[(Long, Long)].collect()
-    val valid: java.util.HashSet[java.lang.Long] = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      pc.select(col("src").as("id"))
-        .union(pc.select(col("dst").as("id"))).distinct()
-        .join(docs.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .as[Long].collect().foreach(s.add(_))
-      s
-    }
+    import scala.jdk.CollectionConverters._
+    // only pairs whose two endpoints are both docs; an endpoint left
+    // with no such pair falls to the closing coalesce as a singleton
+    val ids = docs.select(col(idCol).as("__id"))
+    val raw = pc.join(ids, col("src") === col("__id"), "left_semi")
+      .join(ids, col("dst") === col("__id"), "left_semi")
+      .as[(Long, Long)].collect()
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -629,23 +627,13 @@ object Dedup {
       r
     }
     raw.foreach { case (a, b) =>
-      if (valid.contains(a) && valid.contains(b)) {
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
     }
-    val labels = {
-      val it = valid.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      while (it.hasNext) {
-        val id: Long = it.next()
-        buf += ((id, if (parent.containsKey(id)) find(id) else id))
-      }
-      buf.toSeq
-    }
+    val labels = parent.keySet.asScala.toList.map(id => (id, find(id)))
     docs.select(col(idCol))
       .join(broadcast(labels.toDF("__eid", "cluster_id")),
         col(idCol) === col("__eid"), "left")

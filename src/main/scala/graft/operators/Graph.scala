@@ -81,19 +81,21 @@ object Graph {
     // e/nodes/outDeg are loop invariants consumed every iteration —
     // persist them once (the GraphX pattern; see also
     // Corpus.decontaminateBloom) instead of recomputing their upstream
-    // scan per iteration. The node count below materializes them.
+    // scan per iteration. The one setup aggregate below (node count
+    // and dangling count over nodes ⟕ outDeg) materializes them.
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("__src").as("node"))
       .union(e.select(col("__dst").as("node"))).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "pageRank needs a non-empty graph")
     val outDeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dangling = nodes.join(outDeg, col("node") === col("__src"),
-      "left_anti").limit(1).count()
-    require(dangling == 0,
+    val setup = nodes.join(outDeg, col("node") === col("__src"), "left")
+      .agg(count(lit(1)), count(when(col("__src").isNull, 1)))
+      .head()
+    val n = setup.getLong(0)
+    require(n > 0, "pageRank needs a non-empty graph")
+    require(setup.getLong(1) == 0,
       "pageRank requires every node to have an out-edge")
     val teleportFx = (15L * PrScale) / (100L * n)
     val ranks0 = seedOpt match {

@@ -337,115 +337,55 @@ object Stats {
         when(pe < 1.0, (po - pe) / (lit(1.0) - pe)).as("kappa"))
   }
 
-  /** Eager localCheckpoint of a prefix-sum input, with the auto
-    * bucket width from the (min, max) of its integral `valCol` that the
-    * checkpoint job observes: the range over 2^20 buckets, at least
-    * 4096 (4096 for an empty input — any grid works). Double
-    * arithmetic: max − min on extreme values would overflow long, and
-    * the bound only needs to hold approximately.
-    */
-  private def checkpointWidth(grouped: DataFrame,
-                              valCol: String): (DataFrame, Long) = {
-    val v = col(valCol).cast(org.apache.spark.sql.types.LongType)
-    val (base, r) = Par.checkpointObserving(grouped, min(v), max(v))
-    (base, if (r.isNullAt(0)) 4096L else math.max(4096L, math.ceil(
-      (r.getLong(1).toDouble - r.getLong(0).toDouble + 1) / (1 << 20))
-      .toLong))
-  }
-
   /** Per-distinct-value table of `valCol` (an INTEGRAL column) with
     * the EXCLUSIVE cumulative sum of each `sumCols` entry over all
-    * SMALLER values — the global order statistic every rank-based
+    * SMALLER values within each `groupCols` key (over the whole input
+    * when there are none) — the order statistic every rank-based
     * metric needs ([[auc]]'s ranks-below, [[spearman]]'s tie-averaged
-    * ranks), computed WITHOUT the single-partition global window that
-    * a naive `sum over (ORDER BY value)` plans (PlanLint bans it).
-    * Same two-level zipWithIndex shape as
-    * [[Corpus.packSequences]]: values bucket by integer division
-    * (width derived from the observed range so the driver pass is
-    * ≤ 2^20 rows), one hash-partitioned in-bucket window, bucket
-    * totals prefix-summed on the driver and broadcast back. Input
-    * must already be one row per distinct value (a grouped count
-    * table, or any frame with a UNIQUE integral key — this is also
-    * [[Corpus.packSequences]]'s offset engine; rows TIED on the value
-    * order their cumulative sums arbitrarily). `bucketSize` > 0
-    * overrides the auto width (the packer's knob for clustered sparse
-    * id spaces). Output adds `cum_<c>` per sum column. Eager: the
-    * input is locally checkpointed (so upstream aggs run once) with
-    * its value range observed by that same job, then the bucket
-    * totals collect — two executions at call time.
-    */
-  private[operators] def cumBelowByValue(grouped: DataFrame,
-                                         valCol: String,
-                                         sumCols: Seq[String],
-                                         bucketSize: Int = 0)
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.LongType
-    val (base, autoWidth) = checkpointWidth(grouped, valCol)
-    val width = if (bucketSize > 0) bucketSize.toLong else autoWidth
-    val bkt = base.withColumn("__bkt",
-      expr(s"(cast($valCol as long) - pmod(cast($valCol as long), " +
-        s"${width}L)) div ${width}L"))
-    val w = Window.partitionBy(col("__bkt")).orderBy(col(valCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withIn = sumCols.foldLeft(bkt)((d, c) =>
-      d.withColumn(s"__in_$c", sum(col(c)).over(w)))
-    val totals = bkt.groupBy(col("__bkt"))
-      .agg(sum(col(sumCols.head)).as(sumCols.head),
-        sumCols.tail.map(c => sum(col(c)).as(c)): _*)
-      .orderBy(col("__bkt"))
-      .collect()
-    val accs = Array.fill(sumCols.size)(0L)
-    val offRows = totals.map { row =>
-      val offs = accs.toSeq
-      sumCols.indices.foreach(i => accs(i) += row.getLong(i + 1))
-      Row.fromSeq(row.getLong(0) +: offs)
-    }
-    val sp = grouped.sparkSession
-    val offSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__bkt", LongType) +:
-        sumCols.map(c => org.apache.spark.sql.types.StructField(
-          s"__off_$c", LongType)))
-    val offsets = sp.createDataFrame(
-      sp.sparkContext.parallelize(offRows.toSeq, 1), offSchema)
-    sumCols.foldLeft(withIn.join(broadcast(offsets), "__bkt")) {
-      (d, c) =>
-        d.withColumn(s"cum_$c",
-          col(s"__off_$c") + col(s"__in_$c") - col(c))
-          .drop(s"__in_$c", s"__off_$c")
-    }.drop("__bkt")
-  }
-
-  /** Per-GROUP [[cumBelowByValue]] — the same two-level bucketed
-    * prefix sum, fully distributed (no driver pass: a grouped call
-    * can't bound groups×buckets the way the ungrouped packer bounds
-    * buckets). Input is one row per (group..., distinct `valCol`);
-    * output adds the EXCLUSIVE within-group cumulative sum `cum_<c>`
-    * over smaller values. Three bounded pieces instead of one
-    * group-partitioned window over the whole distinct-value table
-    * (whose partition is a one-task sort of a group's ENTIRE distinct
-    * set — corpus-sized under adversarial quantization, the r13 scale
-    * watch):
+    * ranks) and [[Corpus.packSequences]]' global token offsets,
+    * computed WITHOUT the key-partitioned (or, ungrouped, single-
+    * partition) window that a naive `sum over (ORDER BY value)` plans:
+    * that partition is a one-task sort of a key's ENTIRE distinct set
+    * (corpus-sized under adversarial quantization), and PlanLint bans
+    * the unpartitioned form outright. Input is one row per
+    * (group..., distinct `valCol`) — a grouped count table, or any
+    * frame with a UNIQUE integral key (the packer's doc ids); rows
+    * TIED on the value order their cumulative sums arbitrarily.
+    * Output adds `cum_<c>` per sum column. The two-level zipWithIndex
+    * shape, with values bucketed by integer division (width derived
+    * from the observed range, so a key holds ≤ 2^20 buckets):
     *
     *  1. in-bucket exclusive window, partitioned (group..., bucket) —
-    *     ≤ `width` rows per partition by construction;
-    *  2. per-(group, bucket) totals hash agg, then the bucket-level
-    *     exclusive window partitioned by group — ≤ range/width ≤ 2^20
-    *     rows per group regardless of the corpus;
-    *  3. a co-partitioned equi-join adding offset + in-bucket.
+    *     ≤ `width` rows per partition for evenly spread values;
+    *  2. per-(group, bucket) totals hash agg, turned into bucket
+    *     offsets — keyed, by the exclusive bucket-level window
+    *     partitioned by group (fully distributed: a grouped call can't
+    *     bound groups×buckets); unkeyed, by a driver fold of the
+    *     ≤ 2^20 totals, broadcast back;
+    *  3. one equi-join adding offset + in-bucket.
     *
     * Exact integer sums, so callers' results are bit-identical to the
-    * single-window form they replace. Eager: one execution at call
-    * time, the input's local checkpoint, which also observes the
-    * value range that sizes the buckets.
+    * single-window form. Eager: the input is locally checkpointed (so
+    * upstream aggs run once) with its value range observed by that
+    * same job — one execution at call time, two when unkeyed (the
+    * bucket totals collect).
     */
-  private[operators] def cumBelowByValueGrouped(grouped: DataFrame,
-                                                groupCols: Seq[String],
-                                                valCol: String,
-                                                sumCols: Seq[String])
+  private[operators] def cumBelowByValue(grouped: DataFrame,
+                                         groupCols: Seq[String],
+                                         valCol: String,
+                                         sumCols: Seq[String])
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (base, width) = checkpointWidth(grouped, valCol)
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the checkpoint job observes the value range; the auto width
+    // spreads it over 2^20 buckets, at least 4096 (4096 for an empty
+    // input — any grid works). Double arithmetic: max − min on extreme
+    // values would overflow long, and the bound need only hold roughly
+    val v = col(valCol).cast(LongType)
+    val (base, r) = Par.checkpointObserving(grouped, min(v), max(v))
+    val width = if (r.isNullAt(0)) 4096L else math.max(4096L, math.ceil(
+      (r.getLong(1).toDouble - r.getLong(0).toDouble + 1) / (1 << 20))
+      .toLong)
     val gcols = groupCols.map(col)
     val bkt = base.withColumn("__bkt",
       expr(s"(cast($valCol as long) - pmod(cast($valCol as long), " +
@@ -456,32 +396,38 @@ object Stats {
     val withIn = sumCols.foldLeft(bkt)((d, c) =>
       d.withColumn(s"__in_$c",
         coalesce(sum(col(c)).over(inW), lit(0L))))
-    val totW = Window.partitionBy(gcols: _*).orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sumCols.foldLeft(
-        bkt.groupBy(gcols :+ col("__bkt"): _*)
-          .agg(sum(col(sumCols.head)).as(s"__t_${sumCols.head}"),
-            sumCols.tail.map(c => sum(col(c)).as(s"__t_$c")): _*))(
-        (d, c) => d.withColumn(s"__off_$c",
+    val totals = bkt.groupBy(gcols :+ col("__bkt"): _*)
+      .agg(sum(col(sumCols.head)).as(s"__t_${sumCols.head}"),
+        sumCols.tail.map(c => sum(col(c)).as(s"__t_$c")): _*)
+    val offsets = if (groupCols.nonEmpty) {
+      val totW = Window.partitionBy(gcols: _*).orderBy(col("__bkt"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      sumCols.foldLeft(totals)((d, c) => d.withColumn(s"__off_$c",
           coalesce(sum(col(s"__t_$c")).over(totW), lit(0L))))
-      .select(gcols ++ (col("__bkt") +:
-        sumCols.map(c => col(s"__off_$c"))): _*)
+        .select(gcols ++ (col("__bkt") +:
+          sumCols.map(c => col(s"__off_$c"))): _*)
+    } else {
+      // no key to partition the bucket-level window by: fold the
+      // totals on the driver (how `RDD.zipWithIndex` handles its
+      // per-partition counts) and broadcast the offsets back
+      val accs = Array.fill(sumCols.size)(0L)
+      val offRows = totals.orderBy(col("__bkt")).collect().map { row =>
+        val offs = accs.toSeq
+        sumCols.indices.foreach(i => accs(i) += row.getLong(i + 1))
+        Row.fromSeq(row.getLong(0) +: offs)
+      }
+      val sp = grouped.sparkSession
+      broadcast(sp.createDataFrame(
+        sp.sparkContext.parallelize(offRows.toSeq, 1),
+        StructType(StructField("__bkt", LongType) +:
+          sumCols.map(c => StructField(s"__off_$c", LongType)))))
+    }
     sumCols.foldLeft(
         withIn.join(offsets, groupCols :+ "__bkt")) { (d, c) =>
       d.withColumn(s"cum_$c", col(s"__off_$c") + col(s"__in_$c"))
         .drop(s"__in_$c", s"__off_$c")
     }.drop("__bkt")
   }
-
-  /** Exclusive per-value prefix sums for the kernels below: the
-    * packer-shaped [[cumBelowByValue]] when there are no group keys,
-    * [[cumBelowByValueGrouped]] otherwise — picked from the key count
-    * alone, so a kernel's ungrouped plan is the one it always had.
-    */
-  private def cumBelow(grouped: DataFrame, groupCols: Seq[String],
-                       valCol: String, sumCols: Seq[String]): DataFrame =
-    if (groupCols.isEmpty) cumBelowByValue(grouped, valCol, sumCols)
-    else cumBelowByValueGrouped(grouped, groupCols, valCol, sumCols)
 
   /** `l` joined to `r` on `keys` — a cross join when there are none
     * (an ungrouped kernel's one-row totals frame).
@@ -538,7 +484,7 @@ object Stats {
       .groupBy(keys :+ col(valCol).cast(LongType).as("__v"): _*)
       .agg(count(lit(1)).as("__c"),
         sum(col(valCol).cast(LongType)).as("__s"))
-    cumBelow(g, groupCols, "__v", Seq("__c", "__s"))
+    cumBelowByValue(g, groupCols, "__v", Seq("__c", "__s"))
       .groupBy(keys: _*)
       .agg(
         coalesce(sum(col("__c")), lit(0L)).as("n"),
@@ -614,8 +560,8 @@ object Stats {
     * n_neg, auc); null AUC when either class is empty. Nulls in score or label
     * drop. Grouped, it is the scorer-validation scorecard ("does the
     * classifier still separate keepers from rejects on EVERY
-    * source"), its ranks-below from [[cumBelowByValueGrouped]] so no
-    * partition is ever one group's entire distinct-score set.
+    * source"), its ranks-below from the keyed [[cumBelowByValue]] so
+    * no partition is ever one group's entire distinct-score set.
     */
   def auc(df: DataFrame, scoreFxCol: String, labelCol: String,
           groupCols: Seq[String] = Nil): DataFrame =
@@ -656,7 +602,7 @@ object Stats {
     // product np·(2·cnn + nn) would silently wrap past 2^63 on
     // billion-row heavy-tie inputs; 19-digit factors keep the decimal
     // product exact (and DuckDB's BIGINT→HUGEINT sum mirrors it)
-    cumBelow(g, groupCols, "__s", Seq("nn"))
+    cumBelowByValue(g, groupCols, "__s", Seq("nn"))
       .groupBy(keys: _*)
       .agg(
         coalesce(sum(col("np")), lit(0L)).as("n_pos"),
@@ -725,7 +671,7 @@ object Stats {
     * appeared/vanished alarm rides on the zero count. Nulls drop.
     * Grouped, it is the drift SCORECARD ([[psi]]'s exact companion):
     * every source's KS in one pass, with no partition ever one
-    * group's entire distinct-score set ([[cumBelowByValueGrouped]]).
+    * group's entire distinct-score set (the keyed [[cumBelowByValue]]).
     *
     * Scale shape: one count agg per side, a value-keyed full join,
     * [[cumBelowByValue]] (two sum columns share the one pass), a
@@ -770,7 +716,7 @@ object Stats {
     val both = side(refCounts, "c1").join(side(curCounts, "c2"),
         groupCols :+ "__s", "full")
       .na.fill(0L, Seq("c1", "c2"))
-    val cum = cumBelow(both, groupCols, "__s", Seq("c1", "c2"))
+    val cum = cumBelowByValue(both, groupCols, "__s", Seq("c1", "c2"))
     // totals from the RETURNED frame: it sits on the prefix sum's
     // localCheckpoint, so the per-side count aggs + full join run
     // once — totals planned off `both` would re-execute the lineage
@@ -906,7 +852,7 @@ object Stats {
     val g = counts.groupBy(col("s").cast("long").as("__s"))
       .agg(sum(col("np")).as("np"), sum(col("nn")).as("nn"))
     val t = col("np") + col("nn")
-    val agg = cumBelowByValue(g, "__s", Seq("nn"))
+    val agg = cumBelowByValue(g, Nil, "__s", Seq("nn"))
       .agg(
         coalesce(sum(col("np")), lit(0L)).as("n_pos"),
         coalesce(sum(col("nn")), lit(0L)).as("n_neg"),
@@ -936,10 +882,10 @@ object Stats {
     * AUC is the SAME tie-aware rank-sum arithmetic over WEIGHTED
     * counts (weights are small exact integers, so every resample's
     * count table stays integer-exact), ranks-below per resample via
-    * [[cumBelowByValueGrouped]] over the (resample, distinct-score)
-    * count table — the bucketed two-level prefix sum, so no partition
-    * is ever one resample's entire distinct-score set even under
-    * adversarial quantization; no global window. Resamples
+    * [[cumBelowByValue]] keyed by resample over the (resample,
+    * distinct-score) count table — the bucketed two-level prefix sum,
+    * so no partition is ever one resample's entire distinct-score set
+    * even under adversarial quantization; no global window. Resamples
     * that lose a class entirely yield a null AUC and sit out the
     * percentile (both engines skip nulls). One row:
     * (n_pos, n_neg, b, auc, lo, hi) — `auc` the exact unweighted
@@ -977,8 +923,7 @@ object Stats {
     // distinct-score table, which a 1e9-quantized continuous score
     // makes ~corpus-sized (the r13 by-group scale watch, closed here
     // the same way as the grouped auc/ksTest)
-    val perR = cumBelowByValueGrouped(wCounts, Seq("__r"), "__s",
-        Seq("nn"))
+    val perR = cumBelowByValue(wCounts, Seq("__r"), "__s", Seq("nn"))
       .groupBy(col("__r"))
       .agg(sum(col("np")).as("__p"), sum(col("nn")).as("__n"),
         sum(d19(col("np")) * (d19(col("cum_nn")) * 2 + d19(col("nn"))))
@@ -1029,7 +974,8 @@ object Stats {
       .localCheckpoint()
     def ranks2(vc: String): DataFrame =
       cumBelowByValue(
-        rows.groupBy(col(vc)).agg(count(lit(1)).as("c")), vc, Seq("c"))
+        rows.groupBy(col(vc)).agg(count(lit(1)).as("c")), Nil, vc,
+        Seq("c"))
         .select(col(vc),
           (lit(2L) * col("cum_c") + col("c") + 1L).as(s"__r$vc"))
     val ranked = rows

@@ -1,6 +1,7 @@
 package graft.serve
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.Verify.jsonQuote
 import org.apache.spark.sql.SparkSession
 
 import java.net.{InetSocketAddress, URLDecoder}
@@ -91,7 +92,7 @@ object ServingMain {
     }
     QueryService.statsByItem(spark, owDir, itemName, date, field)
       .collect()
-      .map(r => s"""{"name":${jstr(r.getString(0))},""" +
+      .map(r => s"""{"name":${jsonQuote(r.getString(0))},""" +
         s""""value":${r.getDouble(1)}}""")
       .mkString("[", ",", "]")
   }
@@ -121,12 +122,12 @@ object ServingMain {
     r.schema.fields.iterator.filterNot(f => skip(f.name)).map { f =>
       val v = r.getAs[Any](f.name) match {
         case null => "null"
-        case s: String => jstr(s)
-        case d: java.sql.Date => jstr(d.toString)
-        case t: java.sql.Timestamp => jstr(t.toString)
+        case s: String => jsonQuote(s)
+        case d: java.sql.Date => jsonQuote(d.toString)
+        case t: java.sql.Timestamp => jsonQuote(t.toString)
         case other => other.toString
       }
-      s"${jstr(f.name)}:$v"
+      s"${jsonQuote(f.name)}:$v"
     }.mkString("{", ",", "}")
 
   // ---- plumbing --------------------------------------------------------
@@ -141,7 +142,7 @@ object ServingMain {
         // require → IllegalArgumentException). Their messages name the
         // offending parameter, which is exactly what a caller needs.
         case e @ (_: IllegalArgumentException | _: NoSuchElementException) =>
-          (400, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
+          (400, s"""{"error":${jsonQuote(String.valueOf(e.getMessage))}}""")
         // genuine server-side failures (missing store path, analysis
         // errors): 500, generic payload — internals go to the log, not
         // the caller. Fatals (OOM and friends) propagate.
@@ -165,15 +166,4 @@ object ServingMain {
       URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
     }.toMap
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

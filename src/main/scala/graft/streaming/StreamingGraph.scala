@@ -89,15 +89,18 @@ object StreamingGraph {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val deg = degrees(spark, storePath).persist(MEMORY_AND_DISK)
     val nodes = deg.select(col("node")).persist(MEMORY_AND_DISK)
-    val n = nodes.count()
+    // node count, dangling count and Σ out_deg in one pass over deg
+    val setup = deg.agg(count(lit(1)),
+      count(when(col("out_deg") <= 0, 1)), sum(col("out_deg"))).head()
+    val n = setup.getLong(0)
     require(n > 0, "warmPageRank needs a non-empty degree store")
-    require(deg.filter(col("out_deg") <= 0).limit(1).count() == 0,
+    require(setup.getLong(1) == 0,
       "pageRank requires every node to have an out-edge")
     val outDeg = deg.select(col("node").as("__src"),
       col("out_deg").as("__od")).persist(MEMORY_AND_DISK)
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .persist(MEMORY_AND_DISK)
-    val sumOd = deg.agg(sum(col("out_deg"))).head.getLong(0)
+    val sumOd = setup.getLong(2)
     val ne = e.count()
     require(ne == sumOd, s"degree store and edge list diverge: " +
       s"|edges| = $ne but store Σ out_deg = $sumOd — a batch is " +

@@ -32,9 +32,9 @@ import graft.operators.Stats
   *
   * Scale shape: per batch ONE score-keyed map-side hash agg over the
   * micro-batch (≤ distinct scores rows written); the reads fold the
-  * store to the distinct-score table and run the bucketed
-  * [[Stats.cumBelowByValue]] core — nothing keyed by corpus size, no
-  * state store.
+  * store to the distinct-score table and run the one bucketed
+  * prefix-sum kernel, [[Stats.cumBelowByValue]] (keyed when the read
+  * is grouped) — nothing keyed by corpus size, no state store.
   */
 object StreamingScorer {
 

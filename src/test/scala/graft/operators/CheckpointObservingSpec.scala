@@ -57,9 +57,22 @@ class CheckpointObservingSpec extends SparkSpec with TimeLimits {
   private def sameFrame(got: DataFrame, want: DataFrame,
                         clue: String): Unit = {
     assert(got.schema === want.schema, clue)
+    sameRows(got, want, clue)
+  }
+
+  private def sameRows(got: DataFrame, want: DataFrame,
+                       clue: String): Unit = {
     // Row equality compares doubles bit-wise (0.0 and -0.0 differ)
     def rows(d: DataFrame) = d.collect().toSeq.sortBy(_.toString)
     assert(rows(got) === rows(want), clue)
+  }
+
+  /** Distinct buckets of the prefix sum's auto grid over `v`. */
+  private def bucketsOccupied(df: DataFrame): Int = {
+    val vs = df.select(col("v")).as[Long].collect()
+    val width = math.max(4096L,
+      math.ceil((vs.max.toDouble - vs.min.toDouble + 1) / (1 << 20)).toLong)
+    vs.map(Math.floorDiv(_, width)).distinct.length
   }
 
   // ---- fixtures ----
@@ -104,14 +117,16 @@ class CheckpointObservingSpec extends SparkSpec with TimeLimits {
       "half-step, the grouped prefix sum one in all") {
     failAfter(limit) {
       def n(body: => DataFrame) = executions(body)._2
+      val store = java.nio.file.Files.createTempDirectory("deg_store")
+        .toString
+      graft.streaming.StreamingGraph.writeDegreeBatch(graph16, store,
+        "src", "dst", 0L)
       val got = Seq(
         "hits" -> n(Graph.hits(graph16, "src", "dst", 2)),
-        "cumBelowByValueGrouped" -> n(Stats.cumBelowByValueGrouped(
+        "cumBelowByValue keyed" -> n(Stats.cumBelowByValue(
           groupedCounts, Seq("g"), "v", Seq("c"))),
-        "cumBelowByValue" -> n(
-          Stats.cumBelowByValue(counts(50), "v", Seq("c"))),
-        "cumBelowByValue bucketSize=8" -> n(
-          Stats.cumBelowByValue(counts(50), "v", Seq("c"), bucketSize = 8)),
+        "cumBelowByValue unkeyed" -> n(
+          Stats.cumBelowByValue(counts(50), Nil, "v", Seq("c"))),
         "selectByBudget" -> n(
           Corpus.selectByBudget(docs, "id", "score", "text", 60L)),
         "curriculumOrder" -> n(
@@ -122,22 +137,32 @@ class CheckpointObservingSpec extends SparkSpec with TimeLimits {
         "clusters, driver union-find" -> n(
           Dedup.clusters(docIds, "id", pairs)),
         "clusters, propagation loop" -> n(
-          Dedup.clusters(docIds, "id", pairs, maxDriverPairs = 0L)))
-      // the probe-after-checkpoint forms ran 8, 2, 3, 2, 3, 3, 2, 5, 4
+          Dedup.clusters(docIds, "id", pairs, maxDriverPairs = 0L)),
+        "pageRank setup" -> n(Graph.pageRank(graph16, "src", "dst", 2)),
+        "warmPageRank" -> n(graft.streaming.StreamingGraph.warmPageRank(
+          spark, store, graph16, "src", "dst",
+          Seq((0L, 1L)).toDF("node", "pr_fx"), 2)))
+      // the probe-after-checkpoint forms ran 8, 2, 3, 3, 3, 2, 5, 4
       // and 10 (the loop: the pairs checkpoint + their count, the seed
       // labels + their sum, then a checkpoint + a sum per iteration,
-      // 3 to the fixpoint)
+      // 3 to the fixpoint); the driver union-find then ran 3 (a second
+      // collect read the valid endpoints), pageRank's setup 2 (node
+      // count, dangling probe) and warmPageRank 6 (the degree store
+      // read's parquet schema job, then node count, out-degree probe,
+      // Σ out_deg, edge count, unknown-endpoint probe)
       assert(got === Seq(
         "hits" -> 4, // one per half-step
-        "cumBelowByValueGrouped" -> 1,
-        "cumBelowByValue" -> 2, // checkpoint, bucket totals
-        "cumBelowByValue bucketSize=8" -> 2, // no probe to save
+        "cumBelowByValue keyed" -> 1,
+        "cumBelowByValue unkeyed" -> 2, // checkpoint, bucket totals
         "selectByBudget" -> 2,
         "curriculumOrder" -> 2,
         "mixtureWeights" -> 1,
         "mmrSelect k=3" -> 4, // checkpoint, one per pick
-        "clusters, driver union-find" -> 3, // checkpoint, two collects
-        "clusters, propagation loop" -> 5))
+        "clusters, driver union-find" -> 2, // checkpoint, valid pairs
+        "clusters, propagation loop" -> 5,
+        "pageRank setup" -> 1, // node and dangling counts in one agg
+        "warmPageRank" -> 4)) // store read, store agg, edge count,
+                              // endpoint probe
     }
   }
 
@@ -188,18 +213,26 @@ class CheckpointObservingSpec extends SparkSpec with TimeLimits {
       val single = Seq((7L, 3L)).toDF("v", "c")
       val wide = Seq((-5000000000L, 2L), (0L, 1L), (3L, 4L),
         (9000000000L, 5L)).toDF("v", "c")
+      // the fixture's values spread 10^4 apart: ~50 of the auto grid's
+      // 4096-wide buckets, so the in-bucket sums and the bucket offsets
+      // both carry
+      val sparse = counts(50).withColumn("v", col("v") * 10000L)
+      assert(bucketsOccupied(sparse) > 1)
+      assert(bucketsOccupied(wide) > 1)
       for ((name, df) <- Seq("empty" -> empty, "single" -> single,
-          "wide" -> wide, "fixture" -> counts(50))) {
-        sameFrame(Stats.cumBelowByValue(df, "v", Seq("c")),
-          cumBelowWitness(df, "v", Seq("c")), s"flat $name")
-        sameFrame(Stats.cumBelowByValue(df, "v", Seq("c"), 3),
-          cumBelowWitness(df, "v", Seq("c"), 3), s"packed $name")
+          "wide" -> wide, "fixture" -> counts(50), "sparse" -> sparse)) {
+        val flat = Stats.cumBelowByValue(df, Nil, "v", Seq("c"))
+        sameFrame(flat, cumBelowWitness(df, "v", Seq("c")), s"flat $name")
         val g = df.withColumn("g", lit("x"))
-        sameFrame(Stats.cumBelowByValueGrouped(g, Seq("g"), "v", Seq("c")),
-          cumBelowGroupedWitness(g, Seq("g"), "v", Seq("c")),
+        val keyed = Stats.cumBelowByValue(g, Seq("g"), "v", Seq("c"))
+        sameFrame(keyed, cumBelowGroupedWitness(g, Seq("g"), "v", Seq("c")),
           s"grouped $name")
+        // one constant key: the keyed plan (bucket offsets by a window
+        // per key) gives the unkeyed plan's rows (driver-folded offsets)
+        assert(keyed.columns.toSeq === "g" +: flat.columns.toSeq)
+        sameRows(keyed.drop("g"), flat, s"keyed ≡ unkeyed $name")
       }
-      sameFrame(Stats.cumBelowByValueGrouped(groupedCounts, Seq("g"), "v",
+      sameFrame(Stats.cumBelowByValue(groupedCounts, Seq("g"), "v",
           Seq("c")),
         cumBelowGroupedWitness(groupedCounts, Seq("g"), "v", Seq("c")),
         "grouped fixture")
@@ -324,19 +357,15 @@ class CheckpointObservingSpec extends SparkSpec with TimeLimits {
   }
 
   private def cumBelowWitness(grouped: DataFrame, valCol: String,
-                              sumCols: Seq[String],
-                              bucketSize: Int = 0): DataFrame = {
+                              sumCols: Seq[String]): DataFrame = {
     val base = grouped.localCheckpoint()
+    val r = base.agg(min(col(valCol).cast(LongType)),
+      max(col(valCol).cast(LongType))).head()
     val width: Long =
-      if (bucketSize > 0) bucketSize.toLong
+      if (r.isNullAt(0)) 4096L
       else {
-        val r = base.agg(min(col(valCol).cast(LongType)),
-          max(col(valCol).cast(LongType))).head()
-        if (r.isNullAt(0)) 4096L
-        else {
-          val range = r.getLong(1).toDouble - r.getLong(0).toDouble + 1
-          math.max(4096L, math.ceil(range / (1 << 20)).toLong)
-        }
+        val range = r.getLong(1).toDouble - r.getLong(0).toDouble + 1
+        math.max(4096L, math.ceil(range / (1 << 20)).toLong)
       }
     val bkt = base.withColumn("__bkt",
       expr(s"(cast($valCol as long) - pmod(cast($valCol as long), " +
@@ -551,7 +580,7 @@ class CheckpointObservingSpec extends SparkSpec with TimeLimits {
     val longIds = docs.schema(idCol).dataType == LongType &&
       pc.schema.fields.forall(_.dataType == LongType)
     if (longIds && pc.count() <= maxDriverPairs)
-      return Dedup.clustersDriver(docs, idCol, pc)
+      return clustersDriverWitness(docs, idCol, pc)
     val edges = pc
       .union(pc.select(col("dst").as("src"), col("src").as("dst")))
     var labels = edges.select(col("src").as("id")).distinct()
@@ -584,6 +613,37 @@ class CheckpointObservingSpec extends SparkSpec with TimeLimits {
     }
     docs.select(col(idCol))
       .join(labels.withColumnRenamed("id", "__eid"),
+        col(idCol) === col("__eid"), "left")
+      .select(col(idCol),
+        coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
+  }
+
+  private def clustersDriverWitness(docs: DataFrame, idCol: String,
+                                    pc: DataFrame): DataFrame = {
+    val raw = pc.as[(Long, Long)].collect()
+    val valid = pc.select(col("src").as("id"))
+      .union(pc.select(col("dst").as("id"))).distinct()
+      .join(docs.select(col(idCol).as("id")), Seq("id"), "left_semi")
+      .as[Long].collect().toSet
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      r
+    }
+    raw.foreach { case (a, b) =>
+      if (valid.contains(a) && valid.contains(b)) {
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val ra = find(a); val rb = find(b)
+        if (ra < rb) parent(rb) = ra
+        else if (rb < ra) parent(ra) = rb
+      }
+    }
+    val labels = valid.toSeq
+      .map(id => (id, if (parent.contains(id)) find(id) else id))
+    docs.select(col(idCol))
+      .join(broadcast(labels.toDF("__eid", "cluster_id")),
         col(idCol) === col("__eid"), "left")
       .select(col(idCol),
         coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))

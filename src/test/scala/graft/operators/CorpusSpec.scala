@@ -381,13 +381,17 @@ class CorpusSpec extends SparkSpec {
       .orderBy($"id")
       .as[(Long, Long, Long, Long, Long, Boolean)].collect()
     assert(re === out)
-    // cross-chunk driver-offset stitching: a 2-id chunk grid splits
-    // bands across chunks and must reproduce the single-chunk result
-    val cc = Corpus.selectByBudget(d, "id", "score", "text", 9L, 4,
-        chunkSize = 2)
+    // cross-chunk driver-offset stitching: ids 5000 apart span five of
+    // the auto grid's chunks (4096 wide at this range), so bands split
+    // across chunks and must reproduce the single-chunk result
+    val chunk = math.max(4096L,
+      math.ceil(20001.0 / ((1 << 20) / 4)).toLong)
+    assert((1L to 5L).map(i => i * 5000L / chunk).distinct.size > 1)
+    val cc = Corpus.selectByBudget(d.withColumn("id", $"id" * 5000L),
+        "id", "score", "text", 9L, 4)
       .orderBy($"id")
       .as[(Long, Long, Long, Long, Long, Boolean)].collect()
-    assert(cc === out)
+    assert(cc === out.map(r => r.copy(_1 = r._1 * 5000L)))
     val e = intercept[IllegalArgumentException] {
       Corpus.selectByBudget(d.withColumn("score", $"score".cast("double")),
         "id", "score", "text", 9L, 4)
@@ -754,13 +758,15 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("packSequences: reassembled stream equals concatenated corpus") {
+    // ids 1000 apart: the 39001-wide range spreads the docs over ten
+    // of the auto grid's 4096-wide buckets, so sequences cross buckets
     val docs = (1L to 40L)
-      .map(i => (i, (1 to (i % 7 + 1).toInt).map(j => s"w${i}_$j")
-        .mkString(" ")))
+      .map(i => (i * 1000L, (1 to (i % 7 + 1).toInt)
+        .map(j => s"w${i}_$j").mkString(" ")))
       .toDF("id", "text")
+    assert((1L to 40L).map(i => i * 1000L / 4096L).distinct.size > 1)
     val L = 11
-    val pieces = Corpus.packSequences(docs, "id", "text", seqLen = L,
-        bucketSize = 8)
+    val pieces = Corpus.packSequences(docs, "id", "text", seqLen = L)
       .orderBy($"seq_id", $"seq_tok_start")
       .as[(Long, Long, Long, Long, Long, String)].collect()
     // every sequence except the last is exactly L tokens, tiled with

@@ -209,20 +209,25 @@ class StatsSpec extends SparkSpec {
 
   test("cumBelowByValue: exclusive prefix sums over value order, " +
       "gaps and negative values included, no global window") {
+    import org.apache.spark.sql.execution.window.WindowExec
     val g = Seq((-5L, 2L), (0L, 3L), (7L, 1L), (1000000L, 4L))
       .toDF("v", "c")
-    val got = Stats.cumBelowByValue(g, "v", Seq("c"))
-      .select($"v", $"c", $"cum_c")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(got === Seq((-5L, 2L, 0L), (0L, 3L, 2L), (7L, 1L, 5L),
-      (1000000L, 4L, 6L)))
-    import org.apache.spark.sql.execution.window.WindowExec
-    val plan = Stats.cumBelowByValue(g, "v", Seq("c"))
-      .queryExecution.executedPlan
-    val unpartitioned = plan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty => w
+    // unkeyed, and keyed by one constant group: same sums, and neither
+    // plan holds an unpartitioned window
+    for (keys <- Seq(Nil, Seq("k"))) {
+      val out = Stats.cumBelowByValue(
+        g.withColumn("k", org.apache.spark.sql.functions.lit(1)), keys,
+        "v", Seq("c"))
+      val got = out.select($"v", $"c", $"cum_c")
+        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(got === Seq((-5L, 2L, 0L), (0L, 3L, 2L), (7L, 1L, 5L),
+        (1000000L, 4L, 6L)), keys)
+      val unpartitioned = out.queryExecution.executedPlan.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
+      }
+      assert(unpartitioned.isEmpty,
+        s"global window leaked into the plan (keys $keys)")
     }
-    assert(unpartitioned.isEmpty, "global window leaked into the plan")
   }
 
   test("auc: hand value with ties, perfect separation 1, reversed 0, " +
@@ -936,7 +941,7 @@ class StatsSpec extends SparkSpec {
       .groupBy(col("__r"), col("__s"))
       .agg(sum(when(col("__y"), col("__w")).otherwise(0L)).as("np"),
         sum(when(col("__y"), 0L).otherwise(col("__w"))).as("nn"))
-    val perR = Stats.cumBelowByValueGrouped(wCounts, Seq("__r"), "__s",
+    val perR = Stats.cumBelowByValue(wCounts, Seq("__r"), "__s",
         Seq("nn"))
       .groupBy(col("__r"))
       .agg(sum(col("np")).as("__p"), sum(col("nn")).as("__n"),

@@ -138,14 +138,24 @@ object EngineProps extends Properties("graft") {
       got == expected
     }
 
+  // ids `stride` apart (≥ 4096) always span more than one of the
+  // auto grid's chunks/buckets: the ≤ 11 × 10^6 id range keeps the
+  // auto width at its 4096 floor
+  private val stride = Gen.chooseNum(4096L, 1000000L)
+
+  private def autoWidth(ids: Seq[Long], slots: Int): Long =
+    math.max(4096L,
+      math.ceil((ids.max - ids.min + 1).toDouble / slots).toLong)
+
   property("selectByBudget matches the in-memory greedy fill") =
     Prop.forAll(docs, Gen.chooseNum(0L, 60L), Gen.chooseNum(1, 4),
-      Gen.chooseNum(1, 5)) { (ds, budget, bands, chunk) =>
+      stride) { (ds, budget, bands, step) =>
       import graft.operators.Corpus
-      val df = ds.toDF("doc_id", "text")
-        .withColumn("score", (col("doc_id") * 7 % 11).cast("int"))
-      val scored = ds.map { case (id, t) =>
-        (id, (id * 7 % 11), t.split(" ").length.toLong) }
+      val scored = ds.map { case (i, t) =>
+        (i * step, (i * 7 % 11), t.split(" ").length.toLong) }
+      val df = ds.map { case (i, t) => (i * step, t, (i * 7 % 11).toInt) }
+        .toDF("doc_id", "text", "score")
+      val chunk = autoWidth(scored.map(_._1), (1 << 20) / bands)
       val (lo, hi) = (scored.map(_._2).min, scored.map(_._2).max)
       var cum = 0L
       val expected = scored
@@ -156,10 +166,10 @@ object EngineProps extends Properties("graft") {
           cum += n; (id, s, b, n, cum, cum <= budget) }
         .toSet
       val got = Corpus.selectByBudget(df, "doc_id", "score", "text",
-          budget, bands, chunkSize = chunk)
+          budget, bands)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getBoolean(5))).toSet
-      got == expected
+      scored.map(_._1 / chunk).distinct.size > 1 && got == expected
     }
 
   property("lmScore matches the in-memory unigram NLL, any partitioning") =
@@ -185,12 +195,13 @@ object EngineProps extends Properties("graft") {
     }
 
   property("packSequences reassembles the corpus for any shape") =
-    Prop.forAll(docs, Gen.chooseNum(2, 17), Gen.chooseNum(1, 6)) {
-      (ds, seqLen, bucketSize) =>
+    Prop.forAll(docs, Gen.chooseNum(2, 17), stride) {
+      (ds, seqLen, step) =>
         import graft.operators.Corpus
-        val df = ds.toDF("doc_id", "text")
-        val pieces = Corpus.packSequences(df, "doc_id", "text",
-            seqLen, bucketSize)
+        val spread = ds.map { case (i, t) => (i * step, t) }
+        val width = autoWidth(spread.map(_._1), 1 << 20)
+        val pieces = Corpus.packSequences(spread.toDF("doc_id", "text"),
+            "doc_id", "text", seqLen)
           .orderBy(col("seq_id"), col("seq_tok_start"))
           .select("piece_text", "piece_len", "seq_id")
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -198,25 +209,28 @@ object EngineProps extends Properties("graft") {
         val corpus = ds.sortBy(_._1).flatMap(_._2.split(" "))
         val fullSeqs = pieces.groupBy(_._3).view
           .mapValues(_.map(_._2).sum).toMap
-        stream == corpus &&
+        spread.map(_._1 / width).distinct.size > 1 &&
+          stream == corpus &&
           fullSeqs.filter(_._1 < fullSeqs.keys.max)
             .values.forall(_ == seqLen.toLong)
     }
 
-  // the auto-sized bucket grid may differ from any explicit one, but
-  // the packing output is a pure function of (corpus, seqLen) — the
-  // two-level prefix-sum must erase the bucketing choice entirely
-  property("packSequences output is bucket-grid invariant (auto vs any)") =
-    Prop.forAll(docs, Gen.chooseNum(2, 17), Gen.chooseNum(1, 6)) {
-      (ds, seqLen, bucketSize) =>
+  // the auto bucket width follows the id range, so scaling every id
+  // moves the bucket grid under the docs; the packing output is a
+  // pure function of (corpus in id order, seqLen) — the two-level
+  // prefix sum must erase the bucketing entirely
+  property("packSequences layout is invariant under scaling the ids") =
+    Prop.forAll(docs, Gen.chooseNum(2, 17),
+      Gen.chooseNum(1000L, 1000000000L)) { (ds, seqLen, k) =>
         import graft.operators.Corpus
-        val df = ds.toDF("doc_id", "text")
-        def rows(bs: Int) = Corpus.packSequences(df, "doc_id", "text",
-            seqLen, bs)
+        def rows(scale: Long) = Corpus.packSequences(
+            ds.map { case (i, t) => (i * scale, t) }.toDF("doc_id", "text"),
+            "doc_id", "text", seqLen)
           .select("doc_id", "seq_id", "doc_tok_start", "seq_tok_start",
             "piece_len", "piece_text")
-          .collect().map(_.toSeq).toSet
-        rows(bucketSize) == rows(0) // explicit grid ≡ auto-sized grid
+          .collect().map(r => (r.getLong(0) / scale) +: r.toSeq.tail)
+          .toSet
+        rows(k) == rows(1)
     }
 
   property("parseDims is total: arbitrary bytes never throw") =
